@@ -4,6 +4,8 @@ verbs mapped onto Spark's exchange operators.
 Reference: `DataStream.java:415-502` (shuffle/rebalance/rescale/global/
 broadcast/partitionCustom/keyBy), `DataSet.partitionByHash:1257`,
 `PartitionOperator.java` (range partitioning), `DataSet.sortPartition`.
+`global`, `broadcast` and `partitionCustom` need no wrapper: they are
+`repartition(1)`, `F.broadcast(df)` and `repartition(n, expr)`.
 
 The mapping is deliberately thin — Spark's exchanges ARE these operators —
 but the semantics each verb promises (key co-location, round-robin
@@ -39,24 +41,6 @@ def rescale(df: DataFrame, n: int) -> DataFrame:
     """Merge to n partitions WITHOUT a shuffle (`DataStream.rescale:489`
     keeps data local; Spark's narrow `coalesce` is the same contract)."""
     return df.coalesce(n)
-
-
-def global_partition(df: DataFrame) -> DataFrame:
-    """Everything to one partition (`DataStream.global:502`). Only for
-    tiny final results — documented anti-pattern at scale."""
-    return df.repartition(1)
-
-
-def broadcast_hint(df: DataFrame) -> DataFrame:
-    """Replicate to every task (`DataStream.broadcast:358`): Spark's
-    broadcast-join hint."""
-    return F.broadcast(df)
-
-
-def partition_custom(df: DataFrame, expr: Column, n: int) -> DataFrame:
-    """Partition by an arbitrary expression (`DataStream.partitionCustom`):
-    rows with equal expr values co-locate."""
-    return df.repartition(n, expr)
 
 
 def range_partition(df: DataFrame, *cols: str | Column) -> DataFrame:

@@ -70,23 +70,6 @@ def window_table(
     )
 
 
-def duplicated_windows(wt: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Window hashes that occur in >= 2 distinct documents.
-
-    min != max over the doc id replaces COUNT(DISTINCT) — exact for the
-    ">= 2 distinct" predicate and cheaper (partial-aggregable min/max
-    instead of a distinct expansion)."""
-    return (
-        wt.groupBy("whash")
-        .agg(
-            F.min(id_col).alias("__min_id"),
-            F.max(id_col).alias("__max_id"),
-        )
-        .filter(F.col("__min_id") != F.col("__max_id"))
-        .select("whash")
-    )
-
-
 def span_dedup_stats(
     df: DataFrame,
     text_col: str = "text",

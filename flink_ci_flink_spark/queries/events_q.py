@@ -971,18 +971,7 @@ def streaming_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFram
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOUR")),
     ).select("click_id", "purchase_id")
     name = f"sij_{uuid.uuid4().hex[:8]}"
-    # The state-store partition count is pinned from
-    # spark.sql.shuffle.partitions at stream START (AQE never applies to
-    # streaming stages), so an untuned session runs 200 state partitions
-    # per micro-batch here — pure task overhead at replay scale. Scope the
-    # conf to the bounded replay and restore (the Flink-parallelism
-    # analog: sized to the cluster, not defaulted).
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        run_to_completion(joined, name, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    run_to_completion(joined, name, "append")
     return spark.table(name)
 
 
@@ -1049,14 +1038,7 @@ def streaming_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     semi = clicks.join(purchases, cond, "left_semi")
     name = f"ssj_{uuid.uuid4().hex[:8]}"
-    # see streaming_interval_join_replay: state-store partition count pins
-    # at stream start; scope the conf to the bounded replay
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        run_to_completion(semi, name, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    run_to_completion(semi, name, "append")
     return spark.table(name)
 
 
@@ -1260,13 +1242,7 @@ def streaming_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "leftOuter",
     ).select("click_id", "purchase_id")
     name = f"soj_{uuid.uuid4().hex[:8]}"
-    # see streaming_interval_join_replay for the scoped-conf rationale
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        run_to_completion(joined, name, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    run_to_completion(joined, name, "append")
     return spark.table(name)
 
 
@@ -1352,12 +1328,7 @@ def streaming_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
         "fullOuter",
     ).select("click_id", "purchase_id")
     name = f"sfoj_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        run_to_completion(joined, name, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    run_to_completion(joined, name, "append")
     return spark.table(name).filter(
         (F.coalesce(F.col("click_id"), F.lit(0)) >= 0)
         & (F.coalesce(F.col("purchase_id"), F.lit(0)) >= 0)
@@ -1407,12 +1378,7 @@ def streaming_dropdup_watermark_replay(spark: SparkSession, sf_dir: str) -> Data
         "event_id", "user_id", F.unix_timestamp("ts").alias("ts_s")
     )
     name = f"sdw_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        run_to_completion(dedup, name, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    run_to_completion(dedup, name, "append")
     return spark.table(name)
 
 
@@ -1434,7 +1400,11 @@ def streaming_complete_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     the one-shot batch aggregate."""
     import uuid
 
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        run_to_completion,
+        stage_ordered_replay,
+    )
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("event_type", "value", "ts", "event_id")
@@ -1448,19 +1418,7 @@ def streaming_complete_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     )
     name = f"sca_{uuid.uuid4().hex[:8]}"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    run_to_completion(agg, name, "complete")
     return spark.table(name)
 
 

@@ -57,38 +57,43 @@ def file_stream(
 def stage_ordered_replay(
     df: DataFrame, order_cols: list[str], n_batches: int = 3
 ) -> str:
-    """Stage a DataFrame as ``n_batches`` parquet files in a fresh temp
-    dir, ordered by ``order_cols`` within and across files — the
-    deterministic micro-batch replay fixture every ``*_replay`` driver
-    query and streaming parity test feeds to `file_stream`. Returns the
-    directory (caller owns cleanup; /tmp otherwise reaps it)."""
+    """Stage a DataFrame as ``n_batches`` parquet files ``001.parquet`` ...
+    in a fresh temp dir, ordered by ``order_cols`` within and across files —
+    the deterministic micro-batch replay fixture every ``*_replay`` driver
+    query and streaming parity test feeds to `file_stream`. One pass over
+    ``df``: a global ``ntile`` numbers each row's batch and one partitioned
+    write emits every batch file from the window's single sorted partition. A
+    batch with no rows (fewer rows than batches) is staged as an empty
+    file, so there are always ``n_batches`` files. Returns the directory
+    (caller owns cleanup; /tmp otherwise reaps it)."""
     import glob
     import os
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     tmp = tempfile.mkdtemp(prefix="replay_stage_")
-    w = Window.orderBy(*order_cols)
-    # One execution of the upstream plan: without the checkpoint, each of
-    # the n_batches filtered writes below re-runs df AND the global ntile
-    # sort (a replay fixture built from a derived changelog paid its whole
-    # build pipeline 3x). Bounded by design — replay fixtures are
-    # micro-batch-sized; the blocks are reclaimed by the ContextCleaner
-    # when the frame goes out of scope.
-    staged = df.withColumn("__b", F.ntile(n_batches).over(w)).localCheckpoint(
-        eager=True
+    staged = f"{tmp}/_staged"
+    (
+        df.withColumn("__b", F.ntile(n_batches).over(Window.orderBy(*order_cols)))
+        .sortWithinPartitions("__b", *order_cols)
+        .write.partitionBy("__b")
+        .parquet(staged)
     )
+    empty = None
     for b in range(1, n_batches + 1):
-        part_dir = f"{tmp}/b{b}"
-        staged.filter(F.col("__b") == b).drop("__b").orderBy(
-            *order_cols
-        ).coalesce(1).write.parquet(part_dir)
-        (part,) = glob.glob(f"{part_dir}/part-*.parquet")
-        os.rename(part, f"{tmp}/{b:03d}.parquet")
-        shutil.rmtree(part_dir)
+        dst = f"{tmp}/{b:03d}.parquet"
+        parts = glob.glob(f"{staged}/__b={b}/part-*.parquet")
+        if parts:
+            (part,) = parts
+            os.rename(part, dst)
+            continue
+        if empty is None:
+            df.limit(0).coalesce(1).write.parquet(f"{staged}/empty")
+            (empty,) = glob.glob(f"{staged}/empty/part-*.parquet")
+        shutil.copyfile(empty, dst)
+    shutil.rmtree(staged)
     return tmp
 
 
@@ -113,15 +118,32 @@ def socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
 
 def run_to_completion(df: DataFrame, query_name: str, output_mode: str = "append"):
     """Drive a bounded streaming query to completion against a memory sink;
-    returns the owning SparkSession for `spark.table(query_name)`."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    returns the finished StreamingQuery (the result is
+    `spark.table(query_name)`).
+
+    ``spark.sql.shuffle.partitions`` is scoped to the session's
+    ``defaultParallelism`` for the query and restored afterwards. A stateful
+    query pins its state-store partition count from that conf when it
+    starts (AQE never applies to streaming stages), and every state
+    partition commits on every micro-batch: an untuned session would run
+    200 of them per batch, pure task overhead at replay scale. Sized to the
+    cluster, not defaulted — the Flink-parallelism analog."""
+    spark = df.sparkSession
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
-    q.processAllAvailable()
-    q.stop()
+    try:
+        q = (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(query_name)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     return q
 
 

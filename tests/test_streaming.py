@@ -540,3 +540,96 @@ def test_value_histogram_fold_batching_insensitive(spark, sf_dir):
                 est = bn * 2.0
                 break
         assert abs(est - r.value) <= 2.0, (r.event_type, est, r.value)
+
+
+def _staged_files(tmp):
+    import os
+
+    import pyarrow.parquet as pq
+
+    names = sorted(os.listdir(tmp))
+    return names, [pq.read_table(f"{tmp}/{n}").to_pylist() for n in names]
+
+
+def test_stage_ordered_replay_file_contract(spark):
+    """The replay fixture contract every ``*_replay`` query relies on:
+    exactly ``n_batches`` files named 001.parquet ..., rows ordered by
+    ``order_cols`` within each file and across consecutive files, the
+    multiset of rows equal to the input, and tiles without rows staged
+    as empty files."""
+    import random
+
+    from flink_ci_flink_spark.streaming import stage_ordered_replay
+
+    rng = random.Random(7)
+    # ties on the first order column exercise the second one
+    rows = [(rng.randrange(50), i, f"p{rng.randrange(9)}") for i in range(500)]
+    df = spark.createDataFrame(rows, "k INT, seq LONG, payload STRING")
+    order = ["k", "seq"]
+
+    def key(r):
+        return tuple(r[c] for c in order)
+
+    tmp = stage_ordered_replay(df, order, n_batches=4)
+    try:
+        names, files = _staged_files(tmp)
+        assert names == ["001.parquet", "002.parquet", "003.parquet", "004.parquet"]
+        for f in files:
+            assert [key(r) for r in f] == sorted(key(r) for r in f)
+        for a, b in zip(files, files[1:]):
+            assert key(a[-1]) <= key(b[0])
+        staged = sorted((r["k"], r["seq"], r["payload"]) for f in files for r in f)
+        assert staged == sorted(rows)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+    for data, want in (([], [0, 0, 0]), (rows[:2], [1, 1, 0])):
+        tmp = stage_ordered_replay(
+            spark.createDataFrame(data, df.schema), order, n_batches=3
+        )
+        try:
+            names, files = _staged_files(tmp)
+            assert names == ["001.parquet", "002.parquet", "003.parquet"]
+            assert [len(f) for f in files] == want
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_run_to_completion_sizes_state_partitions(spark):
+    """A bounded stateful query runs ``defaultParallelism`` state-store
+    partitions whatever the session's shuffle-partition conf, and the conf
+    is restored afterwards — also when the query fails to start."""
+    from pyspark.errors import AnalysisException
+
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        run_to_completion,
+        stage_ordered_replay,
+    )
+
+    df = spark.createDataFrame(
+        [(i % 3, i) for i in range(30)], "k INT, seq LONG"
+    )
+    tmp = stage_ordered_replay(df, ["seq"])
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        stream = file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
+        name = f"rtc_{uuid.uuid4().hex[:8]}"
+        q = run_to_completion(stream.groupBy("k").count(), name, "complete")
+        (state,) = q.recentProgress[-1].stateOperators
+        assert state.numShufflePartitions == spark.sparkContext.defaultParallelism
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+        assert sorted(tuple(r) for r in spark.table(name).collect()) == [
+            (0, 10),
+            (1, 10),
+            (2, 10),
+        ]
+
+        # complete mode without an aggregation is rejected at start()
+        with pytest.raises(AnalysisException):
+            run_to_completion(stream, f"rtc_{uuid.uuid4().hex[:8]}", "complete")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        shutil.rmtree(tmp, ignore_errors=True)
