@@ -1,27 +1,29 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints exactly ONE JSON line:
-  {"metric": "...", "value": <total_sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>, "runs": 2, ...}
-
-Each headline query is executed SPARK_GRAFT_BENCH_RUNS times (default 3)
-after warm-up and reported as the per-query MEDIAN (box noise is ~2x
-run-to-run with occasional 8x contention spikes; the 3-run median absorbs a
-single spike). Timing covers plan + execution + result materialization
-(count or collect to driver, matching how the engine would serve the query).
+Prints exactly ONE JSON line (`official_line`): {"metric", "value" (total
+sec), "unit", "queries": {name: sec}, "runs", "sf", "cpu_total", "env", ...};
+the full record goes to bench_detail.json. Each headline query runs 3 times
+after warm-up and reports the per-query MEDIAN (box noise is ~2x run-to-run
+with occasional 8x contention spikes; the 3-run median absorbs a single
+spike). Every rung is timed by `measure`: plan + execution + result
+materialization (count to driver, matching how the engine would serve it).
 """
-
-from __future__ import annotations
 
 import json
 import os
+import shutil
+import statistics
 import sys
+import tempfile
 import time
+import uuid
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+HERE = Path(__file__).resolve().parent
+sys.path.insert(0, str(HERE))
 
+from flink_ci_flink_spark.graph.algorithms import LAST_CC_STATS  # noqa: E402
 from flink_ci_flink_spark.queries import QUERIES  # noqa: E402
 from flink_ci_flink_spark.session import get_spark  # noqa: E402
 
@@ -89,288 +91,229 @@ SKEW_RUNG = [
     "pipe_span_dedup",
 ]
 
+# Extra-ops rung (separate from the headline so the 22-query total
+# stays round-over-round comparable): span dedup, span stripping,
+# export sharding, the three sketches, and the jaccard full-vs-prefix
+# pair (sf0.1 baselines for the sf1 scale-up ratios), one timed run
+# each.
+NEW_OPS = [
+    "pipe_span_dedup",
+    "pipe_strip_spans",
+    "pipe_shard_assignment",
+    "pipe_hll_distinct",
+    "pipe_kmv_distinct",
+    "pipe_countmin_freq",
+    "pipe_jaccard_pairs",
+    "pipe_jaccard_prefix",
+    "pipe_tfidf_top_terms",
+    "pipe_pack_sequences",
+    "pipe_lm_quality_screen",
+    "pipe_decode_png",
+    "pipe_decode_gif_frames",
+    "pipe_knn_join",
+    "pipe_knn_join_scaled",
+    "pipe_line_dedup",
+    "pipe_bm25_topk",
+    "pipe_hybrid_rerank",
+    "pipe_quality_quantile_screen",
+    "pipe_quality_screen_scaled",
+    "pipe_zorder_layout",
+    "pipe_heavy_hitters",
+    "pipe_e2e_curation_v2",
+    "pipe_audio_features",
+    "catalog_column_stats",
+    "pipe_cluster_balanced_sample",
+    "pipe_embedding_outliers",
+    "pipe_ann_recall",
+    "pipe_pq_trained_ann",
+    "pipe_ivfpq_ann",
+    "pipe_temperature_mix",
+    "pipe_hard_negatives",
+    "pipe_embedding_curation",
+    "pipe_ivfpq_store_probe",
+    "pipe_quality_perceptron",
+    "pipe_e2e_curation_v3",
+    "graph_canonical_by_model",
+    "pipe_dsir_select",
+    "pipe_gopher_rules",
+    "pipe_lsh_dedup_recall",
+    "pipe_leakage_safe_split",
+    "pipe_classifier_eval",
+    "pipe_e2e_curation_v4",
+    "pipe_blocklist_screen",
+    "pipe_dup_source_matrix",
+    "pipe_image_stats",
+    "pipe_tokenizer_fertility",
+    "pipe_simhash_band_pairs",
+    "pipe_winnow_pairs",
+    "pipe_pmi_collocations",
+    "pipe_minhash_est_error",
+    "pipe_delta_dedup",
+    "pipe_langid_confusion",
+    "pipe_e2e_curation_v5",
+]
+
+# ANN rung — FROZEN as of round 9 (do not add/remove names: this list
+# is the round-over-round comparable for the ANN family, the way
+# HEADLINE is for the engine core; new ANN ops go in NEW_OPS first).
+# Copies the already-measured new_ops timings, one timed run each.
+ANN_RUNG = [
+    "pipe_knn_join",
+    "pipe_knn_join_scaled",
+    "pipe_pq_trained_ann",
+    "pipe_ivfpq_ann",
+    "pipe_ivfpq_store_probe",
+    "pipe_ann_recall",
+    "pipe_hard_negatives",
+    "pipe_cluster_balanced_sample",
+]
+
+RUNS = 3  # headline runs per query
+
+
+def measure(items, runs: int = 1, reduce=min, cpu: bool = False, tag: str = "") -> dict:
+    """Time each ``(name, thunk)`` pair ``runs`` times, round-robin (every
+    name once per run, so one contention spike costs one sample per name).
+    A thunk does the work and returns its row count or None. Returns
+    per-name ``samples`` (sec) and their ``reduce`` as ``wall``; with
+    ``cpu``, also ``cpu_samples`` and ``cpu`` from the process-tree probe
+    (names whose probe failed are left out)."""
+    samples: dict[str, list[float]] = {name: [] for name, _ in items}
+    cpu_samples: dict[str, list[float]] = {name: [] for name, _ in items}
+    for r in range(runs):
+        for name, thunk in items:
+            c0 = _proc_tree_cpu_sec() if cpu else None
+            t0 = time.perf_counter()
+            n = thunk()
+            dt = round(time.perf_counter() - t0, 3)
+            samples[name].append(dt)
+            c1 = None if c0 is None else _proc_tree_cpu_sec()
+            if c1 is not None:
+                cpu_samples[name].append(round(c1 - c0, 3))
+            run = f"run{r + 1}" if runs > 1 else ""
+            label = " ".join(x for x in (tag, run, name) if x)
+            rows = "" if n is None else f" ({n} rows)"
+            print(f"# {label}: {dt:.3f}s{rows}", file=sys.stderr)
+    out = {"samples": samples, "wall": {k: round(reduce(v), 3) for k, v in samples.items()}}
+    if cpu:
+        out["cpu_samples"] = {k: v for k, v in cpu_samples.items() if v}
+        out["cpu"] = {k: round(reduce(v), 3) for k, v in out["cpu_samples"].items()}
+    return out
+
+
+def _queries(spark, names, sf_dir: str) -> list:
+    """``(name, thunk)`` pairs that build and count each query over ``sf_dir``."""
+    return [(n, lambda n=n: QUERIES[n].fn(spark, sf_dir).count()) for n in names]
+
 
 def _bench_stateful(spark, sf_dir: str) -> dict:
-    """Time streaming_top_n (applyInPandasWithState) over the events table
-    replayed as a 1-file stream: rows/sec for keyed Python state handling."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from flink_ci_flink_spark.streaming import file_stream, run_to_completion
-    from flink_ci_flink_spark.streaming.process import streaming_top_n
-
+    """Time the stateful streaming operators over the events table replayed
+    as a 1-file stream: rows/sec for keyed state handling, from the per-key
+    Python tax (applyInPandasWithState, transformWithState) to the JVM
+    foreachBatch folds. Each operator reports ``<name>_sec`` and
+    ``<name>_rows_per_sec``; the unnamed first one — streaming_top_n on
+    applyInPandasWithState — reports bare ``sec`` and ``rows_per_sec``."""
     from pyspark.sql import functions as F
 
-    from flink_ci_flink_spark.streaming.process import streaming_top_n_jvm
+    from flink_ci_flink_spark.streaming import file_stream, run_to_completion
+    from flink_ci_flink_spark.streaming import process as P
+    from flink_ci_flink_spark.streaming.windows_ext import count_tumbling_window
 
     ev_path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(ev_path).schema
     n_rows = spark.read.parquet(ev_path).count()
     # the monitored-dir source wants a directory; stage the single file
     tmp = tempfile.mkdtemp(prefix="bench_stateful_")
-    try:
-        shutil.copy(ev_path, os.path.join(tmp, "events.parquet"))
-        st = file_stream(spark, tmp, schema)
-        out = streaming_top_n(st, "user_id", "value", 5, ["event_type"])
-        name = f"bench_topn_{uuid.uuid4().hex[:8]}"
-        t0 = time.perf_counter()
-        run_to_completion(out, name, "update")
-        dt = time.perf_counter() - t0
+    src = os.path.join(tmp, "src")
+    os.makedirs(src)
+    shutil.copy(ev_path, src)
 
+    def stream(*cols):
+        st = file_stream(spark, src, schema)
+        return st.select(*cols) if cols else st
+
+    def python_state(build, mode):  # runs to completion on a memory sink
+        def run():
+            run_to_completion(build(), f"bench_{uuid.uuid4().hex[:8]}", mode)
+        return run
+
+    def jvm_fold(op, cols=(), **kw):  # keeps its state in a fresh parquet dir
+        return lambda: op(stream(*cols), state_dir=tempfile.mkdtemp(dir=tmp),
+                          query_name=f"bench_{uuid.uuid4().hex[:8]}", **kw).count()
+
+    uts = ("user_id", "ts", "value")
+    uts_kw = {"key": "user_id", "ts_col": "ts", "value_col": "value"}
+    ops = [
+        ("", python_state(lambda: P.streaming_top_n(
+            stream(), "user_id", "value", 5, ["event_type"]), "update")),
         # same contract, JVM-only execution (foreachBatch merge — the
         # per-key Python tax removed); state_dir holds <= keys*n rows
-        st2 = file_stream(spark, tmp, schema)
-        state = tempfile.mkdtemp(prefix="bench_topn_jvm_")
-        t1 = time.perf_counter()
-        streaming_top_n_jvm(
-            st2,
-            partition_by=["user_id"],
+        ("jvm_foreachbatch", jvm_fold(
+            P.streaming_top_n_jvm, partition_by=["user_id"], n=5,
             order_by=[F.desc("value"), F.asc("event_id")],
-            n=5,
-            select_cols=["user_id", "value", "event_id"],
-            state_dir=state,
-            query_name=f"bench_tnj_{uuid.uuid4().hex[:8]}",
-        ).count()
-        dt_jvm = time.perf_counter() - t1
-        shutil.rmtree(state, ignore_errors=True)
-
+            select_cols=["user_id", "value", "event_id"])),
         # the round-5 JVM foreachBatch family beyond top-n: keep-last
         # dedup and running aggregates, same no-per-key-Python contract
-        from flink_ci_flink_spark.streaming.process import (
-            streaming_dedup_keep_last_jvm,
-            streaming_running_agg_jvm,
-        )
-
-        state2 = tempfile.mkdtemp(prefix="bench_dedup_jvm_")
-        t2 = time.perf_counter()
-        streaming_dedup_keep_last_jvm(
-            file_stream(spark, tmp, schema),
-            keys=["user_id"],
-            ts_col="ts",
-            select_cols=["user_id", "ts", "event_id", "event_type"],
-            state_dir=state2,
-            query_name=f"bench_dj_{uuid.uuid4().hex[:8]}",
-        ).count()
-        dt_dedup = time.perf_counter() - t2
-        shutil.rmtree(state2, ignore_errors=True)
-
-        state3 = tempfile.mkdtemp(prefix="bench_runagg_jvm_")
-        t3 = time.perf_counter()
-        streaming_running_agg_jvm(
-            file_stream(spark, tmp, schema),
-            keys=["user_id"],
-            agg_specs={
-                "n": ("count", ""),
-                "total": ("sum", "value"),
-                "vmax": ("max", "value"),
-            },
-            state_dir=state3,
-            query_name=f"bench_ra_{uuid.uuid4().hex[:8]}",
-        ).count()
-        dt_agg = time.perf_counter() - t3
-        shutil.rmtree(state3, ignore_errors=True)
-
-        from flink_ci_flink_spark.streaming.process import (
-            streaming_sessionize_jvm,
-        )
-
-        state4 = tempfile.mkdtemp(prefix="bench_sess_jvm_")
-        t4 = time.perf_counter()
-        streaming_sessionize_jvm(
-            file_stream(spark, tmp, schema),
-            keys=["user_id"],
-            ts_col="ts",
-            gap_seconds=4 * 3600,
-            state_dir=state4,
-            value_col="value",
-            close_lateness_seconds=0,
-            query_name=f"bench_sj_{uuid.uuid4().hex[:8]}",
-        ).count()
-        dt_sess = time.perf_counter() - t4
-        shutil.rmtree(state4, ignore_errors=True)
-
+        ("jvm_dedup_keep_last", jvm_fold(
+            P.streaming_dedup_keep_last_jvm, keys=["user_id"], ts_col="ts",
+            select_cols=["user_id", "ts", "event_id", "event_type"])),
+        ("jvm_running_agg", jvm_fold(
+            P.streaming_running_agg_jvm, keys=["user_id"],
+            agg_specs={"n": ("count", ""), "total": ("sum", "value"),
+                       "vmax": ("max", "value")})),
+        ("jvm_sessionize", jvm_fold(
+            P.streaming_sessionize_jvm, keys=["user_id"], ts_col="ts",
+            gap_seconds=4 * 3600, value_col="value", close_lateness_seconds=0)),
         # round-7: count windows on the generic jvm_keyed_fold primitive
         # vs the applyInPandasWithState count_tumbling_window
-        from flink_ci_flink_spark.streaming.process import (
-            streaming_count_window_jvm,
-        )
-        from flink_ci_flink_spark.streaming.windows_ext import (
-            count_tumbling_window,
-        )
-
-        t5 = time.perf_counter()
-        out_py = count_tumbling_window(
-            file_stream(spark, tmp, schema).select("user_id", "ts", "value"),
-            "user_id",
-            "ts",
-            "value",
-            size=10,
-        )
-        run_to_completion(out_py, f"bench_cwp_{uuid.uuid4().hex[:8]}", "append")
-        dt_cw_py = time.perf_counter() - t5
-
-        state5 = tempfile.mkdtemp(prefix="bench_cntwin_jvm_")
-        t6 = time.perf_counter()
-        streaming_count_window_jvm(
-            file_stream(spark, tmp, schema).select("user_id", "ts", "value"),
-            key="user_id",
-            ts_col="ts",
-            value_col="value",
-            size=10,
-            state_dir=state5,
-            query_name=f"bench_cwj_{uuid.uuid4().hex[:8]}",
-        ).count()
-        dt_cw_jvm = time.perf_counter() - t6
-        shutil.rmtree(state5, ignore_errors=True)
-
-        from flink_ci_flink_spark.streaming.process import (
-            streaming_bounded_over_jvm,
-            streaming_count_sliding_window_jvm,
-        )
-
-        state6 = tempfile.mkdtemp(prefix="bench_cntslide_jvm_")
-        t7 = time.perf_counter()
-        streaming_count_sliding_window_jvm(
-            file_stream(spark, tmp, schema).select("user_id", "ts", "value"),
-            key="user_id",
-            ts_col="ts",
-            value_col="value",
-            size=10,
-            slide=4,
-            state_dir=state6,
-            query_name=f"bench_csj_{uuid.uuid4().hex[:8]}",
-        ).count()
-        dt_cs_jvm = time.perf_counter() - t7
-        shutil.rmtree(state6, ignore_errors=True)
-
-        state7 = tempfile.mkdtemp(prefix="bench_bover_jvm_")
-        t8 = time.perf_counter()
-        streaming_bounded_over_jvm(
-            file_stream(spark, tmp, schema).select("user_id", "ts", "value"),
-            key="user_id",
-            ts_col="ts",
-            value_col="value",
-            rows_preceding=4,
-            state_dir=state7,
-            query_name=f"bench_boj_{uuid.uuid4().hex[:8]}",
-        ).count()
-        dt_bo_jvm = time.perf_counter() - t8
-        shutil.rmtree(state7, ignore_errors=True)
-
+        ("count_window_python", python_state(lambda: count_tumbling_window(
+            stream(*uts), "user_id", "ts", "value", size=10), "append")),
+        ("jvm_count_window", jvm_fold(P.streaming_count_window_jvm, uts, **uts_kw, size=10)),
+        ("jvm_count_sliding", jvm_fold(
+            P.streaming_count_sliding_window_jvm, uts, **uts_kw, size=10, slide=4)),
+        ("jvm_bounded_over", jvm_fold(
+            P.streaming_bounded_over_jvm, uts, **uts_kw, rows_preceding=4)),
         # round-8: the value-histogram quantile fold (sketch quartet's
         # distribution quarter) — bounded groups x bins state
-        from flink_ci_flink_spark.streaming.process import (
-            streaming_value_histogram_jvm,
-        )
-
-        state8 = tempfile.mkdtemp(prefix="bench_vhist_jvm_")
-        t9 = time.perf_counter()
-        streaming_value_histogram_jvm(
-            file_stream(spark, tmp, schema).select("event_type", "value"),
-            value_col="value",
-            group_cols=["event_type"],
-            lo=0.0,
-            width=2.0,
-            n_bins=256,
-            state_dir=state8,
-            query_name=f"bench_vh_{uuid.uuid4().hex[:8]}",
-        ).count()
-        dt_vh_jvm = time.perf_counter() - t9
-        shutil.rmtree(state8, ignore_errors=True)
-
+        ("jvm_value_histogram", jvm_fold(
+            P.streaming_value_histogram_jvm, ("event_type", "value"), value_col="value",
+            group_cols=["event_type"], lo=0.0, width=2.0, n_bins=256)),
+    ]
+    tws_keys = None
+    try:
+        wall = measure(ops, tag="stateful")["wall"]
         # round-9: transformWithStateInPandas (native split ValueState via
         # the vendored protobuf shim + RocksDB provider) vs the same
         # running-agg on applyInPandasWithState-class Python state — the
-        # third point between "Python per-key tax" and "JVM fold"
-        dt_tws = None
+        # third point between "Python per-key tax" and "JVM fold". Its
+        # per-key-invocation tax is broken down in bench_adjudications.json
+        # 'tws_tax_r10'.
         try:
-            from flink_ci_flink_spark.streaming.tws import (
-                streaming_running_agg_tws,
-                use_rocksdb_state,
-            )
+            from flink_ci_flink_spark.streaming import tws
 
-            prev = use_rocksdb_state(spark)
-            t10 = time.perf_counter()
-            out_tws = streaming_running_agg_tws(
-                file_stream(spark, tmp, schema).select("user_id", "value"),
-                "user_id",
-                "value",
-            )
-            run_to_completion(
-                out_tws, f"bench_tws_{uuid.uuid4().hex[:8]}", "update"
-            )
-            dt_tws = time.perf_counter() - t10
-            tws_keys = None
+            prev = tws.use_rocksdb_state(spark)
             try:
-                tws_keys = (
-                    spark.read.parquet(tmp).select("user_id").distinct().count()
-                )
-            except Exception:
-                pass
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+                tws_agg = python_state(lambda: tws.streaming_running_agg_tws(
+                    stream("user_id", "value"), "user_id", "value"), "update")
+                wall.update(measure([("tws_running_agg", tws_agg)], tag="stateful")["wall"])
+            finally:
+                provider = "spark.sql.streaming.stateStore.providerClass"
+                if prev is not None:
+                    spark.conf.set(provider, prev)
+                else:
+                    spark.conf.unset(provider)
+            tws_keys = spark.read.parquet(src).select("user_id").distinct().count()
         except Exception as ex:  # pragma: no cover - env-dependent
             print(f"# tws bench skipped: {ex}", file=sys.stderr)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return {
-        "operator": "streaming_top_n(applyInPandasWithState)",
-        "input_rows": n_rows,
-        "sec": round(dt, 3),
-        "rows_per_sec": round(n_rows / dt),
-        "jvm_foreachbatch_sec": round(dt_jvm, 3),
-        "jvm_foreachbatch_rows_per_sec": round(n_rows / dt_jvm),
-        "jvm_dedup_keep_last_sec": round(dt_dedup, 3),
-        "jvm_dedup_keep_last_rows_per_sec": round(n_rows / dt_dedup),
-        "jvm_running_agg_sec": round(dt_agg, 3),
-        "jvm_running_agg_rows_per_sec": round(n_rows / dt_agg),
-        "jvm_sessionize_sec": round(dt_sess, 3),
-        "jvm_sessionize_rows_per_sec": round(n_rows / dt_sess),
-        "count_window_python_sec": round(dt_cw_py, 3),
-        "count_window_python_rows_per_sec": round(n_rows / dt_cw_py),
-        "jvm_count_window_sec": round(dt_cw_jvm, 3),
-        "jvm_count_window_rows_per_sec": round(n_rows / dt_cw_jvm),
-        "jvm_count_sliding_sec": round(dt_cs_jvm, 3),
-        "jvm_count_sliding_rows_per_sec": round(n_rows / dt_cs_jvm),
-        "jvm_bounded_over_sec": round(dt_bo_jvm, 3),
-        "jvm_bounded_over_rows_per_sec": round(n_rows / dt_bo_jvm),
-        "jvm_value_histogram_sec": round(dt_vh_jvm, 3),
-        "jvm_value_histogram_rows_per_sec": round(n_rows / dt_vh_jvm),
-        **(
-            {
-                "tws_running_agg_sec": round(dt_tws, 3),
-                "tws_running_agg_rows_per_sec": round(n_rows / dt_tws),
-                **({"tws_distinct_keys": tws_keys} if tws_keys else {}),
-                # round-10 tax breakdown (one-off controlled probe, 100k
-                # rows / 3 micro-batches / 8 cores, synthetic keys): cost
-                # is PER-KEY-INVOCATION, not per-row — 100 keys 4.29s, 1k
-                # keys 5.06s, 10k keys 15.3s (~0.38 ms per key per batch
-                # above a ~4 s fixed floor); suppressing emission changed
-                # nothing (5.02s) and dropping the exists() RPC (get()
-                # returns None when absent; applied to the operators
-                # anyway — strictly fewer round-trips) measured ~1%,
-                # within noise (5.14s vs 5.06s). Rows are Arrow-batched
-                # and nearly free; the lever is key cardinality x batch
-                # count. Guidance: JVM fold shapes for decomposable
-                # high-cardinality state, TWS for expressiveness (native
-                # primitives + timers). See bench_adjudications.json
-                # 'tws_tax_r10' for the permanent record.
-                "tws_tax_note": (
-                    "per-key-invocation tax ~0.38ms/key/batch (probe: 100k "
-                    "rows, 100/1k/10k keys -> 4.29/5.06/15.3s); emission "
-                    "and exists()-RPC elimination both noise-level; rows "
-                    "Arrow-batched and nearly free"
-                ),
-            }
-            if dt_tws
-            else {}
-        ),
-    }
+    out = {"operator": "streaming_top_n(applyInPandasWithState)", "input_rows": n_rows}
+    for name, sec in wall.items():
+        p = f"{name}_" if name else ""
+        out.update({f"{p}sec": sec, f"{p}rows_per_sec": round(n_rows / sec)})
+    if tws_keys:
+        out["tws_distinct_keys"] = tws_keys
+    return out
 
 
 def _bench_environment() -> dict:
@@ -386,16 +329,13 @@ def _bench_environment() -> dict:
     that envelope; sub-10% headline moves are noise (BENCH_NOTES r8-r10
     adjudications).
     """
-    env: dict = {}
     try:
         load1, load5, load15 = os.getloadavg()
     except OSError:  # pragma: no cover - non-POSIX fallback
         return {"loaded": None}
     ncpu = os.cpu_count() or 1
-    env["load1_prerun"] = round(load1, 2)
-    env["load5_prerun"] = round(load5, 2)
-    env["load15_prerun"] = round(load15, 2)
-    env["cpus"] = ncpu
+    env = {"load1_prerun": round(load1, 2), "load5_prerun": round(load5, 2),
+           "load15_prerun": round(load15, 2), "cpus": ncpu}
     try:
         with open("/proc/uptime") as fh:
             env["uptime_sec"] = int(float(fh.read().split()[0]))
@@ -421,6 +361,7 @@ def _settle_wait(env: dict) -> dict:
     if env.get("loaded") is None or not (env.get("loaded") or env.get("settling")):
         env["settle_wait_sec"] = 0
         return env
+    # past this guard os.getloadavg() is known to work on this platform
     max_wait = float(os.environ.get("SPARK_GRAFT_SETTLE_MAX_SEC", "600"))
     gate = env["load_gate"]
     t0 = time.monotonic()
@@ -428,23 +369,15 @@ def _settle_wait(env: dict) -> dict:
     while waited < max_wait:
         time.sleep(min(20.0, max_wait - waited))
         waited = time.monotonic() - t0
-        try:
-            load1, load5, _ = os.getloadavg()
-        except OSError:  # pragma: no cover
-            break
+        load1, load5, _ = os.getloadavg()
         if load1 < gate and load5 < gate:
             break
-    try:
-        load1, load5, load15 = os.getloadavg()
-        env["load1_initial"] = env["load1_prerun"]
-        env["load5_initial"] = env["load5_prerun"]
-        env["load1_prerun"] = round(load1, 2)
-        env["load5_prerun"] = round(load5, 2)
-        env["load15_prerun"] = round(load15, 2)
-        env["loaded"] = load1 > gate
-        env["settling"] = (not env["loaded"]) and load5 > gate
-    except OSError:  # pragma: no cover
-        pass
+    load1, load5, load15 = os.getloadavg()
+    env["load1_initial"], env["load5_initial"] = env["load1_prerun"], env["load5_prerun"]
+    env.update(load1_prerun=round(load1, 2), load5_prerun=round(load5, 2),
+               load15_prerun=round(load15, 2))
+    env["loaded"] = load1 > gate
+    env["settling"] = (not env["loaded"]) and load5 > gate
     env["settle_wait_sec"] = round(waited)
     env["settle_wait_exhausted"] = bool(env["loaded"] or env["settling"])
     return env
@@ -460,41 +393,53 @@ def _proc_tree_cpu_sec() -> float | None:
     remain comparable on cpu_sec even when the env block says loaded."""
     try:
         tick = os.sysconf("SC_CLK_TCK")
+        pid_dirs = [p for p in os.listdir("/proc") if p.isdigit()]
     except (OSError, ValueError):  # pragma: no cover - non-POSIX
         return None
-    procs: dict[int, tuple[int, int]] = {}
-    try:
-        pid_dirs = os.listdir("/proc")
-    except OSError:  # pragma: no cover
-        return None
+    cpu: dict[int, int] = {}
+    children: dict[int, list[int]] = {}
     for pid_dir in pid_dirs:
-        if not pid_dir.isdigit():
-            continue
         try:
             with open(f"/proc/{pid_dir}/stat") as fh:
-                stat = fh.read()
-        except (OSError, ValueError):
-            continue
-        # comm may contain spaces/parens: fields resume after the last ')'
-        rest = stat.rsplit(")", 1)[-1].split()
-        try:
+                # comm may contain spaces/parens: fields resume after the last ')'
+                rest = fh.read().rsplit(")", 1)[-1].split()
             ppid = int(rest[1])
             # fields 14-17: utime stime cutime cstime (rest starts at 3)
-            cpu = sum(int(x) for x in rest[11:15])
-        except (IndexError, ValueError):
+            cpu[int(pid_dir)] = sum(int(x) for x in rest[11:15])
+        except (OSError, IndexError, ValueError):
             continue
-        procs[int(pid_dir)] = (ppid, cpu)
+        children.setdefault(ppid, []).append(int(pid_dir))
     total = 0
     frontier = [os.getpid()]
     seen: set[int] = set()
     while frontier:
         pid = frontier.pop()
-        if pid in seen or pid not in procs:
-            continue
-        seen.add(pid)
-        total += procs[pid][1]
-        frontier.extend(c for c, (pp, _) in procs.items() if pp == pid)
+        if pid not in seen:
+            seen.add(pid)
+            total += cpu.get(pid, 0)
+            frontier.extend(children.get(pid, ()))
     return total / tick
+
+
+def official_line(result: dict) -> str:
+    """The one stdout line the driver parses, built from the full ``result``.
+
+    The driver captures only the last ~2000 chars of stdout; r4's full
+    result blob outgrew that and BENCH_r04.json recorded "parsed": null.
+    So past 1900 chars the per-query detail is dropped before anything is
+    truncated. ``cpu_total`` is the load-invariant compare number (wall
+    medians have a 31.9-54.0 s same-code box spread); ``env`` annotates a
+    loaded-box run in BENCH_r{N}.json itself (pinned methodology,
+    BASELINE.md §Bench); the sf1 headline totals are the discriminating
+    wall signal (r12 verdict task #1), pure additions after the r12 keys."""
+    keys = ("metric", "value", "unit", "queries", "runs", "sf", "cpu_total", "env",
+            "sf1_headline_total", "sf1_headline_cpu_total")
+    headline = {k: result[k] for k in keys if k in result}
+    line = json.dumps(headline, separators=(",", ":"))
+    if len(line) > 1900:
+        headline.pop("queries", None)
+        line = json.dumps(headline, separators=(",", ":"))
+    return line
 
 
 def main() -> None:
@@ -502,22 +447,14 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     env = _bench_environment()
     if env.get("loaded") or env.get("settling"):
-        print(
-            f"# box busy (load1={env['load1_prerun']}, "
-            f"load5={env['load5_prerun']}, gate {env['load_gate']}) — "
-            "waiting for a settle window before the official headline "
-            "(bounded; SPARK_GRAFT_SETTLE_MAX_SEC, default 600)",
-            file=sys.stderr,
-        )
+        print(f"# box busy (load1={env['load1_prerun']}, load5={env['load5_prerun']}, "
+              f"gate {env['load_gate']}) — waiting for a settle window before the official "
+              "headline (bounded; SPARK_GRAFT_SETTLE_MAX_SEC, default 600)", file=sys.stderr)
     env = _settle_wait(env)
     if env.get("loaded"):
-        print(
-            f"# WARNING: pre-run load1={env['load1_prerun']} exceeds gate "
-            f"{env['load_gate']} ({env['cpus']} cpus) — run annotated "
-            '"loaded": headline is box-state, not a code signal '
-            "(BASELINE.md bench methodology)",
-            file=sys.stderr,
-        )
+        print(f"# WARNING: pre-run load1={env['load1_prerun']} exceeds gate {env['load_gate']} "
+              f'({env["cpus"]} cpus) — run annotated "loaded": headline is box-state, not a '
+              "code signal (BASELINE.md bench methodology)", file=sys.stderr)
     spark = get_spark("bench")
 
     # Warm the JVM + file listings + codegen/shuffle machinery with
@@ -549,381 +486,144 @@ def main() -> None:
         Window.partitionBy("user_id").orderBy("ts").rowsBetween(1, Window.unboundedFollowing)
     ).alias("m")).filter("m > 0").count()
 
-    import statistics
-
     # 3 runs -> true median: single contention spikes (observed 8x on this
     # box) poison a 2-run mean but leave the 3-run median untouched.
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    cpu_samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for r in range(runs):
-        for name in HEADLINE:
-            fn = QUERIES[name].fn
-            c0 = _proc_tree_cpu_sec()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            dt = round(time.perf_counter() - t0, 3)
-            samples[name].append(dt)
-            if c0 is not None:
-                c1 = _proc_tree_cpu_sec()
-                if c1 is not None:
-                    cpu_samples[name].append(round(c1 - c0, 3))
-            print(f"# run{r + 1} {name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
-    timings = {
-        name: round(statistics.median(ts), 3) for name, ts in samples.items()
-    }
     # Per-query CPU time (judge task #3b): process-tree utime+stime delta
     # around each run. Wall medians are box-sensitive (31.9-54.0 s
     # same-code spread); cpu_sec is not — cross-round official compares
     # should start here when the env block says loaded/settling.
-    cpu_timings = {
-        name: round(statistics.median(ts), 3)
-        for name, ts in cpu_samples.items()
-        if ts
-    }
-
+    head = measure(_queries(spark, HEADLINE, sf_dir), RUNS, statistics.median, cpu=True)
     result = {
         "metric": "headline_total_runtime",
-        "value": round(sum(timings.values()), 3),
+        "value": round(sum(head["wall"].values()), 3),
         "unit": "sec",
-        "queries": timings,
-        "runs": runs,
-        "query_samples": samples,
-        "cpu_queries": cpu_timings,
-        "cpu_total": round(sum(cpu_timings.values()), 3),
-        "cpu_query_samples": {k: v for k, v in cpu_samples.items() if v},
+        "queries": head["wall"],
+        "runs": RUNS,
+        "query_samples": head["samples"],
+        "cpu_queries": head["cpu"],
+        "cpu_total": round(sum(head["cpu"].values()), 3),
+        "cpu_query_samples": head["cpu_samples"],
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "env": env,
     }
     # Post-run load closes the bracket: a run that STARTED idle but shows a
     # post-run load1 far above cpus was contended mid-flight.
-    try:
-        result["env"]["load1_postrun"] = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover
-        pass
+    if env.get("loaded") is not None:  # None: no load average on this platform
+        env["load1_postrun"] = round(os.getloadavg()[0], 2)
 
     # Superstep accounting for the iterative CC under graph_dedup_clusters:
     # explains whether sf1 scale-up is iteration-count growth (benign,
     # O(diameter)) or per-superstep degradation (a plan problem).
-    from flink_ci_flink_spark.graph.algorithms import LAST_CC_STATS
-
     if LAST_CC_STATS:
         result["cc_supersteps_sf01"] = dict(LAST_CC_STATS)
 
-    # Stateful-streaming rung: one applyInPandasWithState operator end-to-end
-    # (streaming_top_n over the events fixture) — puts a measured number on
-    # the per-key Python serialization tax that the protobuf-gated
-    # transformWithStateInPandas path would avoid (streaming/tws.py).
     try:
         result["stateful_streaming"] = _bench_stateful(spark, sf_dir)
     except Exception as ex:  # pragma: no cover - defensive bench guard
         result["stateful_streaming_error"] = f"{type(ex).__name__}: {ex}"[:300]
 
-    # Extra-ops rung (separate from the headline so the 22-query total
-    # stays round-over-round comparable): span dedup, span stripping,
-    # export sharding, the three sketches, and the jaccard full-vs-prefix
-    # pair (sf0.1 baselines for the sf1 scale-up ratios), one timed run
-    # each.
-    NEW_OPS = [
-        "pipe_span_dedup",
-        "pipe_strip_spans",
-        "pipe_shard_assignment",
-        "pipe_hll_distinct",
-        "pipe_kmv_distinct",
-        "pipe_countmin_freq",
-        "pipe_jaccard_pairs",
-        "pipe_jaccard_prefix",
-        "pipe_tfidf_top_terms",
-        "pipe_pack_sequences",
-        "pipe_lm_quality_screen",
-        "pipe_decode_png",
-        "pipe_decode_gif_frames",
-        "pipe_knn_join",
-        "pipe_knn_join_scaled",
-        "pipe_line_dedup",
-        "pipe_bm25_topk",
-        "pipe_hybrid_rerank",
-        "pipe_quality_quantile_screen",
-        "pipe_quality_screen_scaled",
-        "pipe_zorder_layout",
-        "pipe_heavy_hitters",
-        "pipe_e2e_curation_v2",
-        "pipe_audio_features",
-        "catalog_column_stats",
-        "pipe_cluster_balanced_sample",
-        "pipe_embedding_outliers",
-        "pipe_ann_recall",
-        "pipe_pq_trained_ann",
-        "pipe_ivfpq_ann",
-        "pipe_temperature_mix",
-        "pipe_hard_negatives",
-        "pipe_embedding_curation",
-        "pipe_ivfpq_store_probe",
-        "pipe_quality_perceptron",
-        "pipe_e2e_curation_v3",
-        "graph_canonical_by_model",
-        "pipe_dsir_select",
-        "pipe_gopher_rules",
-        "pipe_lsh_dedup_recall",
-        "pipe_leakage_safe_split",
-        "pipe_classifier_eval",
-        "pipe_e2e_curation_v4",
-        "pipe_blocklist_screen",
-        "pipe_dup_source_matrix",
-        "pipe_image_stats",
-        "pipe_tokenizer_fertility",
-        "pipe_simhash_band_pairs",
-        "pipe_winnow_pairs",
-        "pipe_pmi_collocations",
-        "pipe_minhash_est_error",
-        "pipe_delta_dedup",
-        "pipe_langid_confusion",
-        "pipe_e2e_curation_v5",
-    ]
-    new_ops_t: dict[str, float] = {}
-    for name in NEW_OPS:
-        if name not in QUERIES:
-            continue
-        t0 = time.perf_counter()
-        n = QUERIES[name].fn(spark, sf_dir).count()
-        new_ops_t[name] = round(time.perf_counter() - t0, 3)
-        print(f"# new_op {name}: {new_ops_t[name]:.3f}s ({n} rows)", file=sys.stderr)
-    result["new_ops"] = new_ops_t
-
-    # ANN rung — FROZEN as of round 9 (do not add/remove names: this list
-    # is the round-over-round comparable for the ANN family, the way
-    # HEADLINE is for the engine core; new ANN ops go in NEW_OPS first).
-    # Copies the already-measured new_ops timings, one timed run each.
-    ANN_RUNG = [
-        "pipe_knn_join",
-        "pipe_knn_join_scaled",
-        "pipe_pq_trained_ann",
-        "pipe_ivfpq_ann",
-        "pipe_ivfpq_store_probe",
-        "pipe_ann_recall",
-        "pipe_hard_negatives",
-        "pipe_cluster_balanced_sample",
-    ]
-    result["ann_rung"] = {
-        name: new_ops_t[name] for name in ANN_RUNG if name in new_ops_t
-    }
+    new_ops = [n for n in NEW_OPS if n in QUERIES]
+    result["new_ops"] = measure(_queries(spark, new_ops, sf_dir), tag="new_op")["wall"]
+    result["ann_rung"] = {n: result["new_ops"][n] for n in ANN_RUNG if n in new_ops}
 
     # Scale rung (sf1 = 10x) + skew fixtures: the 100-TB proof points.
-    # Fixture dirs are built once and cached under .benchdata/ (gitignored).
+    # Fixture dirs are built once and cached under .benchdata/<source dir
+    # name>/ (gitignored), so a run from another source never reuses them.
     # Failures here must never lose the headline numbers.
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALE", "1") != "0":
-        base = Path(__file__).resolve().parent / ".benchdata"
+    base = HERE / ".benchdata" / Path(sf_dir.rstrip("/")).name
+    try:
+        from flink_ci_flink_spark import benchscale
+
+        t0 = time.monotonic()
+        sf1_dir = benchscale.ensure_scaled_dir(spark, sf_dir, str(base / "x10"), 10)
+        skew_dir = benchscale.ensure_skewed_dir(spark, sf_dir, str(base / "skew"))
+        print(f"# fixtures ready in {time.monotonic() - t0:.1f}s", file=sys.stderr)
+        # 2 runs -> MIN per query: the sf1 rung runs late in the bench
+        # when box contention is likeliest, and contention noise is
+        # one-sided (observed 22s..79s for the same CC query), so the
+        # min is the faithful cost estimate for scale-up ratios.
+        sf1 = measure(_queries(spark, SCALE_RUNG, sf1_dir), runs=2, tag="sf1")
+        # graph_dedup_clusters is the rung's only CC query: these are its
+        # last sf1 run's supersteps
+        if LAST_CC_STATS:
+            result["cc_supersteps_sf1"] = dict(LAST_CC_STATS)
+        result["sf1_samples"] = sf1["samples"]
+        skew_t = measure(_queries(spark, SKEW_RUNG, skew_dir), tag="skew")["wall"]
+        sf1_t = result["sf1_queries"] = sf1["wall"]
+        result["sf1_total"] = round(sum(sf1_t.values()), 3)
+        ref = {**result["new_ops"], **result["queries"]}
+        result["sf1_scaleup_vs_sf01"] = {
+            n: round(sf1_t[n] / ref[n], 2) for n in SCALE_RUNG if ref.get(n)
+        }
+        result["skew_queries"] = skew_t
+
+        # Round-13 (r12 verdict task #1): the sf0.1 wall headline has
+        # stopped discriminating data-path work — at sf0.1 every headline
+        # query is fixed-overhead-bound (the r12 scaling block measured 8
+        # cores BEATING 32). The sf1 twin of the FULL frozen headline set
+        # is the wall signal that still discriminates, next to cpu_total;
+        # the sf0.1 headline stays the round-over-round comparable. Min
+        # of 2 runs, same one-sided-contention rationale as SCALE_RUNG.
+        # Own try/except: a failure in its 44 sf1-scale executions must
+        # record sf1_headline_error, never take the dense rung down too.
         try:
-            from flink_ci_flink_spark.benchscale import (
-                ensure_scaled_dir,
-                ensure_skewed_dir,
-            )
+            sf1h = measure(_queries(spark, HEADLINE, sf1_dir), 2, cpu=True, tag="sf1_headline")
+            result["sf1_headline"] = sf1h["wall"]
+            result["sf1_headline_total"] = round(sum(sf1h["wall"].values()), 3)
+            result["sf1_headline_samples"] = sf1h["samples"]
+            if sf1h["cpu"]:
+                result["sf1_headline_cpu"] = sf1h["cpu"]
+                result["sf1_headline_cpu_total"] = round(sum(sf1h["cpu"].values()), 3)
+        except Exception as ex:  # pragma: no cover - defensive guard
+            result["sf1_headline_error"] = f"{type(ex).__name__}: {ex}"[:300]
 
-            t0 = time.perf_counter()
-            sf1_dir = ensure_scaled_dir(spark, sf_dir, str(base / "sf1x10"), 10)
-            skew_dir = ensure_skewed_dir(spark, sf_dir, str(base / "skew"))
-            print(
-                f"# fixtures ready in {time.perf_counter() - t0:.1f}s",
-                file=sys.stderr,
-            )
-            # 2 runs -> MIN per query: the sf1 rung runs late in the bench
-            # when box contention is likeliest, and contention noise is
-            # one-sided (observed 22s..79s for the same CC query), so the
-            # min is the faithful cost estimate for scale-up ratios.
-            sf1_samples: dict[str, list[float]] = {n: [] for n in SCALE_RUNG}
-            for r in range(2):
-                for name in SCALE_RUNG:
-                    t0 = time.perf_counter()
-                    n = QUERIES[name].fn(spark, sf1_dir).count()
-                    dt = round(time.perf_counter() - t0, 3)
-                    sf1_samples[name].append(dt)
-                    print(
-                        f"# sf1 run{r + 1} {name}: {dt:.3f}s ({n} rows)",
-                        file=sys.stderr,
-                    )
-                    if name == "graph_dedup_clusters" and LAST_CC_STATS:
-                        result["cc_supersteps_sf1"] = dict(LAST_CC_STATS)
-            sf1_t = {name: min(ts) for name, ts in sf1_samples.items()}
-            result["sf1_samples"] = sf1_samples
-            skew_t: dict[str, float] = {}
-            for name in SKEW_RUNG:
-                t0 = time.perf_counter()
-                n = QUERIES[name].fn(spark, skew_dir).count()
-                skew_t[name] = round(time.perf_counter() - t0, 3)
-                print(f"# skew {name}: {skew_t[name]:.3f}s ({n} rows)", file=sys.stderr)
-            result["sf1_queries"] = sf1_t
-            result["sf1_total"] = round(sum(sf1_t.values()), 3)
-            sf01_ref = {**new_ops_t, **timings}
-            result["sf1_scaleup_vs_sf01"] = {
-                name: round(sf1_t[name] / sf01_ref[name], 2)
-                for name in SCALE_RUNG
-                if sf01_ref.get(name)
-            }
-            result["skew_queries"] = skew_t
+        # Dense rung: the prefix-filter crossover proof (VERDICT r4
+        # task #4). 80% of sf0.1 docs share a 25-token boilerplate
+        # sentence -> every boilerplate shingle's postings list is
+        # ~4000 docs long, the regime AllPairs prefix filtering
+        # exists for. Both operators are exact (equal outputs,
+        # asserted in tests/test_pipeline.py); the plain
+        # inverted-index join pays sum(postings^2) while rare-first
+        # prefixes never index the hot shingles. One-time sf1-scale
+        # measurement (50k docs, frac 0.15): prefix 49.5s vs plain
+        # 246.2s (5.0x) — not re-run per round for time. The CC and
+        # jaccard scale-up readings are bench_adjudications.json
+        # 'cc_scaleup_note_r9' and 'jaccard_prefix_note_r9'.
+        from flink_ci_flink_spark.pipeline.dedup import jaccard_pairs, jaccard_pairs_prefix
 
-            # Round-13 (r12 verdict task #1): the sf0.1 wall headline has
-            # stopped discriminating data-path work — at sf0.1 every
-            # headline query is fixed-overhead-bound (the r12 scaling
-            # block measured 8 cores BEATING 32). The sf1 twin of the
-            # FULL frozen headline set is the wall signal that still
-            # discriminates, next to cpu_total. ADDITIONS ONLY: the
-            # sf0.1 headline loop above and its official stdout line are
-            # untouched and stay the round-over-round comparable. Min of
-            # 2 runs per query, same one-sided-contention rationale as
-            # SCALE_RUNG (this rung runs late in the bench when box
-            # contention is likeliest).
-            # Own try/except: this rung runs 44 sf1-scale executions of
-            # queries the dense-rung/cc-note artifacts below never depend
-            # on — a failure here must record sf1_headline_error, never
-            # take the pre-existing artifacts down with it.
-            try:
-                sf1h_samples: dict[str, list[float]] = {n: [] for n in HEADLINE}
-                sf1h_cpu: dict[str, list[float]] = {n: [] for n in HEADLINE}
-                for r in range(2):
-                    for name in HEADLINE:
-                        c0 = _proc_tree_cpu_sec()
-                        t0 = time.perf_counter()
-                        n = QUERIES[name].fn(spark, sf1_dir).count()
-                        dt = round(time.perf_counter() - t0, 3)
-                        sf1h_samples[name].append(dt)
-                        if c0 is not None:
-                            c1 = _proc_tree_cpu_sec()
-                            if c1 is not None:
-                                sf1h_cpu[name].append(round(c1 - c0, 3))
-                        print(
-                            f"# sf1_headline run{r + 1} {name}: {dt:.3f}s"
-                            f" ({n} rows)",
-                            file=sys.stderr,
-                        )
-                sf1h = {n: min(ts) for n, ts in sf1h_samples.items()}
-                result["sf1_headline"] = sf1h
-                result["sf1_headline_total"] = round(sum(sf1h.values()), 3)
-                result["sf1_headline_samples"] = sf1h_samples
-                sf1h_c = {n: min(ts) for n, ts in sf1h_cpu.items() if ts}
-                if sf1h_c:
-                    result["sf1_headline_cpu"] = sf1h_c
-                    result["sf1_headline_cpu_total"] = round(
-                        sum(sf1h_c.values()), 3
-                    )
-            except Exception as ex:  # pragma: no cover - defensive guard
-                result["sf1_headline_error"] = f"{type(ex).__name__}: {ex}"[:300]
+        dense_dir = benchscale.ensure_dense_dir(
+            spark, sf_dir, str(base / "dense08"), boiler_frac=0.8)
+        ddocs = spark.read.parquet(dense_dir + "/documents.parquet")
+        dense_t = result["dense_queries"] = measure([
+            ("jaccard_prefix_dense", lambda: jaccard_pairs_prefix(ddocs, threshold=0.5).count()),
+            ("jaccard_plain_exact_dense",
+             lambda: jaccard_pairs(ddocs, threshold=0.5, max_postings=None).count()),
+        ], tag="dense")["wall"]
+        prefix, plain = dense_t["jaccard_prefix_dense"], dense_t["jaccard_plain_exact_dense"]
+        if prefix < plain:
+            result["jaccard_prefix_crossover"] = round(plain / prefix, 2)
+    except Exception as ex:  # pragma: no cover - defensive bench guard
+        result["scale_rung_error"] = f"{type(ex).__name__}: {ex}"[:300]
 
-            # Dense rung: the prefix-filter crossover proof (VERDICT r4
-            # task #4). 80% of sf0.1 docs share a 25-token boilerplate
-            # sentence -> every boilerplate shingle's postings list is
-            # ~4000 docs long, the regime AllPairs prefix filtering
-            # exists for. Both operators are exact (equal outputs,
-            # asserted in tests/test_pipeline.py); the plain
-            # inverted-index join pays sum(postings^2) while rare-first
-            # prefixes never index the hot shingles. One-time sf1-scale
-            # measurement (50k docs, frac 0.15): prefix 49.5s vs plain
-            # 246.2s (5.0x) — not re-run per round for time.
-            from flink_ci_flink_spark.benchscale import ensure_dense_dir
-            from flink_ci_flink_spark.pipeline.dedup import (
-                jaccard_pairs,
-                jaccard_pairs_prefix,
-            )
-
-            dense_dir = ensure_dense_dir(
-                spark, sf_dir, str(base / "dense08"), boiler_frac=0.8
-            )
-            ddocs = spark.read.parquet(dense_dir + "/documents.parquet")
-            dense_t: dict[str, float] = {}
-            for nm, fn in (
-                ("jaccard_prefix_dense", lambda: jaccard_pairs_prefix(ddocs, threshold=0.5)),
-                ("jaccard_plain_exact_dense", lambda: jaccard_pairs(ddocs, threshold=0.5, max_postings=None)),
-            ):
-                t0 = time.perf_counter()
-                n = fn().count()
-                dense_t[nm] = round(time.perf_counter() - t0, 3)
-                print(f"# dense {nm}: {dense_t[nm]:.3f}s ({n} rows)", file=sys.stderr)
-            result["dense_queries"] = dense_t
-            if dense_t.get("jaccard_prefix_dense", 0) < dense_t.get(
-                "jaccard_plain_exact_dense", float("inf")
-            ):
-                result["jaccard_prefix_crossover"] = round(
-                    dense_t["jaccard_plain_exact_dense"]
-                    / dense_t["jaccard_prefix_dense"],
-                    2,
-                )
-            s01 = result.get("cc_supersteps_sf01", {})
-            s1 = result.get("cc_supersteps_sf1", {})
-            if s01 and s1:
-                result["cc_scaleup_note"] = (
-                    f"graph_dedup_clusters CC ran {s01['supersteps']} "
-                    f"supersteps at sf0.1 ({sum(s01['superstep_secs']):.1f}s)"
-                    f" and {s1['supersteps']} at sf1 "
-                    f"({sum(s1['superstep_secs']):.1f}s): the iterative "
-                    "loop is a constant-superstep, near-constant-cost tail "
-                    "— the query's sf1 scale-up lives in near-dup EDGE "
-                    "CONSTRUCTION (the inverted-index jaccard join), which "
-                    "is one postings-capped shuffle and scales with data, "
-                    "not iterations."
-                )
-            if "pipe_jaccard_prefix" in sf1_t and "pipe_jaccard_pairs" in sf1_t:
-                result["jaccard_prefix_note"] = (
-                    "prefix-filtered AllPairs pays a constant overhead that "
-                    "SPARSE corpora (short postings) don't repay — it trails "
-                    "the plain join on the uniform sf rungs — but on the "
-                    "dense rung (dense_queries: 80% boilerplate overlap) it "
-                    "wins outright, and at 50k docs/frac 0.15 measured 5.0x "
-                    "(49.5s vs 246.2s, identical outputs). The crossover is "
-                    "postings-length-driven, exactly what the prefix bounds."
-                )
-        except Exception as ex:  # pragma: no cover - defensive bench guard
-            result["scale_rung_error"] = f"{type(ex).__name__}: {ex}"[:300]
-
-    # The driver captures only the last ~2000 chars of stdout; r4's full
-    # result blob outgrew that and BENCH_r04.json recorded "parsed": null.
-    # Emit the FULL detail to bench_detail.json + stderr, and keep the
-    # final stdout line a compact headline guaranteed to fit.
+    # Emit the FULL detail to bench_detail.json + stderr; stdout carries
+    # only `official_line`.
     #
     # Adjudication record: bench_adjudications.json is the PERMANENT,
     # committed home of regression adjudications (plan diffs, idle-box
     # A/Bs, drift notes). Merging it here means every bench_detail.json —
     # whoever writes it, driver or builder — carries the record; a refresh
     # can no longer drop the analysis (round-9 VERDICT "What's wrong #2").
-    _here = os.path.dirname(os.path.abspath(__file__))
     try:
-        with open(os.path.join(_here, "bench_adjudications.json")) as fh:
-            result["adjudications"] = json.load(fh)
+        result["adjudications"] = json.loads((HERE / "bench_adjudications.json").read_text())
     except (OSError, ValueError):
         pass
-    detail_path = os.path.join(_here, "bench_detail.json")
     try:
-        with open(detail_path, "w") as fh:
-            json.dump(result, fh, indent=1)
+        (HERE / "bench_detail.json").write_text(json.dumps(result, indent=1))
     except OSError:
         pass
     print("# full detail -> bench_detail.json", file=sys.stderr)
     print(json.dumps(result), file=sys.stderr)
-
-    headline = {
-        "metric": result["metric"],
-        "value": result["value"],
-        "unit": result["unit"],
-        "queries": result["queries"],
-        "runs": result["runs"],
-        "sf": result["sf"],
-        # cpu_total rides the official line: the load-invariant compare
-        # number (wall medians have a 31.9-54.0 s same-code box spread).
-        "cpu_total": result["cpu_total"],
-        # env rides the official line so a loaded-box run is annotated in
-        # BENCH_r{N}.json itself (pinned methodology, BASELINE.md §Bench).
-        "env": result["env"],
-    }
-    # sf1 headline totals ride the official line too (r12 verdict task #1:
-    # the discriminating wall signal); pure additions — every pre-existing
-    # key above is byte-identical to the r12 line.
-    for k in ("sf1_headline_total", "sf1_headline_cpu_total"):
-        if k in result:
-            headline[k] = result[k]
-    line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > 1900:  # hard guarantee: drop per-query detail before truncating
-        headline.pop("queries", None)
-        line = json.dumps(headline, separators=(",", ":"))
-    print(line)
+    print(official_line(result))
 
 
 if __name__ == "__main__":

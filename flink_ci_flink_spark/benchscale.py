@@ -70,16 +70,8 @@ def ensure_scaled_dir(
     src_dir: str,
     dst_dir: str,
     factor: int = 10,
-    tables: list[str] | None = None,
-    perturb_embeddings: bool = False,
 ) -> str:
-    """Build (once) a `factor`x id-shifted replica of `src_dir`.
-
-    ``tables`` restricts which fact tables are written (dims always copied)
-    — the 100x rehearsal only needs documents+embeddings and skips the 1 GB
-    lineitem union. ``perturb_embeddings`` nudges each copy's vectors by a
-    per-copy epsilon on the first component so a scaled ANN corpus isn't
-    `factor` exact clones of every vector (distance-tie degeneracy)."""
+    """Build (once) a `factor`x id-shifted replica of `src_dir`."""
     if os.path.exists(_marker(dst_dir)):
         return dst_dir
     os.makedirs(dst_dir, exist_ok=True)
@@ -94,8 +86,6 @@ def ensure_scaled_dir(
     for t in _DIMS:  # shared dims: single copy
         read[t].write.mode("overwrite").parquet(os.path.join(dst_dir, f"{t}.parquet"))
     for t, shifts in _SHIFTS.items():
-        if tables is not None and t not in tables:
-            continue
         df = read[t]
         copies = []
         for k in range(factor):
@@ -117,21 +107,6 @@ def ensure_scaled_dir(
                         "text",
                         F.translate("text", "ea", f"{k % 10}{k // 10}"),
                     )
-            if t == "embeddings" and perturb_embeddings and k > 0:
-                eps = float(k) * 1e-5
-                c = c.withColumn(
-                    "embedding",
-                    F.concat(
-                        F.array(
-                            (F.element_at("embedding", 1) + F.lit(eps)).cast(
-                                "float"
-                            )
-                        ),
-                        F.slice(
-                            "embedding", 2, F.size("embedding") - 1
-                        ),
-                    ),
-                )
             copies.append(c)
         out: DataFrame = copies[0]
         for c in copies[1:]:

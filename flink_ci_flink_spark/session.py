@@ -16,7 +16,9 @@ Catalyst's, so "engine bootstrap" reduces to configuration:
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 #: Runtime confs every query entrypoint (driver-owned session included)
@@ -47,14 +49,16 @@ RUNTIME_CONFS = {
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (idempotent)."""
+    """Apply runtime-settable confs to an existing session (idempotent).
+
+    A managed cluster may lock some of them down; setting a locked conf
+    raises ``AnalysisException``, which is reported as a warning naming the
+    conf, and the rest are still applied."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Some confs may be locked down on a managed cluster; every one
-            # of them is best-effort.
-            pass
+        except AnalysisException as ex:
+            warnings.warn(f"runtime conf {k}={v} not applied: {ex}", stacklevel=2)
     return spark
 
 
@@ -69,12 +73,9 @@ def get_spark(app_name: str = "flink_ci_flink_spark", cpus: int | None = None) -
     # transformWithState's state-protocol workers inherit the PYTHONPATH the
     # JVM captures at launch — expose the vendored protobuf shim now, while
     # we may still be pre-JVM (no-op when the real wheel is installed).
-    try:
-        from flink_ci_flink_spark.streaming.tws import enable_protoshim
+    from flink_ci_flink_spark.streaming.tws import enable_protoshim
 
-        enable_protoshim()
-    except Exception:
-        pass
+    enable_protoshim()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

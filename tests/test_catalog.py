@@ -48,3 +48,26 @@ def test_cached_tables_compute_from_parquet(spark):
     df.collect()
     assert executed_scans_per_table(df).get("lineitem") == 1
     assert "InMemoryTableScan" not in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_apply_runtime_confs_warns_on_a_locked_conf(spark, monkeypatch):
+    # A conf the session refuses (here a static one) is named in a warning
+    # instead of being swallowed, and the other confs are still applied.
+    import pytest
+
+    from flink_ci_flink_spark import session
+
+    locked = "spark.sql.warehouse.dir"
+    before = spark.conf.get(locked)
+    monkeypatch.setattr(
+        session, "RUNTIME_CONFS", {locked: "/nonexistent", **session.RUNTIME_CONFS}
+    )
+    tz = "spark.sql.session.timeZone"
+    spark.conf.set(tz, "America/New_York")
+    try:
+        with pytest.warns(UserWarning, match=locked):
+            session.apply_runtime_confs(spark)
+        assert spark.conf.get(tz) == "UTC"
+    finally:
+        spark.conf.set(tz, "UTC")  # later tests rely on the UTC session
+    assert spark.conf.get(locked) == before

@@ -159,3 +159,68 @@ def test_xref_ignores_untracked_correctness_artifacts():
         )
     finally:
         fixture.unlink(missing_ok=True)
+
+
+def test_official_line_matches_the_parsed_r13_line():
+    # The driver parses bench.py's last stdout line; its keys, their order
+    # and their values must come straight from the full detail record.
+    import json
+
+    import bench
+
+    detail = json.loads((REPO / "bench_detail.json").read_text())
+    parsed = json.loads((REPO / "BENCH_r13.json").read_text())["parsed"]
+    line = json.loads(bench.official_line(detail))
+    assert list(line) == list(parsed)
+    assert line == {k: detail[k] for k in parsed}
+
+
+def test_official_line_drops_only_queries_past_1900_chars():
+    import json
+
+    import bench
+
+    result = {
+        "metric": "headline_total_runtime", "value": 1.0, "unit": "sec",
+        "queries": {f"query_{i:03d}": 0.123 for i in range(100)},
+        "runs": 3, "sf": 0.1, "cpu_total": 2.0, "env": {"loaded": False},
+        "sf1_headline_total": 3.0, "sf1_headline_cpu_total": 4.0,
+        "query_samples": {"q": [1.0]},  # detail only: never on the line
+    }
+    full = {k: v for k, v in result.items() if k != "query_samples"}
+    assert len(json.dumps(full, separators=(",", ":"))) > 1900
+    line = bench.official_line(result)
+    assert len(line) <= 1900
+    assert json.loads(line) == {k: v for k, v in full.items() if k != "queries"}
+
+
+def test_measure_reduces_and_keeps_every_sample(monkeypatch):
+    # Fake clocks: each thunk advances wall and CPU time by its next
+    # scripted duration, so the reducers can be checked exactly.
+    import statistics
+
+    import bench
+
+    clock = {"wall": 0.0, "cpu": 0.0}
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock["wall"])
+    monkeypatch.setattr(bench, "_proc_tree_cpu_sec", lambda: clock["cpu"])
+
+    def scripted(walls, cpus):
+        walls, cpus = iter(walls), iter(cpus)
+
+        def thunk():
+            clock["wall"] += next(walls)
+            clock["cpu"] += next(cpus)
+            return 7
+        return thunk
+
+    items = [("a", scripted([3.0, 1.0, 2.0], [6.0, 2.0, 4.0])),
+             ("b", scripted([0.5, 9.0, 0.25], [1.0, 1.0, 1.0]))]
+    m = bench.measure(items, runs=3, reduce=statistics.median, cpu=True)
+    assert m["samples"] == {"a": [3.0, 1.0, 2.0], "b": [0.5, 9.0, 0.25]}
+    assert m["wall"] == {"a": 2.0, "b": 0.5}
+    assert m["cpu_samples"] == {"a": [6.0, 2.0, 4.0], "b": [1.0, 1.0, 1.0]}
+    assert m["cpu"] == {"a": 4.0, "b": 1.0}
+
+    m = bench.measure([("c", scripted([4.0, 1.5], [0.0, 0.0]))], runs=2)
+    assert m == {"samples": {"c": [4.0, 1.5]}, "wall": {"c": 1.5}}
