@@ -10,6 +10,7 @@ spike). Every rung is timed by `measure`: plan + execution + result
 materialization (count to driver, matching how the engine would serve it).
 """
 
+import hashlib
 import json
 import os
 import shutil
@@ -171,7 +172,9 @@ ANN_RUNG = [
 RUNS = 3  # headline runs per query
 
 
-def measure(items, runs: int = 1, reduce=min, cpu: bool = False, tag: str = "") -> dict:
+def measure(
+    items, runs: int = 1, reduce=min, cpu: bool = False, tag: str = ""
+) -> dict:
     """Time each ``(name, thunk)`` pair ``runs`` times, round-robin (every
     name once per run, so one contention spike costs one sample per name).
     A thunk does the work and returns its row count or None. Returns
@@ -194,16 +197,31 @@ def measure(items, runs: int = 1, reduce=min, cpu: bool = False, tag: str = "") 
             label = " ".join(x for x in (tag, run, name) if x)
             rows = "" if n is None else f" ({n} rows)"
             print(f"# {label}: {dt:.3f}s{rows}", file=sys.stderr)
-    out = {"samples": samples, "wall": {k: round(reduce(v), 3) for k, v in samples.items()}}
+    out = {
+        "samples": samples,
+        "wall": {k: round(reduce(v), 3) for k, v in samples.items()},
+    }
     if cpu:
         out["cpu_samples"] = {k: v for k, v in cpu_samples.items() if v}
-        out["cpu"] = {k: round(reduce(v), 3) for k, v in out["cpu_samples"].items()}
+        out["cpu"] = {
+            k: round(reduce(v), 3) for k, v in out["cpu_samples"].items()
+        }
     return out
 
 
 def _queries(spark, names, sf_dir: str) -> list:
     """``(name, thunk)`` pairs that build and count each query over ``sf_dir``."""
     return [(n, lambda n=n: QUERIES[n].fn(spark, sf_dir).count()) for n in names]
+
+
+def _fixture_base(sf_dir: str) -> Path:
+    """Cache dir for the fixtures derived from ``sf_dir``:
+    ``.benchdata/<dir name>-<hash of its resolved path>``. A fixture only
+    records that it was built, not from what, so two sources (even two
+    with the same dir name) must never share a cache dir."""
+    src = os.path.realpath(sf_dir)
+    digest = hashlib.sha1(src.encode()).hexdigest()[:8]
+    return HERE / ".benchdata" / f"{os.path.basename(src)}-{digest}"
 
 
 def _bench_stateful(spark, sf_dir: str) -> dict:
@@ -244,10 +262,9 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
     uts = ("user_id", "ts", "value")
     uts_kw = {"key": "user_id", "ts_col": "ts", "value_col": "value"}
     ops = [
-        ("", python_state(lambda: P.streaming_top_n(
-            stream(), "user_id", "value", 5, ["event_type"]), "update")),
-        # same contract, JVM-only execution (foreachBatch merge — the
-        # per-key Python tax removed); state_dir holds <= keys*n rows
+        # streaming_top_n's contract, JVM-only execution (foreachBatch
+        # merge — the per-key Python tax removed); state_dir holds <=
+        # keys*n rows
         ("jvm_foreachbatch", jvm_fold(
             P.streaming_top_n_jvm, partition_by=["user_id"], n=5,
             order_by=[F.desc("value"), F.asc("event_id")],
@@ -268,7 +285,8 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
         # vs the applyInPandasWithState count_tumbling_window
         ("count_window_python", python_state(lambda: count_tumbling_window(
             stream(*uts), "user_id", "ts", "value", size=10), "append")),
-        ("jvm_count_window", jvm_fold(P.streaming_count_window_jvm, uts, **uts_kw, size=10)),
+        ("jvm_count_window", jvm_fold(
+            P.streaming_count_window_jvm, uts, **uts_kw, size=10)),
         ("jvm_count_sliding", jvm_fold(
             P.streaming_count_sliding_window_jvm, uts, **uts_kw, size=10, slide=4)),
         ("jvm_bounded_over", jvm_fold(
@@ -281,6 +299,11 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
     ]
     tws_keys = None
     try:
+        # the first operator's plan is built before the clock starts, so
+        # its sec times only the run to completion and stays comparable
+        # with the earlier records of `sec` and `rows_per_sec`
+        top_n = P.streaming_top_n(stream(), "user_id", "value", 5, ["event_type"])
+        ops.insert(0, ("", python_state(lambda: top_n, "update")))
         wall = measure(ops, tag="stateful")["wall"]
         # round-9: transformWithStateInPandas (native split ValueState via
         # the vendored protobuf shim + RocksDB provider) vs the same
@@ -295,7 +318,8 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
             try:
                 tws_agg = python_state(lambda: tws.streaming_running_agg_tws(
                     stream("user_id", "value"), "user_id", "value"), "update")
-                wall.update(measure([("tws_running_agg", tws_agg)], tag="stateful")["wall"])
+                tws_run = measure([("tws_running_agg", tws_agg)], tag="stateful")
+                wall.update(tws_run["wall"])
             finally:
                 provider = "spark.sql.streaming.stateStore.providerClass"
                 if prev is not None:
@@ -334,8 +358,11 @@ def _bench_environment() -> dict:
     except OSError:  # pragma: no cover - non-POSIX fallback
         return {"loaded": None}
     ncpu = os.cpu_count() or 1
-    env = {"load1_prerun": round(load1, 2), "load5_prerun": round(load5, 2),
-           "load15_prerun": round(load15, 2), "cpus": ncpu}
+    env: dict = {}
+    env["load1_prerun"] = round(load1, 2)
+    env["load5_prerun"] = round(load5, 2)
+    env["load15_prerun"] = round(load15, 2)
+    env["cpus"] = ncpu
     try:
         with open("/proc/uptime") as fh:
             env["uptime_sec"] = int(float(fh.read().split()[0]))
@@ -373,9 +400,11 @@ def _settle_wait(env: dict) -> dict:
         if load1 < gate and load5 < gate:
             break
     load1, load5, load15 = os.getloadavg()
-    env["load1_initial"], env["load5_initial"] = env["load1_prerun"], env["load5_prerun"]
-    env.update(load1_prerun=round(load1, 2), load5_prerun=round(load5, 2),
-               load15_prerun=round(load15, 2))
+    env["load1_initial"] = env["load1_prerun"]
+    env["load5_initial"] = env["load5_prerun"]
+    env["load1_prerun"] = round(load1, 2)
+    env["load5_prerun"] = round(load5, 2)
+    env["load15_prerun"] = round(load15, 2)
     env["loaded"] = load1 > gate
     env["settling"] = (not env["loaded"]) and load5 > gate
     env["settle_wait_sec"] = round(waited)
@@ -447,14 +476,22 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     env = _bench_environment()
     if env.get("loaded") or env.get("settling"):
-        print(f"# box busy (load1={env['load1_prerun']}, load5={env['load5_prerun']}, "
-              f"gate {env['load_gate']}) — waiting for a settle window before the official "
-              "headline (bounded; SPARK_GRAFT_SETTLE_MAX_SEC, default 600)", file=sys.stderr)
+        print(
+            f"# box busy (load1={env['load1_prerun']}, "
+            f"load5={env['load5_prerun']}, gate {env['load_gate']}) — "
+            "waiting for a settle window before the official headline "
+            "(bounded; SPARK_GRAFT_SETTLE_MAX_SEC, default 600)",
+            file=sys.stderr,
+        )
     env = _settle_wait(env)
     if env.get("loaded"):
-        print(f"# WARNING: pre-run load1={env['load1_prerun']} exceeds gate {env['load_gate']} "
-              f'({env["cpus"]} cpus) — run annotated "loaded": headline is box-state, not a '
-              "code signal (BASELINE.md bench methodology)", file=sys.stderr)
+        print(
+            f"# WARNING: pre-run load1={env['load1_prerun']} exceeds gate "
+            f"{env['load_gate']} ({env['cpus']} cpus) — run annotated "
+            '"loaded": headline is box-state, not a code signal '
+            "(BASELINE.md bench methodology)",
+            file=sys.stderr,
+        )
     spark = get_spark("bench")
 
     # Warm the JVM + file listings + codegen/shuffle machinery with
@@ -492,7 +529,9 @@ def main() -> None:
     # around each run. Wall medians are box-sensitive (31.9-54.0 s
     # same-code spread); cpu_sec is not — cross-round official compares
     # should start here when the env block says loaded/settling.
-    head = measure(_queries(spark, HEADLINE, sf_dir), RUNS, statistics.median, cpu=True)
+    head = measure(
+        _queries(spark, HEADLINE, sf_dir), RUNS, statistics.median, cpu=True
+    )
     result = {
         "metric": "headline_total_runtime",
         "value": round(sum(head["wall"].values()), 3),
@@ -527,10 +566,9 @@ def main() -> None:
     result["ann_rung"] = {n: result["new_ops"][n] for n in ANN_RUNG if n in new_ops}
 
     # Scale rung (sf1 = 10x) + skew fixtures: the 100-TB proof points.
-    # Fixture dirs are built once and cached under .benchdata/<source dir
-    # name>/ (gitignored), so a run from another source never reuses them.
-    # Failures here must never lose the headline numbers.
-    base = HERE / ".benchdata" / Path(sf_dir.rstrip("/")).name
+    # Fixture dirs are built once and cached under `_fixture_base`
+    # (gitignored). Failures here must never lose the headline numbers.
+    base = _fixture_base(sf_dir)
     try:
         from flink_ci_flink_spark import benchscale
 
@@ -567,7 +605,9 @@ def main() -> None:
         # Own try/except: a failure in its 44 sf1-scale executions must
         # record sf1_headline_error, never take the dense rung down too.
         try:
-            sf1h = measure(_queries(spark, HEADLINE, sf1_dir), 2, cpu=True, tag="sf1_headline")
+            sf1h = measure(
+                _queries(spark, HEADLINE, sf1_dir), 2, cpu=True, tag="sf1_headline"
+            )
             result["sf1_headline"] = sf1h["wall"]
             result["sf1_headline_total"] = round(sum(sf1h["wall"].values()), 3)
             result["sf1_headline_samples"] = sf1h["samples"]
@@ -589,17 +629,22 @@ def main() -> None:
         # 246.2s (5.0x) — not re-run per round for time. The CC and
         # jaccard scale-up readings are bench_adjudications.json
         # 'cc_scaleup_note_r9' and 'jaccard_prefix_note_r9'.
-        from flink_ci_flink_spark.pipeline.dedup import jaccard_pairs, jaccard_pairs_prefix
+        from flink_ci_flink_spark.pipeline.dedup import (
+            jaccard_pairs,
+            jaccard_pairs_prefix,
+        )
 
         dense_dir = benchscale.ensure_dense_dir(
             spark, sf_dir, str(base / "dense08"), boiler_frac=0.8)
         ddocs = spark.read.parquet(dense_dir + "/documents.parquet")
         dense_t = result["dense_queries"] = measure([
-            ("jaccard_prefix_dense", lambda: jaccard_pairs_prefix(ddocs, threshold=0.5).count()),
+            ("jaccard_prefix_dense",
+             lambda: jaccard_pairs_prefix(ddocs, threshold=0.5).count()),
             ("jaccard_plain_exact_dense",
              lambda: jaccard_pairs(ddocs, threshold=0.5, max_postings=None).count()),
         ], tag="dense")["wall"]
-        prefix, plain = dense_t["jaccard_prefix_dense"], dense_t["jaccard_plain_exact_dense"]
+        prefix = dense_t["jaccard_prefix_dense"]
+        plain = dense_t["jaccard_plain_exact_dense"]
         if prefix < plain:
             result["jaccard_prefix_crossover"] = round(plain / prefix, 2)
     except Exception as ex:  # pragma: no cover - defensive bench guard
@@ -614,7 +659,9 @@ def main() -> None:
     # whoever writes it, driver or builder — carries the record; a refresh
     # can no longer drop the analysis (round-9 VERDICT "What's wrong #2").
     try:
-        result["adjudications"] = json.loads((HERE / "bench_adjudications.json").read_text())
+        result["adjudications"] = json.loads(
+            (HERE / "bench_adjudications.json").read_text()
+        )
     except (OSError, ValueError):
         pass
     try:

@@ -34,14 +34,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from flink_ci_flink_spark.session import get_spark
 
-    # Two task threads: the fixtures are sf0.001, so every extra thread only
-    # adds a shuffle partition to each stage and a state-store partition to
-    # each stateful micro-batch (run_to_completion sizes those from
-    # defaultParallelism). Two still exercise the cross-partition paths.
-    # Going from eight threads to two cut the wall time of
-    # tests/test_triggers.py + tests/test_streaming.py from 237-262 s to
-    # 146 s on a shared 4-vCPU box.
-    spark = get_spark("flink_ci_flink_spark-tests", cpus=2)
+    spark = get_spark("flink_ci_flink_spark-tests", cpus=8)
     yield spark
     spark.stop()
 

@@ -224,3 +224,21 @@ def test_measure_reduces_and_keeps_every_sample(monkeypatch):
 
     m = bench.measure([("c", scripted([4.0, 1.5], [0.0, 0.0]))], runs=2)
     assert m == {"samples": {"c": [4.0, 1.5]}, "wall": {"c": 1.5}}
+
+
+def test_fixture_base_is_keyed_by_the_resolved_source(tmp_path):
+    # Two sources with the same dir name must not share derived fixtures
+    # (a fixture's marker says only that it was built); a symlink to a
+    # source resolves to that source's cache dir.
+    import bench
+
+    a, b = tmp_path / "a" / "sf0.1", tmp_path / "b" / "sf0.1"
+    a.mkdir(parents=True)
+    b.mkdir(parents=True)
+    (tmp_path / "link").symlink_to(a)
+    base_a = bench._fixture_base(str(a))
+    assert base_a.parent == bench.HERE / ".benchdata"
+    assert base_a.name.startswith("sf0.1-")
+    assert bench._fixture_base(str(b)) != base_a
+    assert bench._fixture_base(str(a) + "/") == base_a
+    assert bench._fixture_base(str(tmp_path / "link")) == base_a
