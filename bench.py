@@ -3,11 +3,12 @@
 
 Prints exactly ONE JSON line (`official_line`): {"metric", "value" (total
 sec), "unit", "queries": {name: sec}, "runs", "sf", "cpu_total", "env", ...};
-the full record goes to bench_detail.json. Each headline query runs 3 times
-after warm-up and reports the per-query MEDIAN (box noise is ~2x run-to-run
-with occasional 8x contention spikes; the 3-run median absorbs a single
-spike). Every rung is timed by `measure`: plan + execution + result
-materialization (count to driver, matching how the engine would serve it).
+the full record goes to bench_detail.json (`_detail_path`). Each headline
+query runs 3 times after warm-up and reports the per-query MEDIAN (box
+noise is ~2x run-to-run with occasional 8x contention spikes; the 3-run
+median absorbs a single spike). Every rung is timed by `measure`: plan +
+execution + result materialization (count to driver, matching how the
+engine would serve it).
 """
 
 import hashlib
@@ -222,6 +223,16 @@ def _fixture_base(sf_dir: str) -> Path:
     src = os.path.realpath(sf_dir)
     digest = hashlib.sha1(src.encode()).hexdigest()[:8]
     return HERE / ".benchdata" / f"{os.path.basename(src)}-{digest}"
+
+
+def _detail_path(sf_dir_env: str | None) -> Path:
+    """Where a run's full detail goes, given ``$SPARK_GRAFT_SF_DIR``. The
+    committed bench_detail.json records the default sf0.1 run (variable
+    unset); a run over a named source writes beside that source's fixture
+    caches, so a local check at another scale leaves the record alone."""
+    if sf_dir_env is None:
+        return HERE / "bench_detail.json"
+    return _fixture_base(sf_dir_env) / "bench_detail.json"
 
 
 def _bench_stateful(spark, sf_dir: str) -> dict:
@@ -650,7 +661,7 @@ def main() -> None:
     except Exception as ex:  # pragma: no cover - defensive bench guard
         result["scale_rung_error"] = f"{type(ex).__name__}: {ex}"[:300]
 
-    # Emit the FULL detail to bench_detail.json + stderr; stdout carries
+    # Emit the FULL detail to `_detail_path` + stderr; stdout carries
     # only `official_line`.
     #
     # Adjudication record: bench_adjudications.json is the PERMANENT,
@@ -664,11 +675,13 @@ def main() -> None:
         )
     except (OSError, ValueError):
         pass
+    detail = _detail_path(os.environ.get("SPARK_GRAFT_SF_DIR"))
     try:
-        (HERE / "bench_detail.json").write_text(json.dumps(result, indent=1))
+        detail.parent.mkdir(parents=True, exist_ok=True)
+        detail.write_text(json.dumps(result, indent=1))
     except OSError:
         pass
-    print("# full detail -> bench_detail.json", file=sys.stderr)
+    print(f"# full detail -> {detail}", file=sys.stderr)
     print(json.dumps(result), file=sys.stderr)
     print(official_line(result))
 

@@ -563,7 +563,8 @@ def stream_all_rows_jvm(
     Python (beyond reference parity twice over: `StreamExecMatch.scala:192`
     throws on ALL ROWS even in batch).
 
-    foreachBatch merge over a versioned parquet buffer: per micro-batch,
+    foreachBatch merge over a versioned parquet buffer
+    (`streaming.core.VersionedState`): per micro-batch,
     the key's buffered suffix is re-planned through the SAME lead()/explode
     compile as batch (`try_compile_all_rows`), and a match emits exactly
     once — in the first batch where its last row falls at/behind the
@@ -586,25 +587,34 @@ def stream_all_rows_jvm(
     if not _compilable(pattern):
         return None
     from flink_ci_flink_spark.functions.scalar import epoch_seconds
+    from flink_ci_flink_spark.streaming.core import (
+        VersionedState,
+        append_epoch,
+        drain_foreach_batch,
+        read_epochs,
+    )
 
     L = sum(st.max_times for st in pattern.stages if not st.negated)
     keep_tail = max(L - 1, 1)
     spark = stream.sparkSession
     schema = StructType.fromDDL(output_schema)
     cols = list(dict.fromkeys([*keys, ts_col, *payload_cols]))
-    last = {"v": None, "emitted": False}
+    versions = VersionedState(spark, state_dir, "buf_v", "meta_v")
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
+        with versions.batch(batch_id) as prev_id:
+            step(batch_df, batch_id, prev_id)
+
+    def step(batch_df: DataFrame, batch_id: int, prev_id: int | None) -> None:
         buf = batch_df.select(*cols)
-        if last["v"] is not None:
-            buf = spark.read.parquet(f"{state_dir}/buf_v{last['v']}").unionByName(buf)
+        if prev_id is not None:
+            buf = versions.read("buf_v", prev_id).unionByName(buf)
         buf = buf.localCheckpoint()  # one materialization feeds 4 plans
         fr = buf.withColumn("__tsec", epoch_seconds(buf, ts_col)).groupBy(
             *keys
         ).agg((F.max("__tsec") - F.lit(delay_seconds)).alias("__frontier"))
-        if last["v"] is not None:
-            meta = spark.read.parquet(f"{state_dir}/meta_v{last['v']}")
-        else:
+        meta = versions.read("meta_v", prev_id)
+        if meta is None:
             meta = fr.select(
                 *keys,
                 F.lit(float("-inf")).alias("__frontier_prev"),
@@ -642,7 +652,7 @@ def stream_all_rows_jvm(
                 + F.dense_rank().over(rank_w)
             ).cast("long"),
         ).select(*[f.name for f in schema.fields])
-        out.write.mode("append").parquet(f"{state_dir}/out")
+        append_epoch(out, f"{state_dir}/out", batch_id)
         # advance meta: new frontier + emitted-match count per key
         emitted_counts = (
             newly.groupBy(*keys)
@@ -660,7 +670,7 @@ def stream_all_rows_jvm(
                 ).cast("long").alias("__n_matches"),
             )
         )
-        new_meta.write.mode("overwrite").parquet(f"{state_dir}/meta_v{batch_id}")
+        versions.write(new_meta, "meta_v", batch_id)
         # prune: in-flight rows + the trailing finalized suffix
         tw = Window.partitionBy(*keys).orderBy(F.col(ts_col).desc())
         pruned = (
@@ -678,24 +688,12 @@ def stream_all_rows_jvm(
             .filter("__keep")
             .select(*cols)
         )
-        pruned.write.mode("overwrite").parquet(f"{state_dir}/buf_v{batch_id}")
-        prev = last["v"]
-        last["v"] = batch_id
-        last["emitted"] = True
-        from flink_ci_flink_spark.streaming.process import _prune_state_versions
+        versions.write(pruned, "buf_v", batch_id)
 
-        keep = {batch_id} | ({prev} if prev is not None else set())
-        _prune_state_versions(state_dir, "buf_v", keep)
-        _prune_state_versions(state_dir, "meta_v", keep)
-
-    q = stream.writeStream.foreachBatch(merge).start(queryName=query_name)
-    q.processAllAvailable()
-    q.stop()
-    if not last["emitted"]:
-        return spark.createDataFrame([], schema)
+    drain_foreach_batch(stream, merge, query_name)
     # full-row distinct absorbs at-least-once re-appends of a replayed batch
     return (
-        spark.read.parquet(f"{state_dir}/out")
+        read_epochs(spark, f"{state_dir}/out", schema=schema)
         .dropDuplicates()
         .to(schema)
     )

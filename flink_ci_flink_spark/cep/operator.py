@@ -649,7 +649,9 @@ def cep_stream_replay(
     distinct event times per key) and are retained while their
     anchor stays inside the buffer window; buffer pruning keeps each key's
     rows above frontier − within plus ``extra_tail_rows`` older rows (the
-    lag context of the kept region). State versions by batch_id.
+    lag context of the kept region). State versions by batch_id
+    (`streaming.core.VersionedState`); emitted rows go to an
+    `append_epoch` store.
 
     NOTE on prune-boundary semantics: a retained tail row recomputes any
     ``prepare``-derived lag value over the PRUNED buffer, so a real lag
@@ -698,11 +700,16 @@ def cep_stream_replay(
         state_dir = tempfile.mkdtemp(prefix="cep_replay_state_")
     within = float(pattern.within_seconds)
     from flink_ci_flink_spark.functions.scalar import epoch_seconds
-    from flink_ci_flink_spark.streaming.process import _prune_state_versions
+    from flink_ci_flink_spark.streaming.core import (
+        VersionedState,
+        append_epoch,
+        drain_foreach_batch,
+        read_epochs,
+    )
 
     spark = stream.sparkSession
     cols = list(stream.columns)
-    last = {"v": None, "out": False}
+    versions = VersionedState(spark, state_dir, "buf_v", "idents_v")
     ext_schema = output_schema + ", __ident string, __t0 double"
 
     def flat(key_tuple, mi, m, events):
@@ -731,16 +738,16 @@ def cep_stream_replay(
         return [row]
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        from flink_ci_flink_spark.streaming.process import _latest_version_below
-
-        # replay-safe predecessor from DISK (same contract as
-        # jvm_keyed_fold): a redelivered batch N re-reads buf_v{N-1} and
+        # a redelivered batch N re-reads its on-disk predecessor and
         # regenerates its buffer/idents instead of double-merging its own
-        # output into the buffer
-        prev_id = _latest_version_below(state_dir, "buf_v", batch_id)
+        # output into the buffer (`VersionedState`)
+        with versions.batch(batch_id) as prev_id:
+            step(batch_df, batch_id, prev_id)
+
+    def step(batch_df: DataFrame, batch_id: int, prev_id: int | None) -> None:
         buf = batch_df.select(*cols)
         if prev_id is not None:
-            buf = spark.read.parquet(f"{state_dir}/buf_v{prev_id}").unionByName(buf)
+            buf = versions.read("buf_v", prev_id).unionByName(buf)
         buf = buf.localCheckpoint(eager=True)
         work = prepare(buf) if prepare is not None else buf
         res = None
@@ -761,16 +768,11 @@ def cep_stream_replay(
                 output_schema=ext_schema,
             )
         res = res.localCheckpoint(eager=True)
-        if prev_id is not None:
-            prev_idents = spark.read.parquet(f"{state_dir}/idents_v{prev_id}")
+        prev_idents = versions.read("idents_v", prev_id)
+        new = res
+        if prev_idents is not None:
             new = res.join(prev_idents.select("__ident"), "__ident", "left_anti")
-        else:
-            prev_idents = None
-            new = res
-        new.withColumn("__epoch", F.lit(int(batch_id))).write.mode(
-            "append"
-        ).parquet(f"{state_dir}/out")
-        last["out"] = True
+        append_epoch(new, f"{state_dir}/out", batch_id)
         # per-key frontier from the buffer; prune idents + buffer to the
         # within-window (+ lag context rows)
         tsec = epoch_seconds(buf, ts_col)
@@ -786,10 +788,12 @@ def cep_stream_replay(
         idents = res.select(*keys, "__ident", "__t0")
         if prev_idents is not None:
             idents = prev_idents.unionByName(idents).dropDuplicates(["__ident"])
-        idents.join(fr, keys).filter(
-            F.col("__t0") >= F.col("__keep_from")
-        ).select(*keys, "__ident", "__t0").write.mode("overwrite").parquet(
-            f"{state_dir}/idents_v{batch_id}"
+        versions.write(
+            idents.join(fr, keys)
+            .filter(F.col("__t0") >= F.col("__keep_from"))
+            .select(*keys, "__ident", "__t0"),
+            "idents_v",
+            batch_id,
         )
         from pyspark.sql.window import Window as _W
 
@@ -815,22 +819,10 @@ def cep_stream_replay(
             .filter("__keep")
             .select(*cols)
         )
-        pruned.write.mode("overwrite").parquet(f"{state_dir}/buf_v{batch_id}")
-        last["v"] = batch_id
-        keep = {batch_id} | ({prev_id} if prev_id is not None else set())
-        _prune_state_versions(state_dir, "buf_v", keep)
-        _prune_state_versions(state_dir, "idents_v", keep)
+        versions.write(pruned, "buf_v", batch_id)
 
-    q = stream.writeStream.foreachBatch(merge).start(queryName=query_name)
-    q.processAllAvailable()
-    q.stop()
+    drain_foreach_batch(stream, merge, query_name)
     out_cols = [p.strip().split()[0] for p in output_schema.split(",")]
-    if not last["out"]:
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromDDL(output_schema))
-    return (
-        spark.read.parquet(f"{state_dir}/out")
-        .dropDuplicates(["__ident"])
-        .select(*out_cols)
-    )
+    return read_epochs(
+        spark, f"{state_dir}/out", ["__ident"], ext_schema
+    ).select(*out_cols)

@@ -36,6 +36,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_ci_flink_spark.streaming.core import (
+    append_epoch,
+    foreach_batch_upsert,
+    read_epochs,
+)
+
 
 def text_feature_exprs(
     text_col: str = "text", chars_col: str = "n_chars"
@@ -255,14 +261,9 @@ def streaming_model_screen_ingest(
     encode-on-ingest path. Deterministic integer scoring makes
     at-least-once redeliveries byte-identical, so `finalize_model_screen`
     collapses them exactly on the id. Returns the started query."""
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     def merge(batch_df, epoch_id: int) -> None:
         scored = perceptron_score(batch_df, features, weights, id_col=id_col)
-        if scored.take(1):
-            scored.withColumn(
-                "__epoch", F.lit(int(epoch_id))
-            ).write.mode("append").parquet(store_dir)
+        append_epoch(scored, store_dir, epoch_id)
 
     return foreach_batch_upsert(stream_df, merge, checkpoint)
 
@@ -271,8 +272,4 @@ def finalize_model_screen(spark, store_dir: str, id_col: str = "doc_id"):
     """Close the streaming screen: replay-dedup on the id (scores are
     deterministic, so duplicates are byte-identical) — equal to batch
     `perceptron_score` over the whole corpus."""
-    return (
-        spark.read.parquet(store_dir)
-        .dropDuplicates([id_col])
-        .select(id_col, "score", "pred")
-    )
+    return read_epochs(spark, store_dir, [id_col]).select(id_col, "score", "pred")

@@ -26,6 +26,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from flink_ci_flink_spark.pipeline.text import token_hash, tokens
+from flink_ci_flink_spark.streaming.core import (
+    UnpersistOnStop,
+    append_epoch,
+    foreach_batch_upsert,
+    persist_static_side,
+    read_epochs,
+)
 
 # Deterministic LCG-style coefficient tables for MinHash permutations.
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1 (Mersenne)
@@ -783,21 +790,14 @@ def streaming_minhash_dedup(
     (id, band, key), laid down once at ingest; the expensive
     tokenize/shingle/signature work never re-runs. Returns the started
     StreamingQuery."""
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     def merge(batch_df, epoch_id: int) -> None:
         bt = minhash_band_table(
             batch_df, text_col, id_col, num_hashes, bands, shingle_n
         )
-        if bt.take(1):
-            # foreachBatch is at-least-once: a replayed epoch after a
-            # failure/restart appends its band rows AGAIN. Stamp the epoch
-            # so finalize can collapse replays exactly (a duplicated id in
-            # a bucket would otherwise emit id_a==id_b self-pairs and
-            # inflate n_bands_shared).
-            bt.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(bands_dir)
+        # a replayed epoch appends its band rows AGAIN; finalize must
+        # collapse them (a duplicated id in a bucket would otherwise emit
+        # id_a==id_b self-pairs and inflate n_bands_shared)
+        append_epoch(bt, bands_dir, epoch_id)
 
     return foreach_batch_upsert(stream_df, merge, checkpoint)
 
@@ -811,10 +811,8 @@ def finalize_minhash_pairs(
     corpus, so dropDuplicates collapses any at-least-once re-appends
     before pair generation (map-side combinable — partial aggregation
     absorbs the duplicates before the shuffle)."""
-    bt = spark.read.parquet(bands_dir).drop("__epoch")
-    return _pairs_from_bands(
-        bt.dropDuplicates([id_col, "band"]), id_col, max_bucket
-    )
+    bt = read_epochs(spark, bands_dir, [id_col, "band"])
+    return _pairs_from_bands(bt, id_col, max_bucket)
 
 
 def containment_pairs(
@@ -1004,14 +1002,9 @@ def streaming_line_dedup_ingest(
     (streaming == batch parity asserted in tests). Epoch-stamped appends:
     at-least-once foreachBatch replays collapse exactly in finalize.
     Returns the started StreamingQuery."""
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     def merge(batch_df, epoch_id: int) -> None:
         seg = segment_table(batch_df, seg_tokens, text_col, id_col)
-        if seg.take(1):
-            seg.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(segs_dir)
+        append_epoch(seg, segs_dir, epoch_id)
 
     return foreach_batch_upsert(stream_df, merge, checkpoint)
 
@@ -1020,10 +1013,8 @@ def finalize_line_dedup(spark, segs_dir: str, id_col: str = "doc_id") -> DataFra
     """Resolve line dedup over the accumulated streaming segment store.
     Replayed epochs collapse via dropDuplicates on (doc, pos) — a doc's
     segmentation is deterministic, so any replay's copy is identical."""
-    ex = (
-        spark.read.parquet(segs_dir)
-        .dropDuplicates([id_col, "pos"])
-        .select(id_col, "n_segments", "pos", "seg")
+    ex = read_epochs(spark, segs_dir, [id_col, "pos"]).select(
+        id_col, "n_segments", "pos", "seg"
     )
     return _resolve_line_dedup(ex, id_col)
 
@@ -1271,14 +1262,9 @@ def streaming_winnow_ingest(
     fingerprint-key shuffle over the accumulated store — equal to the
     one-shot `winnow_pairs`. The expensive tokenize/gram/window work runs
     once at ingest. Returns the started StreamingQuery."""
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     def merge(batch_df, epoch_id: int) -> None:
         ft = winnow_fingerprint_table(batch_df, text_col, id_col, k, w)
-        if ft.take(1):
-            ft.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(fps_dir)
+        append_epoch(ft, fps_dir, epoch_id)
 
     return foreach_batch_upsert(stream_df, merge, checkpoint)
 
@@ -1294,11 +1280,7 @@ def finalize_winnow_pairs(
     at-least-once epoch replays ((id, fp) rows are unique in the corpus —
     the per-doc sketch is a distinct set), then the same capped pair
     generation as the batch path."""
-    ft = (
-        spark.read.parquet(fps_dir)
-        .drop("__epoch")
-        .dropDuplicates([id_col, "fp"])
-    )
+    ft = read_epochs(spark, fps_dir, [id_col, "fp"])
     tbl = ft.select(
         F.col(id_col), F.lit(0).alias("band"), F.col("fp").alias("key")
     )
@@ -1636,12 +1618,6 @@ def streaming_delta_dedup_ingest(
     documents the per-trigger re-read dominates the replay wall; on a
     cluster the index is GBs per trigger otherwise). The returned query
     proxy unpersists it on ``stop()``."""
-    from flink_ci_flink_spark.streaming.core import (
-        UnpersistOnStop,
-        foreach_batch_upsert,
-        persist_static_side,
-    )
-
     buckets = persist_static_side(
         stream_df.sparkSession.read.parquet(buckets_dir)
     )
@@ -1656,10 +1632,7 @@ def streaming_delta_dedup_ingest(
             id_col,
             min_agree,
         )
-        if out.take(1):
-            out.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(store_dir)
+        append_epoch(out, store_dir, epoch_id)
 
     return UnpersistOnStop(
         foreach_batch_upsert(stream_df, merge, checkpoint), buckets
@@ -1669,8 +1642,4 @@ def streaming_delta_dedup_ingest(
 def finalize_delta_dedup(spark, store_dir: str, id_col: str = "doc_id"):
     """Close the streaming delta-dedup screen: replay-dedup on the id
     (decisions are deterministic, duplicates byte-identical)."""
-    return (
-        spark.read.parquet(store_dir)
-        .dropDuplicates([id_col])
-        .drop("__epoch")
-    )
+    return read_epochs(spark, store_dir, [id_col])

@@ -21,6 +21,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from flink_ci_flink_spark.streaming.core import (
+    append_epoch,
+    foreach_batch_upsert,
+    read_epochs,
+)
+
 
 def _to_double(arr) -> Column:
     c = F.col(arr) if isinstance(arr, str) else arr
@@ -1677,8 +1683,6 @@ def streaming_ivfpq_ingest(
     byte-identical rows that collapse on the id at probe time — the
     streamed index answers EXACTLY like the batch pipeline
     (`ivfpq_ann_topk`). The online half of offline-train/online-serve."""
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     cent_all = F.array(
         *[_lit_vec_long(cv) for cv in centroids]
     )
@@ -1694,10 +1698,7 @@ def streaming_ivfpq_ingest(
                 lambda x, y: x - y,
             ),
         ).select(id_col, "cell", _pq_recon_expr(books, "__rv").alias("__rr"))
-        if b.take(1):
-            b.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).partitionBy("cell").parquet(store_dir)
+        append_epoch(b, store_dir, epoch_id, partition_by="cell")
 
     return foreach_batch_upsert(stream_df, merge, checkpoint)
 
@@ -1731,8 +1732,10 @@ def ivfpq_probe_store(
         query_id_col, "__qq", F.explode(cp("__qq").getField("probes")).alias("cell")
     )
     probe_cells = sorted({r.cell for r in qp.select("cell").distinct().collect()})
+    # a store that only saw empty batches holds no schema: name it
+    schema = f"{id_col} long, __rr array<long>, cell int"
     corp = (
-        spark.read.parquet(store_dir)
+        read_epochs(spark, store_dir, schema=schema)
         .filter(F.col("cell").isin(probe_cells))
         .select(id_col, F.col("cell").cast("int").alias("cell"), "__rr")
         .dropDuplicates([id_col])
@@ -1758,16 +1761,11 @@ def streaming_ivf_ingest(
     reads only the probed cells' files (partition pruning is the
     inverted-file structure on disk). At-least-once replays collapse on
     the id at finalize. Returns the started StreamingQuery."""
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     def merge(batch_df, epoch_id: int) -> None:
         b = batch_df.select(
             F.col(id_col), _to_double(vec_col).alias("__v")
         ).withColumn("cell", _assign_cells(F.col("__v"), centroids))
-        if b.take(1):
-            b.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).partitionBy("cell").parquet(store_dir)
+        append_epoch(b, store_dir, epoch_id, partition_by="cell")
 
     return foreach_batch_upsert(stream_df, merge, checkpoint)
 
@@ -1785,10 +1783,10 @@ def finalize_knn_join(
     results to `knn_join(corpus, centroids=...)` over the full corpus
     (asserted in tests/test_streaming_curation.py). The neighbor side
     comes straight from the cell-partitioned store."""
-    vecs = (
-        spark.read.parquet(store_dir)
-        .dropDuplicates([id_col])
-        .select(F.col(id_col), F.col("__v").alias("embedding"))
+    # a store that only saw empty batches holds no schema: name it
+    schema = f"{id_col} long, __v array<double>, cell int"
+    vecs = read_epochs(spark, store_dir, [id_col], schema).select(
+        F.col(id_col), F.col("__v").alias("embedding")
     )
     return knn_join(
         vecs,

@@ -37,6 +37,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_ci_flink_spark.pipeline.text import token_hash, tokens
+from flink_ci_flink_spark.streaming.core import (
+    append_epoch,
+    foreach_batch_upsert,
+    read_epochs,
+)
 
 
 def window_table(
@@ -244,38 +249,28 @@ def streaming_span_dedup(
     Returns the started StreamingQuery."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     def merge(batch_df, epoch_id: int) -> None:
         wt = window_table(batch_df, text_col, id_col, w)
-        if not wt.take(1):
-            return
-        # foreachBatch is at-least-once: stamp the epoch so a replayed
-        # batch's re-appended rows are collapsible at finalize ((doc, pos)
-        # windows are unique in the corpus — see finalize_span_stats).
-        wt.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-            "append"
-        ).parquet(windows_dir)
+        # a replayed batch's re-appended windows collapse at finalize
+        # ((doc, pos) windows are unique in the corpus)
+        append_epoch(wt, windows_dir, epoch_id)
         spark = batch_df.sparkSession
         delta = wt.groupBy("whash").agg(
             F.min(id_col).alias("__min_id"), F.max(id_col).alias("__max_id")
         )
-        # existence probe must work on hdfs:///s3:// too (os.path.exists
-        # only sees the local filesystem — it would silently reset the
-        # registry every batch on a remote store); min/max re-merge of a
-        # replayed delta is idempotent, so at-least-once is safe here.
-        try:
-            old = spark.read.parquet(registry_dir)
-            merged = (
-                old.unionByName(delta)
-                .groupBy("whash")
-                .agg(
-                    F.min("__min_id").alias("__min_id"),
-                    F.max("__max_id").alias("__max_id"),
-                )
+        # min/max re-merge of a replayed delta is idempotent, so
+        # at-least-once is safe here. Before the first batch the registry
+        # reads as zero rows (through Spark, so on hdfs:// and s3:// too);
+        # any other read failure, such as a corrupt registry, raises.
+        merged = (
+            read_epochs(spark, registry_dir, schema=delta.schema)
+            .unionByName(delta)
+            .groupBy("whash")
+            .agg(
+                F.min("__min_id").alias("__min_id"),
+                F.max("__max_id").alias("__max_id"),
             )
-        except Exception:  # AnalysisException: path does not exist (first batch)
-            merged = delta
+        )
         tmp = registry_dir + ".tmp"
         merged.write.mode("overwrite").parquet(tmp)
         spark.read.parquet(tmp).write.mode("overwrite").parquet(registry_dir)
@@ -293,11 +288,7 @@ def finalize_span_stats(spark, windows_dir: str, registry_dir: str, w: int = 8):
     # collapse at-least-once replays: each (doc, pos) window is unique in
     # the corpus, so this dropDuplicates is exact idempotence, absorbed
     # map-side by partial aggregation before the per-doc shuffle below
-    wt = (
-        spark.read.parquet(windows_dir)
-        .drop("__epoch")
-        .dropDuplicates(["doc_id", "pos"])
-    )
+    wt = read_epochs(spark, windows_dir, ["doc_id", "pos"])
     dup = (
         spark.read.parquet(registry_dir)
         .filter(F.col("__min_id") != F.col("__max_id"))

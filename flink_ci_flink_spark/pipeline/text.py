@@ -15,6 +15,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_ci_flink_spark.streaming.core import (
+    append_epoch,
+    foreach_batch_upsert,
+    read_epochs,
+)
+
 #: Tiny per-language stopword lists for the language-ID heuristic.
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"],
@@ -667,8 +673,6 @@ def streaming_lm_screen_ingest(
     running `rare_bigram_stats` over the whole corpus. At-least-once
     replays are collapsed exactly at finalize via the (id, pos) natural
     key. Returns the started StreamingQuery."""
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     def merge(batch_df, epoch_id: int) -> None:
         rows = batch_df.select(
             F.col(id_col), bigrams(text_col).alias("__bg")
@@ -676,10 +680,7 @@ def streaming_lm_screen_ingest(
             F.col(id_col),
             F.posexplode_outer("__bg").alias("pos", "bigram"),
         ).withColumn("pos", F.coalesce(F.col("pos"), F.lit(-1)))
-        if rows.take(1):
-            rows.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(store_dir)
+        append_epoch(rows, store_dir, epoch_id)
 
     return foreach_batch_upsert(stream_df, merge, checkpoint)
 
@@ -696,11 +697,7 @@ def finalize_lm_screen(
     same model-train + scoring tail as the batch screen — identical
     results to `rare_bigram_stats` over the full corpus (asserted in
     tests/test_streaming_curation.py)."""
-    rows = (
-        spark.read.parquet(store_dir)
-        .dropDuplicates([id_col, "pos"])
-        .select(id_col, "bigram")
-    )
+    rows = read_epochs(spark, store_dir, [id_col, "pos"]).select(id_col, "bigram")
     return score_bigram_rows(
         rows, rare_below, train_mod, id_col=id_col, max_rare_pct=max_rare_pct
     )
@@ -1217,8 +1214,6 @@ def streaming_langid_screen_ingest(
     profiles and appends (id, lang, lang_pred, hits). Deterministic
     integer hits make at-least-once redeliveries byte-identical, so the
     finalize collapses them exactly on the id."""
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
-
     pred, hits = langid_serve_exprs(profile, text_col)
 
     def merge(batch_df, epoch_id: int) -> None:
@@ -1230,10 +1225,7 @@ def streaming_langid_screen_ingest(
             pred.alias("lang_pred"),
             hits.alias("hits"),
         )
-        if scored.take(1):
-            scored.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(store_dir)
+        append_epoch(scored, store_dir, epoch_id)
 
     return foreach_batch_upsert(stream_df, merge, checkpoint)
 
@@ -1241,7 +1233,7 @@ def streaming_langid_screen_ingest(
 def finalize_langid_screen(spark, store_dir: str, id_col: str = "doc_id"):
     """Close the streaming language-ID screen: replay-dedup on the id,
     then the same confusion matrix as the batch evaluation."""
-    preds = spark.read.parquet(store_dir).dropDuplicates([id_col])
+    preds = read_epochs(spark, store_dir, [id_col])
     return (
         preds.groupBy("lang", "lang_pred")
         .agg(F.count(F.lit(1)).alias("n_docs"))

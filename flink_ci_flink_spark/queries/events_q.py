@@ -1114,7 +1114,7 @@ def streaming_broadcast_rules_replay(spark: SparkSession, sf_dir: str) -> DataFr
     import tempfile
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
-    from flink_ci_flink_spark.streaming.core import broadcast_connect
+    from flink_ci_flink_spark.streaming.core import broadcast_connect, read_epochs
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("event_id", "event_type", "value", "ts")
@@ -1144,10 +1144,8 @@ def streaming_broadcast_rules_replay(spark: SparkSession, sf_dir: str) -> DataFr
     )
     q.processAllAvailable()
     q.stop()
-    return (
-        spark.read.parquet(f"{base}/out")
-        .dropDuplicates(["event_id", "rule_id"])
-        .select("event_id", "rule_id", F.round("value", 6).alias("value"))
+    return read_epochs(spark, f"{base}/out", ["event_id", "rule_id"]).select(
+        "event_id", "rule_id", F.round("value", 6).alias("value")
     )
 
 

@@ -30,6 +30,7 @@ from flink_ci_flink_spark.pipeline import (
 from flink_ci_flink_spark.pipeline.dedup import MINHASH_PRIME, _coeffs
 from flink_ci_flink_spark.queries.registry import QUERIES as _REGISTRY
 from flink_ci_flink_spark.queries.registry import query
+from flink_ci_flink_spark.streaming.core import append_epoch, read_epochs
 
 # ---------------------------------------------------------------------------
 # Shared SQL fragments for the oracles (exact mirrors of pipeline.text/dedup)
@@ -1049,18 +1050,15 @@ def streaming_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     b = b.withColumn("cell", assign_cells_int_expr(F.col("__q"), centroids))
     from flink_ci_flink_spark.pipeline.similarity import _pq_recon_expr
 
-    b.withColumn(
+    redelivered = b.withColumn(
         "__rv",
         F.zip_with(
             "__q",
             F.element_at(cent_all, F.col("cell") + 1),
             lambda x, y: x - y,
         ),
-    ).select(
-        "vec_id", "cell", _pq_recon_expr(books, "__rv").alias("__rr")
-    ).withColumn("__epoch", F.lit(99)).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{base}/store")
+    ).select("vec_id", "cell", _pq_recon_expr(books, "__rv").alias("__rr"))
+    append_epoch(redelivered, f"{base}/store", 99, partition_by="cell")
     queries = t.embeddings.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -4366,10 +4364,7 @@ def streaming_gopher_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
         masked = gopher_rules(
             batch_df, min_words=25, mean_len_lo10=30, mean_len_hi10=45
         )
-        if masked.take(1):
-            masked.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(store)
+        append_epoch(masked, store, epoch_id)
 
     q = foreach_batch_upsert(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
@@ -4378,10 +4373,8 @@ def streaming_gopher_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
     )
     q.processAllAvailable()
     q.stop()
-    return (
-        spark.read.parquet(store)
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "n_words", "fail_mask", "kept")
+    return read_epochs(spark, store, ["doc_id"]).select(
+        "doc_id", "n_words", "fail_mask", "kept"
     )
 
 
@@ -4723,10 +4716,7 @@ def streaming_dsir_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("score")
             )
         )
-        if scored.take(1):
-            scored.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(store)
+        append_epoch(scored, store, epoch_id)
 
     q = foreach_batch_upsert(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
@@ -4735,11 +4725,7 @@ def streaming_dsir_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.processAllAvailable()
     q.stop()
-    return (
-        spark.read.parquet(store)
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "score")
-    )
+    return read_epochs(spark, store, ["doc_id"]).select("doc_id", "score")
 
 
 @query(
@@ -6060,10 +6046,7 @@ def streaming_curation_v5_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .join(decisions, "doc_id")
         )
-        if scored.take(1):
-            scored.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(f"{base}/store")
+        append_epoch(scored, f"{base}/store", epoch_id)
 
     shard = docs.filter(is_shard)
     tmp = stage_ordered_replay(shard, ["doc_id"])
@@ -6077,7 +6060,7 @@ def streaming_curation_v5_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.processAllAvailable()
     q.stop()
     buckets.unpersist()
-    rows = spark.read.parquet(f"{base}/store").dropDuplicates(["doc_id"])
+    rows = read_epochs(spark, f"{base}/store", ["doc_id"])
     lang_ok = F.when(
         ~F.col("is_dup"), F.col("lang_pred") == F.col("lang")
     )  # null for dup-dropped docs, like the batch LEFT JOIN

@@ -30,6 +30,15 @@ Streaming semantics notes vs the reference (documented limitations):
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+import shutil
+import tempfile
+from contextlib import contextmanager
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -66,11 +75,6 @@ def stage_ordered_replay(
     batch with no rows (fewer rows than batches) is staged as an empty
     file, so there are always ``n_batches`` files. Returns the directory
     (caller owns cleanup; /tmp otherwise reaps it)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
     tmp = tempfile.mkdtemp(prefix="replay_stage_")
@@ -156,6 +160,98 @@ def foreach_batch_upsert(df: DataFrame, merge_fn, checkpoint: str):
         .option("checkpointLocation", checkpoint)
         .start()
     )
+
+
+def drain_foreach_batch(stream: DataFrame, merge, query_name: str) -> None:
+    """Run a bounded stream through ``merge(batch_df, batch_id)`` to
+    completion: start, process everything available, stop."""
+    q = stream.writeStream.foreachBatch(merge).start(queryName=query_name)
+    q.processAllAvailable()
+    q.stop()
+
+
+# foreachBatch is at-least-once: a batch may be delivered again, under the
+# same id or (after a restart) a new one. The helpers below keep such a
+# batch from counting twice: epoch stores for appended rows, batch-id
+# versions for fold state.
+
+
+def append_epoch(
+    df: DataFrame, store_dir: str, epoch_id: int, partition_by=None
+) -> None:
+    """Append one micro-batch's rows to an epoch store, stamped with its
+    batch id in ``__epoch``. A redelivered batch appends its rows again;
+    `read_epochs` collapses them on the store's natural key. No emptiness
+    probe (a Spark job per batch): an empty batch appends one zero-row
+    file that carries the schema, or nothing under ``partition_by``."""
+    df.withColumn("__epoch", F.lit(int(epoch_id))).write.parquet(
+        store_dir, mode="append", partitionBy=partition_by
+    )
+
+
+def read_epochs(
+    spark: SparkSession, store_dir: str, key=None, schema=None
+) -> DataFrame:
+    """An `append_epoch` store without its ``__epoch`` stamp: with ``key``
+    one row per key (every store's rows are deterministic per key, so that
+    is exact replay idempotence), without it every row. A store that holds
+    no schema — nothing ever appended, or a partitioned store that only
+    saw empty batches — reads as zero rows of ``schema``; with no
+    ``schema``, Spark's PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA stands."""
+    try:
+        df = spark.read.parquet(store_dir)
+    except AnalysisException as ex:
+        if schema is None or ex.getCondition() not in (
+            "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
+        ):
+            raise
+        df = spark.createDataFrame([], schema)
+    df = df.drop("__epoch")
+    return df.dropDuplicates(key) if key else df
+
+
+class VersionedState:
+    """Batch-id-versioned parquet state for a foreachBatch fold: batch N
+    reads its predecessor and writes ``<prefix>N`` under ``state_dir`` for
+    each of ``prefixes``. The predecessor is the highest on-disk version
+    below N under the first prefix — read from disk, not a driver-memory
+    pointer, so a batch redelivered under the same id (or after a restart)
+    regenerates its versions from the same inputs instead of merging its
+    own output twice. After each batch only its versions and its
+    predecessor's are kept. Pruning is local-filesystem best effort; on an
+    object store a lifecycle rule does it (old versions are never read
+    again, so it never affects results)."""
+
+    def __init__(self, spark: SparkSession, state_dir: str, *prefixes: str):
+        self.spark, self.dir, self.prefixes = spark, state_dir, prefixes
+
+    def _versions(self, prefix: str) -> list[int]:
+        try:
+            entries = os.listdir(self.dir)
+        except FileNotFoundError:
+            return []
+        pat = re.compile(re.escape(prefix) + r"(\d+)")
+        return [int(m.group(1)) for m in map(pat.fullmatch, entries) if m]
+
+    @contextmanager
+    def batch(self, batch_id: int):
+        """Scope one micro-batch: yields its predecessor's version (None on
+        the first batch) and prunes once the body has returned."""
+        below = [v for v in self._versions(self.prefixes[0]) if v < batch_id]
+        prev = max(below, default=None)
+        yield prev
+        for prefix in self.prefixes:
+            for v in set(self._versions(prefix)) - {batch_id, prev}:
+                shutil.rmtree(f"{self.dir}/{prefix}{v}", ignore_errors=True)
+
+    def read(self, prefix: str, version: int | None) -> DataFrame | None:
+        """Version ``version`` under ``prefix``; None for no version."""
+        if version is None:
+            return None
+        return self.spark.read.parquet(f"{self.dir}/{prefix}{version}")
+
+    def write(self, df: DataFrame, prefix: str, version: int) -> None:
+        df.write.mode("overwrite").parquet(f"{self.dir}/{prefix}{version}")
 
 
 def persist_static_side(df: DataFrame) -> DataFrame:
@@ -250,21 +346,16 @@ def broadcast_connect(
     Spark form: ``rules_for_batch(batch_id)`` returns the (small) control
     DataFrame as of that batch — the broadcast-state snapshot;
     ``join_fn(batch_df, rules_df)`` produces the batch's output rows,
-    which append epoch-stamped to ``out_dir`` (at-least-once replays
-    collapse at read time via dropDuplicates on the natural key). The
+    which `append_epoch` to ``out_dir`` (at-least-once replays collapse
+    when `read_epochs` reads it on the natural key). The
     control side is broadcast per batch, so rule updates take effect at
     the next micro-batch — the reference's processBroadcastElement
     ordering guarantee at batch granularity. Returns the started query.
     """
-    from pyspark.sql import functions as F
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         rules = rules_for_batch(int(epoch_id))
-        out = join_fn(batch_df, F.broadcast(rules))
-        if out.take(1):
-            out.withColumn("__epoch", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(out_dir)
+        append_epoch(join_fn(batch_df, F.broadcast(rules)), out_dir, epoch_id)
 
     return foreach_batch_upsert(stream, merge, checkpoint)
 
@@ -286,9 +377,6 @@ def manifest_sink(
     idempotent; orphaned data files from a crashed attempt are never
     listed and stay invisible. Read the committed view back with
     `read_manifest`. Returns the started query."""
-    import glob
-    import json
-    import os
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         path = f"{out_dir}/data/batch={int(batch_id)}"
@@ -307,9 +395,6 @@ def read_manifest(spark, out_dir: str) -> DataFrame:
     """The committed view of a `manifest_sink` directory: the union of
     exactly the manifest-listed files — uncommitted or orphaned data
     files are invisible by construction."""
-    import glob
-    import json
-
     files: list[str] = []
     for m in sorted(glob.glob(f"{out_dir}/manifest/*.json")):
         with open(m) as fh:

@@ -23,6 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from flink_ci_flink_spark.streaming.core import (
+    VersionedState,
+    append_epoch,
+    drain_foreach_batch,
+    read_epochs,
+)
+
 
 def keyed_process(
     df: DataFrame,
@@ -386,70 +393,21 @@ class MapStateView:
         self._bag._vals[self._i] = {}
 
 
-def _prune_state_versions(state_dir: str, prefix: str, keep_ids: set[int]) -> None:
-    """Drop obsolete versioned-state directories (vN / <prefix>N) so a
-    long-running stream's disk footprint stays at ~2 versions (current +
-    previous, the replay-safety pair) instead of one per micro-batch.
-    Local-filesystem best-effort: on object stores, rely on a bucket
-    lifecycle rule instead (failure here never affects results — old
-    versions are simply never read again)."""
-    import glob as _glob
-    import re as _re
-    import shutil as _shutil
-
-    for d in _glob.glob(f"{state_dir}/{prefix}*"):
-        m = _re.search(rf"{prefix}(\d+)$", d)
-        if m and int(m.group(1)) not in keep_ids:
-            _shutil.rmtree(d, ignore_errors=True)
-
-
-def _latest_version_below(state_dir: str, prefix: str, batch_id: int) -> int | None:
-    """Largest on-disk state version id strictly below ``batch_id``.
-
-    Reading the replay-safe predecessor from DISK (versions ARE batch ids)
-    rather than a driver-memory pointer makes same-id redelivery exact: a
-    replayed batch N re-reads v{N-1} (still retained — pruning keeps the
-    current and previous versions) and regenerates v{N} and its closed
-    rows from the same inputs, instead of double-merging its own output."""
-    import os
-    import re as _re
-
-    try:
-        entries = os.listdir(state_dir)
-    except FileNotFoundError:
-        return None
-    best = None
-    for e in entries:
-        m = _re.fullmatch(_re.escape(prefix) + r"(\d+)", e)
-        if m and int(m.group(1)) < batch_id:
-            best = int(m.group(1)) if best is None else max(best, int(m.group(1)))
-    return best
-
-
 def _keyed_fold_step(
     spark, state_dir: str, prepare, fold, close, batch_df: DataFrame,
     batch_id: int, last: dict,
 ) -> None:
     """One micro-batch of the keyed-fold merge loop — exposed so tests can
     drive same-batch-id replays directly (the at-least-once contract)."""
-    prev_id = _latest_version_below(state_dir, "v", batch_id)
-    prev = (
-        spark.read.parquet(f"{state_dir}/v{prev_id}")
-        if prev_id is not None
-        else None
-    )
-    new = fold(prev, prepare(batch_df))
-    if close is not None:
-        new, closed_rows = close(new)
-        closed_rows.withColumn("__epoch", F.lit(int(batch_id))).write.mode(
-            "append"
-        ).parquet(f"{state_dir}/closed")
-        last["closed"] = True
-    new.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
+    versions = VersionedState(spark, state_dir, "v")
+    with versions.batch(batch_id) as prev_id:
+        new = fold(versions.read("v", prev_id), prepare(batch_df))
+        if close is not None:
+            new, closed_rows = close(new)
+            append_epoch(closed_rows, f"{state_dir}/closed", batch_id)
+            last["closed"] = True
+        versions.write(new, "v", batch_id)
     last["v"] = batch_id
-    _prune_state_versions(
-        state_dir, "v", {batch_id} | ({prev_id} if prev_id is not None else set())
-    )
 
 
 def jvm_keyed_fold(
@@ -488,10 +446,11 @@ def jvm_keyed_fold(
     - ``emit(state, closed)`` — final output (default: state, unioned
       with the deduplicated closed store when one exists).
 
-    State versions by batch_id — each batch writes ``v{batch_id}`` after
-    reading the previous version, so a replayed batch regenerates its
-    merge idempotently rather than double-merging; only the current and
-    previous versions are retained (`_prune_state_versions`). Runs the
+    State versions by batch_id (`streaming.core.VersionedState`) — each
+    batch writes ``v{batch_id}`` after reading its on-disk predecessor, so
+    a replayed batch regenerates its merge idempotently rather than
+    double-merging; only the current and previous versions are retained.
+    Closed rows go to an `append_epoch` store. Runs the
     bounded stream to completion and returns the final output as a batch
     DataFrame. Ref: the state contract of `GroupAggFunction.java` /
     `AppendOnlyTopNFunction.java` — accumulate-merge-emit, JVM execution.
@@ -504,19 +463,13 @@ def jvm_keyed_fold(
             spark, state_dir, prepare, fold, close, batch_df, batch_id, last
         )
 
-    q = stream.writeStream.foreachBatch(merge).start(queryName=query_name)
-    q.processAllAvailable()
-    q.stop()
-    if last["v"] is None:
+    drain_foreach_batch(stream, merge, query_name)
+    state = VersionedState(spark, state_dir).read("v", last["v"])
+    if state is None:
         state = fold(None, prepare(spark.createDataFrame([], stream.schema)))
-    else:
-        state = spark.read.parquet(f"{state_dir}/v{last['v']}")
     closed = None
     if last["closed"]:
-        closed = spark.read.parquet(f"{state_dir}/closed")
-        if closed_natural_key:
-            closed = closed.dropDuplicates(closed_natural_key)
-        closed = closed.drop("__epoch")
+        closed = read_epochs(spark, f"{state_dir}/closed", closed_natural_key)
     if emit is not None:
         return emit(state, closed)
     return state.unionByName(closed) if closed is not None else state

@@ -242,3 +242,37 @@ def test_fixture_base_is_keyed_by_the_resolved_source(tmp_path):
     assert bench._fixture_base(str(b)) != base_a
     assert bench._fixture_base(str(a) + "/") == base_a
     assert bench._fixture_base(str(tmp_path / "link")) == base_a
+
+
+def test_replay_state_has_one_owner():
+    # The at-least-once protocol of foreachBatch stores lives in
+    # streaming/core.py: no other package module stamps or drops the
+    # epoch column, probes a batch with take(1) before appending it, or
+    # reaches the version rule's private helpers from outside streaming/.
+    pkg = REPO / "flink_ci_flink_spark"
+    core = pkg / "streaming" / "core.py"
+    private = re.compile(r"\b_(latest_version_below|prune_state_versions|versions)\b")
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        rel = path.relative_to(REPO)
+        if path != core:
+            assert "__epoch" not in text, f"{rel} handles the epoch column itself"
+        lines = text.splitlines()
+        for i, line in enumerate(lines):
+            if ".take(1)" in line:
+                after = "\n".join(lines[i : i + 8])
+                assert "append" not in after, f"{rel}:{i + 1} probes before appending"
+        if path.parent.name != "streaming":
+            assert not private.search(text), f"{rel} uses a private version helper"
+
+
+def test_bench_detail_path_keeps_the_committed_record():
+    # Only the default run (no SPARK_GRAFT_SF_DIR) rewrites the committed
+    # bench_detail.json; a run over a named source writes beside its
+    # fixture caches.
+    import bench
+
+    assert bench._detail_path(None) == REPO / "bench_detail.json"
+    named = bench._detail_path("/data/sf0.01")
+    assert named == bench._fixture_base("/data/sf0.01") / "bench_detail.json"
+    assert named.parent.parent == REPO / ".benchdata"

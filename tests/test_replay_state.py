@@ -1,0 +1,142 @@
+"""The foreachBatch replay-state contract of `streaming/core.py`: epoch
+stores (`append_epoch` / `read_epochs`) and batch-id-versioned state
+(`VersionedState`), including the degenerate all-empty stream."""
+
+import os
+import shutil
+import tempfile
+
+import pytest
+
+
+def _dirs(path):
+    return sorted(p.name for p in path.iterdir())
+
+
+def test_predecessor_is_the_highest_version_below_the_batch(tmp_path):
+    from flink_ci_flink_spark.streaming.core import VersionedState
+
+    # versions at or above the batch id and other prefixes never count
+    for name in ["v1", "v3", "v7", "v9", "buf_v5", "idents_v6", "v2x", "closed"]:
+        (tmp_path / name).mkdir()
+    state = VersionedState(None, str(tmp_path), "v")
+    with state.batch(7) as prev:
+        assert prev == 3
+    assert _dirs(tmp_path) == ["buf_v5", "closed", "idents_v6", "v2x", "v3", "v7"]
+    with state.batch(3) as prev:  # a restart replays from an older id
+        assert prev is None
+    assert _dirs(tmp_path) == ["buf_v5", "closed", "idents_v6", "v2x", "v3"]
+    with VersionedState(None, str(tmp_path / "missing"), "v").batch(0) as prev:
+        assert prev is None
+
+
+def test_pruning_keeps_the_batch_and_its_predecessor_under_every_prefix(tmp_path):
+    from flink_ci_flink_spark.streaming.core import VersionedState
+
+    for v in range(1, 6):
+        (tmp_path / f"buf_v{v}").mkdir()
+        if v != 3:  # the predecessor is looked up under the first prefix only
+            (tmp_path / f"idents_v{v}").mkdir()
+    state = VersionedState(None, str(tmp_path), "buf_v", "idents_v")
+    with state.batch(4) as prev:
+        assert prev == 3
+    assert _dirs(tmp_path) == ["buf_v3", "buf_v4", "idents_v4"]
+
+
+def test_a_failed_batch_prunes_nothing(tmp_path):
+    from flink_ci_flink_spark.streaming.core import VersionedState
+
+    for v in range(3):
+        (tmp_path / f"v{v}").mkdir()
+    with pytest.raises(RuntimeError):
+        with VersionedState(None, str(tmp_path), "v").batch(2):
+            raise RuntimeError("batch failed")
+    assert _dirs(tmp_path) == ["v0", "v1", "v2"]
+
+
+def test_empty_stream_finalizes_to_zero_rows(spark, sf_dir):
+    """Every batch empty: an unpartitioned store (line dedup) holds
+    zero-row files that carry the schema; a cell-partitioned one (IVF)
+    holds no file at all, so its finalizer names the schema. Both
+    finalize to zero rows instead of raising."""
+    from flink_ci_flink_spark.catalog import load_tables
+    from flink_ci_flink_spark.pipeline.dedup import (
+        finalize_line_dedup,
+        streaming_line_dedup_ingest,
+    )
+    from flink_ci_flink_spark.pipeline.similarity import (
+        finalize_knn_join,
+        ivf_centroids,
+        streaming_ivf_ingest,
+    )
+    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+
+    t = load_tables(spark, sf_dir)
+    base = tempfile.mkdtemp(prefix="empty_stream_")
+    docs = t.documents.limit(0)
+    stage = stage_ordered_replay(docs, ["doc_id"])
+    q = streaming_line_dedup_ingest(
+        file_stream(spark, stage, docs.schema, max_files_per_trigger=1),
+        f"{base}/segs",
+        checkpoint=f"{base}/ckpt_segs",
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert finalize_line_dedup(spark, f"{base}/segs").count() == 0
+
+    centroids = ivf_centroids(t.embeddings, n_cells=4, iterations=1)
+    emb = t.embeddings.limit(0)
+    stage_emb = stage_ordered_replay(emb, ["vec_id"])
+    q = streaming_ivf_ingest(
+        file_stream(spark, stage_emb, emb.schema, max_files_per_trigger=1),
+        centroids,
+        f"{base}/ivf",
+        checkpoint=f"{base}/ckpt_ivf",
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert finalize_knn_join(spark, f"{base}/ivf", centroids).count() == 0
+    for d in (base, stage, stage_emb):
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_span_registry_read_failure_raises(spark, sf_dir):
+    """A registry that exists but cannot be read fails the batch instead
+    of being silently reset to the batch's delta; only a registry that
+    does not exist yet reads as empty."""
+    from pyspark.errors import StreamingQueryException
+
+    from flink_ci_flink_spark.catalog import load_tables
+    from flink_ci_flink_spark.pipeline.spans import streaming_span_dedup
+    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+
+    docs = load_tables(spark, sf_dir).documents.select("doc_id", "text")
+    base = tempfile.mkdtemp(prefix="span_registry_")
+    stage = stage_ordered_replay(docs, ["doc_id"], n_batches=1)
+    registry = f"{base}/registry"
+    os.makedirs(registry)
+    with open(f"{registry}/part-00000.parquet", "w") as fh:
+        fh.write("not a parquet file")
+    q = streaming_span_dedup(
+        file_stream(spark, stage, docs.schema),
+        f"{base}/windows",
+        registry,
+        checkpoint=f"{base}/ckpt",
+    )
+    with pytest.raises(StreamingQueryException):
+        q.processAllAvailable()
+    q.stop()
+    for d in (base, stage):
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_read_epochs_of_a_store_never_written(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from flink_ci_flink_spark.streaming.core import read_epochs
+
+    never = str(tmp_path / "never")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_epochs(spark, never)
+    empty = read_epochs(spark, never, ["k"], "k long, v string")
+    assert empty.columns == ["k", "v"] and empty.count() == 0
