@@ -19,7 +19,6 @@ import statistics
 import sys
 import tempfile
 import time
-import uuid
 from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
@@ -263,12 +262,12 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
 
     def python_state(build, mode):  # runs to completion on a memory sink
         def run():
-            run_to_completion(build(), f"bench_{uuid.uuid4().hex[:8]}", mode)
+            run_to_completion(build(), mode)
         return run
 
     def jvm_fold(op, cols=(), **kw):  # keeps its state in a fresh parquet dir
         return lambda: op(stream(*cols), state_dir=tempfile.mkdtemp(dir=tmp),
-                          query_name=f"bench_{uuid.uuid4().hex[:8]}", **kw).count()
+                          **kw).count()
 
     uts = ("user_id", "ts", "value")
     uts_kw = {"key": "user_id", "ts_col": "ts", "value_col": "value"}

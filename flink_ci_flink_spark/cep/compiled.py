@@ -557,7 +557,6 @@ def stream_all_rows_jvm(
     output_schema: str,
     state_dir: str,
     delay_seconds: float = 0.0,
-    query_name: str = "cep_allrows_jvm",
 ) -> DataFrame | None:
     """Streaming ALL ROWS PER MATCH for compiled patterns — zero per-key
     Python (beyond reference parity twice over: `StreamExecMatch.scala:192`
@@ -690,7 +689,7 @@ def stream_all_rows_jvm(
         )
         versions.write(pruned, "buf_v", batch_id)
 
-    drain_foreach_batch(stream, merge, query_name)
+    drain_foreach_batch(stream, merge)
     # full-row distinct absorbs at-least-once re-appends of a replayed batch
     return (
         read_epochs(spark, f"{state_dir}/out", schema=schema)

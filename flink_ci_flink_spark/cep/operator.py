@@ -629,7 +629,6 @@ def cep_stream_replay(
     delay_seconds: float = 0.0,
     prepare=None,
     extra_tail_rows: int = 0,
-    query_name: str = "cep_replay",
 ) -> DataFrame:
     """Streaming CEP by foreachBatch RE-PLAN over a versioned parquet
     buffer — the wrapper that lifts the ENTIRE batch operator surface
@@ -821,7 +820,7 @@ def cep_stream_replay(
         )
         versions.write(pruned, "buf_v", batch_id)
 
-    drain_foreach_batch(stream, merge, query_name)
+    drain_foreach_batch(stream, merge)
     out_cols = [p.strip().split()[0] for p in output_schema.split(",")]
     return read_epochs(
         spark, f"{state_dir}/out", ["__ident"], ext_schema

@@ -422,7 +422,6 @@ def streaming_count_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     state bounded at one partial window per key). Only complete windows
     emit, numbered 0.. per key."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_count_window_jvm
@@ -440,7 +439,6 @@ def streaming_count_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         value_col="value",
         size=10,
         state_dir=state_dir,
-        query_name=f"cw_replay_{uuid.uuid4().hex[:8]}",
     )
     return out.select(
         "user_id", "win", "n", F.round("total", 6).alias("total")
@@ -470,7 +468,6 @@ def streaming_bounded_over_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     `RowTimeRangeBoundedPrecedingFunction.java:60` state contract). One
     output row per input row."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_bounded_over_jvm
@@ -486,7 +483,6 @@ def streaming_bounded_over_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         value_col="value",
         rows_preceding=4,
         state_dir=state_dir,
-        query_name=f"bover_replay_{uuid.uuid4().hex[:8]}",
     )
     return out.select(
         "user_id",
@@ -532,7 +528,6 @@ def streaming_count_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFram
     (`streaming/process.py::streaming_count_sliding_window_jvm`;
     `CountSlidingWindowAssigner` semantics)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import (
@@ -551,7 +546,6 @@ def streaming_count_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFram
         size=10,
         slide=4,
         state_dir=state_dir,
-        query_name=f"cs_replay_{uuid.uuid4().hex[:8]}",
     )
     return out.select(
         "user_id", "win", "n", F.round("total", 6).alias("total")
@@ -579,7 +573,6 @@ def streaming_topn_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     `AppendOnlyTopNFunction.java:46` keep-top-n state contract, state
     bounded at n rows per key)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_top_n_jvm
@@ -595,7 +588,6 @@ def streaming_topn_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=3,
         select_cols=["user_id", "event_id", "value"],
         state_dir=state_dir,
-        query_name=f"topn_replay_{uuid.uuid4().hex[:8]}",
     )
     return out.select("user_id", "event_id", F.round("value", 2).alias("value"))
 
@@ -624,7 +616,6 @@ def streaming_dedup_keeplast_replay(spark: SparkSession, sf_dir: str) -> DataFra
     wins; the replay is staged in (ts, event_id) order, making that the
     ascending-event_id row of the oracle's tiebreak)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_dedup_keep_last_jvm
@@ -639,7 +630,6 @@ def streaming_dedup_keeplast_replay(spark: SparkSession, sf_dir: str) -> DataFra
         ts_col="ts",
         select_cols=["user_id", "event_id", "event_type", "ts"],
         state_dir=state_dir,
-        query_name=f"dedup_replay_{uuid.uuid4().hex[:8]}",
     )
     return out.select(
         "user_id",
@@ -671,7 +661,6 @@ def streaming_running_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`streaming/process.py::streaming_running_agg_jvm`;
     `GroupAggFunction.java` accumulate-merge contract)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_running_agg_jvm
@@ -690,7 +679,6 @@ def streaming_running_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vmax": ("max", "value"),
         },
         state_dir=state_dir,
-        query_name=f"runagg_replay_{uuid.uuid4().hex[:8]}",
     )
     return out.select(
         "user_id",
@@ -740,7 +728,6 @@ def streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     `SessionWindowAssigner` / `WindowOperator.java` merging-window
     state + cleanup-timer contract)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_sessionize_jvm
@@ -757,7 +744,6 @@ def streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_col="value",
         close_lateness_seconds=3600,
         state_dir=state_dir,
-        query_name=f"sess_replay_{uuid.uuid4().hex[:8]}",
     )
     return out.select(
         "user_id",
@@ -801,7 +787,6 @@ def streaming_topn_retractable_replay(spark: SparkSession, sf_dir: str) -> DataF
     batch-beats-state on update, so the oracle's latest row is the max
     (ts, event_id) of the (ts, event_id)-ordered replay)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import (
@@ -819,7 +804,6 @@ def streaming_topn_retractable_replay(spark: SparkSession, sf_dir: str) -> DataF
         order_col="value",
         n=2,
         state_dir=state_dir,
-        query_name=f"rtopn_replay_{uuid.uuid4().hex[:8]}",
     )
     return out.select(
         "user_id", "event_type", F.round("value", 2).alias("value"), "rn"
@@ -888,7 +872,6 @@ def streaming_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFram
     heavy-hitter superset) are property-tested under random chunkings
     (`streaming/process.py::streaming_misra_gries_jvm`)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_misra_gries_jvm
@@ -902,7 +885,6 @@ def streaming_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFram
         item_col="user_id",
         k=64,
         state_dir=state_dir,
-        query_name=f"mg_replay_{uuid.uuid4().hex[:8]}",
     )
 
 
@@ -926,8 +908,6 @@ def streaming_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFram
     to the interval span at scale. Hash-proven equal to the one-shot
     batch interval join (reference: `IntervalJoinOperator.java` — the
     relative-time variant of `operators/joins.py::interval_join`)."""
-    import uuid
-
     from flink_ci_flink_spark.streaming import (
         file_stream,
         run_to_completion,
@@ -970,9 +950,7 @@ def streaming_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFram
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOUR")),
     ).select("click_id", "purchase_id")
-    name = f"sij_{uuid.uuid4().hex[:8]}"
-    run_to_completion(joined, name, "append")
-    return spark.table(name)
+    return run_to_completion(joined)
 
 
 @query(
@@ -997,8 +975,6 @@ def streaming_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the one-shot batch EXISTS (reference: streaming semi/anti join,
     `StreamExecJoin` semi variant / `IntervalJoinOperator.java` time
     bounds)."""
-    import uuid
-
     from flink_ci_flink_spark.streaming import (
         file_stream,
         run_to_completion,
@@ -1037,9 +1013,7 @@ def streaming_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("ts") + F.expr("INTERVAL 2 HOUR"))
     )
     semi = clicks.join(purchases, cond, "left_semi")
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    run_to_completion(semi, name, "append")
-    return spark.table(name)
+    return run_to_completion(semi)
 
 
 @query(
@@ -1183,7 +1157,6 @@ def streaming_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
     import tempfile
-    import uuid
     from datetime import timedelta
 
     from flink_ci_flink_spark.streaming import (
@@ -1239,9 +1212,7 @@ def streaming_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOUR")),
         "leftOuter",
     ).select("click_id", "purchase_id")
-    name = f"soj_{uuid.uuid4().hex[:8]}"
-    run_to_completion(joined, name, "append")
-    return spark.table(name)
+    return run_to_completion(joined)
 
 
 @query(
@@ -1269,7 +1240,6 @@ def streaming_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
     import glob
     import os
     import tempfile
-    import uuid
     from datetime import timedelta
 
     from flink_ci_flink_spark.streaming import (
@@ -1325,9 +1295,7 @@ def streaming_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOUR")),
         "fullOuter",
     ).select("click_id", "purchase_id")
-    name = f"sfoj_{uuid.uuid4().hex[:8]}"
-    run_to_completion(joined, name, "append")
-    return spark.table(name).filter(
+    return run_to_completion(joined).filter(
         (F.coalesce(F.col("click_id"), F.lit(0)) >= 0)
         & (F.coalesce(F.col("purchase_id"), F.lit(0)) >= 0)
     )
@@ -1352,7 +1320,6 @@ def streaming_dropdup_watermark_replay(spark: SparkSession, sf_dir: str) -> Data
     import glob
     import os
     import shutil
-    import uuid
 
     from flink_ci_flink_spark.streaming import (
         file_stream,
@@ -1375,9 +1342,7 @@ def streaming_dropdup_watermark_replay(spark: SparkSession, sf_dir: str) -> Data
     dedup = stream.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "user_id", F.unix_timestamp("ts").alias("ts_s")
     )
-    name = f"sdw_{uuid.uuid4().hex[:8]}"
-    run_to_completion(dedup, name, "append")
-    return spark.table(name)
+    return run_to_completion(dedup)
 
 
 @query(
@@ -1396,8 +1361,6 @@ def streaming_complete_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     unbounded GroupAggFunction in upsert/complete materialization
     (`GroupAggFunction.java`, `StreamExecGroupAggregate`). The oracle is
     the one-shot batch aggregate."""
-    import uuid
-
     from flink_ci_flink_spark.streaming import (
         file_stream,
         run_to_completion,
@@ -1415,9 +1378,7 @@ def streaming_complete_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame
             F.round(F.sum("value"), 4).alias("total"),
         )
     )
-    name = f"sca_{uuid.uuid4().hex[:8]}"
-    run_to_completion(agg, name, "complete")
-    return spark.table(name)
+    return run_to_completion(agg, "complete")
 
 
 @query(
@@ -1438,7 +1399,6 @@ def streaming_manifest_sink_replay(spark: SparkSession, sf_dir: str) -> DataFram
     manifest equals the input exactly — the orphan is invisible and
     nothing is lost or duplicated."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.core import manifest_sink, read_manifest
@@ -1460,7 +1420,6 @@ def streaming_manifest_sink_replay(spark: SparkSession, sf_dir: str) -> DataFram
         ),
         out_dir=base,
         checkpoint=f"{base}/ckpt",
-        query_name=f"msink_{uuid.uuid4().hex[:8]}",
     )
     q.processAllAvailable()
     q.stop()
@@ -1492,7 +1451,6 @@ def streaming_restart_recovery_replay(spark: SparkSession, sf_dir: str) -> DataF
     import glob
     import os
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.core import manifest_sink, read_manifest
@@ -1504,7 +1462,6 @@ def streaming_restart_recovery_replay(spark: SparkSession, sf_dir: str) -> DataF
     os.rename(f"{tmp}/003.parquet", held_back)
 
     base = tempfile.mkdtemp(prefix="restart_")
-    name = f"rst_{uuid.uuid4().hex[:8]}"
 
     def run_once():
         q = manifest_sink(
@@ -1517,7 +1474,6 @@ def streaming_restart_recovery_replay(spark: SparkSession, sf_dir: str) -> DataF
             ),
             out_dir=base,
             checkpoint=f"{base}/ckpt",
-            query_name=name,
         )
         q.processAllAvailable()
         q.stop()

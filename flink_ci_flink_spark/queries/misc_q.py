@@ -531,7 +531,6 @@ def streaming_cdc_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold-family shape, the retract-input `GroupAggFunction.java` analog
     to the append-only running agg."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_changelog_agg_jvm
@@ -574,7 +573,6 @@ def streaming_cdc_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys=["status"],
         value_cols=["cents"],
         state_dir=tempfile.mkdtemp(prefix="cdc_agg_state_"),
-        query_name=f"cdc_agg_{uuid.uuid4().hex[:8]}",
     )
     return out.select("status", "n_rows", F.col("sum_cents"))
 

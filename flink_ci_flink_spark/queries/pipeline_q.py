@@ -2784,7 +2784,6 @@ def streaming_centroid_refresh_replay(spark: SparkSession, sf_dir: str) -> DataF
     State ≤ n_cells x dim rows forever
     (`streaming/process.py::streaming_centroid_refresh_jvm`)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.pipeline.similarity import ivf_centroids_fp
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
@@ -2800,7 +2799,6 @@ def streaming_centroid_refresh_replay(spark: SparkSession, sf_dir: str) -> DataF
         file_stream(spark, tmp, emb.schema, max_files_per_trigger=1),
         centroids,
         tempfile.mkdtemp(prefix="centroid_refresh_"),
-        query_name=f"centroid_refresh_{uuid.uuid4().hex[:8]}",
     )
 
 

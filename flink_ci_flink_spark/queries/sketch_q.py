@@ -277,7 +277,6 @@ def streaming_hll_distinct_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     batching-insensitive algebra. The exact distinct rides along for
     error inspection (`streaming/process.py::streaming_hll_jvm`)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_hll_jvm
@@ -293,7 +292,6 @@ def streaming_hll_distinct_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         value_col="uid",
         group_cols=["event_type"],
         state_dir=tempfile.mkdtemp(prefix="hll_replay_"),
-        query_name=f"hll_replay_{uuid.uuid4().hex[:8]}",
     )
     exact = t.events.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_distinct")
@@ -357,7 +355,6 @@ def streaming_quantile_histogram_replay(
     for error inspection, and the whole read-off is hash-checked
     (`streaming/process.py::streaming_value_histogram_jvm`)."""
     import tempfile
-    import uuid
 
     from pyspark.sql.window import Window
 
@@ -377,7 +374,6 @@ def streaming_quantile_histogram_replay(
         width=2.0,
         n_bins=256,
         state_dir=tempfile.mkdtemp(prefix="vhist_replay_"),
-        query_name=f"vhist_replay_{uuid.uuid4().hex[:8]}",
     )
     n = hist.groupBy("event_type").agg(F.sum("cnt").cast("bigint").alias("n"))
     tgt = n.select(
@@ -461,7 +457,6 @@ def streaming_countmin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming sketch trio: frequency (this), distinct (HLL fold), top
     items (Misra-Gries fold)."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.pipeline.sketches import countmin_estimate
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
@@ -474,7 +469,6 @@ def streaming_countmin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
         value_col="user_id",
         state_dir=tempfile.mkdtemp(prefix="cm_replay_"),
-        query_name=f"cm_replay_{uuid.uuid4().hex[:8]}",
     )
     probes = t.events.select("user_id").distinct().filter(F.col("user_id") < 10)
     est = countmin_estimate(sk, probes, "user_id", depth=4, width=512)

@@ -15,7 +15,6 @@ from flink_ci_flink_spark.streaming.changelog import (  # noqa: F401
 )
 from flink_ci_flink_spark.streaming.process import (  # noqa: F401
     keyed_process,
-    streaming_dedup_keep_last,
     streaming_top_n,
 )
 from flink_ci_flink_spark.streaming.windows_ext import (  # noqa: F401

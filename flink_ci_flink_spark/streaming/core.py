@@ -36,6 +36,7 @@ import os
 import re
 import shutil
 import tempfile
+import uuid
 from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
@@ -120,10 +121,11 @@ def socket_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
     )
 
 
-def run_to_completion(df: DataFrame, query_name: str, output_mode: str = "append"):
-    """Drive a bounded streaming query to completion against a memory sink;
-    returns the finished StreamingQuery (the result is
-    `spark.table(query_name)`).
+def run_to_completion(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Drive a bounded streaming query to completion against a memory sink
+    and return its result. The sink's temp view is dropped before
+    returning: the DataFrame stays bound to the sink's rows, and the
+    session keeps no view per replay.
 
     ``spark.sql.shuffle.partitions`` is scoped to the session's
     ``defaultParallelism`` for the query and restored afterwards. A stateful
@@ -133,6 +135,7 @@ def run_to_completion(df: DataFrame, query_name: str, output_mode: str = "append
     200 of them per batch, pure task overhead at replay scale. Sized to the
     cluster, not defaulted — the Flink-parallelism analog."""
     spark = df.sparkSession
+    name = f"run_to_completion_{uuid.uuid4().hex}"
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
@@ -141,14 +144,15 @@ def run_to_completion(df: DataFrame, query_name: str, output_mode: str = "append
         q = (
             df.writeStream.outputMode(output_mode)
             .format("memory")
-            .queryName(query_name)
+            .queryName(name)
             .start()
         )
         q.processAllAvailable()
         q.stop()
+        return spark.table(name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-    return q
+        spark.catalog.dropTempView(name)
 
 
 def foreach_batch_upsert(df: DataFrame, merge_fn, checkpoint: str):
@@ -162,10 +166,10 @@ def foreach_batch_upsert(df: DataFrame, merge_fn, checkpoint: str):
     )
 
 
-def drain_foreach_batch(stream: DataFrame, merge, query_name: str) -> None:
+def drain_foreach_batch(stream: DataFrame, merge) -> None:
     """Run a bounded stream through ``merge(batch_df, batch_id)`` to
     completion: start, process everything available, stop."""
-    q = stream.writeStream.foreachBatch(merge).start(queryName=query_name)
+    q = stream.writeStream.foreachBatch(merge).start()
     q.processAllAvailable()
     q.stop()
 
@@ -336,7 +340,6 @@ def broadcast_connect(
     join_fn,
     out_dir: str,
     checkpoint: str,
-    query_name: str = "broadcast_connect",
 ):
     """Broadcast-state connect (`KeyedBroadcastProcessFunction` /
     `BroadcastConnectedStream` — flink-streaming-java broadcast state):
@@ -364,7 +367,6 @@ def manifest_sink(
     stream: DataFrame,
     out_dir: str,
     checkpoint: str,
-    query_name: str = "manifest_sink",
 ):
     """Exactly-once file sink via manifest commit (the reference's
     `StreamingFileSink` bulk-format/OnCheckpointRollingPolicy contract:

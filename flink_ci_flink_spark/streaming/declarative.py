@@ -178,7 +178,6 @@ def declarative_keyed_fold(
     stream: DataFrame,
     spec: FoldSpec,
     state_dir: str | None = None,
-    query_name: str = "decl_fold_jvm",
 ) -> DataFrame:
     """Run a `FoldSpec` as a streaming keyed fold on `jvm_keyed_fold`:
     per-key bounded state (one row per key), batch_id-versioned parquet,
@@ -194,7 +193,6 @@ def declarative_keyed_fold(
         fold=spec.fold_plan,
         state_dir=state_dir,
         emit=lambda state, closed: spec.emit_plan(state),
-        query_name=query_name,
     )
 
 

@@ -3,9 +3,10 @@
 Reference parity: `KeyedProcessFunction` (+ keyed state `ValueState`/
 `MapState`... `flink-core/.../api/common/state/`, timers
 `TimerService.java`) → `applyInPandasWithState`: one state object per key,
-processing-/event-time timeouts, Arrow-batched user code. Derived operators
-below: streaming top-n (`AppendOnlyTopNFunction.java:46`) and keep-last
-dedup (`DeduplicateKeepLastRowFunction.java:36`).
+processing-/event-time timeouts, Arrow-batched user code. Derived operator
+below: streaming top-n (`AppendOnlyTopNFunction.java:46`); keep-last dedup
+(`DeduplicateKeepLastRowFunction.java:36`) runs on the JVM fold as
+`streaming_dedup_keep_last_jvm`.
 
 Scale: state lives in the Spark state store (RocksDB provider in prod),
 partitioned by key — identical distribution story to the reference's keyed
@@ -104,48 +105,6 @@ def streaming_top_n(
         yield pd.DataFrame(out)
 
     return keyed_process(df, [key], fn, schema_out, state_schema, output_mode)
-
-
-def streaming_dedup_keep_last(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    payload_cols: list[str],
-) -> DataFrame:
-    """Keep-last deduplication on a stream: emits the latest row per key on
-    every update (update mode — the changelog-style output the reference's
-    DeduplicateKeepLastRow produces, minus retract records)."""
-    schema_out = ", ".join(
-        [f"{k} long" for k in keys] + ["ts_s double"] + [f"{c} string" for c in payload_cols]
-    )
-    state_schema = "ts_s double, payload array<string>"
-
-    def fn(key_tuple, pdf_iter, state: GroupState):
-        best_ts = state.get[0] if state.exists else float("-inf")
-        best_payload = list(state.get[1]) if state.exists else None
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            # vectorized batch reduction: single idxmax, one state merge
-            s = pdf[ts_col]
-            tsv = (
-                s.astype("int64") / 1e9
-                if pd.api.types.is_datetime64_any_dtype(s)
-                else s.astype(float)
-            )
-            i = tsv.idxmax()  # first occurrence of the max, like the scan
-            if float(tsv.loc[i]) > best_ts:
-                best_ts = float(tsv.loc[i])
-                best_payload = [str(pdf.loc[i, c]) for c in payload_cols]
-        if best_payload is not None:
-            state.update((best_ts, best_payload))
-            out = {k: [key_tuple[i]] for i, k in enumerate(keys)}
-            out["ts_s"] = [best_ts]
-            for ci, c in enumerate(payload_cols):
-                out[c] = [best_payload[ci]]
-            yield pd.DataFrame(out)
-
-    return keyed_process(df, keys, fn, schema_out, state_schema, "update")
 
 
 def streaming_top_n_retractable(
@@ -418,7 +377,6 @@ def jvm_keyed_fold(
     close=None,
     closed_natural_key: list[str] | None = None,
     emit=None,
-    query_name: str = "keyed_fold_jvm",
 ) -> DataFrame:
     """The generic JVM keyed-fold primitive — the shared batch_id-versioned
     parquet-state merge under the whole foreachBatch stateful family
@@ -463,7 +421,7 @@ def jvm_keyed_fold(
             spark, state_dir, prepare, fold, close, batch_df, batch_id, last
         )
 
-    drain_foreach_batch(stream, merge, query_name)
+    drain_foreach_batch(stream, merge)
     state = VersionedState(spark, state_dir).read("v", last["v"])
     if state is None:
         state = fold(None, prepare(spark.createDataFrame([], stream.schema)))
@@ -482,7 +440,6 @@ def streaming_top_n_jvm(
     n: int,
     select_cols: list[str],
     state_dir: str,
-    query_name: str = "topn_jvm",
 ) -> DataFrame:
     """Streaming top-n with NO per-key Python path: per micro-batch, the
     batch's per-key top-n (JVM window function) is unioned with the
@@ -517,7 +474,6 @@ def streaming_top_n_jvm(
             rank_col=None,
         ),
         state_dir=state_dir,
-        query_name=query_name,
     )
 
 
@@ -527,10 +483,9 @@ def streaming_dedup_keep_last_jvm(
     ts_col: str,
     select_cols: list[str],
     state_dir: str,
-    query_name: str = "dedup_jvm",
 ) -> DataFrame:
-    """Streaming keep-last dedup with NO per-key Python path — the
-    foreachBatch-merge analog of `streaming_dedup_keep_last`
+    """Streaming keep-last dedup with NO per-key Python path, on
+    foreachBatch merges
     (`DeduplicateFunctionHelper.processLastRowOnChangelog` semantics):
     per micro-batch, the batch's latest row per key is unioned with the
     persisted one-row-per-key state and re-reduced, entirely as Catalyst
@@ -538,8 +493,8 @@ def streaming_dedup_keep_last_jvm(
     batch_id so a replayed batch regenerates its merge idempotently.
 
     Ties on ts resolve to the EARLIER arrival (state beats batch, earlier
-    batch row beats later), matching the Python path's strictly-greater
-    state replacement. Runs the bounded stream to completion and returns
+    batch row beats later): a later row replaces the kept one only with a
+    strictly greater ts. Runs the bounded stream to completion and returns
     the final per-key latest rows. Expressed on `jvm_keyed_fold`; the
     state-wins-ties decoration (__arr = -1 on state rows vs the batch's
     arrival ids) lives inside the fold, which drops it again before the
@@ -566,7 +521,6 @@ def streaming_dedup_keep_last_jvm(
         ),
         fold=fold,
         state_dir=state_dir,
-        query_name=query_name,
     )
 
 
@@ -575,7 +529,6 @@ def streaming_running_agg_jvm(
     keys: list[str],
     agg_specs: dict[str, tuple[str, str]],
     state_dir: str,
-    query_name: str = "runagg_jvm",
 ) -> DataFrame:
     """Streaming per-key running aggregates with NO per-key Python path —
     the foreachBatch-merge analog of a keyed_process running aggregate
@@ -622,7 +575,6 @@ def streaming_running_agg_jvm(
             remerge(prev.unionByName(part)) if prev is not None else part
         ),
         state_dir=state_dir,
-        query_name=query_name,
     )
 
 
@@ -634,7 +586,6 @@ def streaming_sessionize_jvm(
     state_dir: str,
     value_col: str | None = None,
     close_lateness_seconds: int | None = None,
-    query_name: str = "sess_jvm",
 ) -> DataFrame:
     """Streaming session windows with NO per-key Python path — the
     foreachBatch-merge analog of `session()` / the reference's merging
@@ -738,7 +689,6 @@ def streaming_sessionize_jvm(
         state_dir=state_dir,
         close=split_closed if close_lateness_seconds is not None else None,
         closed_natural_key=[*keys, "sess_start"],
-        query_name=query_name,
     )
     return out.select(*sess_cols)
 
@@ -750,7 +700,6 @@ def streaming_count_window_jvm(
     value_col: str,
     size: int,
     state_dir: str,
-    query_name: str = "cntwin_jvm",
 ) -> DataFrame:
     """Tumbling COUNT windows with NO per-key Python path — the
     `jvm_keyed_fold` expression of `windows_ext.count_tumbling_window`
@@ -851,7 +800,6 @@ def streaming_count_window_jvm(
         close=close,
         closed_natural_key=[key, "win"],
         emit=emit,
-        query_name=query_name,
     )
 
 
@@ -862,7 +810,6 @@ def streaming_bounded_over_jvm(
     value_col: str,
     rows_preceding: int,
     state_dir: str,
-    query_name: str = "bover_jvm",
 ) -> DataFrame:
     """Bounded streaming over-window (ROWS BETWEEN N PRECEDING AND CURRENT
     ROW) with NO per-key Python path — the second decomposable shape on
@@ -935,7 +882,6 @@ def streaming_bounded_over_jvm(
         close=close,
         closed_natural_key=[key, "ts_s"],
         emit=emit,
-        query_name=query_name,
     )
 
 
@@ -947,7 +893,6 @@ def streaming_count_sliding_window_jvm(
     size: int,
     slide: int,
     state_dir: str,
-    query_name: str = "cntslide_jvm",
 ) -> DataFrame:
     """Sliding COUNT windows with NO per-key Python path — the third
     decomposable shape on `jvm_keyed_fold`
@@ -1055,7 +1000,6 @@ def streaming_count_sliding_window_jvm(
             if closed is not None
             else state.limit(0).select(key, "win", "n", "total")
         ),
-        query_name=query_name,
     )
 
 
@@ -1066,7 +1010,6 @@ def streaming_top_n_retractable_jvm(
     order_col: str,
     n: int,
     state_dir: str,
-    query_name: str = "rtopn_jvm",
 ) -> DataFrame:
     """Update-stream top-n with NO per-key Python path — the
     `jvm_keyed_fold` expression of `streaming_top_n_retractable`
@@ -1117,7 +1060,6 @@ def streaming_top_n_retractable_jvm(
         fold=fold,
         state_dir=state_dir,
         emit=emit,
-        query_name=query_name,
     )
 
 
@@ -1126,7 +1068,6 @@ def streaming_misra_gries_jvm(
     item_col: str,
     k: int,
     state_dir: str,
-    query_name: str = "mg_jvm",
 ) -> DataFrame:
     """Streaming Misra-Gries(k) frequency summary on `jvm_keyed_fold` —
     the bounded-state hot-item monitor: however large the stream, state is
@@ -1186,7 +1127,6 @@ def streaming_misra_gries_jvm(
         prepare,
         fold,
         state_dir,
-        query_name=query_name,
     )
 
 
@@ -1195,7 +1135,6 @@ def streaming_changelog_agg_jvm(
     keys: list[str],
     value_cols: list[str],
     state_dir: str,
-    query_name: str = "changelog_agg_jvm",
 ) -> DataFrame:
     """Incremental materialized-view maintenance on `jvm_keyed_fold`: a
     retract-stream GROUP aggregate (COUNT + exact BIGINT SUMs) over a
@@ -1238,7 +1177,7 @@ def streaming_changelog_agg_jvm(
         return state.filter(F.col("n_rows") > 0)
 
     return jvm_keyed_fold(
-        stream, prepare, fold, state_dir, emit=emit, query_name=query_name
+        stream, prepare, fold, state_dir, emit=emit
     )
 
 
@@ -1248,7 +1187,6 @@ def streaming_hll_jvm(
     group_cols: list[str],
     state_dir: str,
     b: int = 6,
-    query_name: str = "hll_jvm",
 ) -> DataFrame:
     """Streaming COUNT(DISTINCT) with BOUNDED state on `jvm_keyed_fold`:
     per micro-batch the batch's HLL register table (map-side combinable,
@@ -1279,7 +1217,7 @@ def streaming_hll_jvm(
         return hll_estimate_from_registers(state, group_cols, b)
 
     return jvm_keyed_fold(
-        stream, prepare, fold, state_dir, emit=emit, query_name=query_name
+        stream, prepare, fold, state_dir, emit=emit
     )
 
 
@@ -1289,7 +1227,6 @@ def streaming_countmin_jvm(
     state_dir: str,
     depth: int = 4,
     width: int = 512,
-    query_name: str = "cm_jvm",
 ) -> DataFrame:
     """Streaming count-min frequency sketch on `jvm_keyed_fold`: each
     micro-batch's d×w partial grid (map-side combinable) merges into the
@@ -1312,7 +1249,7 @@ def streaming_countmin_jvm(
             F.sum("cnt").cast("bigint").alias("cnt")
         )
 
-    return jvm_keyed_fold(stream, prepare, fold, state_dir, query_name=query_name)
+    return jvm_keyed_fold(stream, prepare, fold, state_dir)
 
 
 def streaming_centroid_refresh_jvm(
@@ -1320,7 +1257,6 @@ def streaming_centroid_refresh_jvm(
     centroids: list[list[int]],
     state_dir: str,
     vec_col: str = "embedding",
-    query_name: str = "centroid_refresh_jvm",
 ) -> DataFrame:
     """Streaming centroid refresh on `jvm_keyed_fold` — FIFTEENTH fold
     shape, the production pattern behind periodic ANN-index re-training:
@@ -1370,7 +1306,7 @@ def streaming_centroid_refresh_jvm(
         )
 
     return jvm_keyed_fold(
-        stream, prepare, fold, state_dir, emit=emit, query_name=query_name
+        stream, prepare, fold, state_dir, emit=emit
     )
 
 
@@ -1382,7 +1318,6 @@ def streaming_value_histogram_jvm(
     width: float,
     n_bins: int,
     state_dir: str,
-    query_name: str = "value_hist_jvm",
 ) -> DataFrame:
     """Streaming quantile/distribution monitor on `jvm_keyed_fold` —
     SIXTEENTH fold shape, completing the bounded-state monitoring quartet
@@ -1416,4 +1351,4 @@ def streaming_value_histogram_jvm(
             F.sum("cnt").cast("bigint").alias("cnt")
         )
 
-    return jvm_keyed_fold(stream, prepare, fold, state_dir, query_name=query_name)
+    return jvm_keyed_fold(stream, prepare, fold, state_dir)

@@ -1,0 +1,19 @@
+"""Micro-batch fixtures for streaming tests."""
+
+from __future__ import annotations
+
+import glob
+import os
+import shutil
+
+
+def stage_chunks(spark, tmp: str, chunks, schema) -> None:
+    """Write each chunk of rows as one parquet file ``000.parquet``,
+    ``001.parquet``, ... in ``tmp``: read with ``maxFilesPerTrigger=1``,
+    every chunk is one micro-batch, in order."""
+    for i, chunk in enumerate(chunks):
+        part_dir = f"{tmp}/f{i}"
+        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(part_dir)
+        (part,) = glob.glob(f"{part_dir}/part-*.parquet")
+        os.rename(part, f"{tmp}/{i:03d}.parquet")
+        shutil.rmtree(part_dir)

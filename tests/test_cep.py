@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from flink_ci_flink_spark.cep import NO_SKIP, SKIP_PAST_LAST, Pattern, find_matches
+from tests.replay import stage_chunks
 
 
 def ev(t, typ):
@@ -85,8 +86,6 @@ def test_or_predicate():
 
 def test_streaming_cep_matches_batch(spark, sf_dir):
     """cep_stream over micro-batch replay == batch cep (delay=0, data ordered)."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.catalog import load_tables
@@ -101,19 +100,8 @@ def test_streaming_cep_matches_batch(spark, sf_dir):
     try:
         rows = ev_df.collect()
         third = len(rows) // 3
-        for i, chunk in enumerate(
-            [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-        ):
-            spark.createDataFrame(chunk, ev_df.schema).coalesce(1).write.parquet(
-                f"{tmp}/f{i}"
-            )
-        import glob
-        import os
-
-        for i in range(3):
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
+        stage_chunks(spark, tmp, chunks, ev_df.schema)
 
         pat = (
             Pattern.begin("a", where=lambda e: e["event_type"] == "click")
@@ -137,10 +125,9 @@ def test_streaming_cep_matches_batch(spark, sf_dir):
 
         stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
         out = cep_stream(stream, pat, ["user_id"], "ts", select, schema_out)
-        name = f"cep_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "append")
+        result = run_to_completion(out)
         streamed = {
-            (r.user_id, r.start_id, r.end_id) for r in spark.table(name).collect()
+            (r.user_id, r.start_id, r.end_id) for r in result.collect()
         }
         # delay=0: every match whose last event is <= the key's max seen ts
         # emits; the final batch flushes everything
@@ -378,7 +365,6 @@ def test_streaming_greedy_defers_until_closed(spark):
     maximal form, after the within-window expires."""
     import shutil
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.cep import cep_stream
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
@@ -389,16 +375,7 @@ def test_streaming_greedy_defers_until_closed(spark):
     rows3 = [(1, 13, 30.0, "X")]  # pushes the frontier past within=10
     tmp = tempfile.mkdtemp(prefix="cep_greedy_")
     try:
-        for i, rows in enumerate([rows1, rows2, rows3]):
-            df = spark.createDataFrame(rows, schema).coalesce(1)
-            df.write.parquet(f"{tmp}/f{i}")
-        import glob
-        import os
-
-        for i in range(3):
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        stage_chunks(spark, tmp, [rows1, rows2, rows3], schema)
 
         pat = (
             Pattern.begin("a", typed2("A"))
@@ -420,9 +397,8 @@ def test_streaming_greedy_defers_until_closed(spark):
             max_files_per_trigger=1,
         )
         out = cep_stream(stream, pat, ["user_id"], "ts", select, "user_id long, n_b long")
-        name = f"cepg_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "append")
-        got = [(r.user_id, r.n_b) for r in spark.table(name).collect()]
+        result = run_to_completion(out)
+        got = [(r.user_id, r.n_b) for r in result.collect()]
         # exactly one emission, the maximal greedy match (both B's)
         assert got == [(1, 2)]
     finally:
@@ -598,11 +574,8 @@ def test_match_recognize_sql_matches_api(spark, sf_dir):
 def test_match_recognize_sql_streaming_matches_batch(spark, sf_dir):
     """The SQL-text front end with streaming=True (micro-batch replay) emits
     the same final matches as the batch plan of the same statement."""
-    import glob
-    import os
     import shutil
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.cep import match_recognize_sql
@@ -630,23 +603,14 @@ def test_match_recognize_sql_streaming_matches_batch(spark, sf_dir):
     try:
         rows = ev_df.collect()
         third = len(rows) // 3
-        for i, chunk in enumerate(
-            [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-        ):
-            spark.createDataFrame(chunk, ev_df.schema).coalesce(1).write.parquet(
-                f"{tmp}/f{i}"
-            )
-        for i in range(3):
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
+        stage_chunks(spark, tmp, chunks, ev_df.schema)
 
         stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
         out = match_recognize_sql(stream, stmt, streaming=True)
-        name = f"mrs_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "append")
+        result = run_to_completion(out)
         streamed = {
-            (r.user_id, r.a_id, r.b_id) for r in spark.table(name).collect()
+            (r.user_id, r.a_id, r.b_id) for r in result.collect()
         }
         assert streamed == batch
     finally:
@@ -903,11 +867,8 @@ def test_streaming_mr_aggregate_define(spark):
     """Running-aggregate DEFINE on the STREAMING MATCH_RECOGNIZE operator:
     typed state payloads let ctx predicates evaluate numerically; streaming
     result == batch result on ordered replay."""
-    import glob
-    import os
     import shutil
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.cep import match_recognize_sql
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
@@ -933,22 +894,15 @@ def test_streaming_mr_aggregate_define(spark):
 
     tmp = tempfile.mkdtemp(prefix="mr_stream_")
     try:
-        for i in range(3):
-            chunk = rows[i * 2 : (i + 1) * 2]
-            spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
-                f"{tmp}/f{i}"
-            )
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        chunks = [rows[i * 2 : (i + 1) * 2] for i in range(3)]
+        stage_chunks(spark, tmp, chunks, schema)
         st = file_stream(
             spark, tmp, spark.createDataFrame([], schema).schema,
             max_files_per_trigger=1,
         )
         out = match_recognize_sql(st, sql, streaming=True)
-        name = f"mr_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "append")
-        streamed = {tuple(r) for r in spark.table(name).collect()}
+        result = run_to_completion(out)
+        streamed = {tuple(r) for r in result.collect()}
         assert streamed == batch
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1321,11 +1275,8 @@ def test_batch_cep_timed_out_operator(spark):
 def test_streaming_timeout_matches_batch(spark, sf_dir):
     """cep_stream_timed_out over micro-batch replay == batch cep_timed_out
     restricted to windows that expired at the final per-key frontier."""
-    import glob
-    import os
     import shutil
     import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -1339,16 +1290,8 @@ def test_streaming_timeout_matches_batch(spark, sf_dir):
     try:
         rows = ev_df.collect()
         third = len(rows) // 3
-        for i, chunk in enumerate(
-            [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-        ):
-            spark.createDataFrame(chunk, ev_df.schema).coalesce(1).write.parquet(
-                f"{tmp}/f{i}"
-            )
-        for i in range(3):
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
+        stage_chunks(spark, tmp, chunks, ev_df.schema)
 
         pat = (
             Pattern.begin("a", where=lambda e: e["event_type"] == "click")
@@ -1379,10 +1322,9 @@ def test_streaming_timeout_matches_batch(spark, sf_dir):
 
         stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
         out = cep_stream_timed_out(stream, pat, ["user_id"], "ts", select, schema_out)
-        name = f"cep_to_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "append")
+        result = run_to_completion(out)
         streamed = {
-            (r.user_id, r.click_id, r.timeout_ts) for r in spark.table(name).collect()
+            (r.user_id, r.click_id, r.timeout_ts) for r in result.collect()
         }
         assert streamed == batch
         assert len(streamed) > 0
@@ -1398,11 +1340,8 @@ def test_stream_all_rows_jvm_matches_batch(spark):
     lead()/explode ALL-ROWS plan over a pruned keyed buffer) == the batch
     compiled plan over the full data, including cross-micro-batch matches
     and continued per-key MATCH_NUMBERs."""
-    import glob
-    import os
     import shutil
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.cep.compiled import (
         stream_all_rows_jvm,
@@ -1451,22 +1390,13 @@ def test_stream_all_rows_jvm_matches_batch(spark):
     state = tempfile.mkdtemp(prefix="allrows_state_")
     try:
         # 3 chunks split mid-match: the (6.0,7.0,8.0) match spans chunks
-        chunks = [rows[:4], rows[4:9], rows[9:]]
-        for i, chunk in enumerate(chunks):
-            spark.createDataFrame(chunk, ddl).coalesce(1).write.parquet(
-                f"{tmp}/f{i}"
-            )
-        for i in range(3):
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        stage_chunks(spark, tmp, [rows[:4], rows[4:9], rows[9:]], ddl)
         stream = file_stream(
             spark, tmp, df.schema, max_files_per_trigger=1
         )
         out = stream_all_rows_jvm(
             stream, pat, ["user_id"], "ts", measures, payload,
             schema_out, state, delay_seconds=0.0,
-            query_name=f"ar_{uuid.uuid4().hex[:8]}",
         )
         got = sorted(tuple(r) for r in out.collect())
         assert got == want
@@ -1585,11 +1515,8 @@ def test_stream_all_rows_jvm_random_chunking_property(spark):
     points, streaming compiled ALL-ROWS equals the batch compiled plan.
     Chunk boundaries are the risk surface (buffer pruning, frontier
     emission, MATCH_NUMBER continuation)."""
-    import glob
-    import os
     import shutil
     import tempfile
-    import uuid
 
     from hypothesis import given, settings, strategies as st
 
@@ -1637,18 +1564,11 @@ def test_stream_all_rows_jvm_random_chunking_property(spark):
         tmp = tempfile.mkdtemp(prefix="arprop_")
         state = tempfile.mkdtemp(prefix="arprop_state_")
         try:
-            for i, chunk in enumerate(chunks):
-                spark.createDataFrame(chunk, ddl).coalesce(1).write.parquet(
-                    f"{tmp}/f{i}"
-                )
-                (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-                os.rename(part, f"{tmp}/{i:03d}.parquet")
-                shutil.rmtree(f"{tmp}/f{i}")
+            stage_chunks(spark, tmp, chunks, ddl)
             out = stream_all_rows_jvm(
                 file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
                 pat, ["user_id"], "ts", measures, payload, schema_out,
                 state, delay_seconds=0.0,
-                query_name=f"arp_{uuid.uuid4().hex[:8]}",
             )
             got = sorted(tuple(r) for r in out.collect())
             assert got == want
@@ -1664,11 +1584,8 @@ def test_stream_timed_out_random_chunking_property(spark):
     output equals the batch side output restricted to windows expired at
     the final per-key frontier (exactly-once across replays of buffered
     boundary anchors)."""
-    import glob
-    import os
     import shutil
     import tempfile
-    import uuid
 
     from hypothesis import given, settings, strategies as st
 
@@ -1716,21 +1633,14 @@ def test_stream_timed_out_random_chunking_property(spark):
         chunks = [c for c in (rows[:a], rows[a:b], rows[b:]) if c]
         tmp = tempfile.mkdtemp(prefix="toprop_")
         try:
-            for i, chunk in enumerate(chunks):
-                spark.createDataFrame(chunk, ddl).coalesce(1).write.parquet(
-                    f"{tmp}/f{i}"
-                )
-                (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-                os.rename(part, f"{tmp}/{i:03d}.parquet")
-                shutil.rmtree(f"{tmp}/f{i}")
+            stage_chunks(spark, tmp, chunks, ddl)
             out = cep_stream_timed_out(
                 file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
                 pat, ["user_id"], "ts", select, schema_out,
             )
-            name = f"top_{uuid.uuid4().hex[:8]}"
-            run_to_completion(out, name, "append")
+            result = run_to_completion(out)
             got = {
-                (r.user_id, r.aid, r.tts) for r in spark.table(name).collect()
+                (r.user_id, r.aid, r.tts) for r in result.collect()
             }
             assert got == want
         finally:
@@ -1874,8 +1784,6 @@ def test_streaming_mr_prev_navigation_replay(spark):
     micro-batch, so a dip-rebound match whose PREV context CROSSES a
     micro-batch boundary is still found; streamed == batch on ordered
     replay. NEXT still rejects loudly (future-dependent)."""
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -1904,13 +1812,7 @@ def test_streaming_mr_prev_navigation_replay(spark):
         # 4 files of 2-3 rows; the first dip's PREV context (ts 2) and its
         # continuation (ts 3) land in DIFFERENT micro-batches
         chunks = [rows[0:3], rows[3:5], rows[5:8], rows[8:10]]
-        for i, chunk in enumerate(chunks):
-            spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
-                f"{tmp}/f{i}"
-            )
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        stage_chunks(spark, tmp, chunks, schema)
         st = file_stream(
             spark, tmp, spark.createDataFrame([], schema).schema,
             max_files_per_trigger=1,
@@ -2198,10 +2100,7 @@ def test_mr_desc_secondary_streaming_buffer(spark):
     try:
         st = file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
         out = match_recognize_sql(st, sql, streaming=True)
-        run_to_completion(out, "mr_desc_stream", "append")
-        streamed = {
-            tuple(r) for r in spark.table("mr_desc_stream").collect()
-        }
+        streamed = {tuple(r) for r in run_to_completion(out).collect()}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     assert streamed == batch

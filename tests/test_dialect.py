@@ -159,7 +159,6 @@ def test_ddl_streaming_watermark_tumble(spark, sf_dir):
     aggregate over it converges to the batch result on the same file."""
     import shutil
     import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -180,10 +179,9 @@ def test_ddl_streaming_watermark_tumble(spark, sf_dir):
         st = flink_ddl(spark, ddl, streaming=True)
         assert st.isStreaming
         out = st.groupBy(F.window("ts", "6 hours")).count()
-        name = f"ddl_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "update")
+        result = run_to_completion(out, "update")
         got = {
-            (r.window.start, r["count"]) for r in spark.table(name).collect()
+            (r.window.start, r["count"]) for r in result.collect()
         }
         batch = (
             spark.read.parquet(f"{tmp}/events.parquet")

@@ -276,3 +276,22 @@ def test_bench_detail_path_keeps_the_committed_record():
     named = bench._detail_path("/data/sf0.01")
     assert named == bench._fixture_base("/data/sf0.01") / "bench_detail.json"
     assert named.parent.parent == REPO / ".benchdata"
+
+
+def test_streaming_queries_name_themselves():
+    # A bounded replay is named, drained and read back in
+    # streaming/core.py: nothing else names a query, starts a memory sink
+    # or draws a uuid for a query's name. (The escaped patterns do not
+    # match their own source.)
+    pkg = REPO / "flink_ci_flink_spark"
+    core = pkg / "streaming" / "core.py"
+    sinks = re.compile(r'\.queryName\(|format\("memory"\)')
+    paths = [*pkg.rglob("*.py"), REPO / "bench.py", *(REPO / "tests").rglob("*.py")]
+    for path in sorted(paths):
+        text = path.read_text()
+        rel = path.relative_to(REPO)
+        assert not re.search(r"\bquery_name\b", text), f"{rel} names a query"
+        if path != core:
+            assert not sinks.search(text), f"{rel} starts its own memory sink"
+    for path in sorted((pkg / "queries").rglob("*.py")):
+        assert "uuid" not in path.read_text(), f"{path.relative_to(REPO)} draws a uuid"

@@ -6,10 +6,11 @@ from __future__ import annotations
 
 import shutil
 import tempfile
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
+
+from tests.replay import stage_chunks
 
 
 @pytest.fixture(scope="module")
@@ -24,16 +25,7 @@ def events_stream_dir(spark, sf_dir):
     rows = ev.collect()
     third = n // 3
     chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, ev.schema).coalesce(1).write.parquet(f"{tmp}/f{i}")
-    # flatten part files into the root dir so the file source sees 3 files
-    import glob
-    import os
-
-    for i in range(3):
-        (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-        os.rename(part, f"{tmp}/{i:03d}.parquet")
-        shutil.rmtree(f"{tmp}/f{i}")
+    stage_chunks(spark, tmp, chunks, ev.schema)
     yield tmp, ev.schema
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -55,9 +47,8 @@ def test_streaming_tumble_agg_matches_batch(spark, sf_dir, events_stream_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("ws"), "event_type", "n")
     )
-    name = f"t_{uuid.uuid4().hex[:8]}"
-    run_to_completion(agg, name, "complete")
-    got = {(r.ws, r.event_type): r.n for r in spark.table(name).collect()}
+    result = run_to_completion(agg, "complete")
+    got = {(r.ws, r.event_type): r.n for r in result.collect()}
 
     path, schema = events_stream_dir
     batch = (
@@ -84,9 +75,8 @@ def test_streaming_append_with_watermark_emits_closed_windows(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("ws"), "n")
     )
-    name = f"a_{uuid.uuid4().hex[:8]}"
-    run_to_completion(agg, name, "append")
-    emitted = spark.table(name).collect()
+    result = run_to_completion(agg)
+    emitted = result.collect()
     assert len(emitted) > 0
     # every emitted window must match the batch count exactly
     path, schema = events_stream_dir
@@ -111,9 +101,8 @@ def test_streaming_group_agg_update_mode(spark, sf_dir, events_stream_dir):
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total")
     )
-    name = f"u_{uuid.uuid4().hex[:8]}"
-    run_to_completion(agg, name, "complete")
-    got = {r.event_type: (r.n, r.total) for r in spark.table(name).collect()}
+    result = run_to_completion(agg, "complete")
+    got = {r.event_type: (r.n, r.total) for r in result.collect()}
     path, schema = events_stream_dir
     batch = (
         spark.read.schema(schema).parquet(path)
@@ -132,9 +121,8 @@ def test_streaming_dedup_within_watermark(spark, events_stream_dir):
     deduped = with_watermark(stream, "ts", "1 hour").dropDuplicatesWithinWatermark(
         ["user_id"]
     )
-    name = f"d_{uuid.uuid4().hex[:8]}"
-    run_to_completion(deduped.select("user_id", "event_id", "ts"), name, "append")
-    rows = spark.table(name).collect()
+    result = run_to_completion(deduped.select("user_id", "event_id", "ts"))
+    rows = result.collect()
     # Guarantee: duplicates are suppressed while the key's state lives (until
     # watermark > ts + delay). Over a 30-day replay a key may re-emit after
     # expiry, so assert: (a) substantial dedup happened, (b) every user kept
@@ -179,9 +167,8 @@ def test_streaming_interval_join(spark, sf_dir, events_stream_dir):
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOUR")),
     ).select("click_id", "purchase_id")
-    name = f"j_{uuid.uuid4().hex[:8]}"
-    run_to_completion(joined, name, "append")
-    got = {(r.click_id, r.purchase_id) for r in spark.table(name).collect()}
+    result = run_to_completion(joined)
+    got = {(r.click_id, r.purchase_id) for r in result.collect()}
 
     ev = spark.read.schema(schema).parquet(path)
     c = ev.filter(F.col("event_type") == "click").select(
@@ -224,9 +211,8 @@ def test_keyed_process_running_count(spark, events_stream_dir):
         "user_id long, n long",
         "n long",
     )
-    name = f"p_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "update")
-    got = {r.user_id: r.n for r in spark.table(name).groupBy("user_id").agg(F.max("n").alias("n")).withColumnRenamed("n", "n").collect()}
+    result = run_to_completion(out, "update")
+    got = {r.user_id: r.n for r in result.groupBy("user_id").agg(F.max("n").alias("n")).withColumnRenamed("n", "n").collect()}
     path, schema = events_stream_dir
     want = {
         r.user_id: r.n
@@ -247,12 +233,10 @@ def test_streaming_top_n(spark, events_stream_dir):
         n=3,
         payload_cols=["event_id"],
     )
-    name = f"tn_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "update")
+    result = run_to_completion(out, "update")
     # final state: top-3 by value per user == batch top-3
     final = (
-        spark.table(name)
-        .groupBy("user_id", "rn")
+        result.groupBy("user_id", "rn")
         .agg(F.max_by("value", "value").alias("value"))
     )
     got = {
@@ -287,7 +271,6 @@ def test_streaming_top_n_jvm_matches_batch(spark, events_stream_dir):
             n=3,
             select_cols=["user_id", "value", "event_id"],
             state_dir=state,
-            query_name=f"tnj_{uuid.uuid4().hex[:8]}",
         )
         got = {(r.user_id, r.event_id): r.value for r in final.collect()}
     finally:
@@ -330,9 +313,8 @@ def test_streaming_semi_join(spark, events_stream_dir):
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 2 HOUR"))
     )
     semi = clicks.join(purchases, cond, "left_semi")
-    name = f"s_{uuid.uuid4().hex[:8]}"
-    run_to_completion(semi, name, "append")
-    got = {r.click_id for r in spark.table(name).collect()}
+    result = run_to_completion(semi)
+    got = {r.click_id for r in result.collect()}
 
     ev = spark.read.schema(schema).parquet(path)
     c = ev.filter(F.col("event_type") == "click").select(
@@ -357,9 +339,8 @@ def test_streaming_anti_join_static(spark, events_stream_dir):
     )
     stream = file_stream(spark, path, schema)
     anti = stream.join(purchasers, "user_id", "left_anti").select("event_id")
-    name = f"a_{uuid.uuid4().hex[:8]}"
-    run_to_completion(anti, name, "append")
-    got = {r.event_id for r in spark.table(name).collect()}
+    result = run_to_completion(anti)
+    got = {r.event_id for r in result.collect()}
     want = {
         r.event_id
         for r in ev_batch.join(purchasers, "user_id", "left_anti").select("event_id").collect()
@@ -376,9 +357,8 @@ def test_streaming_hll_registers_match_batch(spark, events_stream_dir):
 
     stream = _events_stream(spark, events_stream_dir)
     regs = hll_registers(stream, F.col("user_id").cast("string"), ["event_type"])
-    name = f"hll_{uuid.uuid4().hex[:8]}"
-    run_to_completion(regs, name, "complete")
-    got = sorted(map(tuple, spark.table(name).collect()))
+    result = run_to_completion(regs, "complete")
+    got = sorted(map(tuple, result.collect()))
     path, schema = events_stream_dir
     batch = hll_registers(
         spark.read.schema(schema).parquet(path),
@@ -468,7 +448,6 @@ def test_value_histogram_fold_batching_insensitive(spark, sf_dir):
     equals the one-shot batch histogram under any chunking, and the
     quantile read-off error is bounded by the bin width."""
     import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
@@ -491,7 +470,6 @@ def test_value_histogram_fold_batching_insensitive(spark, sf_dir):
             width=2.0,
             n_bins=256,
             state_dir=tempfile.mkdtemp(prefix="vh_test_"),
-            query_name=f"vh_test_{uuid.uuid4().hex[:8]}",
         )
         return {tuple(r) for r in out.collect()}
 
@@ -600,6 +578,7 @@ def test_run_to_completion_sizes_state_partitions(spark):
     partitions whatever the session's shuffle-partition conf, and the conf
     is restored afterwards — also when the query fails to start."""
     from pyspark.errors import AnalysisException
+    from pyspark.sql.streaming import StreamingQueryListener
 
     from flink_ci_flink_spark.streaming import (
         file_stream,
@@ -607,20 +586,35 @@ def test_run_to_completion_sizes_state_partitions(spark):
         stage_ordered_replay,
     )
 
+    class StatePartitions(StreamingQueryListener):
+        def __init__(self):
+            self.seen = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.seen += [s.numShufflePartitions for s in event.progress.stateOperators]
+
+        def onQueryTerminated(self, event):
+            pass
+
     df = spark.createDataFrame(
         [(i % 3, i) for i in range(30)], "k INT, seq LONG"
     )
     tmp = stage_ordered_replay(df, ["seq"])
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
+    listener = StatePartitions()
+    spark.streams.addListener(listener)
     try:
         stream = file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
-        name = f"rtc_{uuid.uuid4().hex[:8]}"
-        q = run_to_completion(stream.groupBy("k").count(), name, "complete")
-        (state,) = q.recentProgress[-1].stateOperators
-        assert state.numShufflePartitions == spark.sparkContext.defaultParallelism
+        result = run_to_completion(stream.groupBy("k").count(), "complete")
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        assert listener.seen
+        assert set(listener.seen) == {spark.sparkContext.defaultParallelism}
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
-        assert sorted(tuple(r) for r in spark.table(name).collect()) == [
+        assert sorted(tuple(r) for r in result.collect()) == [
             (0, 10),
             (1, 10),
             (2, 10),
@@ -628,8 +622,36 @@ def test_run_to_completion_sizes_state_partitions(spark):
 
         # complete mode without an aggregation is rejected at start()
         with pytest.raises(AnalysisException):
-            run_to_completion(stream, f"rtc_{uuid.uuid4().hex[:8]}", "complete")
+            run_to_completion(stream, "complete")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
     finally:
+        spark.streams.removeListener(listener)
         spark.conf.set("spark.sql.shuffle.partitions", old)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_run_to_completion_leaves_no_view(spark):
+    """The memory sink's view is dropped on return; the returned DataFrame
+    still reads the rows."""
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        run_to_completion,
+        stage_ordered_replay,
+    )
+
+    df = spark.createDataFrame([(i % 3, i) for i in range(30)], "k INT, seq LONG")
+    tmp = stage_ordered_replay(df, ["seq"])
+    try:
+        before = sorted(t.name for t in spark.catalog.listTables())
+        result = run_to_completion(
+            file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
+        )
+        assert sorted(t.name for t in spark.catalog.listTables()) == before
+        assert result.count() == 30
+        assert sorted(tuple(r) for r in result.groupBy("k").count().collect()) == [
+            (0, 10),
+            (1, 10),
+            (2, 10),
+        ]
+    finally:
         shutil.rmtree(tmp, ignore_errors=True)

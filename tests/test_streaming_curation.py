@@ -11,10 +11,11 @@ import glob
 import os
 import shutil
 import tempfile
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
+
+from tests.replay import stage_chunks
 
 
 @pytest.fixture(scope="module")
@@ -27,12 +28,7 @@ def docs_stream_dir(spark, sf_dir):
     rows = d.collect()
     third = len(rows) // 3
     chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, d.schema).coalesce(1).write.parquet(f"{tmp}/f{i}")
-    for i in range(3):
-        (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-        os.rename(part, f"{tmp}/{i:03d}.parquet")
-        shutil.rmtree(f"{tmp}/f{i}")
+    stage_chunks(spark, tmp, chunks, d.schema)
     yield tmp, d.schema
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -84,12 +80,10 @@ def test_streaming_curation_matches_batch(spark, docs_stream_dir):
         "emitted boolean",
         output_mode="append",
     )
-    name = f"cur_{uuid.uuid4().hex[:8]}"
-    run_to_completion(deduped, name, "append")
+    result = run_to_completion(deduped)
     got = {
         (r.source, r.lang): (r.n_docs, r.total_tokens)
-        for r in spark.table(name)
-        .groupBy("source", "lang")
+        for r in result.groupBy("source", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").cast("bigint").alias("total_tokens"),
@@ -371,17 +365,8 @@ def test_streaming_ivf_ingest_matches_batch_knn(spark, sf_dir):
     rows = emb.orderBy("vec_id").collect()
     third = len(rows) // 3
     chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, emb.schema).coalesce(1).write.parquet(
-            f"{base}/in/f{i}"
-        )
-    import glob as g
-    import os
-
-    os.makedirs(f"{base}/stream", exist_ok=True)
-    for i in range(3):
-        (part,) = g.glob(f"{base}/in/f{i}/part-*.parquet")
-        os.rename(part, f"{base}/stream/{i:03d}.parquet")
+    os.makedirs(f"{base}/stream")
+    stage_chunks(spark, f"{base}/stream", chunks, emb.schema)
 
     stream = file_stream(spark, f"{base}/stream", emb.schema, max_files_per_trigger=1)
     q = streaming_ivf_ingest(
@@ -499,7 +484,6 @@ def test_streaming_mg_fold_matches_python_chain(spark):
     """The per-batch Catalyst MG fold (jvm_keyed_fold) equals the Python
     mergeable-summaries chain over the identical ntile chunking."""
     import tempfile
-    import uuid
     from collections import Counter
 
     from flink_ci_flink_spark.pipeline.sketches import _mg_merge
@@ -514,7 +498,6 @@ def test_streaming_mg_fold_matches_python_chain(spark):
         item_col="item",
         k=16,
         state_dir=tempfile.mkdtemp(prefix="mg_state_"),
-        query_name=f"mg_test_{uuid.uuid4().hex[:8]}",
     )
     got = {(r.item, r.cnt) for r in out.collect()}
 
@@ -536,7 +519,6 @@ def test_centroid_refresh_batching_insensitive(spark, sf_dir):
     2-batch and 5-batch replays of the same vectors produce identical
     refreshed centroids, equal to the one-shot batch means."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.pipeline.similarity import (
@@ -560,7 +542,6 @@ def test_centroid_refresh_batching_insensitive(spark, sf_dir):
             file_stream(spark, tmp, emb.schema, max_files_per_trigger=1),
             centroids,
             tempfile.mkdtemp(prefix="cr_test_"),
-            query_name=f"cr_test_{uuid.uuid4().hex[:8]}",
         )
         return {tuple(r) for r in out.collect()}
 

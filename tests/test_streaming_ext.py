@@ -2,11 +2,10 @@
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
+from tests.replay import stage_chunks
 from tests.test_streaming import events_stream_dir, _events_stream  # noqa: F401
 
 
@@ -19,11 +18,10 @@ def test_count_tumbling_window(spark, events_stream_dir):  # noqa: F811
     out = count_tumbling_window(
         stream.select("user_id", "ts", "value"), "user_id", "ts", "value", size=10
     )
-    name = f"cw_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "append")
+    result = run_to_completion(out)
     got = {
         (r.user_id, r.win): (r.n, round(r.total, 6))
-        for r in spark.table(name).collect()
+        for r in result.collect()
     }
     path, schema = events_stream_dir
     ev = spark.read.schema(schema).parquet(path).orderBy("ts").collect()
@@ -49,11 +47,10 @@ def test_streaming_running_agg(spark, events_stream_dir):  # noqa: F811
     out = streaming_running_agg(
         stream.select("user_id", "ts", "value"), "user_id", "ts", "value"
     )
-    name = f"ra_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "append")
+    result = run_to_completion(out)
     got = {
         (r.user_id, round(r.ts_s, 6)): (round(r.running_sum, 6), r.running_n)
-        for r in spark.table(name).collect()
+        for r in result.collect()
     }
     path, schema = events_stream_dir
     w = (
@@ -87,9 +84,8 @@ def test_broadcast_state_enrich(spark, events_stream_dir):  # noqa: F811
     enriched = stream.join(F.broadcast(control), "event_type", "inner").select(
         "event_id", (F.col("value") * F.col("weight")).alias("weighted")
     )
-    name = f"bc_{uuid.uuid4().hex[:8]}"
-    run_to_completion(enriched, name, "append")
-    n = spark.table(name).count()
+    result = run_to_completion(enriched)
+    n = result.count()
     path, schema = events_stream_dir
     want = (
         spark.read.schema(schema).parquet(path)
@@ -176,11 +172,10 @@ def test_streaming_bounded_over_rows(spark, events_stream_dir):  # noqa: F811
         stream.select("user_id", "ts", "value"), "user_id", "ts", "value",
         rows_preceding=4,
     )
-    name = f"bo_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "append")
+    result = run_to_completion(out)
     got = {
         (r.user_id, round(r.ts_s, 6)): (round(r.w_sum, 6), r.w_n)
-        for r in spark.table(name).collect()
+        for r in result.collect()
     }
     path, schema = events_stream_dir
     w = (
@@ -216,11 +211,10 @@ def test_streaming_bounded_over_range(spark, events_stream_dir):  # noqa: F811
         stream.select("user_id", "ts", "value"), "user_id", "ts", "value",
         range_preceding=horizon,
     )
-    name = f"br_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "append")
+    result = run_to_completion(out)
     got = {
         (r.user_id, round(r.ts_s, 6)): (round(r.w_sum, 6), r.w_n)
-        for r in spark.table(name).collect()
+        for r in result.collect()
     }
     path, schema = events_stream_dir
     rows = (
@@ -252,11 +246,10 @@ def test_count_sliding_window(spark, events_stream_dir):  # noqa: F811
         stream.select("user_id", "ts", "value"), "user_id", "ts", "value",
         size=size, slide=slide,
     )
-    name = f"cs_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "append")
+    result = run_to_completion(out)
     got = {
         (r.user_id, r.win): (r.n, round(r.total, 6))
-        for r in spark.table(name).collect()
+        for r in result.collect()
     }
     path, schema = events_stream_dir
     ev = spark.read.schema(schema).parquet(path).orderBy("ts").collect()
@@ -276,8 +269,6 @@ def test_streaming_top_n_retractable(spark):
     """An update lowering a current top-n member's value must evict it
     (RetractableTopNFunction semantics) — final emitted top-n reflects the
     latest values, not the running maxima."""
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -291,22 +282,17 @@ def test_streaming_top_n_retractable(spark):
     ]
     tmp = tempfile.mkdtemp(prefix="rtopn_")
     try:
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{tmp}/f{i}")
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        stage_chunks(spark, tmp, batches, schema)
         stream = file_stream(
             spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
         )
         out = streaming_top_n_retractable(stream, "k", "item", "score", n=2)
-        name = f"rt_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "update")
+        result = run_to_completion(out, "update")
         # update-mode memory sink keeps the latest row per output key; collect
         # the final rn:1/rn:2 assignment
         final = {
             r.rn: (r.item, r.score)
-            for r in spark.table(name).orderBy("rn").collect()
+            for r in result.orderBy("rn").collect()
         }
         assert final == {1: (11, 4.0), 2: (13, 3.5)}
     finally:
@@ -316,8 +302,6 @@ def test_streaming_top_n_retractable(spark):
 def test_streaming_event_time_sort(spark):
     """Out-of-order input emits in event-time order; rows behind the emitted
     frontier are dropped as late (RowTimeSortOperator semantics)."""
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -331,21 +315,16 @@ def test_streaming_event_time_sort(spark):
     ]
     tmp = tempfile.mkdtemp(prefix="etsort_")
     try:
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{tmp}/f{i}")
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        stage_chunks(spark, tmp, batches, schema)
         stream = file_stream(
             spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
         )
         out = streaming_event_time_sort(stream, "k", "ts", ["v"], delay_seconds=0.0)
-        name = f"es_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "append")
-        got = [r.v for r in spark.table(name).orderBy("ts_s").collect()]
+        result = run_to_completion(out)
+        got = [r.v for r in result.orderBy("ts_s").collect()]
         # emitted in order, late row 2.5 absent
         assert got == ["a", "b", "c", "d", "e"]
-        ts = [r.ts_s for r in spark.table(name).orderBy("ts_s").collect()]
+        ts = [r.ts_s for r in result.orderBy("ts_s").collect()]
         assert ts == sorted(ts) and 2.5 not in ts
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -411,8 +390,6 @@ def test_session_dynamic_gap(spark):
 def test_keyed_states_facade(spark):
     """ValueState/ListState/MapState views over the applyInPandasWithState
     tuple, committed with one flush() (reference state-primitive API shape)."""
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -426,11 +403,7 @@ def test_keyed_states_facade(spark):
     ]
     tmp = tempfile.mkdtemp(prefix="kstates_")
     try:
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{tmp}/f{i}")
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        stage_chunks(spark, tmp, batches, schema)
 
         def fn(key_tuple, pdf_iter, state):
             import pandas as pd
@@ -467,9 +440,8 @@ def test_keyed_states_facade(spark):
             "total double, recent array<double>, per_type map<string,long>",
             output_mode="update",
         )
-        name = f"ks_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "update")
-        final = {r.k: (r.total, r.n_recent, r.n_a, r.n_b) for r in spark.table(name).collect()}
+        result = run_to_completion(out, "update")
+        final = {r.k: (r.total, r.n_recent, r.n_a, r.n_b) for r in result.collect()}
         assert final[1] == (6.0, 3, 2, 1)
         assert final[2] == (6.0, 2, 1, 1)
     finally:
@@ -498,8 +470,6 @@ def test_async_lookup(spark):
 def test_side_output_split_sinks(spark):
     """Side output on a stream: one query, two sinks via foreachBatch
     (OutputTag analog); batch side_output splits one plan."""
-    import glob
-    import os
     import shutil
     import tempfile
 
@@ -521,11 +491,7 @@ def test_side_output_split_sinks(spark):
     ckpt = tempfile.mkdtemp(prefix="sideout_ck_")
     got_main, got_side = [], []
     try:
-        for i, rows in enumerate([[(1,), (9,)], [(3,), (8,)]]):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{tmp}/f{i}")
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
+        stage_chunks(spark, tmp, [[(1,), (9,)], [(3,), (8,)]], schema)
         stream = file_stream(
             spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
         )
@@ -560,9 +526,8 @@ def test_changelog_group_agg_retract_stream(spark, events_stream_dir):  # noqa: 
         ["user_id"],
         {"total": ("sum", "value"), "n": ("count", "value")},
     )
-    name = f"cl_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "update")
-    log = spark.table(name)
+    result = run_to_completion(out, "update")
+    log = result
     # within a seq the -U precedes the +U ('-' > '+' in ASCII, so desc)
     rows = log.orderBy("user_id", "seq", F.desc("row_kind")).collect()
 
@@ -623,10 +588,9 @@ def test_transform_with_state_running_agg(spark, events_stream_dir):  # noqa: F8
         out = streaming_running_agg_tws(
             stream.select("user_id", "value"), "user_id", "value"
         )
-        name = f"tws_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "update")
+        result = run_to_completion(out, "update")
         # last emission per key = the row with the highest running_n
-        rows = spark.table(name).collect()
+        rows = result.collect()
         final = {}
         for r in rows:
             if r.user_id not in final or r.running_n > final[r.user_id].running_n:
@@ -735,7 +699,6 @@ def test_streaming_dedup_keep_last_jvm_matches_batch(spark, events_stream_dir): 
             ts_col="ts",
             select_cols=["user_id", "ts", "event_id", "event_type"],
             state_dir=state,
-            query_name=f"dj_{uuid.uuid4().hex[:8]}",
         )
         got = {(r.user_id): (r.ts, r.event_id, r.event_type) for r in got_df.collect()}
         ev = spark.read.schema(schema).parquet(path)
@@ -773,7 +736,6 @@ def test_streaming_running_agg_jvm_matches_batch(spark, events_stream_dir):  # n
                 "vmax": ("max", "value"),
             },
             state_dir=state,
-            query_name=f"ra_{uuid.uuid4().hex[:8]}",
         )
         got = {
             r.user_id: (r.n, round(r.total, 6), round(r.vmin, 6), round(r.vmax, 6))
@@ -843,7 +805,6 @@ def test_streaming_sessionize_jvm_matches_batch(spark, events_stream_dir):  # no
                 state_dir=state,
                 value_col="value",
                 close_lateness_seconds=lateness,
-                query_name=f"sj_{uuid.uuid4().hex[:8]}",
             )
             got = {
                 (r.user_id, r.sess_start, r.sess_end, r.n_events,
@@ -877,18 +838,7 @@ def test_streaming_sessionize_jvm_bridges_out_of_order(spark):
     tmp = tempfile.mkdtemp(prefix="sess_bridge_")
     state = tempfile.mkdtemp(prefix="sess_bridge_state_")
     try:
-        for i, rows in enumerate([batch1, batch2]):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-                f"{tmp}/f{i}"
-            )
-        import glob
-        import os
-
-        for i in range(2):
-            (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-            os.rename(part, f"{tmp}/{i:03d}.parquet")
-            shutil.rmtree(f"{tmp}/f{i}")
-
+        stage_chunks(spark, tmp, [batch1, batch2], schema)
         stream = file_stream(
             spark, tmp, spark.createDataFrame([], schema).schema,
             max_files_per_trigger=1,
@@ -900,7 +850,6 @@ def test_streaming_sessionize_jvm_bridges_out_of_order(spark):
             gap_seconds=60,
             state_dir=state,
             value_col="value",
-            query_name=f"sb_{uuid.uuid4().hex[:8]}",
         ).collect()
         assert len(out) == 1
         (r,) = out
@@ -937,7 +886,6 @@ def test_streaming_count_window_jvm_matches_python_and_batch(
             value_col="value",
             size=10,
             state_dir=state,
-            query_name=f"cwj_{uuid.uuid4().hex[:8]}",
         )
         got = {
             (r.user_id, r.win): (r.n, round(r.total, 6)) for r in got_df.collect()
@@ -980,11 +928,10 @@ def test_streaming_bounded_over_jvm_matches_python(spark, events_stream_dir):  #
         "value",
         rows_preceding=4,
     )
-    name = f"bo_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out_py, name, "append")
+    result = run_to_completion(out_py)
     want = {
         (r.user_id, round(r.ts_s, 6)): (round(r.w_sum, 6), r.w_n)
-        for r in spark.table(name).collect()
+        for r in result.collect()
     }
 
     state = tempfile.mkdtemp(prefix="bover_jvm_")
@@ -1094,7 +1041,6 @@ def test_streaming_count_sliding_window_jvm_matches_python(
                 size=size,
                 slide=slide,
                 state_dir=state,
-                query_name=f"csj_{uuid.uuid4().hex[:8]}",
             )
             return {
                 (r.user_id, r.win): (r.n, round(r.total, 6))
@@ -1110,11 +1056,10 @@ def test_streaming_count_sliding_window_jvm_matches_python(
         ),
         "user_id", "ts", "value", size=10, slide=4,
     )
-    name = f"csp_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out_py, name, "append")
+    result = run_to_completion(out_py)
     want = {
         (r.user_id, r.win): (r.n, round(r.total, 6))
-        for r in spark.table(name).collect()
+        for r in result.collect()
     }
     assert run_jvm(10, 4) == want and want
 
@@ -1299,7 +1244,6 @@ def test_streaming_changelog_agg_retracts_to_zero(spark):
     deleted drops out of the emitted state; surviving groups equal the
     brute-force aggregate of surviving rows, regardless of chunking."""
     import tempfile
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.process import streaming_changelog_agg_jvm
@@ -1322,7 +1266,6 @@ def test_streaming_changelog_agg_retracts_to_zero(spark):
         keys=["g"],
         value_cols=["v"],
         state_dir=tempfile.mkdtemp(prefix="clagg_"),
-        query_name=f"clagg_{uuid.uuid4().hex[:8]}",
     )
     got = {(r.g, r.n_rows, r.sum_v) for r in out.collect()}
     assert got == {("a", 2, 19)}  # b retracted to zero and dropped
@@ -1334,7 +1277,6 @@ def test_manifest_sink_idempotent_replay_and_orphan_invisible(spark, tmp_path):
     data file no manifest lists stays invisible to the committed view."""
     import json
     import os
-    import uuid
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.core import manifest_sink, read_manifest
@@ -1348,7 +1290,6 @@ def test_manifest_sink_idempotent_replay_and_orphan_invisible(spark, tmp_path):
         file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
         out_dir=base,
         checkpoint=f"{base}/ckpt",
-        query_name=f"ms_{uuid.uuid4().hex[:8]}",
     )
     q.processAllAvailable()
     q.stop()
@@ -1395,9 +1336,8 @@ def test_tws_list_state_topn(spark, events_stream_dir):  # noqa: F811
         out = streaming_topn_tws(
             stream.select("user_id", "value"), "user_id", "value", n=3
         )
-        name = f"tws_top_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "update")
-        rows = spark.table(name).collect()
+        result = run_to_completion(out, "update")
+        rows = result.collect()
         # last emission per key: rebuild from the final batch per key is not
         # directly tagged, so recompute: for each key keep the emission set
         # with the HIGHEST top value count / max values — equivalently the
@@ -1451,9 +1391,8 @@ def test_tws_map_state_type_counts(spark, events_stream_dir):  # noqa: F811
         out = streaming_type_counts_tws(
             stream.select("user_id", "event_type"), "user_id", "event_type"
         )
-        name = f"tws_map_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "update")
-        rows = spark.table(name).collect()
+        result = run_to_completion(out, "update")
+        rows = result.collect()
         # counts only grow; the max per (key, type) is the final state
         final: dict = {}
         for r in rows:
@@ -1501,13 +1440,12 @@ def test_tws_event_time_timers_sessionize(spark, events_stream_dir):  # noqa: F8
             "ts",
             gap_seconds=GAP,
         )
-        name = f"tws_sess_{uuid.uuid4().hex[:8]}"
-        run_to_completion(out, name, "append")
+        result = run_to_completion(out)
         got = {
-            (r.user_id, r.start_s, r.end_s, r.n) for r in spark.table(name).collect()
+            (r.user_id, r.start_s, r.end_s, r.n) for r in result.collect()
         }
         by_how = {}
-        for r in spark.table(name).collect():
+        for r in result.collect():
             by_how.setdefault(r.closed_by, 0)
             by_how[r.closed_by] += 1
         # batch truth: walk each key's ordered timestamps
@@ -1568,8 +1506,6 @@ def test_persist_static_side_released_on_stop(spark):
     index artifact is the cost the persist removes). Also pins the
     proxy's forwarding (non-stop attributes reach the real query) and
     stop() idempotence."""
-    import glob
-    import os
     import tempfile
 
     from flink_ci_flink_spark.streaming import file_stream
@@ -1583,12 +1519,8 @@ def test_persist_static_side_released_on_stop(spark):
     spark.createDataFrame(
         [(i, f"dim{i}") for i in range(10)], "k bigint, v string"
     ).write.parquet(f"{base}/index")
-    for b in range(2):
-        spark.createDataFrame(
-            [(b * 5 + i,) for i in range(5)], "k bigint"
-        ).coalesce(1).write.parquet(f"{base}/stage{b}")
-        (part,) = glob.glob(f"{base}/stage{b}/part-*.parquet")
-        os.rename(part, f"{base}/{b:03d}.parquet")
+    chunks = [[(b * 5 + i,) for i in range(5)] for b in range(2)]
+    stage_chunks(spark, base, chunks, "k bigint")
 
     static = persist_static_side(spark.read.parquet(f"{base}/index"))
     seen: list[int] = []

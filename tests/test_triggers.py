@@ -11,13 +11,10 @@ Semantic anchors:
 
 from __future__ import annotations
 
-import glob
-import os
 import shutil
 import tempfile
-import uuid
 
-
+from tests.replay import stage_chunks
 from tests.test_streaming import events_stream_dir, _events_stream  # noqa: F401
 
 
@@ -26,20 +23,14 @@ def _replay_fixture(spark, rows, schema, n_files=3):
     tmp = tempfile.mkdtemp(prefix="trig_stream_")
     per = max(1, (len(rows) + n_files - 1) // n_files)
     chunks = [rows[i : i + per] for i in range(0, len(rows), per)]
-    for i, chunk in enumerate(chunks):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(f"{tmp}/f{i}")
-        (part,) = glob.glob(f"{tmp}/f{i}/part-*.parquet")
-        os.rename(part, f"{tmp}/{i:03d}.parquet")
-        shutil.rmtree(f"{tmp}/f{i}")
+    stage_chunks(spark, tmp, chunks, schema)
     return tmp
 
 
 def _run(spark, out):
     from flink_ci_flink_spark.streaming import run_to_completion
 
-    name = f"tw_{uuid.uuid4().hex[:8]}"
-    run_to_completion(out, name, "append")
-    return spark.table(name).collect()
+    return run_to_completion(out).collect()
 
 
 def test_count_trigger_purging_equals_count_window(spark, events_stream_dir):  # noqa: F811

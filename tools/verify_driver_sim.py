@@ -6,7 +6,7 @@ __spark_entry__, run entry(), then run every queries()[name] at sf0.01 and
 compare against oracle_sql()[name] via DuckDB (row count + sorted-column
 value multiset).
 
-Usage: python tools/verify_driver_sim.py [sf_dir] [query_name ...]
+Usage: python tools/verify_driver_sim.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
