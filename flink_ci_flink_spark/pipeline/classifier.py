@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from flink_ci_flink_spark.streaming.core import (
     append_epoch,
-    foreach_batch_upsert,
+    drain_foreach_batch,
     read_epochs,
 )
 
@@ -253,19 +253,19 @@ def streaming_model_screen_ingest(
     store_dir: str,
     checkpoint: str,
     id_col: str = "doc_id",
-):
+) -> None:
     """Online serving of the offline-trained quality model: each
     micro-batch scores its documents MAP-ONLY against the broadcast
     literal weights (the k-integer model) and appends (id, score, pred)
     to the screen store — the classifier twin of the IVF-PQ
     encode-on-ingest path. Deterministic integer scoring makes
     at-least-once redeliveries byte-identical, so `finalize_model_screen`
-    collapses them exactly on the id. Returns the started query."""
+    collapses them exactly on the id."""
     def merge(batch_df, epoch_id: int) -> None:
         scored = perceptron_score(batch_df, features, weights, id_col=id_col)
         append_epoch(scored, store_dir, epoch_id)
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_model_screen(spark, store_dir: str, id_col: str = "doc_id"):

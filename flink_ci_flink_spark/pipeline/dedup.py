@@ -27,9 +27,8 @@ from pyspark.sql import functions as F
 
 from flink_ci_flink_spark.pipeline.text import token_hash, tokens
 from flink_ci_flink_spark.streaming.core import (
-    UnpersistOnStop,
     append_epoch,
-    foreach_batch_upsert,
+    drain_foreach_batch,
     persist_static_side,
     read_epochs,
 )
@@ -780,7 +779,7 @@ def streaming_minhash_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-):
+) -> None:
     """Continuous corpus ingest for MinHash-LSH dedup: signatures and band
     keys are per-document (no cross-doc dependency), so each micro-batch
     appends its band rows; `finalize_minhash_pairs` then generates the
@@ -788,8 +787,7 @@ def streaming_minhash_dedup(
     `minhash_lsh_pairs` over the whole corpus (asserted in
     tests/test_streaming_curation.py). State = bands x docs rows of
     (id, band, key), laid down once at ingest; the expensive
-    tokenize/shingle/signature work never re-runs. Returns the started
-    StreamingQuery."""
+    tokenize/shingle/signature work never re-runs."""
     def merge(batch_df, epoch_id: int) -> None:
         bt = minhash_band_table(
             batch_df, text_col, id_col, num_hashes, bands, shingle_n
@@ -799,7 +797,7 @@ def streaming_minhash_dedup(
         # id_a==id_b self-pairs and inflate n_bands_shared)
         append_epoch(bt, bands_dir, epoch_id)
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_minhash_pairs(
@@ -993,20 +991,19 @@ def streaming_line_dedup_ingest(
     seg_tokens: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-):
+) -> None:
     """Continuous corpus ingest for line dedup: segmentation is
     per-document, so each micro-batch appends its (doc, pos, seg) rows —
     the expensive tokenize/segment work runs once at ingest;
     `finalize_line_dedup` resolves the corpus-global first occurrences
     from the accumulated store, equal to the one-shot `line_dedup`
     (streaming == batch parity asserted in tests). Epoch-stamped appends:
-    at-least-once foreachBatch replays collapse exactly in finalize.
-    Returns the started StreamingQuery."""
+    at-least-once foreachBatch replays collapse exactly in finalize."""
     def merge(batch_df, epoch_id: int) -> None:
         seg = segment_table(batch_df, seg_tokens, text_col, id_col)
         append_epoch(seg, segs_dir, epoch_id)
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_line_dedup(spark, segs_dir: str, id_col: str = "doc_id") -> DataFrame:
@@ -1255,18 +1252,18 @@ def streaming_winnow_ingest(
     id_col: str = "doc_id",
     k: int = 3,
     w: int = 4,
-):
+) -> None:
     """Continuous corpus ingest for winnowing dedup: fingerprints are
     per-document (no cross-doc dependency), so each micro-batch appends
     its (id, fp) rows epoch-stamped; `finalize_winnow_pairs` runs the one
     fingerprint-key shuffle over the accumulated store — equal to the
     one-shot `winnow_pairs`. The expensive tokenize/gram/window work runs
-    once at ingest. Returns the started StreamingQuery."""
+    once at ingest."""
     def merge(batch_df, epoch_id: int) -> None:
         ft = winnow_fingerprint_table(batch_df, text_col, id_col, k, w)
         append_epoch(ft, fps_dir, epoch_id)
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_winnow_pairs(
@@ -1605,7 +1602,7 @@ def streaming_delta_dedup_ingest(
     bands: int = 8,
     shingle_n: int = 3,
     min_agree: int = 16,
-):
+) -> None:
     """Online serve of delta dedup: each incoming micro-batch of NEW docs
     is banded map-only and probed against the STATIC corpus bucket index
     (a parquet artifact — the stream-static join pattern), appending one
@@ -1613,30 +1610,27 @@ def streaming_delta_dedup_ingest(
     byte-identical, so the finalize collapses them exactly on the id.
 
     The index is static for the life of the stream, so it is read ONCE
-    and persisted spill-safe; every trigger after the first probes the
-    cached copy instead of re-scanning the parquet artifact (at 100x
-    documents the per-trigger re-read dominates the replay wall; on a
-    cluster the index is GBs per trigger otherwise). The returned query
-    proxy unpersists it on ``stop()``."""
-    buckets = persist_static_side(
+    and persisted spill-safe while the stream drains; every trigger after
+    the first probes the cached copy instead of re-scanning the parquet
+    artifact (at 100x documents the per-trigger re-read dominates the
+    replay wall; on a cluster the index is GBs per trigger otherwise)."""
+    with persist_static_side(
         stream_df.sparkSession.read.parquet(buckets_dir)
-    )
+    ) as buckets:
 
-    def merge(batch_df, epoch_id: int) -> None:
-        out = _delta_decide(
-            _banded_signatures(
-                batch_df, text_col, id_col, num_hashes, bands, shingle_n
-            ),
-            buckets,
-            batch_df.select(F.col(id_col)),
-            id_col,
-            min_agree,
-        )
-        append_epoch(out, store_dir, epoch_id)
+        def merge(batch_df, epoch_id: int) -> None:
+            out = _delta_decide(
+                _banded_signatures(
+                    batch_df, text_col, id_col, num_hashes, bands, shingle_n
+                ),
+                buckets,
+                batch_df.select(F.col(id_col)),
+                id_col,
+                min_agree,
+            )
+            append_epoch(out, store_dir, epoch_id)
 
-    return UnpersistOnStop(
-        foreach_batch_upsert(stream_df, merge, checkpoint), buckets
-    )
+        drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_delta_dedup(spark, store_dir: str, id_col: str = "doc_id"):

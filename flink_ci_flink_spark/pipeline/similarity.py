@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from flink_ci_flink_spark.streaming.core import (
     append_epoch,
-    foreach_batch_upsert,
+    drain_foreach_batch,
     read_epochs,
 )
 
@@ -1672,7 +1672,7 @@ def streaming_ivfpq_ingest(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-):
+) -> None:
     """Continuous ENCODE-ON-INGEST into a pre-trained IVF-PQ index: each
     arriving vector is quantized, coarse-assigned, residual-encoded, and
     its reconstructed code row lands in its cell's partition — all inside
@@ -1700,7 +1700,7 @@ def streaming_ivfpq_ingest(
         ).select(id_col, "cell", _pq_recon_expr(books, "__rv").alias("__rr"))
         append_epoch(b, store_dir, epoch_id, partition_by="cell")
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def ivfpq_probe_store(
@@ -1752,7 +1752,7 @@ def streaming_ivf_ingest(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-):
+) -> None:
     """Continuous embedding ingest into a PRE-TRAINED IVF index (the
     production ANN shape: the coarse quantizer is trained offline once;
     arriving vectors are assigned map-only and land in their cell's
@@ -1760,14 +1760,14 @@ def streaming_ivf_ingest(
     PARTITIONED BY cell, so `finalize_knn_join` — and any later probe —
     reads only the probed cells' files (partition pruning is the
     inverted-file structure on disk). At-least-once replays collapse on
-    the id at finalize. Returns the started StreamingQuery."""
+    the id at finalize."""
     def merge(batch_df, epoch_id: int) -> None:
         b = batch_df.select(
             F.col(id_col), _to_double(vec_col).alias("__v")
         ).withColumn("cell", _assign_cells(F.col("__v"), centroids))
         append_epoch(b, store_dir, epoch_id, partition_by="cell")
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_knn_join(

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from flink_ci_flink_spark.pipeline.text import token_hash, tokens
 from flink_ci_flink_spark.streaming.core import (
     append_epoch,
-    foreach_batch_upsert,
+    drain_foreach_batch,
     read_epochs,
 )
 
@@ -234,7 +234,7 @@ def streaming_span_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     w: int = 8,
-):
+) -> None:
     """Continuous corpus ingest for span dedup: per micro-batch, append the
     batch's positional window table and MERGE the duplicate-window registry
     (per whash: min/max doc id seen so far — the same min!=max screen as
@@ -245,8 +245,7 @@ def streaming_span_dedup(
 
     State is bounded by DISTINCT windows (registry: one row per whash),
     not by corpus size; the windows store is the exploded corpus itself —
-    the same data a batch pass would scan, laid down once at ingest.
-    Returns the started StreamingQuery."""
+    the same data a batch pass would scan, laid down once at ingest."""
     from pyspark.sql import functions as F  # noqa: F811
 
     def merge(batch_df, epoch_id: int) -> None:
@@ -275,7 +274,7 @@ def streaming_span_dedup(
         merged.write.mode("overwrite").parquet(tmp)
         spark.read.parquet(tmp).write.mode("overwrite").parquet(registry_dir)
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_span_stats(spark, windows_dir: str, registry_dir: str, w: int = 8):

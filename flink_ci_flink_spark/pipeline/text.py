@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from flink_ci_flink_spark.streaming.core import (
     append_epoch,
-    foreach_batch_upsert,
+    drain_foreach_batch,
     read_epochs,
 )
 
@@ -662,7 +662,7 @@ def streaming_lm_screen_ingest(
     checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-):
+) -> None:
     """Continuous corpus ingest for the LM quality screen: bigram
     extraction is per-document (no cross-doc dependency), so each
     micro-batch appends its positional bigram rows ``(id, pos, bigram)``
@@ -672,7 +672,7 @@ def streaming_lm_screen_ingest(
     counts) and every doc's score from the accumulated store, equal to
     running `rare_bigram_stats` over the whole corpus. At-least-once
     replays are collapsed exactly at finalize via the (id, pos) natural
-    key. Returns the started StreamingQuery."""
+    key."""
     def merge(batch_df, epoch_id: int) -> None:
         rows = batch_df.select(
             F.col(id_col), bigrams(text_col).alias("__bg")
@@ -682,7 +682,7 @@ def streaming_lm_screen_ingest(
         ).withColumn("pos", F.coalesce(F.col("pos"), F.lit(-1)))
         append_epoch(rows, store_dir, epoch_id)
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_lm_screen(
@@ -1208,7 +1208,7 @@ def streaming_langid_screen_ingest(
     checkpoint: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-):
+) -> None:
     """Online serve of the offline-trained language-ID model: each
     micro-batch classifies its docs map-only against the broadcast literal
     profiles and appends (id, lang, lang_pred, hits). Deterministic
@@ -1227,7 +1227,7 @@ def streaming_langid_screen_ingest(
         )
         append_epoch(scored, store_dir, epoch_id)
 
-    return foreach_batch_upsert(stream_df, merge, checkpoint)
+    drain_foreach_batch(stream_df, merge, checkpoint)
 
 
 def finalize_langid_screen(spark, store_dir: str, id_col: str = "doc_id"):

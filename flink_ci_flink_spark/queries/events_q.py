@@ -1109,15 +1109,13 @@ def streaming_broadcast_rules_replay(spark: SparkSession, sf_dir: str) -> DataFr
             & (F.col("value") >= F.col("min_value")),
         ).select("event_id", "rule_id", "value")
 
-    q = broadcast_connect(
+    broadcast_connect(
         file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
         rules_for_batch,
         join_fn,
         out_dir=f"{base}/out",
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     return read_epochs(spark, f"{base}/out", ["event_id", "rule_id"]).select(
         "event_id", "rule_id", F.round("value", 6).alias("value")
     )
@@ -1410,7 +1408,7 @@ def streaming_manifest_sink_replay(spark: SparkSession, sf_dir: str) -> DataFram
     staged = t.events.select("event_id", "user_id", "event_type", "ts")
     tmp = stage_ordered_replay(staged, ["ts", "event_id"])
     base = tempfile.mkdtemp(prefix="manifest_sink_")
-    q = manifest_sink(
+    manifest_sink(
         file_stream(spark, tmp, staged.schema, max_files_per_trigger=1)
         .select(
             "event_id",
@@ -1421,8 +1419,6 @@ def streaming_manifest_sink_replay(spark: SparkSession, sf_dir: str) -> DataFram
         out_dir=base,
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     # crashed-attempt orphan: a data file no manifest lists — must stay
     # invisible to the committed view
     ev.limit(50).write.mode("overwrite").parquet(f"{base}/data/batch=999")
@@ -1462,25 +1458,15 @@ def streaming_restart_recovery_replay(spark: SparkSession, sf_dir: str) -> DataF
     os.rename(f"{tmp}/003.parquet", held_back)
 
     base = tempfile.mkdtemp(prefix="restart_")
-
-    def run_once():
-        q = manifest_sink(
-            file_stream(spark, tmp, staged.schema, max_files_per_trigger=1)
-            .select(
-                "event_id",
-                "user_id",
-                "event_type",
-                F.unix_timestamp("ts").alias("ts_s"),
-            ),
-            out_dir=base,
-            checkpoint=f"{base}/ckpt",
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    run_once()  # files 1-2, then "failure"
+    stream = file_stream(spark, tmp, staged.schema, max_files_per_trigger=1).select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.unix_timestamp("ts").alias("ts_s"),
+    )
+    manifest_sink(stream, base, f"{base}/ckpt")  # files 1-2, then "failure"
     os.rename(held_back, f"{tmp}/003.parquet")  # late data arrives
-    run_once()  # fresh query, same checkpoint: resumes at file 3
+    manifest_sink(stream, base, f"{base}/ckpt")  # same checkpoint: file 3
     n_manifests = len(glob.glob(f"{base}/manifest/*.json"))
     assert n_manifests == 3, f"expected 3 committed batches, got {n_manifests}"
     return read_manifest(spark, base)

@@ -986,8 +986,8 @@ def pipe_ivfpq_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode-on-ingest into a pre-trained IVF-PQ index over the
-    3-micro-batch replay, with batch 0 DELIBERATELY re-appended (simulated
-    at-least-once redelivery): each vector's coarse cell + reconstructed
+    3-micro-batch replay, with batch 1 DELIBERATELY redelivered as a
+    fourth (at-least-once redelivery): each vector's coarse cell + reconstructed
     residual code lands in the cell-partitioned store from a
     pure-Catalyst per-batch plan; the probe replay-dedups on the id
     (deterministic encoding makes duplicates byte-identical) and answers
@@ -999,7 +999,6 @@ def streaming_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from flink_ci_flink_spark.pipeline.similarity import (
         _np_cells_probes_int,
-        assign_cells_int_expr,
         ivf_centroids_fp,
         ivfpq_probe_store,
         pq_codebooks_fp,
@@ -1007,6 +1006,7 @@ def streaming_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         streaming_ivfpq_ingest,
     )
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     t = load_tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
@@ -1035,30 +1035,14 @@ def streaming_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     base = tempfile.mkdtemp(prefix="ivfpq_ingest_")
     tmp = stage_ordered_replay(emb, ["vec_id"])
-    q = streaming_ivfpq_ingest(
+    redeliver_first_batch(tmp)  # at-least-once: batch 1's rows arrive again
+    streaming_ivfpq_ingest(
         file_stream(spark, tmp, emb.schema, max_files_per_trigger=1),
         centroids,
         books,
         f"{base}/store",
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
-    # at-least-once redelivery: re-encode and re-append batch 0's rows
-    batch0 = spark.read.schema(emb.schema).parquet(f"{tmp}/001.parquet")
-    b = batch0.select(F.col("vec_id"), quantize_fp("embedding").alias("__q"))
-    b = b.withColumn("cell", assign_cells_int_expr(F.col("__q"), centroids))
-    from flink_ci_flink_spark.pipeline.similarity import _pq_recon_expr
-
-    redelivered = b.withColumn(
-        "__rv",
-        F.zip_with(
-            "__q",
-            F.element_at(cent_all, F.col("cell") + 1),
-            lambda x, y: x - y,
-        ),
-    ).select("vec_id", "cell", _pq_recon_expr(books, "__rv").alias("__rr"))
-    append_epoch(redelivered, f"{base}/store", 99, partition_by="cell")
     queries = t.embeddings.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -3466,15 +3450,13 @@ def streaming_minhash_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFra
     # deterministic 3-file replay (a bounded harness step, not the plan)
     tmp = stage_ordered_replay(docs, ["doc_id"])
     base = tempfile.mkdtemp(prefix="mh_ingest_replay_")
-    q = streaming_minhash_dedup(
+    streaming_minhash_dedup(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
         bands_dir=f"{base}/bands",
         checkpoint=f"{base}/ckpt",
         num_hashes=32,
         bands=8,
     )
-    q.processAllAvailable()
-    q.stop()
     return finalize_minhash_pairs(spark, f"{base}/bands")
 
 
@@ -3503,14 +3485,12 @@ def streaming_line_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t.documents.select("doc_id", "text")
     tmp = stage_ordered_replay(docs, ["doc_id"])
     base = tempfile.mkdtemp(prefix="ld_ingest_replay_")
-    q = streaming_line_dedup_ingest(
+    streaming_line_dedup_ingest(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
         segs_dir=f"{base}/segs",
         checkpoint=f"{base}/ckpt",
         seg_tokens=16,
     )
-    q.processAllAvailable()
-    q.stop()
     return finalize_line_dedup(spark, f"{base}/segs")
 
 
@@ -3958,8 +3938,6 @@ def streaming_model_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     doc_id and the result hash-matches the one-shot batch oracle, which
     re-trains the model from scratch
     (`pipeline/classifier.py::streaming_model_screen_ingest`)."""
-    import glob
-    import shutil
     import tempfile
 
     from flink_ci_flink_spark.pipeline.classifier import (
@@ -3969,6 +3947,7 @@ def streaming_model_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         text_feature_exprs,
     )
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text", "n_chars", "source")
@@ -3977,18 +3956,15 @@ def streaming_model_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     ).otherwise(F.lit(-1))
     w = perceptron_train(docs, text_feature_exprs(), label, iterations=3)
     tmp = stage_ordered_replay(docs, ["doc_id"])
-    first = sorted(glob.glob(f"{tmp}/*.parquet"))[0]
-    shutil.copyfile(first, first.replace(".parquet", "_redelivered.parquet"))
+    redeliver_first_batch(tmp)
     base = tempfile.mkdtemp(prefix="model_screen_")
-    q = streaming_model_screen_ingest(
+    streaming_model_screen_ingest(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
         text_feature_exprs(),
         w,
         f"{base}/store",
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     return finalize_model_screen(spark, f"{base}/store")
 
 
@@ -4342,19 +4318,19 @@ def streaming_gopher_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
     deterministic integer masks make duplicates byte-identical, so the
     finalize dedups exactly on doc_id and hash-matches the one-shot batch
     oracle."""
-    import glob
-    import shutil
     import tempfile
 
     from flink_ci_flink_spark.pipeline.text import gopher_rules
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
+    from flink_ci_flink_spark.streaming.core import (
+        drain_foreach_batch,
+        redeliver_first_batch,
+    )
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
     tmp = stage_ordered_replay(docs, ["doc_id"])
-    first = sorted(glob.glob(f"{tmp}/*.parquet"))[0]
-    shutil.copyfile(first, first.replace(".parquet", "_redelivered.parquet"))
+    redeliver_first_batch(tmp)
     base = tempfile.mkdtemp(prefix="gopher_screen_")
     store = f"{base}/store"
 
@@ -4364,13 +4340,11 @@ def streaming_gopher_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
         )
         append_epoch(masked, store, epoch_id)
 
-    q = foreach_batch_upsert(
+    drain_foreach_batch(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
         merge,
         f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     return read_epochs(spark, store, ["doc_id"]).select(
         "doc_id", "n_words", "fail_mask", "kept"
     )
@@ -4630,12 +4604,13 @@ def streaming_dsir_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately REDELIVERED; deterministic integer scores collapse
     byte-identically at finalize, hash-matching the one-shot batch oracle
     (`pipeline/sampling.py::dsir_scores`)."""
-    import glob
-    import shutil
     import tempfile
 
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
-    from flink_ci_flink_spark.streaming.core import foreach_batch_upsert
+    from flink_ci_flink_spark.streaming.core import (
+        drain_foreach_batch,
+        redeliver_first_batch,
+    )
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "source", "text")
@@ -4698,8 +4673,7 @@ def streaming_dsir_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights = spark.read.parquet(wt_dir)
 
     tmp = stage_ordered_replay(docs, ["doc_id"])
-    first = sorted(glob.glob(f"{tmp}/*.parquet"))[0]
-    shutil.copyfile(first, first.replace(".parquet", "_redelivered.parquet"))
+    redeliver_first_batch(tmp)
     store = f"{base_dir}/store"
 
     def merge(batch_df, epoch_id: int) -> None:
@@ -4716,13 +4690,11 @@ def streaming_dsir_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         append_epoch(scored, store, epoch_id)
 
-    q = foreach_batch_upsert(
+    drain_foreach_batch(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
         merge,
         f"{base_dir}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     return read_epochs(spark, store, ["doc_id"]).select("doc_id", "score")
 
 
@@ -5177,13 +5149,11 @@ def streaming_winnow_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFram
     docs = t.documents.select("doc_id", "text")
     tmp = stage_ordered_replay(docs, ["doc_id"])
     base = tempfile.mkdtemp(prefix="wn_ingest_replay_")
-    q = streaming_winnow_ingest(
+    streaming_winnow_ingest(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
         fps_dir=f"{base}/fps",
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     return finalize_winnow_pairs(spark, f"{base}/fps")
 
 
@@ -5556,8 +5526,6 @@ def streaming_langid_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
     duplicates byte-identical, so the finalize collapses exactly and the
     confusion matrix hash-matches the from-scratch SQL re-train.
     `pipeline/text.py::streaming_langid_screen_ingest`."""
-    import glob
-    import shutil
     import tempfile
 
     from flink_ci_flink_spark.pipeline.text import (
@@ -5566,6 +5534,7 @@ def streaming_langid_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
         streaming_langid_screen_ingest,
     )
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "lang", "text")
@@ -5578,17 +5547,14 @@ def streaming_langid_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
         profile.setdefault(r["lang_profile"], []).append(r["gram"])
     held_out = docs.filter(F.col("doc_id") % 4 == 0)
     tmp = stage_ordered_replay(held_out, ["doc_id"])
-    first = sorted(glob.glob(f"{tmp}/*.parquet"))[0]
-    shutil.copyfile(first, first.replace(".parquet", "_redelivered.parquet"))
+    redeliver_first_batch(tmp)
     base = tempfile.mkdtemp(prefix="langid_screen_")
-    q = streaming_langid_screen_ingest(
+    streaming_langid_screen_ingest(
         file_stream(spark, tmp, held_out.schema, max_files_per_trigger=1),
         profile,
         f"{base}/store",
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     return finalize_langid_screen(spark, f"{base}/store")
 
 
@@ -5607,8 +5573,6 @@ def streaming_delta_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch 1 is redelivered (at-least-once) — decisions are byte-identical,
     so the finalize collapses exactly and the result hash-matches the
     one-shot batch oracle. `pipeline/dedup.py::streaming_delta_dedup_ingest`."""
-    import glob
-    import shutil
     import tempfile
 
     from flink_ci_flink_spark.pipeline.dedup import (
@@ -5617,6 +5581,7 @@ def streaming_delta_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_delta_dedup_ingest,
     )
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text", "source")
@@ -5627,16 +5592,13 @@ def streaming_delta_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize_corpus_index(docs.filter(~is_shard), f"{base}/index")
     shard = docs.filter(is_shard)
     tmp = stage_ordered_replay(shard, ["doc_id"])
-    first = sorted(glob.glob(f"{tmp}/*.parquet"))[0]
-    shutil.copyfile(first, first.replace(".parquet", "_redelivered.parquet"))
-    q = streaming_delta_dedup_ingest(
+    redeliver_first_batch(tmp)
+    streaming_delta_dedup_ingest(
         file_stream(spark, tmp, shard.schema, max_files_per_trigger=1),
         f"{base}/index",
         f"{base}/store",
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     return finalize_delta_dedup(spark, f"{base}/store")
 
 
@@ -5728,7 +5690,7 @@ def pipe_delta_dedup_shared_index(
 
     base = tempfile.mkdtemp(prefix="delta_shared_")
     shard = docs.filter(is_shard)
-    q = streaming_delta_dedup_ingest(
+    streaming_delta_dedup_ingest(
         file_stream(
             spark,
             stage_ordered_replay(shard, ["doc_id"]),
@@ -5739,8 +5701,6 @@ def pipe_delta_dedup_shared_index(
         f"{base}/store",
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     stream = finalize_delta_dedup(spark, f"{base}/store").select(
         F.lit("stream").alias("consumer"), "*"
     )
@@ -5989,8 +5949,6 @@ def streaming_curation_v5_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source summary hash-matches the batch oracle that re-trains both
     models from scratch. Output = v5's accounting restricted to the
     incoming shard's sources (the corpus stock never streams)."""
-    import glob
-    import shutil
     import tempfile
 
     from flink_ci_flink_spark.pipeline.dedup import (
@@ -6005,8 +5963,9 @@ def streaming_curation_v5_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
     from flink_ci_flink_spark.streaming.core import (
-        foreach_batch_upsert,
+        drain_foreach_batch,
         persist_static_side,
+        redeliver_first_batch,
     )
 
     t = load_tables(spark, sf_dir)
@@ -6021,43 +5980,39 @@ def streaming_curation_v5_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in prof_rows:
         profile.setdefault(r.lang_profile, []).append(r.gram)
     pred, _hits = langid_serve_exprs(profile)
-    # static side of the stream-static probe: read once, cached across
-    # triggers, released after the stream stops
-    buckets = persist_static_side(spark.read.parquet(f"{base}/index"))
-
-    def merge(batch_df, epoch_id: int) -> None:
-        decisions = _delta_decide(
-            _banded_signatures(batch_df, "text", "doc_id", 32, 8, 3),
-            buckets,
-            batch_df.select("doc_id"),
-            "doc_id",
-            16,
-        ).select("doc_id", (F.col("verdict") == "drop").alias("is_dup"))
-        scored = (
-            batch_df.withColumn("__grams", char_trigrams("text"))
-            .select(
-                "doc_id",
-                "source",
-                "n_chars",
-                "lang",
-                pred.alias("lang_pred"),
-            )
-            .join(decisions, "doc_id")
-        )
-        append_epoch(scored, f"{base}/store", epoch_id)
-
     shard = docs.filter(is_shard)
     tmp = stage_ordered_replay(shard, ["doc_id"])
-    first = sorted(glob.glob(f"{tmp}/*.parquet"))[0]
-    shutil.copyfile(first, first.replace(".parquet", "_redelivered.parquet"))
-    q = foreach_batch_upsert(
-        file_stream(spark, tmp, shard.schema, max_files_per_trigger=1),
-        merge,
-        f"{base}/ckpt",
-    )
-    q.processAllAvailable()
-    q.stop()
-    buckets.unpersist()
+    redeliver_first_batch(tmp)
+    # static side of the stream-static probe: read once, cached across
+    # triggers, released when the drain ends
+    with persist_static_side(spark.read.parquet(f"{base}/index")) as buckets:
+
+        def merge(batch_df, epoch_id: int) -> None:
+            decisions = _delta_decide(
+                _banded_signatures(batch_df, "text", "doc_id", 32, 8, 3),
+                buckets,
+                batch_df.select("doc_id"),
+                "doc_id",
+                16,
+            ).select("doc_id", (F.col("verdict") == "drop").alias("is_dup"))
+            scored = (
+                batch_df.withColumn("__grams", char_trigrams("text"))
+                .select(
+                    "doc_id",
+                    "source",
+                    "n_chars",
+                    "lang",
+                    pred.alias("lang_pred"),
+                )
+                .join(decisions, "doc_id")
+            )
+            append_epoch(scored, f"{base}/store", epoch_id)
+
+        drain_foreach_batch(
+            file_stream(spark, tmp, shard.schema, max_files_per_trigger=1),
+            merge,
+            f"{base}/ckpt",
+        )
     rows = read_epochs(spark, f"{base}/store", ["doc_id"])
     lang_ok = F.when(
         ~F.col("is_dup"), F.col("lang_pred") == F.col("lang")

@@ -2,7 +2,6 @@
 
 from flink_ci_flink_spark.streaming.core import (  # noqa: F401
     file_stream,
-    foreach_batch_upsert,
     rate_stream,
     run_to_completion,
     socket_stream,

@@ -102,6 +102,15 @@ def stage_ordered_replay(
     return tmp
 
 
+def redeliver_first_batch(stage_dir: str) -> None:
+    """Copy the first batch file of a `stage_ordered_replay` dir to
+    ``<name>_redelivered.parquet`` beside it: the file source then
+    delivers those rows again in a later micro-batch, the at-least-once
+    redelivery an epoch-store replay must collapse."""
+    first = sorted(glob.glob(f"{stage_dir}/*.parquet"))[0]
+    shutil.copyfile(first, first.replace(".parquet", "_redelivered.parquet"))
+
+
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
     """Monotonic (timestamp, value) generator source."""
     return (
@@ -141,37 +150,39 @@ def run_to_completion(df: DataFrame, output_mode: str = "append") -> DataFrame:
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
     try:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
+        _drain(
+            df.writeStream.outputMode(output_mode).format("memory").queryName(name)
         )
-        q.processAllAvailable()
-        q.stop()
         return spark.table(name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
         spark.catalog.dropTempView(name)
 
 
-def foreach_batch_upsert(df: DataFrame, merge_fn, checkpoint: str):
-    """CDC-style sink: per-micro-batch exactly-once-ish merge via
-    foreachBatch (the TwoPhaseCommitSinkFunction analog — Spark's epoch id +
-    idempotent merge gives the same guarantee)."""
-    return (
-        df.writeStream.foreachBatch(merge_fn)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def drain_foreach_batch(stream: DataFrame, merge) -> None:
+def drain_foreach_batch(
+    stream: DataFrame, merge, checkpoint: str | None = None
+) -> None:
     """Run a bounded stream through ``merge(batch_df, batch_id)`` to
-    completion: start, process everything available, stop."""
-    q = stream.writeStream.foreachBatch(merge).start()
-    q.processAllAvailable()
-    q.stop()
+    completion: start, process everything available, stop. With a
+    ``checkpoint`` the query commits its source offsets there, so a second
+    drain on the same checkpoint resumes after the last committed batch.
+    foreachBatch plus Spark's epoch id and an idempotent ``merge`` is the
+    TwoPhaseCommitSinkFunction analog: every foreachBatch sink drains
+    here."""
+    writer = stream.writeStream.foreachBatch(merge)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    _drain(writer)
+
+
+def _drain(writer) -> None:
+    """Start ``writer``'s query, process everything available and stop it,
+    also when a batch raises."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 # foreachBatch is at-least-once: a batch may be delivered again, under the
@@ -258,40 +269,24 @@ class VersionedState:
         df.write.mode("overwrite").parquet(f"{self.dir}/{prefix}{version}")
 
 
-def persist_static_side(df: DataFrame) -> DataFrame:
+@contextmanager
+def persist_static_side(df: DataFrame):
     """Persist the STATIC side of a stream-static join (a model or index
-    artifact every micro-batch probes) spill-safe, so triggers after the
-    first hit the cached copy instead of re-scanning the parquet artifact
-    per trigger — on a cluster that re-scan is the dominant per-trigger
-    cost once the artifact outgrows the batch (a corpus LSH index is GBs;
-    a micro-batch is MBs). MEMORY_AND_DISK: an index bigger than executor
-    memory degrades to local-disk reads, never OOM. Pair with
-    `stop_and_unpersist` (or wrap the query in `UnpersistOnStop`) so the
-    cache is released with the stream that owns it."""
+    artifact every micro-batch probes) spill-safe for the ``with`` block
+    that drains the stream, and unpersist it when the block exits, also
+    when a batch raises. Triggers after the first hit the cached copy
+    instead of re-scanning the parquet artifact per trigger — on a cluster
+    that re-scan is the dominant per-trigger cost once the artifact
+    outgrows the batch (a corpus LSH index is GBs; a micro-batch is MBs).
+    MEMORY_AND_DISK: an index bigger than executor memory degrades to
+    local-disk reads, never OOM."""
     from pyspark import StorageLevel
 
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-class UnpersistOnStop:
-    """StreamingQuery proxy that releases persisted static sides when the
-    stream that probes them stops. Everything else forwards to the real
-    query; ``stop()`` is idempotent (unpersist on an unpersisted frame is
-    a no-op)."""
-
-    def __init__(self, query, *static_sides: DataFrame) -> None:
-        self._query = query
-        self._static_sides = static_sides
-
-    def __getattr__(self, name: str):
-        return getattr(self._query, name)
-
-    def stop(self) -> None:
-        try:
-            self._query.stop()
-        finally:
-            for side in self._static_sides:
-                side.unpersist()
+    side = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield side
+    finally:
+        side.unpersist()
 
 
 def side_output(df: DataFrame, condition):
@@ -310,7 +305,7 @@ def foreach_batch_split_sink(
     main_sink,
     side_sink,
     checkpoint: str,
-):
+) -> None:
     """Streaming side output: one query, two sinks. Structured Streaming
     allows one sink per query, so the reference's multi-collector shape is
     expressed in foreachBatch — each micro-batch is split by `condition`
@@ -327,11 +322,7 @@ def foreach_batch_split_sink(
         finally:
             batch_df.unpersist()
 
-    return (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    drain_foreach_batch(df, handle, checkpoint)
 
 
 def broadcast_connect(
@@ -340,7 +331,7 @@ def broadcast_connect(
     join_fn,
     out_dir: str,
     checkpoint: str,
-):
+) -> None:
     """Broadcast-state connect (`KeyedBroadcastProcessFunction` /
     `BroadcastConnectedStream` — flink-streaming-java broadcast state):
     a data stream evaluated per micro-batch against the CURRENT contents
@@ -353,21 +344,21 @@ def broadcast_connect(
     when `read_epochs` reads it on the natural key). The
     control side is broadcast per batch, so rule updates take effect at
     the next micro-batch — the reference's processBroadcastElement
-    ordering guarantee at batch granularity. Returns the started query.
+    ordering guarantee at batch granularity.
     """
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         rules = rules_for_batch(int(epoch_id))
         append_epoch(join_fn(batch_df, F.broadcast(rules)), out_dir, epoch_id)
 
-    return foreach_batch_upsert(stream, merge, checkpoint)
+    drain_foreach_batch(stream, merge, checkpoint)
 
 
 def manifest_sink(
     stream: DataFrame,
     out_dir: str,
     checkpoint: str,
-):
+) -> None:
     """Exactly-once file sink via manifest commit (the reference's
     `StreamingFileSink` bulk-format/OnCheckpointRollingPolicy contract:
     in-progress files are invisible until the checkpoint commits them):
@@ -378,7 +369,7 @@ def manifest_sink(
     manifest entry, so at-least-once foreachBatch redelivery is
     idempotent; orphaned data files from a crashed attempt are never
     listed and stay invisible. Read the committed view back with
-    `read_manifest`. Returns the started query."""
+    `read_manifest`."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         path = f"{out_dir}/data/batch={int(batch_id)}"
@@ -390,7 +381,7 @@ def manifest_sink(
             json.dump({"batch": int(batch_id), "files": files}, fh)
         os.replace(tmp, f"{out_dir}/manifest/{int(batch_id)}.json")
 
-    return foreach_batch_upsert(stream, merge, checkpoint)
+    drain_foreach_batch(stream, merge, checkpoint)
 
 
 def read_manifest(spark, out_dir: str) -> DataFrame:

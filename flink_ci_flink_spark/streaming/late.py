@@ -33,6 +33,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_ci_flink_spark.streaming.core import drain_foreach_batch
+
 
 class LateDataSplitter:
     """foreachBatch handler routing late rows to a side sink.
@@ -111,14 +113,10 @@ def side_output_late_data(
     checkpoint: str,
     window_seconds: float | None = None,
     allowed_lateness: float = 0.0,
-):
-    """Start the splitter query (`sideOutputLateData` +
-    `allowedLateness` analog). Returns the StreamingQuery."""
+) -> None:
+    """Drain ``stream`` through the splitter (`sideOutputLateData` +
+    `allowedLateness` analog)."""
     handler = LateDataSplitter(
         ts_col, delay_seconds, main_sink, late_sink, window_seconds, allowed_lateness
     )
-    return (
-        stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    drain_foreach_batch(stream, handler, checkpoint)

@@ -295,3 +295,17 @@ def test_streaming_queries_name_themselves():
             assert not sinks.search(text), f"{rel} starts its own memory sink"
     for path in sorted((pkg / "queries").rglob("*.py")):
         assert "uuid" not in path.read_text(), f"{path.relative_to(REPO)} draws a uuid"
+
+
+def test_foreach_batch_queries_drain_in_core():
+    # Every bounded query starts, drains and stops in streaming/core.py.
+    # The one other writer is sources/__init__.py::write_kafka, unbounded
+    # by design. (The escaped pattern does not match its own source.)
+    pkg = REPO / "flink_ci_flink_spark"
+    drains = re.compile(r".*(?:processAllAvailable\(|\.writeStream[.\s]).*")
+    paths = [*pkg.rglob("*.py"), REPO / "bench.py", *(REPO / "tests").rglob("*.py")]
+    for path in sorted(set(paths) - {pkg / "streaming" / "core.py"}):
+        hits = drains.findall(path.read_text())
+        if path == pkg / "sources" / "__init__.py":  # write_kafka
+            hits = [h for h in hits if not h.endswith('.format("kafka")')]
+        assert not hits, f"{path.relative_to(REPO)} drains its own query: {hits}"

@@ -75,26 +75,22 @@ def test_empty_stream_finalizes_to_zero_rows(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="empty_stream_")
     docs = t.documents.limit(0)
     stage = stage_ordered_replay(docs, ["doc_id"])
-    q = streaming_line_dedup_ingest(
+    streaming_line_dedup_ingest(
         file_stream(spark, stage, docs.schema, max_files_per_trigger=1),
         f"{base}/segs",
         checkpoint=f"{base}/ckpt_segs",
     )
-    q.processAllAvailable()
-    q.stop()
     assert finalize_line_dedup(spark, f"{base}/segs").count() == 0
 
     centroids = ivf_centroids(t.embeddings, n_cells=4, iterations=1)
     emb = t.embeddings.limit(0)
     stage_emb = stage_ordered_replay(emb, ["vec_id"])
-    q = streaming_ivf_ingest(
+    streaming_ivf_ingest(
         file_stream(spark, stage_emb, emb.schema, max_files_per_trigger=1),
         centroids,
         f"{base}/ivf",
         checkpoint=f"{base}/ckpt_ivf",
     )
-    q.processAllAvailable()
-    q.stop()
     assert finalize_knn_join(spark, f"{base}/ivf", centroids).count() == 0
     for d in (base, stage, stage_emb):
         shutil.rmtree(d, ignore_errors=True)
@@ -103,7 +99,8 @@ def test_empty_stream_finalizes_to_zero_rows(spark, sf_dir):
 def test_span_registry_read_failure_raises(spark, sf_dir):
     """A registry that exists but cannot be read fails the batch instead
     of being silently reset to the batch's delta; only a registry that
-    does not exist yet reads as empty."""
+    does not exist yet reads as empty. The drain stops its query on the
+    way out."""
     from pyspark.errors import StreamingQueryException
 
     from flink_ci_flink_spark.catalog import load_tables
@@ -117,15 +114,14 @@ def test_span_registry_read_failure_raises(spark, sf_dir):
     os.makedirs(registry)
     with open(f"{registry}/part-00000.parquet", "w") as fh:
         fh.write("not a parquet file")
-    q = streaming_span_dedup(
-        file_stream(spark, stage, docs.schema),
-        f"{base}/windows",
-        registry,
-        checkpoint=f"{base}/ckpt",
-    )
     with pytest.raises(StreamingQueryException):
-        q.processAllAvailable()
-    q.stop()
+        streaming_span_dedup(
+            file_stream(spark, stage, docs.schema),
+            f"{base}/windows",
+            registry,
+            checkpoint=f"{base}/ckpt",
+        )
+    assert spark.streams.active == []  # the failed drain stopped its query
     for d in (base, stage):
         shutil.rmtree(d, ignore_errors=True)
 

@@ -370,7 +370,7 @@ def test_streaming_hll_registers_match_batch(spark, events_stream_dir):
 
 def test_streaming_cdc_upsert_matches_batch_materialize(spark, sf_dir):
     """Debezium changelog consumed as a stream through foreachBatch upserts
-    (sources/cdc.py + foreach_batch_upsert) converges to the same snapshot
+    (sources/cdc.py + drain_foreach_batch) converges to the same snapshot
     as batch materialization — the reference's CDC-consumption semantics
     (`DebeziumJsonDeserializationSchema` feeding a changelog sink)."""
     import glob
@@ -383,7 +383,8 @@ def test_streaming_cdc_upsert_matches_batch_materialize(spark, sf_dir):
         parse_debezium,
         to_changelog,
     )
-    from flink_ci_flink_spark.streaming import file_stream, foreach_batch_upsert
+    from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming.core import drain_foreach_batch
 
     rows = [
         ('{"before": null, "after": {"id": %d, "v": "v%d"}, "op": "c", "ts_ms": 1}' % (i, i), 0)
@@ -423,9 +424,7 @@ def test_streaming_cdc_upsert_matches_batch_materialize(spark, sf_dir):
         stream = file_stream(
             spark, tmp, "value string", max_files_per_trigger=1, fmt="text"
         )
-        q = foreach_batch_upsert(stream, merge, ckpt)
-        q.processAllAvailable()
-        q.stop()
+        drain_foreach_batch(stream, merge, ckpt)
 
         batch_msgs = spark.createDataFrame([(v,) for v, _ in rows], "value string")
         want = sorted(

@@ -133,11 +133,9 @@ def test_streaming_span_dedup_matches_batch(spark, docs_stream_dir):
     windows_dir = f"{base}/windows"
     registry_dir = f"{base}/registry"
     stream = file_stream(spark, path, schema, max_files_per_trigger=1)
-    q = streaming_span_dedup(
+    streaming_span_dedup(
         stream, windows_dir, registry_dir, checkpoint=f"{base}/ckpt"
     )
-    q.processAllAvailable()
-    q.stop()
 
     got = {
         tuple(r)
@@ -168,11 +166,9 @@ def test_streaming_minhash_dedup_matches_batch(spark, docs_stream_dir):
     path, schema = docs_stream_dir
     base = tempfile.mkdtemp(prefix="mh_stream_")
     stream = file_stream(spark, path, schema, max_files_per_trigger=1)
-    q = streaming_minhash_dedup(
+    streaming_minhash_dedup(
         stream, f"{base}/bands", checkpoint=f"{base}/ckpt"
     )
-    q.processAllAvailable()
-    q.stop()
     got = {
         (r.id_a, r.id_b, r.n_bands_shared)
         for r in finalize_minhash_pairs(spark, f"{base}/bands").collect()
@@ -278,11 +274,9 @@ def test_streaming_lm_screen_matches_batch(spark, docs_stream_dir):
     path, schema = docs_stream_dir
     base = tempfile.mkdtemp(prefix="lm_stream_")
     stream = file_stream(spark, path, schema, max_files_per_trigger=1)
-    q = streaming_lm_screen_ingest(
+    streaming_lm_screen_ingest(
         stream, f"{base}/store", checkpoint=f"{base}/ckpt"
     )
-    q.processAllAvailable()
-    q.stop()
     got = {
         (r.doc_id, r.n_bigrams, r.n_rare, r.keep)
         for r in finalize_lm_screen(
@@ -357,6 +351,7 @@ def test_streaming_ivf_ingest_matches_batch_knn(spark, sf_dir):
         streaming_ivf_ingest,
     )
     from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     emb = load_tables(spark, sf_dir).embeddings
     centroids = ivf_centroids(emb, n_cells=8, iterations=2)
@@ -368,20 +363,11 @@ def test_streaming_ivf_ingest_matches_batch_knn(spark, sf_dir):
     os.makedirs(f"{base}/stream")
     stage_chunks(spark, f"{base}/stream", chunks, emb.schema)
 
+    redeliver_first_batch(f"{base}/stream")  # at-least-once: chunk 0 again
     stream = file_stream(spark, f"{base}/stream", emb.schema, max_files_per_trigger=1)
-    q = streaming_ivf_ingest(
+    streaming_ivf_ingest(
         stream, centroids, f"{base}/store", checkpoint=f"{base}/ckpt"
     )
-    q.processAllAvailable()
-    q.stop()
-    # simulate an at-least-once replay: re-append chunk 0's assignment
-    chunk0 = spark.read.schema(emb.schema).parquet(f"{base}/stream/000.parquet")
-    from flink_ci_flink_spark.pipeline.similarity import _assign_cells, _to_double
-    chunk0.select(
-        F.col("vec_id"), _to_double("embedding").alias("__v")
-    ).withColumn("cell", _assign_cells(F.col("__v"), centroids)).withColumn(
-        "__epoch", F.lit(99)
-    ).write.mode("append").partitionBy("cell").parquet(f"{base}/store")
 
     got = {
         (r.query_id, r.neighbor_id, r.cos_sim, r.rank)
@@ -415,11 +401,9 @@ def test_streaming_line_dedup_matches_batch(spark, docs_stream_dir):
     path, schema = docs_stream_dir
     base = tempfile.mkdtemp(prefix="line_stream_")
     stream = file_stream(spark, path, schema, max_files_per_trigger=1)
-    q = streaming_line_dedup_ingest(
+    streaming_line_dedup_ingest(
         stream, f"{base}/segs", checkpoint=f"{base}/ckpt"
     )
-    q.processAllAvailable()
-    q.stop()
     batch_docs = spark.read.parquet(*glob.glob(f"{path}/*.parquet"))
 
     # simulate an at-least-once replay: re-append one chunk's segments

@@ -495,15 +495,13 @@ def test_side_output_split_sinks(spark):
         stream = file_stream(
             spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
         )
-        q = foreach_batch_split_sink(
+        foreach_batch_split_sink(
             stream,
             F2.col("v") >= 7,
             lambda b, _id: got_main.extend(r.v for r in b.collect()),
             lambda b, _id: got_side.extend(r.v for r in b.collect()),
             ckpt,
         )
-        q.processAllAvailable()
-        q.stop()
         assert sorted(got_main) == [1, 3] and sorted(got_side) == [8, 9]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1286,13 +1284,11 @@ def test_manifest_sink_idempotent_replay_and_orphan_invisible(spark, tmp_path):
     )
     tmp = stage_ordered_replay(df, ["id"])
     base = str(tmp_path / "sink")
-    q = manifest_sink(
+    manifest_sink(
         file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
         out_dir=base,
         checkpoint=f"{base}/ckpt",
     )
-    q.processAllAvailable()
-    q.stop()
     before = sorted(map(tuple, read_manifest(spark, base).collect()))
     assert len(before) == 90
 
@@ -1498,20 +1494,22 @@ def test_tws_event_time_timers_sessionize(spark, events_stream_dir):  # noqa: F8
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-def test_persist_static_side_released_on_stop(spark):
+def test_persist_static_side_released_on_exit(spark, monkeypatch):
     """The static side of a stream-static probe is read once, cached
-    across micro-batches, and released by the UnpersistOnStop proxy's
-    stop() — the contract `streaming_delta_dedup_ingest` and the
-    curation-v5 replay rely on (a per-trigger re-read of a GB-scale
-    index artifact is the cost the persist removes). Also pins the
-    proxy's forwarding (non-stop attributes reach the real query) and
-    stop() idempotence."""
+    across micro-batches, and released when its ``with`` block exits,
+    also when a ``merge`` raises or the drain is interrupted — the
+    contract `streaming_delta_dedup_ingest` and the curation-v5 replay
+    rely on (a per-trigger re-read of a GB-scale index artifact is the
+    cost the persist removes). No query outlives its drain."""
     import tempfile
+
+    from pyspark import StorageLevel
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.query import StreamingQuery
 
     from flink_ci_flink_spark.streaming import file_stream
     from flink_ci_flink_spark.streaming.core import (
-        UnpersistOnStop,
-        foreach_batch_upsert,
+        drain_foreach_batch,
         persist_static_side,
     )
 
@@ -1521,28 +1519,40 @@ def test_persist_static_side_released_on_stop(spark):
     ).write.parquet(f"{base}/index")
     chunks = [[(b * 5 + i,) for i in range(5)] for b in range(2)]
     stage_chunks(spark, base, chunks, "k bigint")
+    stream = file_stream(spark, base, "k bigint", max_files_per_trigger=1)
+    seen: list[tuple[int, bool]] = []
 
-    static = persist_static_side(spark.read.parquet(f"{base}/index"))
-    seen: list[int] = []
+    with persist_static_side(spark.read.parquet(f"{base}/index")) as static:
 
-    def merge(batch_df, epoch_id):
-        seen.append(batch_df.join(static, "k").count())
+        def merge(batch_df, epoch_id):
+            probe = batch_df.join(static, "k")
+            plan = probe._jdf.queryExecution().optimizedPlan().toString()
+            seen.append((probe.count(), "InMemoryRelation" in plan))
 
-    q = UnpersistOnStop(
-        foreach_batch_upsert(
-            file_stream(
-                spark, base, "k bigint", max_files_per_trigger=1
-            ),
-            merge,
-            f"{base}/ckpt",
-        ),
-        static,
-    )
-    # non-stop attributes forward to the wrapped StreamingQuery
-    q.processAllAvailable()
-    assert q.id is not None
-    assert sorted(seen) == [5, 5]  # both micro-batches probed the side
-    assert static.is_cached  # cached while the stream runs
-    q.stop()
-    assert not static.is_cached  # released with the stream
-    q.stop()  # idempotent: second stop + unpersist is a no-op
+        drain_foreach_batch(stream, merge, f"{base}/ckpt")
+        assert static.storageLevel == StorageLevel.MEMORY_AND_DISK
+    assert seen == [(5, True), (5, True)]  # both batches probed the cache
+    assert static.storageLevel == StorageLevel.NONE  # released on exit
+
+    def failing(batch_df, epoch_id):
+        raise RuntimeError("merge failed")
+
+    with pytest.raises(StreamingQueryException), persist_static_side(
+        spark.read.parquet(f"{base}/index")
+    ) as static:
+        drain_foreach_batch(stream, failing, f"{base}/ckpt_failing")
+    assert static.storageLevel == StorageLevel.NONE
+    assert spark.streams.active == []
+
+    # A driver-side interrupt (Ctrl-C) leaves the query running unless the
+    # drain stops it: Spark deregisters only a query whose batch failed.
+    def interrupt(query):
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", interrupt)
+    with pytest.raises(KeyboardInterrupt), persist_static_side(
+        spark.read.parquet(f"{base}/index")
+    ) as static:
+        drain_foreach_batch(stream, merge, f"{base}/ckpt_interrupted")
+    assert static.storageLevel == StorageLevel.NONE
+    assert spark.streams.active == []

@@ -391,7 +391,7 @@ def test_late_data_side_output(spark):
             spark, tmp, spark.createDataFrame([], schema).schema,
             max_files_per_trigger=1,
         )
-        q = side_output_late_data(
+        side_output_late_data(
             st, "ts", 5.0,
             lambda df, bid: got_main.extend(
                 (r.user_id, r.ts, r.value) for r in df.collect()),
@@ -400,8 +400,6 @@ def test_late_data_side_output(spark):
             checkpoint=ck,
             window_seconds=10.0,
         )
-        q.processAllAvailable()
-        q.stop()
         assert sorted(got_late) == [(1, 2.0, 100.0)]
         assert sorted(got_main) == sorted(
             (u, t, v) for u, t, v in b1 + b2 if not (u, t, v) == (1, 2.0, 100.0)
@@ -416,7 +414,7 @@ def test_late_data_side_output(spark):
             spark, tmp, spark.createDataFrame([], schema).schema,
             max_files_per_trigger=1,
         )
-        q2 = side_output_late_data(
+        side_output_late_data(
             st2, "ts", 5.0,
             lambda df, bid: got_main2.extend(
                 (r.user_id, r.ts, r.value) for r in df.collect()),
@@ -426,8 +424,6 @@ def test_late_data_side_output(spark):
             window_seconds=10.0,
             allowed_lateness=10.0,
         )
-        q2.processAllAvailable()
-        q2.stop()
         assert got_late2 == []
         assert len(got_main2) == len(b1 + b2)
     finally:
@@ -453,14 +449,12 @@ def test_late_row_level_split(spark):
             spark, tmp, spark.createDataFrame([], schema).schema,
             max_files_per_trigger=1,
         )
-        q = side_output_late_data(
+        side_output_late_data(
             st, "ts", 5.0,
             lambda df, bid: got_main.extend(r.ts for r in df.collect()),
             lambda df, bid: got_late.extend(r.ts for r in df.collect()),
             checkpoint=tempfile.mkdtemp(prefix="late_ck3_"),
         )
-        q.processAllAvailable()
-        q.stop()
         assert sorted(got_late) == [20.0]
         assert sorted(got_main) == [10.0, 26.0, 30.0]
     finally:
