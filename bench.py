@@ -17,7 +17,6 @@ import os
 import shutil
 import statistics
 import sys
-import tempfile
 import time
 from pathlib import Path
 
@@ -243,7 +242,11 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
     applyInPandasWithState — reports bare ``sec`` and ``rows_per_sec``."""
     from pyspark.sql import functions as F
 
-    from flink_ci_flink_spark.streaming import file_stream, run_to_completion
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        run_to_completion,
+        scratch_dir,
+    )
     from flink_ci_flink_spark.streaming import process as P
     from flink_ci_flink_spark.streaming.windows_ext import count_tumbling_window
 
@@ -251,9 +254,7 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
     schema = spark.read.parquet(ev_path).schema
     n_rows = spark.read.parquet(ev_path).count()
     # the monitored-dir source wants a directory; stage the single file
-    tmp = tempfile.mkdtemp(prefix="bench_stateful_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
+    src = scratch_dir("bench_stateful_")
     shutil.copy(ev_path, src)
 
     def stream(*cols):
@@ -265,9 +266,8 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
             run_to_completion(build(), mode)
         return run
 
-    def jvm_fold(op, cols=(), **kw):  # keeps its state in a fresh parquet dir
-        return lambda: op(stream(*cols), state_dir=tempfile.mkdtemp(dir=tmp),
-                          **kw).count()
+    def jvm_fold(op, cols=(), **kw):  # keeps its state in a fresh scratch dir
+        return lambda: op(stream(*cols), **kw).count()
 
     uts = ("user_id", "ts", "value")
     uts_kw = {"key": "user_id", "ts_col": "ts", "value_col": "value"}
@@ -308,39 +308,36 @@ def _bench_stateful(spark, sf_dir: str) -> dict:
             group_cols=["event_type"], lo=0.0, width=2.0, n_bins=256)),
     ]
     tws_keys = None
+    # the first operator's plan is built before the clock starts, so
+    # its sec times only the run to completion and stays comparable
+    # with the earlier records of `sec` and `rows_per_sec`
+    top_n = P.streaming_top_n(stream(), "user_id", "value", 5, ["event_type"])
+    ops.insert(0, ("", python_state(lambda: top_n, "update")))
+    wall = measure(ops, tag="stateful")["wall"]
+    # round-9: transformWithStateInPandas (native split ValueState via
+    # the vendored protobuf shim + RocksDB provider) vs the same
+    # running-agg on applyInPandasWithState-class Python state — the
+    # third point between "Python per-key tax" and "JVM fold". Its
+    # per-key-invocation tax is broken down in bench_adjudications.json
+    # 'tws_tax_r10'.
     try:
-        # the first operator's plan is built before the clock starts, so
-        # its sec times only the run to completion and stays comparable
-        # with the earlier records of `sec` and `rows_per_sec`
-        top_n = P.streaming_top_n(stream(), "user_id", "value", 5, ["event_type"])
-        ops.insert(0, ("", python_state(lambda: top_n, "update")))
-        wall = measure(ops, tag="stateful")["wall"]
-        # round-9: transformWithStateInPandas (native split ValueState via
-        # the vendored protobuf shim + RocksDB provider) vs the same
-        # running-agg on applyInPandasWithState-class Python state — the
-        # third point between "Python per-key tax" and "JVM fold". Its
-        # per-key-invocation tax is broken down in bench_adjudications.json
-        # 'tws_tax_r10'.
-        try:
-            from flink_ci_flink_spark.streaming import tws
+        from flink_ci_flink_spark.streaming import tws
 
-            prev = tws.use_rocksdb_state(spark)
-            try:
-                tws_agg = python_state(lambda: tws.streaming_running_agg_tws(
-                    stream("user_id", "value"), "user_id", "value"), "update")
-                tws_run = measure([("tws_running_agg", tws_agg)], tag="stateful")
-                wall.update(tws_run["wall"])
-            finally:
-                provider = "spark.sql.streaming.stateStore.providerClass"
-                if prev is not None:
-                    spark.conf.set(provider, prev)
-                else:
-                    spark.conf.unset(provider)
-            tws_keys = spark.read.parquet(src).select("user_id").distinct().count()
-        except Exception as ex:  # pragma: no cover - env-dependent
-            print(f"# tws bench skipped: {ex}", file=sys.stderr)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        prev = tws.use_rocksdb_state(spark)
+        try:
+            tws_agg = python_state(lambda: tws.streaming_running_agg_tws(
+                stream("user_id", "value"), "user_id", "value"), "update")
+            tws_run = measure([("tws_running_agg", tws_agg)], tag="stateful")
+            wall.update(tws_run["wall"])
+        finally:
+            provider = "spark.sql.streaming.stateStore.providerClass"
+            if prev is not None:
+                spark.conf.set(provider, prev)
+            else:
+                spark.conf.unset(provider)
+        tws_keys = spark.read.parquet(src).select("user_id").distinct().count()
+    except Exception as ex:  # pragma: no cover - env-dependent
+        print(f"# tws bench skipped: {ex}", file=sys.stderr)
     out = {"operator": "streaming_top_n(applyInPandasWithState)", "input_rows": n_rows}
     for name, sec in wall.items():
         p = f"{name}_" if name else ""

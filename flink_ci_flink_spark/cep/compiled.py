@@ -555,7 +555,7 @@ def stream_all_rows_jvm(
     measures: dict[str, tuple],
     payload_cols: list[str],
     output_schema: str,
-    state_dir: str,
+    state_dir: str | None = None,
     delay_seconds: float = 0.0,
 ) -> DataFrame | None:
     """Streaming ALL ROWS PER MATCH for compiled patterns — zero per-key
@@ -651,7 +651,7 @@ def stream_all_rows_jvm(
                 + F.dense_rank().over(rank_w)
             ).cast("long"),
         ).select(*[f.name for f in schema.fields])
-        append_epoch(out, f"{state_dir}/out", batch_id)
+        append_epoch(out, f"{versions.dir}/out", batch_id)
         # advance meta: new frontier + emitted-match count per key
         emitted_counts = (
             newly.groupBy(*keys)
@@ -692,7 +692,7 @@ def stream_all_rows_jvm(
     drain_foreach_batch(stream, merge)
     # full-row distinct absorbs at-least-once re-appends of a replayed batch
     return (
-        read_epochs(spark, f"{state_dir}/out", schema=schema)
+        read_epochs(spark, f"{versions.dir}/out", schema=schema)
         .dropDuplicates()
         .to(schema)
     )

@@ -666,8 +666,6 @@ def cep_stream_replay(
     `prepare`, and the full batch feature surface for free. Requires
     ``pattern.within(...)`` (bounds the buffer). Runs the bounded stream to
     completion and returns the emitted rows as a batch DataFrame."""
-    import tempfile
-
     pattern.validate()
     order_cols = [ts_col] if isinstance(ts_col, str) else list(ts_col)
     ts_col, _ts_desc = order_spec(order_cols[0])
@@ -695,8 +693,6 @@ def cep_stream_replay(
     if select is None:
         assert measures is not None, "cep_stream_replay needs select= or measures="
         select = measure_select(measures, keys)
-    if state_dir is None:
-        state_dir = tempfile.mkdtemp(prefix="cep_replay_state_")
     within = float(pattern.within_seconds)
     from flink_ci_flink_spark.functions.scalar import epoch_seconds
     from flink_ci_flink_spark.streaming.core import (
@@ -771,7 +767,7 @@ def cep_stream_replay(
         new = res
         if prev_idents is not None:
             new = res.join(prev_idents.select("__ident"), "__ident", "left_anti")
-        append_epoch(new, f"{state_dir}/out", batch_id)
+        append_epoch(new, f"{versions.dir}/out", batch_id)
         # per-key frontier from the buffer; prune idents + buffer to the
         # within-window (+ lag context rows)
         tsec = epoch_seconds(buf, ts_col)
@@ -823,5 +819,5 @@ def cep_stream_replay(
     drain_foreach_batch(stream, merge)
     out_cols = [p.strip().split()[0] for p in output_schema.split(",")]
     return read_epochs(
-        spark, f"{state_dir}/out", ["__ident"], ext_schema
+        spark, f"{versions.dir}/out", ["__ident"], ext_schema
     ).select(*out_cols)

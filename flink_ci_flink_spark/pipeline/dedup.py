@@ -31,6 +31,7 @@ from flink_ci_flink_spark.streaming.core import (
     drain_foreach_batch,
     persist_static_side,
     read_epochs,
+    scratch_dir,
 )
 
 # Deterministic LCG-style coefficient tables for MinHash permutations.
@@ -1288,32 +1289,6 @@ def finalize_winnow_pairs(
     )
 
 
-# Ephemeral corpus-index dirs created by delta_dedup(index_dir=None):
-# tracked module-wide and removed at interpreter exit so repeated
-# invocations (bench rounds, plan tests, driver runs) can't leak /tmp
-# (round-10 VERDICT "What's wrong #3").
-_EPHEMERAL_INDEX_DIRS: list[str] = []
-
-
-def _cleanup_ephemeral_indexes() -> None:  # pragma: no cover - atexit
-    import shutil
-
-    while _EPHEMERAL_INDEX_DIRS:
-        d = _EPHEMERAL_INDEX_DIRS.pop()
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def _new_ephemeral_index_dir() -> str:
-    import atexit
-    import tempfile
-
-    if not _EPHEMERAL_INDEX_DIRS:
-        atexit.register(_cleanup_ephemeral_indexes)
-    d = tempfile.mkdtemp(prefix="delta_dedup_index_")
-    _EPHEMERAL_INDEX_DIRS.append(d)
-    return d
-
-
 def materialize_corpus_index(
     corpus_df: DataFrame,
     index_dir: str | None = None,
@@ -1329,17 +1304,16 @@ def materialize_corpus_index(
     ``delta_dedup`` and ``streaming_delta_dedup_ingest`` (one index, both
     consumers).
 
-    Location contract: ``index_dir=None`` creates a driver-local tempdir
-    — correct ONLY in local mode (single machine; executors share the
-    driver's filesystem) and cleaned up at interpreter exit. On a real
+    Location contract: ``index_dir=None`` writes under a driver-local
+    `scratch_dir` — correct ONLY in local mode (single machine; executors
+    share the driver's filesystem) and removed at interpreter exit. On a real
     cluster the index must live on the shared filesystem every executor
     can read (hdfs://, s3a://, or ``spark.sql.warehouse.dir``): pass that
     path explicitly. An explicit dir is CALLER-OWNED — written with
     mode=overwrite (idempotent rebuilds) and never deleted here.
     """
-    ephemeral = index_dir is None
-    if ephemeral:
-        index_dir = _new_ephemeral_index_dir() + "/index"
+    if index_dir is None:
+        index_dir = scratch_dir("delta_dedup_index_") + "/index"
     corpus_band_buckets(
         corpus_df, text_col, id_col, num_hashes, bands, shingle_n,
         max_bucket_corpus,
@@ -1390,7 +1364,7 @@ def delta_dedup(
     tokenize/hash pass executes AT QUERY-CONSTRUCTION TIME (the write is
     an action), not when the returned DataFrame is consumed.
     ``index_dir`` picks the index location — None uses a LOCAL-MODE-ONLY
-    ephemeral tempdir cleaned up at interpreter exit; on a cluster pass a
+    `scratch_dir`, removed at interpreter exit; on a cluster pass a
     shared-filesystem path (see ``materialize_corpus_index`` for the
     contract; the same path can then feed
     ``streaming_delta_dedup_ingest`` so batch and streaming probe ONE

@@ -374,7 +374,7 @@ def _ptf_keyed_fold(
     `order_by` stages the deterministic replay (result is
     batching-insensitive anyway by the merge-associativity contract —
     see `streaming/declarative.py`)."""
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.declarative import (
         FoldSpec,
         declarative_keyed_fold,
@@ -390,10 +390,9 @@ def _ptf_keyed_fold(
         merge=merge,
         emit=emit,
     )
-    tmp = stage_ordered_replay(
+    st = replay_stream(
         table, [c.strip() for c in order_by.split(",")], n_batches=n_batches
     )
-    st = file_stream(spark, tmp, table.schema, max_files_per_trigger=1)
     return declarative_keyed_fold(st, spec)
 
 

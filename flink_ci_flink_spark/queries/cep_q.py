@@ -636,7 +636,7 @@ def cep_mr_prev_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     cep_stream_replay`, `cep/match_recognize.py` streaming-nav dispatch)."""
     from flink_ci_flink_spark.cep import match_recognize_sql
     from flink_ci_flink_spark.functions.scalar import epoch_seconds
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select(
@@ -645,8 +645,7 @@ def cep_mr_prev_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         epoch_seconds(t.events, "ts").cast("long").alias("ts_s"),
     )
-    tmp = stage_ordered_replay(ev, ["ts", "user_id"])
-    st = file_stream(spark, tmp, ev.schema, max_files_per_trigger=1)
+    st = replay_stream(ev, ["ts", "user_id"])
     out = match_recognize_sql(
         st,
         """

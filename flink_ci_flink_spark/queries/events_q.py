@@ -421,24 +421,19 @@ def streaming_count_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     `CountTumblingWindowAssigner` / purging count-trigger semantics,
     state bounded at one partial window per key). Only complete windows
     emit, numbered 0.. per key."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_count_window_jvm
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "ts", "value", "event_id")
-    # deterministic 3-file replay, event-time order within and across
-    # files (a bounded harness step, not the operator's plan)
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
-    state_dir = tempfile.mkdtemp(prefix="cw_replay_state_")
     out = streaming_count_window_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        # deterministic 3-file replay, event-time order within and across
+        # files (a bounded harness step, not the operator's plan)
+        replay_stream(ev, ["ts", "event_id"]),
         key="user_id",
         ts_col="ts",
         value_col="value",
         size=10,
-        state_dir=state_dir,
     )
     return out.select(
         "user_id", "win", "n", F.round("total", 6).alias("total")
@@ -467,22 +462,17 @@ def streaming_bounded_over_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     (`streaming/process.py::streaming_bounded_over_jvm`;
     `RowTimeRangeBoundedPrecedingFunction.java:60` state contract). One
     output row per input row."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_bounded_over_jvm
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "ts", "value")
-    tmp = stage_ordered_replay(ev, ["ts", "user_id"])
-    state_dir = tempfile.mkdtemp(prefix="bover_replay_state_")
     out = streaming_bounded_over_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "user_id"]),
         key="user_id",
         ts_col="ts",
         value_col="value",
         rows_preceding=4,
-        state_dir=state_dir,
     )
     return out.select(
         "user_id",
@@ -527,25 +517,20 @@ def streaming_count_sliding_replay(spark: SparkSession, sf_dir: str) -> DataFram
     one-shot enumeration of every complete [w*4, w*4+10) ordinal window
     (`streaming/process.py::streaming_count_sliding_window_jvm`;
     `CountSlidingWindowAssigner` semantics)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import (
         streaming_count_sliding_window_jvm,
     )
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "ts", "value", "event_id")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
-    state_dir = tempfile.mkdtemp(prefix="cs_replay_state_")
     out = streaming_count_sliding_window_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         key="user_id",
         ts_col="ts",
         value_col="value",
         size=10,
         slide=4,
-        state_dir=state_dir,
     )
     return out.select(
         "user_id", "win", "n", F.round("total", 6).alias("total")
@@ -572,22 +557,17 @@ def streaming_topn_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`streaming/process.py::streaming_top_n_jvm`;
     `AppendOnlyTopNFunction.java:46` keep-top-n state contract, state
     bounded at n rows per key)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_top_n_jvm
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "event_id", "ts", "value")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
-    state_dir = tempfile.mkdtemp(prefix="topn_replay_state_")
     out = streaming_top_n_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         partition_by=["user_id"],
         order_by=[F.desc("value"), F.asc("event_id")],
         n=3,
         select_cols=["user_id", "event_id", "value"],
-        state_dir=state_dir,
     )
     return out.select("user_id", "event_id", F.round("value", 2).alias("value"))
 
@@ -615,21 +595,16 @@ def streaming_dedup_keeplast_replay(spark: SparkSession, sf_dir: str) -> DataFra
     strictly-greater replacement, so on a ts tie the earlier arrival
     wins; the replay is staged in (ts, event_id) order, making that the
     ascending-event_id row of the oracle's tiebreak)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_dedup_keep_last_jvm
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "event_id", "event_type", "ts")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
-    state_dir = tempfile.mkdtemp(prefix="dedup_replay_state_")
     out = streaming_dedup_keep_last_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         keys=["user_id"],
         ts_col="ts",
         select_cols=["user_id", "event_id", "event_type", "ts"],
-        state_dir=state_dir,
     )
     return out.select(
         "user_id",
@@ -660,17 +635,13 @@ def streaming_running_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the one-shot batch GROUP BY
     (`streaming/process.py::streaming_running_agg_jvm`;
     `GroupAggFunction.java` accumulate-merge contract)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_running_agg_jvm
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "event_type", "ts", "value")
-    tmp = stage_ordered_replay(ev, ["ts", "user_id"])
-    state_dir = tempfile.mkdtemp(prefix="runagg_replay_state_")
     out = streaming_running_agg_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "user_id"]),
         keys=["user_id", "event_type"],
         agg_specs={
             "n": ("count", "value"),
@@ -678,7 +649,6 @@ def streaming_running_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vmin": ("min", "value"),
             "vmax": ("max", "value"),
         },
-        state_dir=state_dir,
     )
     return out.select(
         "user_id",
@@ -727,23 +697,18 @@ def streaming_sessionize_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`streaming/process.py::streaming_sessionize_jvm`;
     `SessionWindowAssigner` / `WindowOperator.java` merging-window
     state + cleanup-timer contract)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_sessionize_jvm
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "ts", "value")
-    tmp = stage_ordered_replay(ev, ["ts", "user_id"])
-    state_dir = tempfile.mkdtemp(prefix="sess_replay_state_")
     out = streaming_sessionize_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "user_id"]),
         keys=["user_id"],
         ts_col="ts",
         gap_seconds=1800,
         value_col="value",
         close_lateness_seconds=3600,
-        state_dir=state_dir,
     )
     return out.select(
         "user_id",
@@ -786,24 +751,19 @@ def streaming_topn_retractable_replay(spark: SparkSession, sf_dir: str) -> DataF
     `RetractableTopNFunction.java:54` data-state/rank-view contract;
     batch-beats-state on update, so the oracle's latest row is the max
     (ts, event_id) of the (ts, event_id)-ordered replay)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import (
         streaming_top_n_retractable_jvm,
     )
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "event_type", "ts", "event_id", "value")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
-    state_dir = tempfile.mkdtemp(prefix="rtopn_replay_state_")
     out = streaming_top_n_retractable_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         key="user_id",
         row_key="event_type",
         order_col="value",
         n=2,
-        state_dir=state_dir,
     )
     return out.select(
         "user_id", "event_type", F.round("value", 2).alias("value"), "rn"
@@ -871,20 +831,15 @@ def streaming_heavy_hitters_replay(spark: SparkSession, sf_dir: str) -> DataFram
     split-invariant guarantees (≤ k rows, undercount ≤ n/(k+1),
     heavy-hitter superset) are property-tested under random chunkings
     (`streaming/process.py::streaming_misra_gries_jvm`)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_misra_gries_jvm
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "ts", "event_id")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
-    state_dir = tempfile.mkdtemp(prefix="mg_replay_state_")
     return streaming_misra_gries_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         item_col="user_id",
         k=64,
-        state_dir=state_dir,
     )
 
 
@@ -909,21 +864,16 @@ def streaming_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFram
     batch interval join (reference: `IntervalJoinOperator.java` — the
     relative-time variant of `operators/joins.py::interval_join`)."""
     from flink_ci_flink_spark.streaming import (
-        file_stream,
+        replay_stream,
         run_to_completion,
-        stage_ordered_replay,
         with_watermark,
     )
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("event_id", "user_id", "event_type", "ts")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
+    st = replay_stream(ev, ["ts", "event_id"])
     clicks = (
-        with_watermark(
-            file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
-            "ts",
-            "1 hour",
-        )
+        with_watermark(st, "ts", "1 hour")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -932,11 +882,7 @@ def streaming_interval_join_replay(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
     purchases = (
-        with_watermark(
-            file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
-            "ts",
-            "1 hour",
-        )
+        with_watermark(st, "ts", "1 hour")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -976,21 +922,16 @@ def streaming_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     `StreamExecJoin` semi variant / `IntervalJoinOperator.java` time
     bounds)."""
     from flink_ci_flink_spark.streaming import (
-        file_stream,
+        replay_stream,
         run_to_completion,
-        stage_ordered_replay,
         with_watermark,
     )
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("event_id", "user_id", "event_type", "ts")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
+    st = replay_stream(ev, ["ts", "event_id"])
     clicks = (
-        with_watermark(
-            file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
-            "ts",
-            "1 hour",
-        )
+        with_watermark(st, "ts", "1 hour")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -999,11 +940,7 @@ def streaming_semi_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        with_watermark(
-            file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
-            "ts",
-            "1 hour",
-        )
+        with_watermark(st, "ts", "1 hour")
         .filter(F.col("event_type") == "purchase")
         .select(F.col("user_id").alias("pu"), F.col("ts").alias("p_ts"))
     )
@@ -1085,15 +1022,12 @@ def streaming_broadcast_rules_replay(spark: SparkSession, sf_dir: str) -> DataFr
     `KeyedBroadcastProcessFunction` / broadcast state, rule updates
     visible from the next element on). The oracle replays the ntile
     batch assignment and the batch>=rule activation condition."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream, scratch_dir
     from flink_ci_flink_spark.streaming.core import broadcast_connect, read_epochs
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("event_id", "event_type", "value", "ts")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
-    base = tempfile.mkdtemp(prefix="bc_rules_")
+    base = scratch_dir("bc_rules_")
     all_rules = [(1, "click", 0.5), (2, "view", 0.7), (3, "purchase", 0.2)]
 
     def rules_for_batch(batch_id: int):
@@ -1110,7 +1044,7 @@ def streaming_broadcast_rules_replay(spark: SparkSession, sf_dir: str) -> DataFr
         ).select("event_id", "rule_id", "value")
 
     broadcast_connect(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         rules_for_batch,
         join_fn,
         out_dir=f"{base}/out",
@@ -1154,12 +1088,12 @@ def streaming_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     StreamingSymmetricHashJoinExec outer-null path)."""
     import glob
     import os
-    import tempfile
     from datetime import timedelta
 
     from flink_ci_flink_spark.streaming import (
         file_stream,
         run_to_completion,
+        scratch_dir,
         stage_ordered_replay,
         with_watermark,
     )
@@ -1173,7 +1107,7 @@ def streaming_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(int(-i), int(-i), etype, max_ts + timedelta(days=days))],
             ev.schema,
         )
-        part_dir = tempfile.mkdtemp(prefix="sentinel_")
+        part_dir = scratch_dir("sentinel_")
         sentinel.coalesce(1).write.mode("overwrite").parquet(part_dir)
         (part,) = glob.glob(f"{part_dir}/part-*.parquet")
         os.rename(part, f"{tmp}/{i:03d}.parquet")
@@ -1237,12 +1171,12 @@ def streaming_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
     watermark node. Hash-proven equal to the batch FULL OUTER JOIN."""
     import glob
     import os
-    import tempfile
     from datetime import timedelta
 
     from flink_ci_flink_spark.streaming import (
         file_stream,
         run_to_completion,
+        scratch_dir,
         stage_ordered_replay,
         with_watermark,
     )
@@ -1256,7 +1190,7 @@ def streaming_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFr
             [(int(-i), int(-i), etype, max_ts + timedelta(days=days))],
             ev.schema,
         )
-        part_dir = tempfile.mkdtemp(prefix="sentinel_")
+        part_dir = scratch_dir("sentinel_")
         sentinel.coalesce(1).write.mode("overwrite").parquet(part_dir)
         (part,) = glob.glob(f"{part_dir}/part-*.parquet")
         os.rename(part, f"{tmp}/{i:03d}.parquet")
@@ -1316,7 +1250,6 @@ def streaming_dropdup_watermark_replay(spark: SparkSession, sf_dir: str) -> Data
     twice across neighboring batches, and the watermark-scoped key state
     drops the redelivery. Result = exactly the distinct event set."""
     import glob
-    import os
     import shutil
 
     from flink_ci_flink_spark.streaming import (
@@ -1359,17 +1292,12 @@ def streaming_complete_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     unbounded GroupAggFunction in upsert/complete materialization
     (`GroupAggFunction.java`, `StreamExecGroupAggregate`). The oracle is
     the one-shot batch aggregate."""
-    from flink_ci_flink_spark.streaming import (
-        file_stream,
-        run_to_completion,
-        stage_ordered_replay,
-    )
+    from flink_ci_flink_spark.streaming import replay_stream, run_to_completion
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("event_type", "value", "ts", "event_id")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
     agg = (
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1)
+        replay_stream(ev, ["ts", "event_id"])
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1396,9 +1324,7 @@ def streaming_manifest_sink_replay(spark: SparkSession, sf_dir: str) -> DataFram
     simulate a crashed attempt, and the committed view read back via the
     manifest equals the input exactly — the orphan is invisible and
     nothing is lost or duplicated."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream, scratch_dir
     from flink_ci_flink_spark.streaming.core import manifest_sink, read_manifest
 
     t = load_tables(spark, sf_dir)
@@ -1406,10 +1332,9 @@ def streaming_manifest_sink_replay(spark: SparkSession, sf_dir: str) -> DataFram
         "event_id", "user_id", "event_type", F.unix_timestamp("ts").alias("ts_s")
     )
     staged = t.events.select("event_id", "user_id", "event_type", "ts")
-    tmp = stage_ordered_replay(staged, ["ts", "event_id"])
-    base = tempfile.mkdtemp(prefix="manifest_sink_")
+    base = scratch_dir("manifest_sink_")
     manifest_sink(
-        file_stream(spark, tmp, staged.schema, max_files_per_trigger=1)
+        replay_stream(staged, ["ts", "event_id"])
         .select(
             "event_id",
             "user_id",
@@ -1446,18 +1371,21 @@ def streaming_restart_recovery_replay(spark: SparkSession, sf_dir: str) -> DataF
     foreachBatch gives the same contract)."""
     import glob
     import os
-    import tempfile
 
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        scratch_dir,
+        stage_ordered_replay,
+    )
     from flink_ci_flink_spark.streaming.core import manifest_sink, read_manifest
 
     t = load_tables(spark, sf_dir)
     staged = t.events.select("event_id", "user_id", "event_type", "ts")
     tmp = stage_ordered_replay(staged, ["ts", "event_id"])
-    held_back = f"{tempfile.mkdtemp(prefix='held_')}/003.parquet"
+    held_back = f"{scratch_dir('held_')}/003.parquet"
     os.rename(f"{tmp}/003.parquet", held_back)
 
-    base = tempfile.mkdtemp(prefix="restart_")
+    base = scratch_dir("restart_")
     stream = file_stream(spark, tmp, staged.schema, max_files_per_trigger=1).select(
         "event_id",
         "user_id",

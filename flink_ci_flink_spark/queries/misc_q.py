@@ -530,9 +530,7 @@ def streaming_cdc_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a deleted key's update must retract the UPDATED value). Twelfth
     fold-family shape, the retract-input `GroupAggFunction.java` analog
     to the append-only running agg."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_changelog_agg_jvm
 
     t = load_tables(spark, sf_dir)
@@ -567,12 +565,10 @@ def streaming_cdc_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         (seq + 4).alias("seq"),
     )
     changelog = ins.unionByName(ub).unionByName(ua).unionByName(dl)
-    tmp = stage_ordered_replay(changelog, ["seq"])
     out = streaming_changelog_agg_jvm(
-        file_stream(spark, tmp, changelog.schema, max_files_per_trigger=1),
+        replay_stream(changelog, ["seq"]),
         keys=["status"],
         value_cols=["cents"],
-        state_dir=tempfile.mkdtemp(prefix="cdc_agg_state_"),
     )
     return out.select("status", "n_rows", F.col("sum_cents"))
 

@@ -961,9 +961,8 @@ def pipe_ivfpq_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the in-memory `pipe_ivfpq_ann` pipeline at the same training
     parameters (the store round-trip must not change a single rank);
     `test_ivfpq_store_prunes_partitions` asserts the pruned file set."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.similarity import ivfpq_ann_topk
+    from flink_ci_flink_spark.streaming import scratch_dir
 
     t = load_tables(spark, sf_dir)
     queries = t.embeddings.filter(F.col("vec_id") < 8).select(
@@ -975,7 +974,7 @@ def pipe_ivfpq_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
         coarse_iterations=1,
         pq_iterations=1,
-        store_dir=tempfile.mkdtemp(prefix="ivfpq_store_"),
+        store_dir=scratch_dir("ivfpq_store_"),
     )
 
 
@@ -995,8 +994,6 @@ def streaming_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     same `_ivfpq_oracle_sql` the in-memory query uses
     (`pipeline/similarity.py::streaming_ivfpq_ingest`,
     `ivfpq_probe_store`)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.similarity import (
         _np_cells_probes_int,
         ivf_centroids_fp,
@@ -1005,7 +1002,11 @@ def streaming_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         quantize_fp,
         streaming_ivfpq_ingest,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        scratch_dir,
+        stage_ordered_replay,
+    )
     from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     t = load_tables(spark, sf_dir)
@@ -1033,7 +1034,7 @@ def streaming_ivfpq_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     books = pq_codebooks_fp(
         resid, 8, 16, 2, "vec_id", "__rv", quantized=True
     )
-    base = tempfile.mkdtemp(prefix="ivfpq_ingest_")
+    base = scratch_dir("ivfpq_ingest_")
     tmp = stage_ordered_replay(emb, ["vec_id"])
     redeliver_first_batch(tmp)  # at-least-once: batch 1's rows arrive again
     streaming_ivfpq_ingest(
@@ -2767,10 +2768,8 @@ def streaming_centroid_refresh_replay(spark: SparkSession, sf_dir: str) -> DataF
     `_kmeans_fp_parts`, then one assignment + the floor-mean update).
     State ≤ n_cells x dim rows forever
     (`streaming/process.py::streaming_centroid_refresh_jvm`)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.similarity import ivf_centroids_fp
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import (
         streaming_centroid_refresh_jvm,
     )
@@ -2778,12 +2777,7 @@ def streaming_centroid_refresh_replay(spark: SparkSession, sf_dir: str) -> DataF
     t = load_tables(spark, sf_dir)
     emb = t.embeddings.select("vec_id", "embedding")
     centroids, _ = ivf_centroids_fp(emb)
-    tmp = stage_ordered_replay(emb, ["vec_id"])
-    return streaming_centroid_refresh_jvm(
-        file_stream(spark, tmp, emb.schema, max_files_per_trigger=1),
-        centroids,
-        tempfile.mkdtemp(prefix="centroid_refresh_"),
-    )
+    return streaming_centroid_refresh_jvm(replay_stream(emb, ["vec_id"]), centroids)
 
 
 def _hard_negatives_oracle_sql(
@@ -3437,21 +3431,18 @@ def streaming_minhash_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFra
     (`pipeline/dedup.py::streaming_minhash_dedup`; reference scope:
     continuous-query distinct/groupBy over an appending source,
     cf. flink-table retractless append aggregation)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.dedup import (
         finalize_minhash_pairs,
         streaming_minhash_dedup,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream, scratch_dir
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
-    # deterministic 3-file replay (a bounded harness step, not the plan)
-    tmp = stage_ordered_replay(docs, ["doc_id"])
-    base = tempfile.mkdtemp(prefix="mh_ingest_replay_")
+    base = scratch_dir("mh_ingest_replay_")
     streaming_minhash_dedup(
-        file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
+        # deterministic 3-file replay (a bounded harness step, not the plan)
+        replay_stream(docs, ["doc_id"]),
         bands_dir=f"{base}/bands",
         checkpoint=f"{base}/ckpt",
         num_hashes=32,
@@ -3473,20 +3464,17 @@ def streaming_line_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(struct) — no hot-key window sort) and reassembles surviving text.
     Hash-proven equal to the one-shot batch `line_dedup`
     (`pipeline/dedup.py::streaming_line_dedup_ingest`)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.dedup import (
         finalize_line_dedup,
         streaming_line_dedup_ingest,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream, scratch_dir
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
-    tmp = stage_ordered_replay(docs, ["doc_id"])
-    base = tempfile.mkdtemp(prefix="ld_ingest_replay_")
+    base = scratch_dir("ld_ingest_replay_")
     streaming_line_dedup_ingest(
-        file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
+        replay_stream(docs, ["doc_id"]),
         segs_dir=f"{base}/segs",
         checkpoint=f"{base}/ckpt",
         seg_tokens=16,
@@ -3938,15 +3926,17 @@ def streaming_model_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     doc_id and the result hash-matches the one-shot batch oracle, which
     re-trains the model from scratch
     (`pipeline/classifier.py::streaming_model_screen_ingest`)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.classifier import (
         finalize_model_screen,
         perceptron_train,
         streaming_model_screen_ingest,
         text_feature_exprs,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        scratch_dir,
+        stage_ordered_replay,
+    )
     from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     t = load_tables(spark, sf_dir)
@@ -3957,7 +3947,7 @@ def streaming_model_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     w = perceptron_train(docs, text_feature_exprs(), label, iterations=3)
     tmp = stage_ordered_replay(docs, ["doc_id"])
     redeliver_first_batch(tmp)
-    base = tempfile.mkdtemp(prefix="model_screen_")
+    base = scratch_dir("model_screen_")
     streaming_model_screen_ingest(
         file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
         text_feature_exprs(),
@@ -3997,7 +3987,7 @@ def streaming_feature_drift_replay(spark: SparkSession, sf_dir: str) -> DataFram
     `jvm_keyed_fold` runtime through the same `FoldSpec` the
     `keyed_fold` PTF exposes; exact integers make the streamed fold
     hash-match the one-shot batch aggregate."""
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.declarative import (
         FoldSpec,
         declarative_keyed_fold,
@@ -4022,10 +4012,7 @@ def streaming_feature_drift_replay(spark: SparkSession, sf_dir: str) -> DataFram
             "mean_digits := CAST(FLOOR(sum_digits * 1.0 / n) AS BIGINT)"
         ),
     )
-    tmp = stage_ordered_replay(docs, ["doc_id"])
-    return declarative_keyed_fold(
-        file_stream(spark, tmp, docs.schema, max_files_per_trigger=1), spec
-    )
+    return declarative_keyed_fold(replay_stream(docs, ["doc_id"]), spec)
 
 
 @query(
@@ -4318,10 +4305,12 @@ def streaming_gopher_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
     deterministic integer masks make duplicates byte-identical, so the
     finalize dedups exactly on doc_id and hash-matches the one-shot batch
     oracle."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.text import gopher_rules
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        scratch_dir,
+        stage_ordered_replay,
+    )
     from flink_ci_flink_spark.streaming.core import (
         drain_foreach_batch,
         redeliver_first_batch,
@@ -4331,7 +4320,7 @@ def streaming_gopher_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
     docs = t.documents.select("doc_id", "text")
     tmp = stage_ordered_replay(docs, ["doc_id"])
     redeliver_first_batch(tmp)
-    base = tempfile.mkdtemp(prefix="gopher_screen_")
+    base = scratch_dir("gopher_screen_")
     store = f"{base}/store"
 
     def merge(batch_df, epoch_id: int) -> None:
@@ -4604,9 +4593,11 @@ def streaming_dsir_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately REDELIVERED; deterministic integer scores collapse
     byte-identically at finalize, hash-matching the one-shot batch oracle
     (`pipeline/sampling.py::dsir_scores`)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        scratch_dir,
+        stage_ordered_replay,
+    )
     from flink_ci_flink_spark.streaming.core import (
         drain_foreach_batch,
         redeliver_first_batch,
@@ -4665,7 +4656,7 @@ def streaming_dsir_screen_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / ((F.col("__cr") + 1).cast("double") * (F.col("__tt") + F.lit(1024)))
     ).cast("long")
-    base_dir = tempfile.mkdtemp(prefix="dsir_screen_")
+    base_dir = scratch_dir("dsir_screen_")
     wt_dir = f"{base_dir}/weights"
     model.crossJoin(F.broadcast(tots)).select(
         "__b", lam.alias("__lam")
@@ -4988,7 +4979,7 @@ def streaming_rule_monitor_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     3-micro-batch replay; exact integers make the streamed fold
     hash-match the one-shot batch oracle (which recomputes the mask via
     the shared Gopher CTEs)."""
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.declarative import (
         FoldSpec,
         declarative_keyed_fold,
@@ -5016,10 +5007,7 @@ def streaming_rule_monitor_replay(spark: SparkSession, sf_dir: str) -> DataFrame
             "kept_permille := CAST(FLOOR(1000.0 * n_kept / n) AS BIGINT)"
         ),
     )
-    tmp = stage_ordered_replay(docs, ["doc_id"])
-    return declarative_keyed_fold(
-        file_stream(spark, tmp, docs.schema, max_files_per_trigger=1), spec
-    )
+    return declarative_keyed_fold(replay_stream(docs, ["doc_id"]), spec)
 
 
 _SIMHASH_SIG_CTES = f"""toks AS (
@@ -5137,20 +5125,17 @@ def streaming_winnow_ingest_replay(spark: SparkSession, sf_dir: str) -> DataFram
     Hash-proven equal to the one-shot batch `winnow_pairs` — arriving
     shards never re-tokenize the existing corpus
     (`pipeline/dedup.py::streaming_winnow_ingest`)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.dedup import (
         finalize_winnow_pairs,
         streaming_winnow_ingest,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream, scratch_dir
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
-    tmp = stage_ordered_replay(docs, ["doc_id"])
-    base = tempfile.mkdtemp(prefix="wn_ingest_replay_")
+    base = scratch_dir("wn_ingest_replay_")
     streaming_winnow_ingest(
-        file_stream(spark, tmp, docs.schema, max_files_per_trigger=1),
+        replay_stream(docs, ["doc_id"]),
         fps_dir=f"{base}/fps",
         checkpoint=f"{base}/ckpt",
     )
@@ -5526,14 +5511,16 @@ def streaming_langid_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
     duplicates byte-identical, so the finalize collapses exactly and the
     confusion matrix hash-matches the from-scratch SQL re-train.
     `pipeline/text.py::streaming_langid_screen_ingest`."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.text import (
         finalize_langid_screen,
         langid_train_profiles,
         streaming_langid_screen_ingest,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        scratch_dir,
+        stage_ordered_replay,
+    )
     from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     t = load_tables(spark, sf_dir)
@@ -5548,7 +5535,7 @@ def streaming_langid_screen_replay(spark: SparkSession, sf_dir: str) -> DataFram
     held_out = docs.filter(F.col("doc_id") % 4 == 0)
     tmp = stage_ordered_replay(held_out, ["doc_id"])
     redeliver_first_batch(tmp)
-    base = tempfile.mkdtemp(prefix="langid_screen_")
+    base = scratch_dir("langid_screen_")
     streaming_langid_screen_ingest(
         file_stream(spark, tmp, held_out.schema, max_files_per_trigger=1),
         profile,
@@ -5573,20 +5560,22 @@ def streaming_delta_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch 1 is redelivered (at-least-once) — decisions are byte-identical,
     so the finalize collapses exactly and the result hash-matches the
     one-shot batch oracle. `pipeline/dedup.py::streaming_delta_dedup_ingest`."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.dedup import (
         finalize_delta_dedup,
         materialize_corpus_index,
         streaming_delta_dedup_ingest,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        scratch_dir,
+        stage_ordered_replay,
+    )
     from flink_ci_flink_spark.streaming.core import redeliver_first_batch
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text", "source")
     is_shard = F.col("source").isin("src0", "src1")
-    base = tempfile.mkdtemp(prefix="delta_dedup_")
+    base = scratch_dir("delta_dedup_")
     # one shared index-construction entry point with batch delta_dedup
     # (same artifact layout; an explicit dir is caller-owned)
     materialize_corpus_index(docs.filter(~is_shard), f"{base}/index")
@@ -5664,15 +5653,13 @@ def pipe_delta_dedup_shared_index(
     produce byte-identical decisions: the oracle is the batch result
     tagged twice. `pipeline/dedup.py::materialize_corpus_index` (location
     contract), `::delta_dedup`, `::streaming_delta_dedup_ingest`."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.dedup import (
         delta_dedup,
         finalize_delta_dedup,
         materialize_corpus_index,
         streaming_delta_dedup_ingest,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream, scratch_dir
 
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "text", "source")
@@ -5688,15 +5675,10 @@ def pipe_delta_dedup_shared_index(
         index_prebuilt=True,
     ).select(F.lit("batch").alias("consumer"), "*")
 
-    base = tempfile.mkdtemp(prefix="delta_shared_")
+    base = scratch_dir("delta_shared_")
     shard = docs.filter(is_shard)
     streaming_delta_dedup_ingest(
-        file_stream(
-            spark,
-            stage_ordered_replay(shard, ["doc_id"]),
-            shard.schema,
-            max_files_per_trigger=1,
-        ),
+        replay_stream(shard, ["doc_id"]),
         index_dir,
         f"{base}/store",
         checkpoint=f"{base}/ckpt",
@@ -5949,8 +5931,6 @@ def streaming_curation_v5_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source summary hash-matches the batch oracle that re-trains both
     models from scratch. Output = v5's accounting restricted to the
     incoming shard's sources (the corpus stock never streams)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.dedup import (
         _banded_signatures,
         _delta_decide,
@@ -5961,7 +5941,11 @@ def streaming_curation_v5_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         langid_serve_exprs,
         langid_train_profiles,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import (
+        file_stream,
+        scratch_dir,
+        stage_ordered_replay,
+    )
     from flink_ci_flink_spark.streaming.core import (
         drain_foreach_batch,
         persist_static_side,
@@ -5971,7 +5955,7 @@ def streaming_curation_v5_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = t.documents.select("doc_id", "lang", "source", "n_chars", "text")
     is_shard = F.col("source").isin("src0", "src1")
-    base = tempfile.mkdtemp(prefix="curation_v5_")
+    base = scratch_dir("curation_v5_")
     materialize_corpus_index(docs.filter(~is_shard), f"{base}/index")
     prof_rows = langid_train_profiles(
         docs.filter(~is_shard), top_k=50

@@ -276,9 +276,7 @@ def streaming_hll_distinct_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle's one-shot sketch because register merge is order- and
     batching-insensitive algebra. The exact distinct rides along for
     error inspection (`streaming/process.py::streaming_hll_jvm`)."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_hll_jvm
 
     t = load_tables(spark, sf_dir)
@@ -286,12 +284,10 @@ def streaming_hll_distinct_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         "event_type", F.col("user_id").cast("string").alias("uid"),
         "ts", "event_id",
     )
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
     sk = streaming_hll_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         value_col="uid",
         group_cols=["event_type"],
-        state_dir=tempfile.mkdtemp(prefix="hll_replay_"),
     )
     exact = t.events.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_distinct")
@@ -354,26 +350,22 @@ def streaming_quantile_histogram_replay(
     error ≤ bin width 2.0); the exact rank-based percentile rides along
     for error inspection, and the whole read-off is hash-checked
     (`streaming/process.py::streaming_value_histogram_jvm`)."""
-    import tempfile
-
     from pyspark.sql.window import Window
 
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import (
         streaming_value_histogram_jvm,
     )
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("event_type", "value", "ts", "event_id")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
     hist = streaming_value_histogram_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         value_col="value",
         group_cols=["event_type"],
         lo=0.0,
         width=2.0,
         n_bins=256,
-        state_dir=tempfile.mkdtemp(prefix="vhist_replay_"),
     )
     n = hist.groupBy("event_type").agg(F.sum("cnt").cast("bigint").alias("n"))
     tgt = n.select(
@@ -456,19 +448,15 @@ def streaming_countmin_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`streaming/process.py::streaming_countmin_jvm`). Completes the
     streaming sketch trio: frequency (this), distinct (HLL fold), top
     items (Misra-Gries fold)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.sketches import countmin_estimate
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_countmin_jvm
 
     t = load_tables(spark, sf_dir)
     ev = t.events.select("user_id", "ts", "event_id")
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
     sk = streaming_countmin_jvm(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+        replay_stream(ev, ["ts", "event_id"]),
         value_col="user_id",
-        state_dir=tempfile.mkdtemp(prefix="cm_replay_"),
     )
     probes = t.events.select("user_id").distinct().filter(F.col("user_id") < 10)
     est = countmin_estimate(sk, probes, "user_id", depth=4, width=512)

@@ -3,7 +3,9 @@
 from flink_ci_flink_spark.streaming.core import (  # noqa: F401
     file_stream,
     rate_stream,
+    replay_stream,
     run_to_completion,
+    scratch_dir,
     socket_stream,
     stage_ordered_replay,
     with_watermark,

@@ -30,6 +30,7 @@ Streaming semantics notes vs the reference (documented limitations):
 
 from __future__ import annotations
 
+import atexit
 import glob
 import json
 import os
@@ -64,21 +65,38 @@ def file_stream(
     return reader.load(path)
 
 
+_scratch_root: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory for a replay's staged files, fold state, epoch
+    store or checkpoint. Every one sits under one per-process root, made
+    on first use under the ``TMPDIR`` in effect then and removed at
+    interpreter exit. Never sooner: a query returns a lazy DataFrame that
+    still reads its state and epoch stores after the query function
+    returns."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="spark_graft_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
+
+
 def stage_ordered_replay(
     df: DataFrame, order_cols: list[str], n_batches: int = 3
 ) -> str:
     """Stage a DataFrame as ``n_batches`` parquet files ``001.parquet`` ...
-    in a fresh temp dir, ordered by ``order_cols`` within and across files —
-    the deterministic micro-batch replay fixture every ``*_replay`` driver
-    query and streaming parity test feeds to `file_stream`. One pass over
-    ``df``: a global ``ntile`` numbers each row's batch and one partitioned
-    write emits every batch file from the window's single sorted partition. A
-    batch with no rows (fewer rows than batches) is staged as an empty
-    file, so there are always ``n_batches`` files. Returns the directory
-    (caller owns cleanup; /tmp otherwise reaps it)."""
+    in a fresh `scratch_dir`, ordered by ``order_cols`` within and across
+    files — the deterministic micro-batch replay fixture every ``*_replay``
+    driver query and streaming parity test feeds to `file_stream`. One
+    pass over ``df``: a global ``ntile`` numbers each row's batch and one
+    partitioned write emits every batch file from the window's single
+    sorted partition. A batch with no rows (fewer rows than batches) is
+    staged as an empty file, so there are always ``n_batches`` files.
+    Returns the directory, which goes with the scratch root at exit."""
     from pyspark.sql.window import Window
 
-    tmp = tempfile.mkdtemp(prefix="replay_stage_")
+    tmp = scratch_dir("replay_stage_")
     staged = f"{tmp}/_staged"
     (
         df.withColumn("__b", F.ntile(n_batches).over(Window.orderBy(*order_cols)))
@@ -100,6 +118,19 @@ def stage_ordered_replay(
         shutil.copyfile(empty, dst)
     shutil.rmtree(staged)
     return tmp
+
+
+def replay_stream(
+    df: DataFrame, order_cols: list[str], n_batches: int = 3
+) -> DataFrame:
+    """``df`` as a bounded stream of ``n_batches`` micro-batches, one
+    `stage_ordered_replay` file per trigger."""
+    return file_stream(
+        df.sparkSession,
+        stage_ordered_replay(df, order_cols, n_batches),
+        df.schema,
+        max_files_per_trigger=1,
+    )
 
 
 def redeliver_first_batch(stage_dir: str) -> None:
@@ -235,10 +266,12 @@ class VersionedState:
     own output twice. After each batch only its versions and its
     predecessor's are kept. Pruning is local-filesystem best effort; on an
     object store a lifecycle rule does it (old versions are never read
-    again, so it never affects results)."""
+    again, so it never affects results). ``state_dir=None`` is a fresh
+    `scratch_dir`."""
 
-    def __init__(self, spark: SparkSession, state_dir: str, *prefixes: str):
-        self.spark, self.dir, self.prefixes = spark, state_dir, prefixes
+    def __init__(self, spark: SparkSession, state_dir: str | None, *prefixes: str):
+        self.spark, self.prefixes = spark, prefixes
+        self.dir = scratch_dir("state_") if state_dir is None else state_dir
 
     def _versions(self, prefix: str) -> list[int]:
         try:

@@ -41,7 +41,6 @@ as a polymorphic table function:
 from __future__ import annotations
 
 import re
-import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -185,8 +184,6 @@ def declarative_keyed_fold(
     state as a batch DataFrame."""
     from flink_ci_flink_spark.streaming.process import jvm_keyed_fold
 
-    if state_dir is None:
-        state_dir = tempfile.mkdtemp(prefix="decl_fold_")
     return jvm_keyed_fold(
         stream,
         prepare=spec.prepare_plan,

@@ -373,7 +373,7 @@ def jvm_keyed_fold(
     stream: DataFrame,
     prepare,
     fold,
-    state_dir: str,
+    state_dir: str | None = None,
     close=None,
     closed_natural_key: list[str] | None = None,
     emit=None,
@@ -408,26 +408,28 @@ def jvm_keyed_fold(
     batch writes ``v{batch_id}`` after reading its on-disk predecessor, so
     a replayed batch regenerates its merge idempotently rather than
     double-merging; only the current and previous versions are retained.
-    Closed rows go to an `append_epoch` store. Runs the
+    Closed rows go to an `append_epoch` store. ``state_dir=None`` (every
+    operator below passes it through) is a fresh `scratch_dir`. Runs the
     bounded stream to completion and returns the final output as a batch
     DataFrame. Ref: the state contract of `GroupAggFunction.java` /
     `AppendOnlyTopNFunction.java` — accumulate-merge-emit, JVM execution.
     """
     spark = stream.sparkSession
+    versions = VersionedState(spark, state_dir, "v")
     last = {"v": None, "closed": False}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         _keyed_fold_step(
-            spark, state_dir, prepare, fold, close, batch_df, batch_id, last
+            spark, versions.dir, prepare, fold, close, batch_df, batch_id, last
         )
 
     drain_foreach_batch(stream, merge)
-    state = VersionedState(spark, state_dir).read("v", last["v"])
+    state = versions.read("v", last["v"])
     if state is None:
         state = fold(None, prepare(spark.createDataFrame([], stream.schema)))
     closed = None
     if last["closed"]:
-        closed = read_epochs(spark, f"{state_dir}/closed", closed_natural_key)
+        closed = read_epochs(spark, f"{versions.dir}/closed", closed_natural_key)
     if emit is not None:
         return emit(state, closed)
     return state.unionByName(closed) if closed is not None else state
@@ -439,7 +441,7 @@ def streaming_top_n_jvm(
     order_by: list,
     n: int,
     select_cols: list[str],
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Streaming top-n with NO per-key Python path: per micro-batch, the
     batch's per-key top-n (JVM window function) is unioned with the
@@ -482,7 +484,7 @@ def streaming_dedup_keep_last_jvm(
     keys: list[str],
     ts_col: str,
     select_cols: list[str],
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Streaming keep-last dedup with NO per-key Python path, on
     foreachBatch merges
@@ -528,7 +530,7 @@ def streaming_running_agg_jvm(
     stream: DataFrame,
     keys: list[str],
     agg_specs: dict[str, tuple[str, str]],
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Streaming per-key running aggregates with NO per-key Python path —
     the foreachBatch-merge analog of a keyed_process running aggregate
@@ -583,7 +585,7 @@ def streaming_sessionize_jvm(
     keys: list[str],
     ts_col: str,
     gap_seconds: int,
-    state_dir: str,
+    state_dir: str | None = None,
     value_col: str | None = None,
     close_lateness_seconds: int | None = None,
 ) -> DataFrame:
@@ -699,7 +701,7 @@ def streaming_count_window_jvm(
     ts_col: str,
     value_col: str,
     size: int,
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Tumbling COUNT windows with NO per-key Python path — the
     `jvm_keyed_fold` expression of `windows_ext.count_tumbling_window`
@@ -809,7 +811,7 @@ def streaming_bounded_over_jvm(
     ts_col: str,
     value_col: str,
     rows_preceding: int,
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Bounded streaming over-window (ROWS BETWEEN N PRECEDING AND CURRENT
     ROW) with NO per-key Python path — the second decomposable shape on
@@ -892,7 +894,7 @@ def streaming_count_sliding_window_jvm(
     value_col: str,
     size: int,
     slide: int,
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Sliding COUNT windows with NO per-key Python path — the third
     decomposable shape on `jvm_keyed_fold`
@@ -1009,7 +1011,7 @@ def streaming_top_n_retractable_jvm(
     row_key: str,
     order_col: str,
     n: int,
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Update-stream top-n with NO per-key Python path — the
     `jvm_keyed_fold` expression of `streaming_top_n_retractable`
@@ -1067,7 +1069,7 @@ def streaming_misra_gries_jvm(
     stream: DataFrame,
     item_col: str,
     k: int,
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Streaming Misra-Gries(k) frequency summary on `jvm_keyed_fold` —
     the bounded-state hot-item monitor: however large the stream, state is
@@ -1134,7 +1136,7 @@ def streaming_changelog_agg_jvm(
     stream: DataFrame,
     keys: list[str],
     value_cols: list[str],
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Incremental materialized-view maintenance on `jvm_keyed_fold`: a
     retract-stream GROUP aggregate (COUNT + exact BIGINT SUMs) over a
@@ -1185,7 +1187,7 @@ def streaming_hll_jvm(
     stream: DataFrame,
     value_col: str,
     group_cols: list[str],
-    state_dir: str,
+    state_dir: str | None = None,
     b: int = 6,
 ) -> DataFrame:
     """Streaming COUNT(DISTINCT) with BOUNDED state on `jvm_keyed_fold`:
@@ -1224,7 +1226,7 @@ def streaming_hll_jvm(
 def streaming_countmin_jvm(
     stream: DataFrame,
     value_col: str,
-    state_dir: str,
+    state_dir: str | None = None,
     depth: int = 4,
     width: int = 512,
 ) -> DataFrame:
@@ -1255,7 +1257,7 @@ def streaming_countmin_jvm(
 def streaming_centroid_refresh_jvm(
     stream: DataFrame,
     centroids: list[list[int]],
-    state_dir: str,
+    state_dir: str | None = None,
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Streaming centroid refresh on `jvm_keyed_fold` — FIFTEENTH fold
@@ -1317,7 +1319,7 @@ def streaming_value_histogram_jvm(
     lo: float,
     width: float,
     n_bins: int,
-    state_dir: str,
+    state_dir: str | None = None,
 ) -> DataFrame:
     """Streaming quantile/distribution monitor on `jvm_keyed_fold` —
     SIXTEENTH fold shape, completing the bounded-state monitoring quartet

@@ -91,49 +91,43 @@ def test_streaming_cep_matches_batch(spark, sf_dir):
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.cep import cep, cep_stream
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
-    import shutil
-    import tempfile
 
     t = load_tables(spark, sf_dir)
     ev_df = t.events.select("user_id", "event_id", "ts", "event_type").orderBy("ts")
-    tmp = tempfile.mkdtemp(prefix="cep_stream_")
-    try:
-        rows = ev_df.collect()
-        third = len(rows) // 3
-        chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-        stage_chunks(spark, tmp, chunks, ev_df.schema)
+    rows = ev_df.collect()
+    third = len(rows) // 3
+    chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
+    tmp = stage_chunks(spark, chunks, ev_df.schema)
 
-        pat = (
-            Pattern.begin("a", where=lambda e: e["event_type"] == "click")
-            .next("b", where=lambda e: e["event_type"] == "purchase")
-            .within(259200)
-            .after_match_skip(NO_SKIP)
-        )
+    pat = (
+        Pattern.begin("a", where=lambda e: e["event_type"] == "click")
+        .next("b", where=lambda e: e["event_type"] == "purchase")
+        .within(259200)
+        .after_match_skip(NO_SKIP)
+    )
 
-        def select(key, m, events):
-            return {
-                "user_id": int(key[0]),
-                "start_id": int(events[m.groups["a"][0]]["event_id"]),
-                "end_id": int(events[m.groups["b"][0]]["event_id"]),
-            }
-
-        schema_out = "user_id long, start_id long, end_id long"
-        batch = {
-            (r.user_id, r.start_id, r.end_id)
-            for r in cep(ev_df, pat, ["user_id"], "ts", select, schema_out).collect()
+    def select(key, m, events):
+        return {
+            "user_id": int(key[0]),
+            "start_id": int(events[m.groups["a"][0]]["event_id"]),
+            "end_id": int(events[m.groups["b"][0]]["event_id"]),
         }
 
-        stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
-        out = cep_stream(stream, pat, ["user_id"], "ts", select, schema_out)
-        result = run_to_completion(out)
-        streamed = {
-            (r.user_id, r.start_id, r.end_id) for r in result.collect()
-        }
-        # delay=0: every match whose last event is <= the key's max seen ts
-        # emits; the final batch flushes everything
-        assert streamed == batch
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    schema_out = "user_id long, start_id long, end_id long"
+    batch = {
+        (r.user_id, r.start_id, r.end_id)
+        for r in cep(ev_df, pat, ["user_id"], "ts", select, schema_out).collect()
+    }
+
+    stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
+    out = cep_stream(stream, pat, ["user_id"], "ts", select, schema_out)
+    result = run_to_completion(out)
+    streamed = {
+        (r.user_id, r.start_id, r.end_id) for r in result.collect()
+    }
+    # delay=0: every match whose last event is <= the key's max seen ts
+    # emits; the final batch flushes everything
+    assert streamed == batch
 
 
 # -- new combinators (round 2): negatives, until, any-contiguity, skips ------
@@ -363,9 +357,6 @@ def test_streaming_greedy_defers_until_closed(spark):
     """A greedy one_or_more match must not emit while it could still extend
     (reference NFA defers greedy emission); it emits exactly once, in its
     maximal form, after the within-window expires."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.cep import cep_stream
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
 
@@ -373,36 +364,32 @@ def test_streaming_greedy_defers_until_closed(spark):
     rows1 = [(1, 10, 0.0, "A"), (1, 11, 1.0, "B")]
     rows2 = [(1, 12, 2.0, "B")]
     rows3 = [(1, 13, 30.0, "X")]  # pushes the frontier past within=10
-    tmp = tempfile.mkdtemp(prefix="cep_greedy_")
-    try:
-        stage_chunks(spark, tmp, [rows1, rows2, rows3], schema)
+    tmp = stage_chunks(spark, [rows1, rows2, rows3], schema)
 
-        pat = (
-            Pattern.begin("a", typed2("A"))
-            .followed_by("b", typed2("B"))
-            .one_or_more(max_times=4)
-            .within(10)
-        )
+    pat = (
+        Pattern.begin("a", typed2("A"))
+        .followed_by("b", typed2("B"))
+        .one_or_more(max_times=4)
+        .within(10)
+    )
 
-        def select(key, m, events):
-            return {
-                "user_id": int(key[0]),
-                "n_b": len(m.groups["b"]),
-            }
+    def select(key, m, events):
+        return {
+            "user_id": int(key[0]),
+            "n_b": len(m.groups["b"]),
+        }
 
-        stream = file_stream(
-            spark,
-            tmp,
-            spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = cep_stream(stream, pat, ["user_id"], "ts", select, "user_id long, n_b long")
-        result = run_to_completion(out)
-        got = [(r.user_id, r.n_b) for r in result.collect()]
-        # exactly one emission, the maximal greedy match (both B's)
-        assert got == [(1, 2)]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    stream = file_stream(
+        spark,
+        tmp,
+        spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = cep_stream(stream, pat, ["user_id"], "ts", select, "user_id long, n_b long")
+    result = run_to_completion(out)
+    got = [(r.user_id, r.n_b) for r in result.collect()]
+    # exactly one emission, the maximal greedy match (both B's)
+    assert got == [(1, 2)]
 
 
 def typed2(name):
@@ -574,9 +561,6 @@ def test_match_recognize_sql_matches_api(spark, sf_dir):
 def test_match_recognize_sql_streaming_matches_batch(spark, sf_dir):
     """The SQL-text front end with streaming=True (micro-batch replay) emits
     the same final matches as the batch plan of the same statement."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.cep import match_recognize_sql
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
@@ -599,22 +583,18 @@ def test_match_recognize_sql_streaming_matches_batch(spark, sf_dir):
         for r in match_recognize_sql(ev_df, stmt).collect()
     }
 
-    tmp = tempfile.mkdtemp(prefix="mr_sql_stream_")
-    try:
-        rows = ev_df.collect()
-        third = len(rows) // 3
-        chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-        stage_chunks(spark, tmp, chunks, ev_df.schema)
+    rows = ev_df.collect()
+    third = len(rows) // 3
+    chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
+    tmp = stage_chunks(spark, chunks, ev_df.schema)
 
-        stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
-        out = match_recognize_sql(stream, stmt, streaming=True)
-        result = run_to_completion(out)
-        streamed = {
-            (r.user_id, r.a_id, r.b_id) for r in result.collect()
-        }
-        assert streamed == batch
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
+    out = match_recognize_sql(stream, stmt, streaming=True)
+    result = run_to_completion(out)
+    streamed = {
+        (r.user_id, r.a_id, r.b_id) for r in result.collect()
+    }
+    assert streamed == batch
 
 
 def test_compiled_equals_nfa_property(spark):
@@ -867,9 +847,6 @@ def test_streaming_mr_aggregate_define(spark):
     """Running-aggregate DEFINE on the STREAMING MATCH_RECOGNIZE operator:
     typed state payloads let ctx predicates evaluate numerically; streaming
     result == batch result on ordered replay."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.cep import match_recognize_sql
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
 
@@ -892,20 +869,16 @@ def test_streaming_mr_aggregate_define(spark):
     batch = {tuple(r) for r in match_recognize_sql(df, sql).collect()}
     assert batch == {(1, 1.0, 2, 35.0), (1, 3.0, 2, 50.0), (1, 5.0, 1, 5.0)}
 
-    tmp = tempfile.mkdtemp(prefix="mr_stream_")
-    try:
-        chunks = [rows[i * 2 : (i + 1) * 2] for i in range(3)]
-        stage_chunks(spark, tmp, chunks, schema)
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = match_recognize_sql(st, sql, streaming=True)
-        result = run_to_completion(out)
-        streamed = {tuple(r) for r in result.collect()}
-        assert streamed == batch
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    chunks = [rows[i * 2 : (i + 1) * 2] for i in range(3)]
+    tmp = stage_chunks(spark, chunks, schema)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = match_recognize_sql(st, sql, streaming=True)
+    result = run_to_completion(out)
+    streamed = {tuple(r) for r in result.collect()}
+    assert streamed == batch
 
 
 def test_streak_fast_path_equals_generic_property():
@@ -1275,9 +1248,6 @@ def test_batch_cep_timed_out_operator(spark):
 def test_streaming_timeout_matches_batch(spark, sf_dir):
     """cep_stream_timed_out over micro-batch replay == batch cep_timed_out
     restricted to windows that expired at the final per-key frontier."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.catalog import load_tables
@@ -1286,50 +1256,46 @@ def test_streaming_timeout_matches_batch(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     ev_df = t.events.select("user_id", "event_id", "ts", "event_type").orderBy("ts")
-    tmp = tempfile.mkdtemp(prefix="cep_timeout_stream_")
-    try:
-        rows = ev_df.collect()
-        third = len(rows) // 3
-        chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-        stage_chunks(spark, tmp, chunks, ev_df.schema)
+    rows = ev_df.collect()
+    third = len(rows) // 3
+    chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
+    tmp = stage_chunks(spark, chunks, ev_df.schema)
 
-        pat = (
-            Pattern.begin("a", where=lambda e: e["event_type"] == "click")
-            .followed_by("b", where=lambda e: e["event_type"] == "purchase")
-            .within(259200)
-            .after_match_skip(NO_SKIP)
-        )
+    pat = (
+        Pattern.begin("a", where=lambda e: e["event_type"] == "click")
+        .followed_by("b", where=lambda e: e["event_type"] == "purchase")
+        .within(259200)
+        .after_match_skip(NO_SKIP)
+    )
 
-        def select(key, tm, events):
-            return {
-                "user_id": int(key[0]),
-                "click_id": int(events[tm.groups["a"][0]]["event_id"]),
-                "timeout_ts": float(tm.timeout_ts),
-            }
-
-        schema_out = "user_id long, click_id long, timeout_ts double"
-        batch_df = cep_timed_out(ev_df, pat, ["user_id"], "ts", select, schema_out)
-        # streaming can only finalize windows expired at the key's frontier
-        frontier = ev_df.groupBy("user_id").agg(
-            F.max(F.col("ts").cast("double")).alias("max_ts")
-        )
-        batch = {
-            (r.user_id, r.click_id, r.timeout_ts)
-            for r in batch_df.join(frontier, "user_id")
-            .filter(F.col("timeout_ts") <= F.col("max_ts"))
-            .collect()
+    def select(key, tm, events):
+        return {
+            "user_id": int(key[0]),
+            "click_id": int(events[tm.groups["a"][0]]["event_id"]),
+            "timeout_ts": float(tm.timeout_ts),
         }
 
-        stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
-        out = cep_stream_timed_out(stream, pat, ["user_id"], "ts", select, schema_out)
-        result = run_to_completion(out)
-        streamed = {
-            (r.user_id, r.click_id, r.timeout_ts) for r in result.collect()
-        }
-        assert streamed == batch
-        assert len(streamed) > 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    schema_out = "user_id long, click_id long, timeout_ts double"
+    batch_df = cep_timed_out(ev_df, pat, ["user_id"], "ts", select, schema_out)
+    # streaming can only finalize windows expired at the key's frontier
+    frontier = ev_df.groupBy("user_id").agg(
+        F.max(F.col("ts").cast("double")).alias("max_ts")
+    )
+    batch = {
+        (r.user_id, r.click_id, r.timeout_ts)
+        for r in batch_df.join(frontier, "user_id")
+        .filter(F.col("timeout_ts") <= F.col("max_ts"))
+        .collect()
+    }
+
+    stream = file_stream(spark, tmp, ev_df.schema, max_files_per_trigger=1)
+    out = cep_stream_timed_out(stream, pat, ["user_id"], "ts", select, schema_out)
+    result = run_to_completion(out)
+    streamed = {
+        (r.user_id, r.click_id, r.timeout_ts) for r in result.collect()
+    }
+    assert streamed == batch
+    assert len(streamed) > 0
 
 
 # -- streaming ALL ROWS PER MATCH, compiled JVM path (round 5) ---------------
@@ -1340,9 +1306,6 @@ def test_stream_all_rows_jvm_matches_batch(spark):
     lead()/explode ALL-ROWS plan over a pruned keyed buffer) == the batch
     compiled plan over the full data, including cross-micro-batch matches
     and continued per-key MATCH_NUMBERs."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.cep.compiled import (
         stream_all_rows_jvm,
         try_compile_all_rows,
@@ -1386,23 +1349,17 @@ def test_stream_all_rows_jvm_matches_batch(spark):
     want = sorted(tuple(r) for r in batch.collect())
     assert len(want) == 9  # 2 matches user 1 + 1 match user 2, 3 rows each
 
-    tmp = tempfile.mkdtemp(prefix="allrows_stream_")
-    state = tempfile.mkdtemp(prefix="allrows_state_")
-    try:
-        # 3 chunks split mid-match: the (6.0,7.0,8.0) match spans chunks
-        stage_chunks(spark, tmp, [rows[:4], rows[4:9], rows[9:]], ddl)
-        stream = file_stream(
-            spark, tmp, df.schema, max_files_per_trigger=1
-        )
-        out = stream_all_rows_jvm(
-            stream, pat, ["user_id"], "ts", measures, payload,
-            schema_out, state, delay_seconds=0.0,
-        )
-        got = sorted(tuple(r) for r in out.collect())
-        assert got == want
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
+    # 3 chunks split mid-match: the (6.0,7.0,8.0) match spans chunks
+    tmp = stage_chunks(spark, [rows[:4], rows[4:9], rows[9:]], ddl)
+    stream = file_stream(
+        spark, tmp, df.schema, max_files_per_trigger=1
+    )
+    out = stream_all_rows_jvm(
+        stream, pat, ["user_id"], "ts", measures, payload,
+        schema_out, delay_seconds=0.0,
+    )
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == want
 
 
 def test_timeout_compiled_equals_nfa_and_is_python_free(spark, sf_dir):
@@ -1515,9 +1472,6 @@ def test_stream_all_rows_jvm_random_chunking_property(spark):
     points, streaming compiled ALL-ROWS equals the batch compiled plan.
     Chunk boundaries are the risk surface (buffer pruning, frontier
     emission, MATCH_NUMBER continuation)."""
-    import shutil
-    import tempfile
-
     from hypothesis import given, settings, strategies as st
 
     from flink_ci_flink_spark.cep.compiled import (
@@ -1561,20 +1515,14 @@ def test_stream_all_rows_jvm_random_chunking_property(spark):
         a = min(cut1, len(rows) - 1)
         b = min(a + cut2, len(rows))
         chunks = [c for c in (rows[:a], rows[a:b], rows[b:]) if c]
-        tmp = tempfile.mkdtemp(prefix="arprop_")
-        state = tempfile.mkdtemp(prefix="arprop_state_")
-        try:
-            stage_chunks(spark, tmp, chunks, ddl)
-            out = stream_all_rows_jvm(
-                file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
-                pat, ["user_id"], "ts", measures, payload, schema_out,
-                state, delay_seconds=0.0,
-            )
-            got = sorted(tuple(r) for r in out.collect())
-            assert got == want
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(state, ignore_errors=True)
+        tmp = stage_chunks(spark, chunks, ddl)
+        out = stream_all_rows_jvm(
+            file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
+            pat, ["user_id"], "ts", measures, payload, schema_out,
+            delay_seconds=0.0,
+        )
+        got = sorted(tuple(r) for r in out.collect())
+        assert got == want
 
     check()
 
@@ -1584,9 +1532,6 @@ def test_stream_timed_out_random_chunking_property(spark):
     output equals the batch side output restricted to windows expired at
     the final per-key frontier (exactly-once across replays of buffered
     boundary anchors)."""
-    import shutil
-    import tempfile
-
     from hypothesis import given, settings, strategies as st
 
     from flink_ci_flink_spark.cep import cep_stream_timed_out, cep_timed_out
@@ -1631,20 +1576,16 @@ def test_stream_timed_out_random_chunking_property(spark):
         a = min(cut1, len(rows) - 1)
         b = min(a + cut2, len(rows))
         chunks = [c for c in (rows[:a], rows[a:b], rows[b:]) if c]
-        tmp = tempfile.mkdtemp(prefix="toprop_")
-        try:
-            stage_chunks(spark, tmp, chunks, ddl)
-            out = cep_stream_timed_out(
-                file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
-                pat, ["user_id"], "ts", select, schema_out,
-            )
-            result = run_to_completion(out)
-            got = {
-                (r.user_id, r.aid, r.tts) for r in result.collect()
-            }
-            assert got == want
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        tmp = stage_chunks(spark, chunks, ddl)
+        out = cep_stream_timed_out(
+            file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
+            pat, ["user_id"], "ts", select, schema_out,
+        )
+        result = run_to_completion(out)
+        got = {
+            (r.user_id, r.aid, r.tts) for r in result.collect()
+        }
+        assert got == want
 
     check()
 
@@ -1784,9 +1725,6 @@ def test_streaming_mr_prev_navigation_replay(spark):
     micro-batch, so a dip-rebound match whose PREV context CROSSES a
     micro-batch boundary is still found; streamed == batch on ordered
     replay. NEXT still rejects loudly (future-dependent)."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.cep import match_recognize_sql
     from flink_ci_flink_spark.streaming import file_stream
 
@@ -1807,25 +1745,21 @@ def test_streaming_mr_prev_navigation_replay(spark):
     batch = {tuple(r) for r in match_recognize_sql(df, sql).collect()}
     assert batch, "fixture must produce matches"
 
-    tmp = tempfile.mkdtemp(prefix="mr_nav_stream_")
-    try:
-        # 4 files of 2-3 rows; the first dip's PREV context (ts 2) and its
-        # continuation (ts 3) land in DIFFERENT micro-batches
-        chunks = [rows[0:3], rows[3:5], rows[5:8], rows[8:10]]
-        stage_chunks(spark, tmp, chunks, schema)
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        # streaming+nav runs the bounded stream to completion and returns
-        # the emitted rows as a batch DataFrame (foreachBatch wrapper
-        # convention, like the jvm_keyed_fold family)
-        out = match_recognize_sql(st, sql, streaming=True)
-        assert not out.isStreaming
-        streamed = {tuple(r) for r in out.collect()}
-        assert streamed == batch
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # 4 files of 2-3 rows; the first dip's PREV context (ts 2) and its
+    # continuation (ts 3) land in DIFFERENT micro-batches
+    chunks = [rows[0:3], rows[3:5], rows[5:8], rows[8:10]]
+    tmp = stage_chunks(spark, chunks, schema)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    # streaming+nav runs the bounded stream to completion and returns
+    # the emitted rows as a batch DataFrame (foreachBatch wrapper
+    # convention, like the jvm_keyed_fold family)
+    out = match_recognize_sql(st, sql, streaming=True)
+    assert not out.isStreaming
+    streamed = {tuple(r) for r in out.collect()}
+    assert streamed == batch
 
     import pytest as _pytest
 
@@ -1847,11 +1781,9 @@ def test_replay_ident_includes_partition_key(spark):
     final dropDuplicates(['__ident'])), so two keys whose matches share
     identical per-variable event times would collide and one key's match
     would be silently dropped."""
-    import shutil
-
     from flink_ci_flink_spark.cep import NO_SKIP, Pattern
     from flink_ci_flink_spark.cep.operator import cep_stream_replay
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
 
     schema = "user_id long, ts double, event_type string, event_id long"
     # both users see the SAME timestamps — per-variable ts lists are equal
@@ -1876,18 +1808,14 @@ def test_replay_ident_includes_partition_key(spark):
             "purchase_id": events[m.groups["b"][-1]]["event_id"],
         }
 
-    tmp = stage_ordered_replay(df, ["ts", "user_id"], n_batches=2)
-    try:
-        st = file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
-        # select= only (no measures): forces the Python NFA flat path where
-        # the identity is hashed
-        out = cep_stream_replay(
-            st, pat, ["user_id"], "ts", select=sel,
-            output_schema="user_id long, view_id long, purchase_id long",
-        )
-        got = {tuple(r) for r in out.collect()}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = replay_stream(df, ["ts", "user_id"], n_batches=2)
+    # select= only (no measures): forces the Python NFA flat path where
+    # the identity is hashed
+    out = cep_stream_replay(
+        st, pat, ["user_id"], "ts", select=sel,
+        output_schema="user_id long, view_id long, purchase_id long",
+    )
+    got = {tuple(r) for r in out.collect()}
     assert got == {(1, 10, 11), (2, 20, 21)}
 
 
@@ -1896,12 +1824,10 @@ def test_replay_compiled_path_parity(spark):
     lead() plan per micro-batch (try_compile(replay_delay=...)): the plan
     qualifies, carries __ident/__t0 plan-side, and the streamed rows equal
     the one-shot batch cep() answer."""
-    import shutil
-
     from flink_ci_flink_spark.cep import NO_SKIP, Pattern, cep
     from flink_ci_flink_spark.cep.operator import cep_stream_replay
     from flink_ci_flink_spark.cep.compiled import try_compile
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
 
     schema = "user_id long, ts double, event_type string, event_id long"
     rows = []
@@ -1944,16 +1870,12 @@ def test_replay_compiled_path_parity(spark):
             df, pat, ["user_id"], "ts", measures=measures, output_schema=out_schema
         ).collect()
     }
-    tmp = stage_ordered_replay(df, ["ts", "user_id"], n_batches=3)
-    try:
-        st = file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
-        out = cep_stream_replay(
-            st, pat, ["user_id"], "ts", measures=measures,
-            output_schema=out_schema,
-        )
-        streamed = {tuple(r) for r in out.collect()}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = replay_stream(df, ["ts", "user_id"], n_batches=3)
+    out = cep_stream_replay(
+        st, pat, ["user_id"], "ts", measures=measures,
+        output_schema=out_schema,
+    )
+    streamed = {tuple(r) for r in out.collect()}
     assert streamed == batch and batch
 
 
@@ -2067,10 +1989,8 @@ def test_mr_desc_secondary_streaming_buffer(spark):
     """The streaming NFA's per-key buffer honors a DESC secondary spec
     (stable multi-pass sort): streamed matches == the batch answer on the
     same tie-heavy fixture."""
-    import shutil
-
     from flink_ci_flink_spark.cep import match_recognize_sql
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream, run_to_completion
 
     schema = "k long, ts double, id long, event_type string"
     rows = [
@@ -2096,11 +2016,7 @@ def test_mr_desc_secondary_streaming_buffer(spark):
     assert batch, "fixture must match"
     from flink_ci_flink_spark.streaming import run_to_completion
 
-    tmp = stage_ordered_replay(df, ["ts", "id"], n_batches=2)
-    try:
-        st = file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
-        out = match_recognize_sql(st, sql, streaming=True)
-        streamed = {tuple(r) for r in run_to_completion(out).collect()}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = replay_stream(df, ["ts", "id"], n_batches=2)
+    out = match_recognize_sql(st, sql, streaming=True)
+    streamed = {tuple(r) for r in run_to_completion(out).collect()}
     assert streamed == batch

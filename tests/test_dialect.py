@@ -158,97 +158,88 @@ def test_ddl_streaming_watermark_tumble(spark, sf_dir):
     """flink_ddl(streaming=True) yields a watermarked stream; a tumbling
     aggregate over it converges to the batch result on the same file."""
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.dialect import flink_ddl
-    from flink_ci_flink_spark.streaming import run_to_completion
+    from flink_ci_flink_spark.streaming import run_to_completion, scratch_dir
 
-    tmp = tempfile.mkdtemp(prefix="ddl_stream_")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", f"{tmp}/events.parquet")
-        ddl = f"""
-        CREATE TABLE ddl_stream_ev (
-          event_id BIGINT, ts TIMESTAMP(3), user_id BIGINT,
-          event_type STRING, value DOUBLE, props STRING,
-          WATERMARK FOR ts AS ts - INTERVAL '5' SECOND
-        ) WITH ('connector' = 'filesystem', 'path' = '{tmp}',
-                'format' = 'parquet')
-        """
-        st = flink_ddl(spark, ddl, streaming=True)
-        assert st.isStreaming
-        out = st.groupBy(F.window("ts", "6 hours")).count()
-        result = run_to_completion(out, "update")
-        got = {
-            (r.window.start, r["count"]) for r in result.collect()
-        }
-        batch = (
-            spark.read.parquet(f"{tmp}/events.parquet")
-            .groupBy(F.window("ts", "6 hours"))
-            .count()
-        )
-        want = {(r.window.start, r["count"]) for r in batch.collect()}
-        assert got == want
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = scratch_dir("ddl_stream_")
+    shutil.copy(f"{sf_dir}/events.parquet", f"{tmp}/events.parquet")
+    ddl = f"""
+    CREATE TABLE ddl_stream_ev (
+      event_id BIGINT, ts TIMESTAMP(3), user_id BIGINT,
+      event_type STRING, value DOUBLE, props STRING,
+      WATERMARK FOR ts AS ts - INTERVAL '5' SECOND
+    ) WITH ('connector' = 'filesystem', 'path' = '{tmp}',
+            'format' = 'parquet')
+    """
+    st = flink_ddl(spark, ddl, streaming=True)
+    assert st.isStreaming
+    out = st.groupBy(F.window("ts", "6 hours")).count()
+    result = run_to_completion(out, "update")
+    got = {
+        (r.window.start, r["count"]) for r in result.collect()
+    }
+    batch = (
+        spark.read.parquet(f"{tmp}/events.parquet")
+        .groupBy(F.window("ts", "6 hours"))
+        .count()
+    )
+    want = {(r.window.start, r["count"]) for r in batch.collect()}
+    assert got == want
 
 
 def test_ddl_insert_pipeline_end_to_end(spark, sf_dir):
     """Reference DDL + INSERT INTO + group-window SQL, verbatim: source
     table, sink table, tumbling aggregate — results land in the sink's
     parquet and match the direct computation."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.dialect import flink_ddl, flink_insert
+    from flink_ci_flink_spark.streaming import scratch_dir
 
-    sink_dir = tempfile.mkdtemp(prefix="ddl_sink_") + "/out"
-    try:
-        flink_ddl(
-            spark,
-            f"""
-            CREATE TABLE ddl_src (
-              event_id BIGINT, ts TIMESTAMP(3), user_id BIGINT,
-              event_type STRING, value DOUBLE, props STRING
-            ) WITH ('connector' = 'filesystem',
-                    'path' = '{sf_dir}/events.parquet', 'format' = 'parquet')
-            """,
-        )
-        flink_ddl(
-            spark,
-            f"""
-            CREATE TABLE ddl_sink (
-              ws TIMESTAMP(3), event_type STRING, n BIGINT
-            ) WITH ('connector' = 'filesystem',
-                    'path' = '{sink_dir}', 'format' = 'parquet')
-            """,
-        )
-        flink_insert(
-            spark,
-            """
-            INSERT INTO ddl_sink
-            SELECT TUMBLE_START(ts, INTERVAL '6' HOUR) AS ws, event_type,
-                   COUNT(*) AS n
-            FROM ddl_src GROUP BY TUMBLE(ts, INTERVAL '6' HOUR), event_type
-            """,
-        )
-        got = {
-            (r.ws, r.event_type, r.n)
-            for r in spark.read.parquet(sink_dir).collect()
-        }
-        want = {
-            (r["window"].start, r.event_type, r["count"])
-            for r in spark.table("ddl_src")
-            .groupBy(F.window("ts", "6 hours"), "event_type")
-            .count()
-            .collect()
-        }
-        assert got == want and got
-    finally:
-        shutil.rmtree(sink_dir.rsplit("/", 1)[0], ignore_errors=True)
+    sink_dir = scratch_dir("ddl_sink_") + "/out"
+    flink_ddl(
+        spark,
+        f"""
+        CREATE TABLE ddl_src (
+          event_id BIGINT, ts TIMESTAMP(3), user_id BIGINT,
+          event_type STRING, value DOUBLE, props STRING
+        ) WITH ('connector' = 'filesystem',
+                'path' = '{sf_dir}/events.parquet', 'format' = 'parquet')
+        """,
+    )
+    flink_ddl(
+        spark,
+        f"""
+        CREATE TABLE ddl_sink (
+          ws TIMESTAMP(3), event_type STRING, n BIGINT
+        ) WITH ('connector' = 'filesystem',
+                'path' = '{sink_dir}', 'format' = 'parquet')
+        """,
+    )
+    flink_insert(
+        spark,
+        """
+        INSERT INTO ddl_sink
+        SELECT TUMBLE_START(ts, INTERVAL '6' HOUR) AS ws, event_type,
+               COUNT(*) AS n
+        FROM ddl_src GROUP BY TUMBLE(ts, INTERVAL '6' HOUR), event_type
+        """,
+    )
+    got = {
+        (r.ws, r.event_type, r.n)
+        for r in spark.read.parquet(sink_dir).collect()
+    }
+    want = {
+        (r["window"].start, r.event_type, r["count"])
+        for r in spark.table("ddl_src")
+        .groupBy(F.window("ts", "6 hours"), "event_type")
+        .count()
+        .collect()
+    }
+    assert got == want and got
 
 
 # -- temporal (FOR SYSTEM_TIME AS OF) joins ---------------------------------

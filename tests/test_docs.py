@@ -309,3 +309,28 @@ def test_foreach_batch_queries_drain_in_core():
         if path == pkg / "sources" / "__init__.py":  # write_kafka
             hits = [h for h in hits if not h.endswith('.format("kafka")')]
         assert not hits, f"{path.relative_to(REPO)} drains its own query: {hits}"
+
+
+def test_scratch_dirs_have_one_owner():
+    # Every scratch directory comes from streaming/core.py::scratch_dir,
+    # under the one per-process root removed at exit: nothing else calls
+    # mkdtemp. (The escaped pattern does not match its own source.)
+    import ast
+
+    pkg = REPO / "flink_ci_flink_spark"
+    core = pkg / "streaming" / "core.py"
+    (owner,) = [
+        n for n in ast.parse(core.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "scratch_dir"
+    ]
+    inside = range(owner.lineno, owner.end_lineno + 1)
+    paths = [
+        *pkg.rglob("*.py"), REPO / "bench.py",
+        *(REPO / "tools").rglob("*.py"), *(REPO / "tests").rglob("*.py"),
+    ]
+    for path in sorted(paths):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if re.search(r"mkdtemp\(", line):
+                assert path == core and i in inside, (
+                    f"{path.relative_to(REPO)}:{i} makes its own scratch dir"
+                )

@@ -2059,14 +2059,13 @@ def test_ivfpq_full_probe_equals_exact(spark, sf_dir):
     assert len(exact & approx) / len(exact) >= 0.5
 
 
-def test_ivfpq_store_prunes_partitions(spark, sf_dir):
+def test_ivfpq_store_prunes_partitions(spark, sf_dir, tmp_path):
     """The materialized IVF-PQ code store is a real on-disk inverted file:
     probing reads ONLY the probed cells' partition directories (partition
     pruning on the literal cell filter), and the store round-trip returns
     rank-identical results to the in-memory pipeline."""
     import glob
     import re
-    import tempfile
 
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.pipeline.similarity import ivfpq_ann_topk
@@ -2076,7 +2075,7 @@ def test_ivfpq_store_prunes_partitions(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    store = tempfile.mkdtemp(prefix="ivfpq_store_test_")
+    store = str(tmp_path)
     via_store = ivfpq_ann_topk(
         emb, queries, k=3, n_cells=12, coarse_iterations=1,
         pq_iterations=1, store_dir=store,
@@ -2717,17 +2716,19 @@ def test_winnow_matches_python_reference(spark):
 
 
 def test_delta_dedup_explicit_index_dir(spark, tmp_path):
-    """Round-10 VERDICT #3 / ADVICE #3: delta_dedup(index_dir=...) writes
-    the corpus index to the CALLER-OWNED path (the cluster contract — a
-    shared-FS dir every executor can read) and leaves it in place, while
-    the default path goes to a tracked ephemeral tempdir that the module
-    cleans up at interpreter exit."""
+    """delta_dedup(index_dir=...) writes the corpus index to the
+    CALLER-OWNED path (the cluster contract — a shared-FS dir every
+    executor can read) and leaves it in place, outside the scratch root;
+    the default index goes to a fresh dir under the scratch root, which
+    is removed at interpreter exit."""
     import os
 
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.pipeline import dedup as dd
+    from flink_ci_flink_spark.streaming import scratch_dir
 
+    root = os.path.dirname(scratch_dir("probe_"))
     rows = [(1, "alpha beta gamma delta epsilon zeta", "new")] + [
         (i, "alpha beta gamma delta epsilon zeta", "old") for i in (7, 8)
     ]
@@ -2740,15 +2741,16 @@ def test_delta_dedup_explicit_index_dir(spark, tmp_path):
         ).collect()
     }
     assert out == {1: "drop"}
-    assert any(f.endswith(".parquet") for f in os.listdir(idx))
-    assert idx not in dd._EPHEMERAL_INDEX_DIRS
+    assert not idx.startswith(root + os.sep)
     # idempotent rebuild: an explicit dir is written with overwrite
     dd.delta_dedup(df, F.col("source") == "new", index_dir=idx).collect()
-    # default path: tracked for exit-time cleanup
-    before = len(dd._EPHEMERAL_INDEX_DIRS)
+    assert any(f.endswith(".parquet") for f in os.listdir(idx))
+    # default path: a fresh index dir under the scratch root
+    before = set(os.listdir(root))
     dd.delta_dedup(df, F.col("source") == "new").collect()
-    assert len(dd._EPHEMERAL_INDEX_DIRS) == before + 1
-    assert dd._EPHEMERAL_INDEX_DIRS[-1].startswith("/tmp")
+    (new,) = set(os.listdir(root)) - before
+    assert new.startswith("delta_dedup_index_")
+    assert any(f.endswith(".parquet") for f in os.listdir(f"{root}/{new}/index"))
 
 
 def test_delta_dedup_corpus_cap_never_binds_at_graded_sfs(spark):

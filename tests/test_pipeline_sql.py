@@ -239,7 +239,7 @@ def test_fold_spec_validation():
 def test_declarative_fold_streaming_equals_batch(spark, sf_dir):
     """A FoldSpec run as a 3-batch replayed stream equals its one-shot
     batch twin — the associativity contract realized on jvm_keyed_fold."""
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.declarative import (
         FoldSpec,
         declarative_fold_batch,
@@ -258,10 +258,7 @@ def test_declarative_fold_streaming_equals_batch(spark, sf_dir):
         merge="n := sum(n); cents := sum(cents); mx := max(mx)",
         emit="avg_cents := CAST(FLOOR(cents * 1.0 / n) AS BIGINT)",
     )
-    tmp = stage_ordered_replay(ev, ["ts", "event_id"])
-    got = declarative_keyed_fold(
-        file_stream(spark, tmp, ev.schema, max_files_per_trigger=1), spec
-    )
+    got = declarative_keyed_fold(replay_stream(ev, ["ts", "event_id"]), spec)
     want = declarative_fold_batch(ev, spec)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 

@@ -1,10 +1,10 @@
 """The foreachBatch replay-state contract of `streaming/core.py`: epoch
-stores (`append_epoch` / `read_epochs`) and batch-id-versioned state
-(`VersionedState`), including the degenerate all-empty stream."""
+stores (`append_epoch` / `read_epochs`), batch-id-versioned state
+(`VersionedState`), including the degenerate all-empty stream, and the
+one per-process root every scratch directory lives under
+(`scratch_dir`)."""
 
 import os
-import shutil
-import tempfile
 
 import pytest
 
@@ -54,7 +54,7 @@ def test_a_failed_batch_prunes_nothing(tmp_path):
     assert _dirs(tmp_path) == ["v0", "v1", "v2"]
 
 
-def test_empty_stream_finalizes_to_zero_rows(spark, sf_dir):
+def test_empty_stream_finalizes_to_zero_rows(spark, sf_dir, tmp_path):
     """Every batch empty: an unpartitioned store (line dedup) holds
     zero-row files that carry the schema; a cell-partitioned one (IVF)
     holds no file at all, so its finalizer names the schema. Both
@@ -69,34 +69,28 @@ def test_empty_stream_finalizes_to_zero_rows(spark, sf_dir):
         ivf_centroids,
         streaming_ivf_ingest,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
 
     t = load_tables(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="empty_stream_")
-    docs = t.documents.limit(0)
-    stage = stage_ordered_replay(docs, ["doc_id"])
+    base = str(tmp_path)
     streaming_line_dedup_ingest(
-        file_stream(spark, stage, docs.schema, max_files_per_trigger=1),
+        replay_stream(t.documents.limit(0), ["doc_id"]),
         f"{base}/segs",
         checkpoint=f"{base}/ckpt_segs",
     )
     assert finalize_line_dedup(spark, f"{base}/segs").count() == 0
 
     centroids = ivf_centroids(t.embeddings, n_cells=4, iterations=1)
-    emb = t.embeddings.limit(0)
-    stage_emb = stage_ordered_replay(emb, ["vec_id"])
     streaming_ivf_ingest(
-        file_stream(spark, stage_emb, emb.schema, max_files_per_trigger=1),
+        replay_stream(t.embeddings.limit(0), ["vec_id"]),
         centroids,
         f"{base}/ivf",
         checkpoint=f"{base}/ckpt_ivf",
     )
     assert finalize_knn_join(spark, f"{base}/ivf", centroids).count() == 0
-    for d in (base, stage, stage_emb):
-        shutil.rmtree(d, ignore_errors=True)
 
 
-def test_span_registry_read_failure_raises(spark, sf_dir):
+def test_span_registry_read_failure_raises(spark, sf_dir, tmp_path):
     """A registry that exists but cannot be read fails the batch instead
     of being silently reset to the batch's delta; only a registry that
     does not exist yet reads as empty. The drain stops its query on the
@@ -105,25 +99,22 @@ def test_span_registry_read_failure_raises(spark, sf_dir):
 
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.pipeline.spans import streaming_span_dedup
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
 
     docs = load_tables(spark, sf_dir).documents.select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="span_registry_")
-    stage = stage_ordered_replay(docs, ["doc_id"], n_batches=1)
+    base = str(tmp_path)
     registry = f"{base}/registry"
     os.makedirs(registry)
     with open(f"{registry}/part-00000.parquet", "w") as fh:
         fh.write("not a parquet file")
     with pytest.raises(StreamingQueryException):
         streaming_span_dedup(
-            file_stream(spark, stage, docs.schema),
+            replay_stream(docs, ["doc_id"], n_batches=1),
             f"{base}/windows",
             registry,
             checkpoint=f"{base}/ckpt",
         )
     assert spark.streams.active == []  # the failed drain stopped its query
-    for d in (base, stage):
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_read_epochs_of_a_store_never_written(spark, tmp_path):
@@ -136,3 +127,63 @@ def test_read_epochs_of_a_store_never_written(spark, tmp_path):
         read_epochs(spark, never)
     empty = read_epochs(spark, never, ["k"], "k long, v string")
     assert empty.columns == ["k", "v"] and empty.count() == 0
+
+
+def test_scratch_root_is_made_on_first_use(monkeypatch, tmp_path):
+    """The scratch root is made by the first `scratch_dir` call, under the
+    temp dir in effect then, and every later directory shares it."""
+    import tempfile
+
+    from flink_ci_flink_spark.streaming import core
+
+    monkeypatch.setattr(core, "_scratch_root", None)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert os.listdir(tmp_path) == []
+    a, b = core.scratch_dir("a_"), core.scratch_dir("b_")
+    (root,) = os.listdir(tmp_path)
+    assert root.startswith("spark_graft_")
+    assert os.path.dirname(a) == os.path.dirname(b) == str(tmp_path / root)
+    assert os.path.basename(a).startswith("a_") and a != b
+
+
+def test_scratch_root_is_removed_at_exit(tmp_path):
+    """A process's scratch root, with everything in it, is gone once the
+    process exits; the root follows the ``TMPDIR`` it ran with."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from flink_ci_flink_spark.streaming.core import scratch_dir\n"
+        "d = scratch_dir('x_')\n"
+        "open(d + '/f', 'w').close()\n"
+        "print(d)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True, text=True, check=True,
+    )
+    d = out.stdout.strip()
+    assert d.startswith(str(tmp_path) + os.sep)
+    assert not os.path.exists(d)
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("spark_graft_")]
+
+
+def test_fold_without_state_dir_writes_under_the_root(spark):
+    """A fold called without ``state_dir`` keeps its versions in a fresh
+    directory under the scratch root, beside its staged replay."""
+    from flink_ci_flink_spark.streaming import replay_stream, scratch_dir
+    from flink_ci_flink_spark.streaming.process import streaming_running_agg_jvm
+
+    root = os.path.dirname(scratch_dir("probe_"))
+    before = set(os.listdir(root))
+    df = spark.createDataFrame([(i % 3, i) for i in range(30)], "k INT, seq LONG")
+    out = streaming_running_agg_jvm(
+        replay_stream(df, ["seq"]), ["k"], {"n": ("count", "seq")}
+    )
+    assert sorted(map(tuple, out.collect())) == [(0, 10), (1, 10), (2, 10)]
+    stage, state = sorted(set(os.listdir(root)) - before)
+    assert stage.startswith("replay_stage_") and state.startswith("state_")
+    assert sorted(os.listdir(f"{root}/{state}")) == ["v1", "v2"]  # 3 batches

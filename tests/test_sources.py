@@ -2,54 +2,43 @@
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 
-def test_csv_json_orc_roundtrip(spark, sf_dir):
+def test_csv_json_orc_roundtrip(spark, sf_dir, tmp_path):
     from flink_ci_flink_spark.catalog import load_tables
 
     nation = load_tables(spark, sf_dir).nation
     want = {(r.n_nationkey, r.n_name, r.n_regionkey) for r in nation.collect()}
-    tmp = tempfile.mkdtemp(prefix="fmt_")
-    try:
-        for fmt in ("csv", "json", "orc", "parquet"):
-            path = f"{tmp}/{fmt}"
-            w = nation.write.mode("overwrite")
-            if fmt == "csv":
-                w = w.option("header", True)
-            w.format(fmt).save(path)
-            r = spark.read
-            if fmt == "csv":
-                r = r.option("header", True).schema(nation.schema)
-            elif fmt == "json":
-                r = r.schema(nation.schema)
-            got = {
-                (x.n_nationkey, x.n_name, x.n_regionkey)
-                for x in r.format(fmt).load(path).collect()
-            }
-            assert got == want, fmt
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    for fmt in ("csv", "json", "orc", "parquet"):
+        path = str(tmp_path / fmt)
+        w = nation.write.mode("overwrite")
+        if fmt == "csv":
+            w = w.option("header", True)
+        w.format(fmt).save(path)
+        r = spark.read
+        if fmt == "csv":
+            r = r.option("header", True).schema(nation.schema)
+        elif fmt == "json":
+            r = r.schema(nation.schema)
+        got = {
+            (x.n_nationkey, x.n_name, x.n_regionkey)
+            for x in r.format(fmt).load(path).collect()
+        }
+        assert got == want, fmt
 
 
-def test_partitioned_sink_prunes(spark, sf_dir):
+def test_partitioned_sink_prunes(spark, sf_dir, tmp_path):
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.sources import write_partitioned
 
     nation = load_tables(spark, sf_dir).nation
-    tmp = tempfile.mkdtemp(prefix="part_")
-    try:
-        write_partitioned(nation, f"{tmp}/t", ["n_regionkey"])
-        df = spark.read.parquet(f"{tmp}/t").filter(F.col("n_regionkey") == 2)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert df.count() == nation.filter("n_regionkey = 2").count()
-        # partition filter must prune at scan level, not post-filter
-        assert "PartitionFilters: [isnotnull(n_regionkey" in plan or "n_regionkey" in plan
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    write_partitioned(nation, str(tmp_path / "t"), ["n_regionkey"])
+    df = spark.read.parquet(str(tmp_path / "t")).filter(F.col("n_regionkey") == 2)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert df.count() == nation.filter("n_regionkey = 2").count()
+    # partition filter must prune at scan level, not post-filter
+    assert "PartitionFilters: [isnotnull(n_regionkey" in plan or "n_regionkey" in plan
 
 
 def test_payload_decoders(spark):
@@ -66,19 +55,12 @@ def test_payload_decoders(spark):
     assert out.dc.a == 7 and out.dc.b == "y"
 
 
-def test_text_source(spark):
-    import os
+def test_text_source(spark, tmp_path):
+    (tmp_path / "f.txt").write_text("hello\nworld\n")
+    from flink_ci_flink_spark.sources import read_text
 
-    tmp = tempfile.mkdtemp(prefix="txt_")
-    try:
-        with open(os.path.join(tmp, "f.txt"), "w") as f:
-            f.write("hello\nworld\n")
-        from flink_ci_flink_spark.sources import read_text
-
-        rows = read_text(spark, tmp).collect()
-        assert {r.value for r in rows} == {"hello", "world"}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    rows = read_text(spark, str(tmp_path)).collect()
+    assert {r.value for r in rows} == {"hello", "world"}
 
 
 def test_avro_codec_roundtrip_python():

@@ -4,9 +4,6 @@ final-state comparison, not change-stream comparison)."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,16 +15,13 @@ def events_stream_dir(spark, sf_dir):
     """events table split into 3 time-ordered parquet files (3 micro-batches)."""
     from flink_ci_flink_spark.catalog import load_tables
 
-    tmp = tempfile.mkdtemp(prefix="events_stream_")
     # go through the catalog so ts is a real timestamp (nanos → micros)
     ev = load_tables(spark, sf_dir).events.orderBy("ts")
     n = ev.count()
     rows = ev.collect()
     third = n // 3
     chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    stage_chunks(spark, tmp, chunks, ev.schema)
-    yield tmp, ev.schema
-    shutil.rmtree(tmp, ignore_errors=True)
+    return stage_chunks(spark, chunks, ev.schema), ev.schema
 
 
 def _events_stream(spark, events_stream_dir, per_trigger=1):
@@ -262,19 +256,14 @@ def test_streaming_top_n_jvm_matches_batch(spark, events_stream_dir):
     from flink_ci_flink_spark.streaming.process import streaming_top_n_jvm
 
     stream = _events_stream(spark, events_stream_dir, per_trigger=1)
-    state = tempfile.mkdtemp(prefix="topn_jvm_")
-    try:
-        final = streaming_top_n_jvm(
-            stream,
-            partition_by=["user_id"],
-            order_by=[F.desc("value"), F.asc("event_id")],
-            n=3,
-            select_cols=["user_id", "value", "event_id"],
-            state_dir=state,
-        )
-        got = {(r.user_id, r.event_id): r.value for r in final.collect()}
-    finally:
-        shutil.rmtree(state, ignore_errors=True)
+    final = streaming_top_n_jvm(
+        stream,
+        partition_by=["user_id"],
+        order_by=[F.desc("value"), F.asc("event_id")],
+        n=3,
+        select_cols=["user_id", "value", "event_id"],
+    )
+    got = {(r.user_id, r.event_id): r.value for r in final.collect()}
 
     path, schema = events_stream_dir
     from pyspark.sql.window import Window
@@ -376,14 +365,13 @@ def test_streaming_cdc_upsert_matches_batch_materialize(spark, sf_dir):
     import glob
     import os
     import shutil
-    import tempfile
 
     from flink_ci_flink_spark.sources.cdc import (
         materialize,
         parse_debezium,
         to_changelog,
     )
-    from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream, scratch_dir
     from flink_ci_flink_spark.streaming.core import drain_foreach_batch
 
     rows = [
@@ -398,60 +386,54 @@ def test_streaming_cdc_upsert_matches_batch_materialize(spark, sf_dir):
         ('{"before": {"id": %d, "v": "v%d"}, "after": null, "op": "d", "ts_ms": 3}' % (i, i), 2)
         for i in range(0, 20, 7)
     ]
-    tmp = tempfile.mkdtemp(prefix="cdc_stream_")
-    ckpt = tempfile.mkdtemp(prefix="cdc_ckpt_")
-    try:
-        # three time-ordered files -> three micro-batches (insert/update/delete)
-        for phase in range(3):
-            batch = [(v,) for v, p in rows if p == phase]
-            spark.createDataFrame(batch, "value string").coalesce(1).write.mode(
-                "overwrite"
-            ).format("text").save(f"{tmp}/stage")
-            (part,) = glob.glob(f"{tmp}/stage/part-*.txt")
-            os.rename(part, f"{tmp}/{phase:03d}.txt")
-        shutil.rmtree(f"{tmp}/stage")
+    tmp = scratch_dir("cdc_stream_")
+    ckpt = scratch_dir("cdc_ckpt_")
+    # three time-ordered files -> three micro-batches (insert/update/delete)
+    for phase in range(3):
+        batch = [(v,) for v, p in rows if p == phase]
+        spark.createDataFrame(batch, "value string").coalesce(1).write.mode(
+            "overwrite"
+        ).format("text").save(f"{tmp}/stage")
+        (part,) = glob.glob(f"{tmp}/stage/part-*.txt")
+        os.rename(part, f"{tmp}/{phase:03d}.txt")
+    shutil.rmtree(f"{tmp}/stage")
 
-        state: dict[int, tuple] = {}
+    state: dict[int, tuple] = {}
 
-        def merge(batch_df, batch_id):
-            cl = to_changelog(parse_debezium(batch_df, "value", "id bigint, v string"))
-            for r in cl.orderBy("ts_ms").collect():  # tiny per-batch changelog
-                if r["row_kind"] in ("+I", "+U"):
-                    state[r["row"]["id"]] = tuple(r["row"])
-                elif r["row_kind"] == "-D":
-                    state.pop(r["row"]["id"], None)
+    def merge(batch_df, batch_id):
+        cl = to_changelog(parse_debezium(batch_df, "value", "id bigint, v string"))
+        for r in cl.orderBy("ts_ms").collect():  # tiny per-batch changelog
+            if r["row_kind"] in ("+I", "+U"):
+                state[r["row"]["id"]] = tuple(r["row"])
+            elif r["row_kind"] == "-D":
+                state.pop(r["row"]["id"], None)
 
-        stream = file_stream(
-            spark, tmp, "value string", max_files_per_trigger=1, fmt="text"
+    stream = file_stream(
+        spark, tmp, "value string", max_files_per_trigger=1, fmt="text"
+    )
+    drain_foreach_batch(stream, merge, ckpt)
+
+    batch_msgs = spark.createDataFrame([(v,) for v, _ in rows], "value string")
+    want = sorted(
+        map(
+            tuple,
+            materialize(
+                to_changelog(parse_debezium(batch_msgs, "value", "id bigint, v string")),
+                ["id"],
+            ).collect(),
         )
-        drain_foreach_batch(stream, merge, ckpt)
-
-        batch_msgs = spark.createDataFrame([(v,) for v, _ in rows], "value string")
-        want = sorted(
-            map(
-                tuple,
-                materialize(
-                    to_changelog(parse_debezium(batch_msgs, "value", "id bigint, v string")),
-                    ["id"],
-                ).collect(),
-            )
-        )
-        assert sorted(state.values()) == want
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    )
+    assert sorted(state.values()) == want
 
 
 def test_value_histogram_fold_batching_insensitive(spark, sf_dir):
     """Per-bin SUM merge is exact integer algebra: the streamed histogram
     equals the one-shot batch histogram under any chunking, and the
     quantile read-off error is bounded by the bin width."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.catalog import load_tables
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import (
         streaming_value_histogram_jvm,
     )
@@ -460,15 +442,13 @@ def test_value_histogram_fold_batching_insensitive(spark, sf_dir):
     ev = t.events.select("event_type", "value", "ts", "event_id").limit(2000)
 
     def run(n_batches):
-        tmp = stage_ordered_replay(ev, ["ts", "event_id"], n_batches=n_batches)
         out = streaming_value_histogram_jvm(
-            file_stream(spark, tmp, ev.schema, max_files_per_trigger=1),
+            replay_stream(ev, ["ts", "event_id"], n_batches=n_batches),
             "value",
             ["event_type"],
             lo=0.0,
             width=2.0,
             n_bins=256,
-            state_dir=tempfile.mkdtemp(prefix="vh_test_"),
         )
         return {tuple(r) for r in out.collect()}
 
@@ -548,28 +528,22 @@ def test_stage_ordered_replay_file_contract(spark):
         return tuple(r[c] for c in order)
 
     tmp = stage_ordered_replay(df, order, n_batches=4)
-    try:
-        names, files = _staged_files(tmp)
-        assert names == ["001.parquet", "002.parquet", "003.parquet", "004.parquet"]
-        for f in files:
-            assert [key(r) for r in f] == sorted(key(r) for r in f)
-        for a, b in zip(files, files[1:]):
-            assert key(a[-1]) <= key(b[0])
-        staged = sorted((r["k"], r["seq"], r["payload"]) for f in files for r in f)
-        assert staged == sorted(rows)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    names, files = _staged_files(tmp)
+    assert names == ["001.parquet", "002.parquet", "003.parquet", "004.parquet"]
+    for f in files:
+        assert [key(r) for r in f] == sorted(key(r) for r in f)
+    for a, b in zip(files, files[1:]):
+        assert key(a[-1]) <= key(b[0])
+    staged = sorted((r["k"], r["seq"], r["payload"]) for f in files for r in f)
+    assert staged == sorted(rows)
 
     for data, want in (([], [0, 0, 0]), (rows[:2], [1, 1, 0])):
         tmp = stage_ordered_replay(
             spark.createDataFrame(data, df.schema), order, n_batches=3
         )
-        try:
-            names, files = _staged_files(tmp)
-            assert names == ["001.parquet", "002.parquet", "003.parquet"]
-            assert [len(f) for f in files] == want
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+        names, files = _staged_files(tmp)
+        assert names == ["001.parquet", "002.parquet", "003.parquet"]
+        assert [len(f) for f in files] == want
 
 
 def test_run_to_completion_sizes_state_partitions(spark):
@@ -579,11 +553,7 @@ def test_run_to_completion_sizes_state_partitions(spark):
     from pyspark.errors import AnalysisException
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from flink_ci_flink_spark.streaming import (
-        file_stream,
-        run_to_completion,
-        stage_ordered_replay,
-    )
+    from flink_ci_flink_spark.streaming import replay_stream, run_to_completion
 
     class StatePartitions(StreamingQueryListener):
         def __init__(self):
@@ -601,13 +571,12 @@ def test_run_to_completion_sizes_state_partitions(spark):
     df = spark.createDataFrame(
         [(i % 3, i) for i in range(30)], "k INT, seq LONG"
     )
-    tmp = stage_ordered_replay(df, ["seq"])
+    stream = replay_stream(df, ["seq"])
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     listener = StatePartitions()
     spark.streams.addListener(listener)
     try:
-        stream = file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
         result = run_to_completion(stream.groupBy("k").count(), "complete")
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         assert listener.seen
@@ -626,31 +595,21 @@ def test_run_to_completion_sizes_state_partitions(spark):
     finally:
         spark.streams.removeListener(listener)
         spark.conf.set("spark.sql.shuffle.partitions", old)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_run_to_completion_leaves_no_view(spark):
     """The memory sink's view is dropped on return; the returned DataFrame
     still reads the rows."""
-    from flink_ci_flink_spark.streaming import (
-        file_stream,
-        run_to_completion,
-        stage_ordered_replay,
-    )
+    from flink_ci_flink_spark.streaming import replay_stream, run_to_completion
 
     df = spark.createDataFrame([(i % 3, i) for i in range(30)], "k INT, seq LONG")
-    tmp = stage_ordered_replay(df, ["seq"])
-    try:
-        before = sorted(t.name for t in spark.catalog.listTables())
-        result = run_to_completion(
-            file_stream(spark, tmp, df.schema, max_files_per_trigger=1)
-        )
-        assert sorted(t.name for t in spark.catalog.listTables()) == before
-        assert result.count() == 30
-        assert sorted(tuple(r) for r in result.groupBy("k").count().collect()) == [
-            (0, 10),
-            (1, 10),
-            (2, 10),
-        ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    stream = replay_stream(df, ["seq"])
+    before = sorted(t.name for t in spark.catalog.listTables())
+    result = run_to_completion(stream)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert result.count() == 30
+    assert sorted(tuple(r) for r in result.groupBy("k").count().collect()) == [
+        (0, 10),
+        (1, 10),
+        (2, 10),
+    ]

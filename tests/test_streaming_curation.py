@@ -8,9 +8,6 @@ chaining filter -> keyed deduplicate -> windowless aggregate)."""
 from __future__ import annotations
 
 import glob
-import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,14 +20,11 @@ def docs_stream_dir(spark, sf_dir):
     """documents table split into 3 parquet files (3 micro-batches)."""
     from flink_ci_flink_spark.catalog import load_tables
 
-    tmp = tempfile.mkdtemp(prefix="docs_stream_")
     d = load_tables(spark, sf_dir).documents.orderBy("doc_id")
     rows = d.collect()
     third = len(rows) // 3
     chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    stage_chunks(spark, tmp, chunks, d.schema)
-    yield tmp, d.schema
-    shutil.rmtree(tmp, ignore_errors=True)
+    return stage_chunks(spark, chunks, d.schema), d.schema
 
 
 def test_streaming_curation_matches_batch(spark, docs_stream_dir):
@@ -113,14 +107,12 @@ def test_streaming_curation_matches_batch(spark, docs_stream_dir):
     assert got == want
 
 
-def test_streaming_span_dedup_matches_batch(spark, docs_stream_dir):
+def test_streaming_span_dedup_matches_batch(spark, docs_stream_dir, tmp_path):
     """Streaming span-dedup ingest (per-batch window append + incremental
     min/max registry merge) finalizes to EXACTLY the batch
     span_dedup_stats over the full corpus — cross-batch duplicate windows
     included (the chunks split the corpus, so most duplicate pairs span
     micro-batches)."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.spans import (
         finalize_span_stats,
         span_dedup_stats,
@@ -129,7 +121,7 @@ def test_streaming_span_dedup_matches_batch(spark, docs_stream_dir):
     from flink_ci_flink_spark.streaming import file_stream
 
     path, schema = docs_stream_dir
-    base = tempfile.mkdtemp(prefix="span_stream_")
+    base = str(tmp_path)
     windows_dir = f"{base}/windows"
     registry_dir = f"{base}/registry"
     stream = file_stream(spark, path, schema, max_files_per_trigger=1)
@@ -146,16 +138,13 @@ def test_streaming_span_dedup_matches_batch(spark, docs_stream_dir):
     )
     want = {tuple(r) for r in span_dedup_stats(batch_docs).collect()}
     assert got == want and len(want) > 0
-    shutil.rmtree(base, ignore_errors=True)
 
 
-def test_streaming_minhash_dedup_matches_batch(spark, docs_stream_dir):
+def test_streaming_minhash_dedup_matches_batch(spark, docs_stream_dir, tmp_path):
     """Streaming MinHash-LSH ingest (per-batch band-row append) finalizes
     to EXACTLY the batch minhash_lsh_pairs over the full corpus — the
     signature work happens once at ingest, pair generation once at
     finalize."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.dedup import (
         finalize_minhash_pairs,
         minhash_lsh_pairs,
@@ -164,7 +153,7 @@ def test_streaming_minhash_dedup_matches_batch(spark, docs_stream_dir):
     from flink_ci_flink_spark.streaming import file_stream
 
     path, schema = docs_stream_dir
-    base = tempfile.mkdtemp(prefix="mh_stream_")
+    base = str(tmp_path)
     stream = file_stream(spark, path, schema, max_files_per_trigger=1)
     streaming_minhash_dedup(
         stream, f"{base}/bands", checkpoint=f"{base}/ckpt"
@@ -179,15 +168,12 @@ def test_streaming_minhash_dedup_matches_batch(spark, docs_stream_dir):
         for r in minhash_lsh_pairs(batch_docs).collect()
     }
     assert got == want and len(want) > 0
-    shutil.rmtree(base, ignore_errors=True)
 
 
-def test_span_finalize_is_replay_idempotent(spark, docs_stream_dir):
+def test_span_finalize_is_replay_idempotent(spark, docs_stream_dir, tmp_path):
     """foreachBatch is at-least-once: a replayed epoch re-appends its
     window rows. Finalize must collapse the duplicates — stats equal the
     batch result even when a whole chunk's windows land twice."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.pipeline.spans import (
@@ -197,7 +183,7 @@ def test_span_finalize_is_replay_idempotent(spark, docs_stream_dir):
     )
 
     path, schema = docs_stream_dir
-    base = tempfile.mkdtemp(prefix="span_replay_")
+    base = str(tmp_path)
     windows_dir = f"{base}/windows"
     files = sorted(glob.glob(f"{path}/*.parquet"))
     for i, f in enumerate(files):
@@ -219,14 +205,11 @@ def test_span_finalize_is_replay_idempotent(spark, docs_stream_dir):
     batch_docs = spark.read.parquet(*files)
     want = {tuple(r) for r in span_dedup_stats(batch_docs).collect()}
     assert got == want and len(want) > 0
-    shutil.rmtree(base, ignore_errors=True)
 
 
-def test_minhash_finalize_is_replay_idempotent(spark, docs_stream_dir):
+def test_minhash_finalize_is_replay_idempotent(spark, docs_stream_dir, tmp_path):
     """A replayed epoch's re-appended band rows must not produce
     id_a==id_b self-pairs or inflate n_bands_shared."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.pipeline.dedup import (
@@ -236,7 +219,7 @@ def test_minhash_finalize_is_replay_idempotent(spark, docs_stream_dir):
     )
 
     path, schema = docs_stream_dir
-    base = tempfile.mkdtemp(prefix="mh_replay_")
+    base = str(tmp_path)
     files = sorted(glob.glob(f"{path}/*.parquet"))
     for i, f in enumerate(files):
         chunk = spark.read.schema(schema).parquet(f)
@@ -255,15 +238,12 @@ def test_minhash_finalize_is_replay_idempotent(spark, docs_stream_dir):
         for r in minhash_lsh_pairs(batch_docs).collect()
     }
     assert got == want and len(want) > 0
-    shutil.rmtree(base, ignore_errors=True)
 
 
-def test_streaming_lm_screen_matches_batch(spark, docs_stream_dir):
+def test_streaming_lm_screen_matches_batch(spark, docs_stream_dir, tmp_path):
     """Streaming LM-screen ingest (per-batch positional bigram append)
     finalizes to EXACTLY the batch rare_bigram_stats over the full
     corpus — model training and scoring both derive from the store."""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.text import (
         finalize_lm_screen,
         rare_bigram_stats,
@@ -272,7 +252,7 @@ def test_streaming_lm_screen_matches_batch(spark, docs_stream_dir):
     from flink_ci_flink_spark.streaming import file_stream
 
     path, schema = docs_stream_dir
-    base = tempfile.mkdtemp(prefix="lm_stream_")
+    base = str(tmp_path)
     stream = file_stream(spark, path, schema, max_files_per_trigger=1)
     streaming_lm_screen_ingest(
         stream, f"{base}/store", checkpoint=f"{base}/ckpt"
@@ -291,16 +271,13 @@ def test_streaming_lm_screen_matches_batch(spark, docs_stream_dir):
         ).collect()
     }
     assert got == want and len(want) > 0
-    shutil.rmtree(base, ignore_errors=True)
 
 
-def test_lm_screen_finalize_is_replay_idempotent(spark, docs_stream_dir):
+def test_lm_screen_finalize_is_replay_idempotent(spark, docs_stream_dir, tmp_path):
     """A replayed epoch re-appends its bigram rows; the (id, pos) natural
     key collapses them at finalize — scores equal the batch screen even
     when a whole chunk lands twice. (Repeated bigrams WITHIN a doc are
     legitimate and must survive the dedup — only replays collapse.)"""
-    import tempfile
-
     from flink_ci_flink_spark.pipeline.text import (
         bigrams,
         finalize_lm_screen,
@@ -308,7 +285,7 @@ def test_lm_screen_finalize_is_replay_idempotent(spark, docs_stream_dir):
     )
 
     path, schema = docs_stream_dir
-    base = tempfile.mkdtemp(prefix="lm_replay_")
+    base = str(tmp_path)
     store = f"{base}/store"
     files = sorted(glob.glob(f"{path}/*.parquet"))
     for i, f in enumerate(files):
@@ -333,16 +310,13 @@ def test_lm_screen_finalize_is_replay_idempotent(spark, docs_stream_dir):
         for r in rare_bigram_stats(batch_docs, rare_below=15, train_mod=2).collect()
     }
     assert got == want and len(want) > 0
-    shutil.rmtree(base, ignore_errors=True)
 
 
-def test_streaming_ivf_ingest_matches_batch_knn(spark, sf_dir):
+def test_streaming_ivf_ingest_matches_batch_knn(spark, sf_dir, tmp_path):
     """Streaming ingest into a pretrained IVF index (map-only cell
     assignment, cell-partitioned store) finalizes to EXACTLY the batch
     kNN self-join with the same coarse quantizer — including after a
     replayed micro-batch (id-dedup at finalize)."""
-    import tempfile
-
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.pipeline.similarity import (
         finalize_knn_join,
@@ -356,15 +330,14 @@ def test_streaming_ivf_ingest_matches_batch_knn(spark, sf_dir):
     emb = load_tables(spark, sf_dir).embeddings
     centroids = ivf_centroids(emb, n_cells=8, iterations=2)
 
-    base = tempfile.mkdtemp(prefix="ivf_stream_")
+    base = str(tmp_path)
     rows = emb.orderBy("vec_id").collect()
     third = len(rows) // 3
     chunks = [rows[:third], rows[third : 2 * third], rows[2 * third :]]
-    os.makedirs(f"{base}/stream")
-    stage_chunks(spark, f"{base}/stream", chunks, emb.schema)
+    src = stage_chunks(spark, chunks, emb.schema)
 
-    redeliver_first_batch(f"{base}/stream")  # at-least-once: chunk 0 again
-    stream = file_stream(spark, f"{base}/stream", emb.schema, max_files_per_trigger=1)
+    redeliver_first_batch(src)  # at-least-once: chunk 0 again
+    stream = file_stream(spark, src, emb.schema, max_files_per_trigger=1)
     streaming_ivf_ingest(
         stream, centroids, f"{base}/store", checkpoint=f"{base}/ckpt"
     )
@@ -378,16 +351,13 @@ def test_streaming_ivf_ingest_matches_batch_knn(spark, sf_dir):
         for r in knn_join(emb, centroids=centroids).collect()
     }
     assert got == want and len(want) > 0
-    shutil.rmtree(base, ignore_errors=True)
 
 
-def test_streaming_line_dedup_matches_batch(spark, docs_stream_dir):
+def test_streaming_line_dedup_matches_batch(spark, docs_stream_dir, tmp_path):
     """Streaming line-dedup ingest (per-batch segment append) finalizes to
     EXACTLY the batch line_dedup over the full corpus — segmentation runs
     once at ingest, first-occurrence resolution once at finalize; a
     replayed epoch's duplicate appends collapse in finalize."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from flink_ci_flink_spark.pipeline.dedup import (
@@ -399,7 +369,7 @@ def test_streaming_line_dedup_matches_batch(spark, docs_stream_dir):
     from flink_ci_flink_spark.streaming import file_stream
 
     path, schema = docs_stream_dir
-    base = tempfile.mkdtemp(prefix="line_stream_")
+    base = str(tmp_path)
     stream = file_stream(spark, path, schema, max_files_per_trigger=1)
     streaming_line_dedup_ingest(
         stream, f"{base}/segs", checkpoint=f"{base}/ckpt"
@@ -422,7 +392,6 @@ def test_streaming_line_dedup_matches_batch(spark, docs_stream_dir):
         for r in line_dedup(batch_docs).collect()
     }
     assert got == want and len(want) > 0
-    shutil.rmtree(base, ignore_errors=True)
 
 
 def test_mg_merge_guarantees_under_random_chunking():
@@ -467,21 +436,18 @@ def test_mg_merge_guarantees_under_random_chunking():
 def test_streaming_mg_fold_matches_python_chain(spark):
     """The per-batch Catalyst MG fold (jvm_keyed_fold) equals the Python
     mergeable-summaries chain over the identical ntile chunking."""
-    import tempfile
     from collections import Counter
 
     from flink_ci_flink_spark.pipeline.sketches import _mg_merge
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_misra_gries_jvm
 
     rows = [(i, (i * i * 7 + i) % 40) for i in range(500)]  # skewed-ish
     df = spark.createDataFrame(rows, "seq long, item long")
-    tmp = stage_ordered_replay(df, ["seq"])
     out = streaming_misra_gries_jvm(
-        file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
+        replay_stream(df, ["seq"]),
         item_col="item",
         k=16,
-        state_dir=tempfile.mkdtemp(prefix="mg_state_"),
     )
     got = {(r.item, r.cnt) for r in out.collect()}
 
@@ -502,15 +468,13 @@ def test_centroid_refresh_batching_insensitive(spark, sf_dir):
     streamed centroid refresh independent of how the stream is chunked —
     2-batch and 5-batch replays of the same vectors produce identical
     refreshed centroids, equal to the one-shot batch means."""
-    import tempfile
-
     from flink_ci_flink_spark.catalog import load_tables
     from flink_ci_flink_spark.pipeline.similarity import (
         assign_cells_int_expr,
         ivf_centroids_fp,
         quantize_fp,
     )
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import (
         streaming_centroid_refresh_jvm,
     )
@@ -521,11 +485,8 @@ def test_centroid_refresh_batching_insensitive(spark, sf_dir):
     centroids, _ = ivf_centroids_fp(emb, iterations=2)
 
     def run(n_batches):
-        tmp = stage_ordered_replay(emb, ["vec_id"], n_batches=n_batches)
         out = streaming_centroid_refresh_jvm(
-            file_stream(spark, tmp, emb.schema, max_files_per_trigger=1),
-            centroids,
-            tempfile.mkdtemp(prefix="cr_test_"),
+            replay_stream(emb, ["vec_id"], n_batches=n_batches), centroids
         )
         return {tuple(r) for r in out.collect()}
 

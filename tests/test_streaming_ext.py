@@ -269,9 +269,6 @@ def test_streaming_top_n_retractable(spark):
     """An update lowering a current top-n member's value must evict it
     (RetractableTopNFunction semantics) — final emitted top-n reflects the
     latest values, not the running maxima."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
     from flink_ci_flink_spark.streaming.process import streaming_top_n_retractable
 
@@ -280,31 +277,24 @@ def test_streaming_top_n_retractable(spark):
         [(1, 10, 5.0), (1, 11, 4.0), (1, 12, 3.0)],   # top2 = {10, 11}
         [(1, 10, 1.0), (1, 13, 3.5)],                  # 10 demoted; top2 = {11, 13}
     ]
-    tmp = tempfile.mkdtemp(prefix="rtopn_")
-    try:
-        stage_chunks(spark, tmp, batches, schema)
-        stream = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
-        )
-        out = streaming_top_n_retractable(stream, "k", "item", "score", n=2)
-        result = run_to_completion(out, "update")
-        # update-mode memory sink keeps the latest row per output key; collect
-        # the final rn:1/rn:2 assignment
-        final = {
-            r.rn: (r.item, r.score)
-            for r in result.orderBy("rn").collect()
-        }
-        assert final == {1: (11, 4.0), 2: (13, 3.5)}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = stage_chunks(spark, batches, schema)
+    stream = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
+    )
+    out = streaming_top_n_retractable(stream, "k", "item", "score", n=2)
+    result = run_to_completion(out, "update")
+    # update-mode memory sink keeps the latest row per output key; collect
+    # the final rn:1/rn:2 assignment
+    final = {
+        r.rn: (r.item, r.score)
+        for r in result.orderBy("rn").collect()
+    }
+    assert final == {1: (11, 4.0), 2: (13, 3.5)}
 
 
 def test_streaming_event_time_sort(spark):
     """Out-of-order input emits in event-time order; rows behind the emitted
     frontier are dropped as late (RowTimeSortOperator semantics)."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
     from flink_ci_flink_spark.streaming.process import streaming_event_time_sort
 
@@ -313,21 +303,17 @@ def test_streaming_event_time_sort(spark):
         [(1, 3.0, "c"), (1, 1.0, "a"), (1, 2.0, "b")],   # frontier -> 3
         [(1, 2.5, "late"), (1, 5.0, "e"), (1, 4.0, "d")],  # 2.5 < 3: dropped
     ]
-    tmp = tempfile.mkdtemp(prefix="etsort_")
-    try:
-        stage_chunks(spark, tmp, batches, schema)
-        stream = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
-        )
-        out = streaming_event_time_sort(stream, "k", "ts", ["v"], delay_seconds=0.0)
-        result = run_to_completion(out)
-        got = [r.v for r in result.orderBy("ts_s").collect()]
-        # emitted in order, late row 2.5 absent
-        assert got == ["a", "b", "c", "d", "e"]
-        ts = [r.ts_s for r in result.orderBy("ts_s").collect()]
-        assert ts == sorted(ts) and 2.5 not in ts
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = stage_chunks(spark, batches, schema)
+    stream = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
+    )
+    out = streaming_event_time_sort(stream, "k", "ts", ["v"], delay_seconds=0.0)
+    result = run_to_completion(out)
+    got = [r.v for r in result.orderBy("ts_s").collect()]
+    # emitted in order, late row 2.5 absent
+    assert got == ["a", "b", "c", "d", "e"]
+    ts = [r.ts_s for r in result.orderBy("ts_s").collect()]
+    assert ts == sorted(ts) and 2.5 not in ts
 
 
 def test_with_idle_ttl_wrapper():
@@ -390,9 +376,6 @@ def test_session_dynamic_gap(spark):
 def test_keyed_states_facade(spark):
     """ValueState/ListState/MapState views over the applyInPandasWithState
     tuple, committed with one flush() (reference state-primitive API shape)."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.streaming import file_stream, run_to_completion
     from flink_ci_flink_spark.streaming.process import KeyedStates, keyed_process
 
@@ -401,51 +384,47 @@ def test_keyed_states_facade(spark):
         [(1, "a", 1.0), (1, "b", 2.0), (2, "a", 5.0)],
         [(1, "a", 3.0), (2, "b", 1.0)],
     ]
-    tmp = tempfile.mkdtemp(prefix="kstates_")
-    try:
-        stage_chunks(spark, tmp, batches, schema)
+    tmp = stage_chunks(spark, batches, schema)
 
-        def fn(key_tuple, pdf_iter, state):
-            import pandas as pd
+    def fn(key_tuple, pdf_iter, state):
+        import pandas as pd
 
-            states = KeyedStates(state, ["total", "recent", "per_type"])
-            total = states.value("total")
-            recent = states.list("recent")
-            per_type = states.map("per_type")
-            for pdf in pdf_iter:
-                for et, v in zip(pdf["et"], pdf["v"]):
-                    total.update((total.get or 0.0) + float(v))
-                    recent.add(float(v))
-                    recent.update(recent.get()[-3:])
-                    per_type.put(str(et), per_type.get(str(et), 0) + 1)
-            states.flush()
-            yield pd.DataFrame(
-                {
-                    "k": [key_tuple[0]],
-                    "total": [total.get],
-                    "n_recent": [len(recent.get())],
-                    "n_a": [per_type.get("a", 0)],
-                    "n_b": [per_type.get("b", 0)],
-                }
-            )
-
-        stream = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
+        states = KeyedStates(state, ["total", "recent", "per_type"])
+        total = states.value("total")
+        recent = states.list("recent")
+        per_type = states.map("per_type")
+        for pdf in pdf_iter:
+            for et, v in zip(pdf["et"], pdf["v"]):
+                total.update((total.get or 0.0) + float(v))
+                recent.add(float(v))
+                recent.update(recent.get()[-3:])
+                per_type.put(str(et), per_type.get(str(et), 0) + 1)
+        states.flush()
+        yield pd.DataFrame(
+            {
+                "k": [key_tuple[0]],
+                "total": [total.get],
+                "n_recent": [len(recent.get())],
+                "n_a": [per_type.get("a", 0)],
+                "n_b": [per_type.get("b", 0)],
+            }
         )
-        out = keyed_process(
-            stream,
-            ["k"],
-            fn,
-            "k long, total double, n_recent long, n_a long, n_b long",
-            "total double, recent array<double>, per_type map<string,long>",
-            output_mode="update",
-        )
-        result = run_to_completion(out, "update")
-        final = {r.k: (r.total, r.n_recent, r.n_a, r.n_b) for r in result.collect()}
-        assert final[1] == (6.0, 3, 2, 1)
-        assert final[2] == (6.0, 2, 1, 1)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    stream = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
+    )
+    out = keyed_process(
+        stream,
+        ["k"],
+        fn,
+        "k long, total double, n_recent long, n_a long, n_b long",
+        "total double, recent array<double>, per_type map<string,long>",
+        output_mode="update",
+    )
+    result = run_to_completion(out, "update")
+    final = {r.k: (r.total, r.n_recent, r.n_a, r.n_b) for r in result.collect()}
+    assert final[1] == (6.0, 3, 2, 1)
+    assert final[2] == (6.0, 2, 1, 1)
 
 
 def test_async_lookup(spark):
@@ -467,12 +446,9 @@ def test_async_lookup(spark):
     assert all(got[k] == (k * 2, f"t{k % 3}") for k in got)
 
 
-def test_side_output_split_sinks(spark):
+def test_side_output_split_sinks(spark, tmp_path):
     """Side output on a stream: one query, two sinks via foreachBatch
     (OutputTag analog); batch side_output splits one plan."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F2
 
     from flink_ci_flink_spark.streaming import file_stream
@@ -487,25 +463,19 @@ def test_side_output_split_sinks(spark):
     assert main.count() == 7 and side.count() == 3
 
     schema = "v long"
-    tmp = tempfile.mkdtemp(prefix="sideout_")
-    ckpt = tempfile.mkdtemp(prefix="sideout_ck_")
     got_main, got_side = [], []
-    try:
-        stage_chunks(spark, tmp, [[(1,), (9,)], [(3,), (8,)]], schema)
-        stream = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
-        )
-        foreach_batch_split_sink(
-            stream,
-            F2.col("v") >= 7,
-            lambda b, _id: got_main.extend(r.v for r in b.collect()),
-            lambda b, _id: got_side.extend(r.v for r in b.collect()),
-            ckpt,
-        )
-        assert sorted(got_main) == [1, 3] and sorted(got_side) == [8, 9]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    tmp = stage_chunks(spark, [[(1,), (9,)], [(3,), (8,)]], schema)
+    stream = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema, max_files_per_trigger=1
+    )
+    foreach_batch_split_sink(
+        stream,
+        F2.col("v") >= 7,
+        lambda b, _id: got_main.extend(r.v for r in b.collect()),
+        lambda b, _id: got_side.extend(r.v for r in b.collect()),
+        str(tmp_path),
+    )
+    assert sorted(got_main) == [1, 3] and sorted(got_side) == [8, 9]
 
 
 def test_changelog_group_agg_retract_stream(spark, events_stream_dir):  # noqa: F811
@@ -678,9 +648,6 @@ def test_streaming_dedup_keep_last_jvm_matches_batch(spark, events_stream_dir): 
     """JVM keep-last dedup (foreachBatch merge, no per-key Python) ==
     batch latest-row-per-key over the replayed corpus, and == the
     Python applyInPandasWithState path's final state."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from flink_ci_flink_spark.streaming.process import (
@@ -689,71 +656,58 @@ def test_streaming_dedup_keep_last_jvm_matches_batch(spark, events_stream_dir): 
 
     path, schema = events_stream_dir
     stream = _events_stream(spark, events_stream_dir, per_trigger=1)
-    state = tempfile.mkdtemp(prefix="dedup_jvm_")
-    try:
-        got_df = streaming_dedup_keep_last_jvm(
-            stream,
-            keys=["user_id"],
-            ts_col="ts",
-            select_cols=["user_id", "ts", "event_id", "event_type"],
-            state_dir=state,
-        )
-        got = {(r.user_id): (r.ts, r.event_id, r.event_type) for r in got_df.collect()}
-        ev = spark.read.schema(schema).parquet(path)
-        w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").asc())
-        want_rows = (
-            ev.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").collect()
-        )
-        want = {r.user_id: (r.ts, r.event_id, r.event_type) for r in want_rows}
-        # ties on (user_id, ts) would make the batch tie-break differ from
-        # arrival order; the events fixture has unique max-ts rows per user
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(state, ignore_errors=True)
+    got_df = streaming_dedup_keep_last_jvm(
+        stream,
+        keys=["user_id"],
+        ts_col="ts",
+        select_cols=["user_id", "ts", "event_id", "event_type"],
+    )
+    got = {(r.user_id): (r.ts, r.event_id, r.event_type) for r in got_df.collect()}
+    ev = spark.read.schema(schema).parquet(path)
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").asc())
+    want_rows = (
+        ev.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").collect()
+    )
+    want = {r.user_id: (r.ts, r.event_id, r.event_type) for r in want_rows}
+    # ties on (user_id, ts) would make the batch tie-break differ from
+    # arrival order; the events fixture has unique max-ts rows per user
+    assert got == want and len(got) > 0
 
 
 def test_streaming_running_agg_jvm_matches_batch(spark, events_stream_dir):  # noqa: F811
     """JVM running aggregate (foreachBatch partial-merge) == one batch
     groupBy over the full corpus for every decomposable aggregate."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.streaming.process import streaming_running_agg_jvm
 
     path, schema = events_stream_dir
     stream = _events_stream(spark, events_stream_dir, per_trigger=1)
-    state = tempfile.mkdtemp(prefix="runagg_jvm_")
-    try:
-        got_df = streaming_running_agg_jvm(
-            stream,
-            keys=["user_id"],
-            agg_specs={
-                "n": ("count", ""),
-                "total": ("sum", "value"),
-                "vmin": ("min", "value"),
-                "vmax": ("max", "value"),
-            },
-            state_dir=state,
+    got_df = streaming_running_agg_jvm(
+        stream,
+        keys=["user_id"],
+        agg_specs={
+            "n": ("count", ""),
+            "total": ("sum", "value"),
+            "vmin": ("min", "value"),
+            "vmax": ("max", "value"),
+        },
+    )
+    got = {
+        r.user_id: (r.n, round(r.total, 6), round(r.vmin, 6), round(r.vmax, 6))
+        for r in got_df.collect()
+    }
+    ev = spark.read.schema(schema).parquet(path)
+    want = {
+        r.user_id: (r.n, round(r.total, 6), round(r.vmin, 6), round(r.vmax, 6))
+        for r in ev.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("value").alias("total"),
+            F.min("value").alias("vmin"),
+            F.max("value").alias("vmax"),
         )
-        got = {
-            r.user_id: (r.n, round(r.total, 6), round(r.vmin, 6), round(r.vmax, 6))
-            for r in got_df.collect()
-        }
-        ev = spark.read.schema(schema).parquet(path)
-        want = {
-            r.user_id: (r.n, round(r.total, 6), round(r.vmin, 6), round(r.vmax, 6))
-            for r in ev.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("value").alias("total"),
-                F.min("value").alias("vmin"),
-                F.max("value").alias("vmax"),
-            )
-            .collect()
-        }
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(state, ignore_errors=True)
+        .collect()
+    }
+    assert got == want and len(got) > 0
 
 
 def _batch_sessions(spark, path, schema, gap_seconds):
@@ -781,9 +735,6 @@ def test_streaming_sessionize_jvm_matches_batch(spark, events_stream_dir):  # no
     batch sessionization over the replayed corpus — exact mode (no
     close frontier) and state-bounded mode (closed sessions emitted to
     the append store) both."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.streaming.process import streaming_sessionize_jvm
 
     path, schema = events_stream_dir
@@ -793,25 +744,20 @@ def test_streaming_sessionize_jvm_matches_batch(spark, events_stream_dir):  # no
 
     for lateness in (None, 0):
         stream = _events_stream(spark, events_stream_dir, per_trigger=1)
-        state = tempfile.mkdtemp(prefix="sess_jvm_")
-        try:
-            got_df = streaming_sessionize_jvm(
-                stream,
-                keys=["user_id"],
-                ts_col="ts",
-                gap_seconds=gap,
-                state_dir=state,
-                value_col="value",
-                close_lateness_seconds=lateness,
-            )
-            got = {
-                (r.user_id, r.sess_start, r.sess_end, r.n_events,
-                 round(r.sum_value, 6))
-                for r in got_df.collect()
-            }
-            assert got == want
-        finally:
-            shutil.rmtree(state, ignore_errors=True)
+        got_df = streaming_sessionize_jvm(
+            stream,
+            keys=["user_id"],
+            ts_col="ts",
+            gap_seconds=gap,
+            value_col="value",
+            close_lateness_seconds=lateness,
+        )
+        got = {
+            (r.user_id, r.sess_start, r.sess_end, r.n_events,
+             round(r.sum_value, 6))
+            for r in got_df.collect()
+        }
+        assert got == want
 
 
 def test_streaming_sessionize_jvm_bridges_out_of_order(spark):
@@ -819,8 +765,6 @@ def test_streaming_sessionize_jvm_bridges_out_of_order(spark):
     BETWEEN two previously separate sessions must merge them into one —
     the window-merge case (`SessionWindowAssigner` merging semantics)."""
     import datetime as dt
-    import shutil
-    import tempfile
 
     from flink_ci_flink_spark.streaming import file_stream
     from flink_ci_flink_spark.streaming.process import streaming_sessionize_jvm
@@ -833,30 +777,23 @@ def test_streaming_sessionize_jvm_bridges_out_of_order(spark):
     schema = "user_id BIGINT, ts TIMESTAMP, value DOUBLE"
     batch1 = [(1, ts(0), 1.0), (1, ts(100), 2.0)]   # gap 60 -> two sessions
     batch2 = [(1, ts(55), 4.0)]                      # bridges both
-    tmp = tempfile.mkdtemp(prefix="sess_bridge_")
-    state = tempfile.mkdtemp(prefix="sess_bridge_state_")
-    try:
-        stage_chunks(spark, tmp, [batch1, batch2], schema)
-        stream = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = streaming_sessionize_jvm(
-            stream,
-            keys=["user_id"],
-            ts_col="ts",
-            gap_seconds=60,
-            state_dir=state,
-            value_col="value",
-        ).collect()
-        assert len(out) == 1
-        (r,) = out
-        assert (r.sess_start, r.sess_end, r.n_events, r.sum_value) == (
-            ts(0), ts(100), 3, 7.0,
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
+    tmp = stage_chunks(spark, [batch1, batch2], schema)
+    stream = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = streaming_sessionize_jvm(
+        stream,
+        keys=["user_id"],
+        ts_col="ts",
+        gap_seconds=60,
+        value_col="value",
+    ).collect()
+    assert len(out) == 1
+    (r,) = out
+    assert (r.sess_start, r.sess_end, r.n_events, r.sum_value) == (
+        ts(0), ts(100), 3, 7.0,
+    )
 
 
 def test_streaming_count_window_jvm_matches_python_and_batch(
@@ -866,30 +803,22 @@ def test_streaming_count_window_jvm_matches_python_and_batch(
     applyInPandasWithState `count_tumbling_window` == chunking each key's
     event-time-ordered series; state never holds more than one partial
     window per key (the close() split bounds it)."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.streaming.process import streaming_count_window_jvm
     from tests.test_streaming import _events_stream
 
     path, schema = events_stream_dir
-    state = tempfile.mkdtemp(prefix="cntwin_jvm_")
-    try:
-        got_df = streaming_count_window_jvm(
-            _events_stream(spark, (path, schema), per_trigger=1).select(
-                "user_id", "ts", "value"
-            ),
-            key="user_id",
-            ts_col="ts",
-            value_col="value",
-            size=10,
-            state_dir=state,
-        )
-        got = {
-            (r.user_id, r.win): (r.n, round(r.total, 6)) for r in got_df.collect()
-        }
-    finally:
-        shutil.rmtree(state, ignore_errors=True)
+    got_df = streaming_count_window_jvm(
+        _events_stream(spark, (path, schema), per_trigger=1).select(
+            "user_id", "ts", "value"
+        ),
+        key="user_id",
+        ts_col="ts",
+        value_col="value",
+        size=10,
+    )
+    got = {
+        (r.user_id, r.win): (r.n, round(r.total, 6)) for r in got_df.collect()
+    }
 
     ev = spark.read.schema(schema).parquet(path).orderBy("ts").collect()
     per_user = {}
@@ -908,9 +837,6 @@ def test_streaming_bounded_over_jvm_matches_python(spark, events_stream_dir):  #
     applyInPandasWithState `streaming_bounded_over` on the same ts-ordered
     replay — every input row emitted exactly once with identical
     (w_sum, w_n)."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.streaming import run_to_completion
     from flink_ci_flink_spark.streaming.process import streaming_bounded_over_jvm
     from flink_ci_flink_spark.streaming.windows_ext import streaming_bounded_over
@@ -932,24 +858,19 @@ def test_streaming_bounded_over_jvm_matches_python(spark, events_stream_dir):  #
         for r in result.collect()
     }
 
-    state = tempfile.mkdtemp(prefix="bover_jvm_")
-    try:
-        got_df = streaming_bounded_over_jvm(
-            _events_stream(spark, (path, schema), per_trigger=1).select(
-                "user_id", "ts", "value"
-            ),
-            key="user_id",
-            ts_col="ts",
-            value_col="value",
-            rows_preceding=4,
-            state_dir=state,
-        )
-        got = {
-            (r.user_id, round(r.ts_s, 6)): (round(r.w_sum, 6), r.w_n)
-            for r in got_df.collect()
-        }
-    finally:
-        shutil.rmtree(state, ignore_errors=True)
+    got_df = streaming_bounded_over_jvm(
+        _events_stream(spark, (path, schema), per_trigger=1).select(
+            "user_id", "ts", "value"
+        ),
+        key="user_id",
+        ts_col="ts",
+        value_col="value",
+        rows_preceding=4,
+    )
+    got = {
+        (r.user_id, round(r.ts_s, 6)): (round(r.w_sum, 6), r.w_n)
+        for r in got_df.collect()
+    }
     assert got == want
 
 
@@ -1014,9 +935,6 @@ def test_streaming_count_sliding_window_jvm_matches_python(
     overlapping (slide < size) windows; the gap case (slide > size) —
     where window partials alone cannot recover per-key progress and the
     marker row carries it — matches a direct brute force."""
-    import shutil
-    import tempfile
-
     from flink_ci_flink_spark.streaming import run_to_completion
     from flink_ci_flink_spark.streaming.process import (
         streaming_count_sliding_window_jvm,
@@ -1027,25 +945,20 @@ def test_streaming_count_sliding_window_jvm_matches_python(
     path, schema = events_stream_dir
 
     def run_jvm(size, slide):
-        state = tempfile.mkdtemp(prefix="cntslide_jvm_")
-        try:
-            got_df = streaming_count_sliding_window_jvm(
-                _events_stream(spark, (path, schema), per_trigger=1).select(
-                    "user_id", "ts", "value"
-                ),
-                key="user_id",
-                ts_col="ts",
-                value_col="value",
-                size=size,
-                slide=slide,
-                state_dir=state,
-            )
-            return {
-                (r.user_id, r.win): (r.n, round(r.total, 6))
-                for r in got_df.collect()
-            }
-        finally:
-            shutil.rmtree(state, ignore_errors=True)
+        got_df = streaming_count_sliding_window_jvm(
+            _events_stream(spark, (path, schema), per_trigger=1).select(
+                "user_id", "ts", "value"
+            ),
+            key="user_id",
+            ts_col="ts",
+            value_col="value",
+            size=size,
+            slide=slide,
+        )
+        return {
+            (r.user_id, r.win): (r.n, round(r.total, 6))
+            for r in got_df.collect()
+        }
 
     # overlapping windows: parity with the Python state operator
     out_py = count_sliding_window(
@@ -1076,7 +989,7 @@ def test_streaming_count_sliding_window_jvm_matches_python(
     assert run_jvm(5, 7) == want_gap
 
 
-def test_count_window_fold_random_batching_property(spark, tmp_path):
+def test_count_window_fold_random_batching_property(spark):
     """Hypothesis: driving the count-window fold step with ARBITRARY
     batch splits of an event sequence yields exactly the brute-force
     chunking — the batching-insensitivity the incremental ordinal-offset
@@ -1088,6 +1001,7 @@ def test_count_window_fold_random_batching_property(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    from flink_ci_flink_spark.streaming import scratch_dir
     from flink_ci_flink_spark.streaming.process import _keyed_fold_step
 
     size = 3
@@ -1132,11 +1046,6 @@ def test_count_window_fold_random_batching_property(spark, tmp_path):
         return (flagged.filter(~F.col("__done")).drop("__done"),
                 flagged.filter("__done").drop("__done"))
 
-    import itertools
-    import shutil
-
-    counter = itertools.count()
-
     @settings(max_examples=8, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     @given(
@@ -1151,7 +1060,7 @@ def test_count_window_fold_random_batching_property(spark, tmp_path):
         for p in pts + [len(vals)]:
             batches.append(vals[lo:p])
             lo = p
-        d = str(tmp_path / f"cwprop{next(counter)}")
+        d = scratch_dir("cwprop_")
         last = {"v": None, "closed": False}
         t0 = 0
         for bid, chunk in enumerate(batches):
@@ -1173,7 +1082,6 @@ def test_count_window_fold_random_batching_property(spark, tmp_path):
             w: (size, float(sum(vals[w * size:(w + 1) * size])))
             for w in range(len(vals) // size)
         }
-        shutil.rmtree(d, ignore_errors=True)
         assert got == want
 
     check()
@@ -1184,9 +1092,6 @@ def test_streaming_top_n_retractable_jvm_matches_batch(spark, events_stream_dir)
     update each other as the replay advances (implicit retractions); the
     final per-key top-3 equals the batch keep-latest + rank over the whole
     input."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from flink_ci_flink_spark.streaming.process import (
@@ -1195,28 +1100,23 @@ def test_streaming_top_n_retractable_jvm_matches_batch(spark, events_stream_dir)
     from tests.test_streaming import _events_stream
 
     path, schema = events_stream_dir
-    state = tempfile.mkdtemp(prefix="rtopn_jvm_")
-    try:
-        st = _events_stream(spark, (path, schema), per_trigger=1).select(
-            "user_id",
-            (F.col("event_id") % 25).alias("slot"),
-            "value",
-            "ts",
-        )
-        got_df = streaming_top_n_retractable_jvm(
-            st.drop("ts"),
-            key="user_id",
-            row_key="slot",
-            order_col="value",
-            n=3,
-            state_dir=state,
-        )
-        got = {
-            (r.user_id, r.slot, round(r.value, 6), r.rn)
-            for r in got_df.collect()
-        }
-    finally:
-        shutil.rmtree(state, ignore_errors=True)
+    st = _events_stream(spark, (path, schema), per_trigger=1).select(
+        "user_id",
+        (F.col("event_id") % 25).alias("slot"),
+        "value",
+        "ts",
+    )
+    got_df = streaming_top_n_retractable_jvm(
+        st.drop("ts"),
+        key="user_id",
+        row_key="slot",
+        order_col="value",
+        n=3,
+    )
+    got = {
+        (r.user_id, r.slot, round(r.value, 6), r.rn)
+        for r in got_df.collect()
+    }
 
     ev = spark.read.schema(schema).parquet(path).select(
         "user_id", (F.col("event_id") % 25).alias("slot"), "value", "ts"
@@ -1241,9 +1141,7 @@ def test_streaming_changelog_agg_retracts_to_zero(spark):
     """Retract-stream incremental aggregate: a group whose rows are all
     deleted drops out of the emitted state; surviving groups equal the
     brute-force aggregate of surviving rows, regardless of chunking."""
-    import tempfile
-
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_changelog_agg_jvm
 
     rows = []
@@ -1258,12 +1156,10 @@ def test_streaming_changelog_agg_retracts_to_zero(spark):
     df = spark.createDataFrame(
         rows, "row_kind string, g string, v long, seq long"
     )
-    tmp = stage_ordered_replay(df, ["seq"])
     out = streaming_changelog_agg_jvm(
-        file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
+        replay_stream(df, ["seq"]),
         keys=["g"],
         value_cols=["v"],
-        state_dir=tempfile.mkdtemp(prefix="clagg_"),
     )
     got = {(r.g, r.n_rows, r.sum_v) for r in out.collect()}
     assert got == {("a", 2, 19)}  # b retracted to zero and dropped
@@ -1276,16 +1172,15 @@ def test_manifest_sink_idempotent_replay_and_orphan_invisible(spark, tmp_path):
     import json
     import os
 
-    from flink_ci_flink_spark.streaming import file_stream, stage_ordered_replay
+    from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.core import manifest_sink, read_manifest
 
     df = spark.createDataFrame(
         [(i, i % 3) for i in range(90)], "id long, g long"
     )
-    tmp = stage_ordered_replay(df, ["id"])
     base = str(tmp_path / "sink")
     manifest_sink(
-        file_stream(spark, tmp, df.schema, max_files_per_trigger=1),
+        replay_stream(df, ["id"]),
         out_dir=base,
         checkpoint=f"{base}/ckpt",
     )
@@ -1494,15 +1389,13 @@ def test_tws_event_time_timers_sessionize(spark, events_stream_dir):  # noqa: F8
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-def test_persist_static_side_released_on_exit(spark, monkeypatch):
+def test_persist_static_side_released_on_exit(spark, monkeypatch, tmp_path):
     """The static side of a stream-static probe is read once, cached
     across micro-batches, and released when its ``with`` block exits,
     also when a ``merge`` raises or the drain is interrupted — the
     contract `streaming_delta_dedup_ingest` and the curation-v5 replay
     rely on (a per-trigger re-read of a GB-scale index artifact is the
     cost the persist removes). No query outlives its drain."""
-    import tempfile
-
     from pyspark import StorageLevel
     from pyspark.errors import StreamingQueryException
     from pyspark.sql.streaming.query import StreamingQuery
@@ -1513,13 +1406,13 @@ def test_persist_static_side_released_on_exit(spark, monkeypatch):
         persist_static_side,
     )
 
-    base = tempfile.mkdtemp(prefix="static_side_")
+    base = str(tmp_path)
     spark.createDataFrame(
         [(i, f"dim{i}") for i in range(10)], "k bigint, v string"
     ).write.parquet(f"{base}/index")
     chunks = [[(b * 5 + i,) for i in range(5)] for b in range(2)]
-    stage_chunks(spark, base, chunks, "k bigint")
-    stream = file_stream(spark, base, "k bigint", max_files_per_trigger=1)
+    src = stage_chunks(spark, chunks, "k bigint")
+    stream = file_stream(spark, src, "k bigint", max_files_per_trigger=1)
     seen: list[tuple[int, bool]] = []
 
     with persist_static_side(spark.read.parquet(f"{base}/index")) as static:

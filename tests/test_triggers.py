@@ -11,20 +11,15 @@ Semantic anchors:
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from tests.replay import stage_chunks
 from tests.test_streaming import events_stream_dir, _events_stream  # noqa: F401
 
 
 def _replay_fixture(spark, rows, schema, n_files=3):
     """Write rows (already ordered) into n time-ordered parquet files."""
-    tmp = tempfile.mkdtemp(prefix="trig_stream_")
     per = max(1, (len(rows) + n_files - 1) // n_files)
     chunks = [rows[i : i + per] for i in range(0, len(rows), per)]
-    stage_chunks(spark, tmp, chunks, schema)
-    return tmp
+    return stage_chunks(spark, chunks, schema)
 
 
 def _run(spark, out):
@@ -79,25 +74,22 @@ def test_count_trigger_with_count_evictor_sliding(spark):
     rows = [(1, float(t), float(v)) for t, v in enumerate([1, 2, 3, 4, 5, 6, 7, 8], 1)]
     schema = "user_id long, ts double, value double"
     tmp = _replay_fixture(spark, rows, schema)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark,
-            tmp,
-            spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = triggered_window(
-            st, "user_id", "ts", "value",
-            trigger=CountTrigger(2), evictor=CountEvictor(4),
-        )
-        got = [(r.fire_seq, r.n, r.total) for r in
-               sorted(_run(spark, out), key=lambda r: r.fire_seq)]
-        # fires after elements 2,4,6,8 over last <=4: [1,2], [1..4], [3..6], [5..8]
-        assert got == [(0, 2, 3.0), (1, 4, 10.0), (2, 4, 18.0), (3, 4, 26.0)]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark,
+        tmp,
+        spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = triggered_window(
+        st, "user_id", "ts", "value",
+        trigger=CountTrigger(2), evictor=CountEvictor(4),
+    )
+    got = [(r.fire_seq, r.n, r.total) for r in
+           sorted(_run(spark, out), key=lambda r: r.fire_seq)]
+    # fires after elements 2,4,6,8 over last <=4: [1,2], [1..4], [3..6], [5..8]
+    assert got == [(0, 2, 3.0), (1, 4, 10.0), (2, 4, 18.0), (3, 4, 26.0)]
 
 
 def test_delta_trigger(spark):
@@ -113,23 +105,20 @@ def test_delta_trigger(spark):
     rows = [(1, float(t), v) for t, v in enumerate(vals, 1)]
     schema = "user_id long, ts double, value double"
     tmp = _replay_fixture(spark, rows, schema)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = triggered_window(
-            st, "user_id", "ts", "value",
-            trigger=PurgingTrigger(DeltaTrigger(3.0)),
-        )
-        got = [(r.fire_seq, r.n, r.total) for r in
-               sorted(_run(spark, out), key=lambda r: r.fire_seq)]
-        # fire 1: buffer [10,11,14]; fire 2 (purged in between): [13,20]
-        assert got == [(0, 3, 35.0), (1, 2, 33.0)]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = triggered_window(
+        st, "user_id", "ts", "value",
+        trigger=PurgingTrigger(DeltaTrigger(3.0)),
+    )
+    got = [(r.fire_seq, r.n, r.total) for r in
+           sorted(_run(spark, out), key=lambda r: r.fire_seq)]
+    # fire 1: buffer [10,11,14]; fire 2 (purged in between): [13,20]
+    assert got == [(0, 3, 35.0), (1, 2, 33.0)]
 
 
 def test_continuous_event_time_trigger(spark):
@@ -146,30 +135,27 @@ def test_continuous_event_time_trigger(spark):
     ]
     schema = "user_id long, ts double, value double"
     tmp = _replay_fixture(spark, rows, schema, n_files=4)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = triggered_window(
-            st, "user_id", "ts", "value",
-            trigger=ContinuousEventTimeTrigger(10.0),
-            window_seconds=30.0,
-        )
-        got = [(r.win, r.fire_seq, r.n, r.total) for r in
-               sorted(_run(spark, out), key=lambda r: (r.win, r.fire_seq))]
-        # batches hold 2 rows each: frontier after b1=4 (no boundary), b2=12
-        # (crossed 10 -> early fire over [1,4,9,12]), b3=24 (crossed 20 ->
-        # early fire over 6 elems), b4=31 (window end -> final fire, 7 elems)
-        assert got == [
-            (0, 0, 4, 4.0),
-            (0, 1, 6, 6.0),
-            (0, 2, 7, 7.0),
-        ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = triggered_window(
+        st, "user_id", "ts", "value",
+        trigger=ContinuousEventTimeTrigger(10.0),
+        window_seconds=30.0,
+    )
+    got = [(r.win, r.fire_seq, r.n, r.total) for r in
+           sorted(_run(spark, out), key=lambda r: (r.win, r.fire_seq))]
+    # batches hold 2 rows each: frontier after b1=4 (no boundary), b2=12
+    # (crossed 10 -> early fire over [1,4,9,12]), b3=24 (crossed 20 ->
+    # early fire over 6 elems), b4=31 (window end -> final fire, 7 elems)
+    assert got == [
+        (0, 0, 4, 4.0),
+        (0, 1, 6, 6.0),
+        (0, 2, 7, 7.0),
+    ]
 
 
 def test_time_and_delta_evictors(spark):
@@ -188,46 +174,40 @@ def test_time_and_delta_evictors(spark):
     rows = [(1, 0.0, 1.0), (1, 10.0, 2.0), (1, 12.0, 3.0),
             (1, 13.0, 4.0), (1, 14.0, 5.0), (1, 15.0, 6.0)]
     tmp = _replay_fixture(spark, rows, schema)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = triggered_window(
-            st, "user_id", "ts", "value",
-            trigger=CountTrigger(3), evictor=TimeEvictor(5.0),
-        )
-        got = [(r.fire_seq, r.n, r.total) for r in
-               sorted(_run(spark, out), key=lambda r: r.fire_seq)]
-        # fire1 over [0,10,12]: keep ts>7 -> [10,12] sum 5; state now [10,12]
-        # fire2 over [10,12,13,14,15]: keep ts>10 -> [12..15] sum 18
-        assert got == [(0, 2, 5.0), (1, 4, 18.0)]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = triggered_window(
+        st, "user_id", "ts", "value",
+        trigger=CountTrigger(3), evictor=TimeEvictor(5.0),
+    )
+    got = [(r.fire_seq, r.n, r.total) for r in
+           sorted(_run(spark, out), key=lambda r: r.fire_seq)]
+    # fire1 over [0,10,12]: keep ts>7 -> [10,12] sum 5; state now [10,12]
+    # fire2 over [10,12,13,14,15]: keep ts>10 -> [12..15] sum 18
+    assert got == [(0, 2, 5.0), (1, 4, 18.0)]
 
     rows2 = [(1, float(t), v) for t, v in
              enumerate([1.0, 9.0, 4.0, 5.0, 8.0, 6.0], 1)]
     tmp2 = _replay_fixture(spark, rows2, schema)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st2 = file_stream(
-            spark, tmp2, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out2 = triggered_window(
-            st2, "user_id", "ts", "value",
-            trigger=CountTrigger(3), evictor=DeltaEvictor(3.0),
-        )
-        got2 = [(r.fire_seq, r.n, r.total) for r in
-                sorted(_run(spark, out2), key=lambda r: r.fire_seq)]
-        # fire1 over [1,9,4]: |v-4|<3 keeps [4] (1 and 9 evicted) -> (1, 4.0)
-        # fire2 over [4,5,8,6]: |v-6|<3 keeps [4,5,8,6] -> (4, 23.0)
-        assert got2 == [(0, 1, 4.0), (1, 4, 23.0)]
-    finally:
-        shutil.rmtree(tmp2, ignore_errors=True)
+    st2 = file_stream(
+        spark, tmp2, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out2 = triggered_window(
+        st2, "user_id", "ts", "value",
+        trigger=CountTrigger(3), evictor=DeltaEvictor(3.0),
+    )
+    got2 = [(r.fire_seq, r.n, r.total) for r in
+            sorted(_run(spark, out2), key=lambda r: r.fire_seq)]
+    # fire1 over [1,9,4]: |v-4|<3 keeps [4] (1 and 9 evicted) -> (1, 4.0)
+    # fire2 over [4,5,8,6]: |v-6|<3 keeps [4,5,8,6] -> (4, 23.0)
+    assert got2 == [(0, 1, 4.0), (1, 4, 23.0)]
 
 
 def test_event_time_trigger_default(spark):
@@ -241,23 +221,20 @@ def test_event_time_trigger_default(spark):
     schema = "user_id long, ts double, value double"
     rows = [(1, 1.0, 1.0), (1, 5.0, 2.0), (1, 11.0, 3.0), (1, 25.0, 4.0)]
     tmp = _replay_fixture(spark, rows, schema, n_files=2)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = triggered_window(
-            st, "user_id", "ts", "value",
-            trigger=EventTimeTrigger(), window_seconds=10.0,
-        )
-        got = {(r.win, r.n, r.total) for r in _run(spark, out)}
-        # window [0,10) fires when frontier hits 11; [10,20) when 25;
-        # [20,30) never closes (frontier stops at 25)
-        assert got == {(0, 2, 3.0), (10, 1, 3.0)}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = triggered_window(
+        st, "user_id", "ts", "value",
+        trigger=EventTimeTrigger(), window_seconds=10.0,
+    )
+    got = {(r.win, r.n, r.total) for r in _run(spark, out)}
+    # window [0,10) fires when frontier hits 11; [10,20) when 25;
+    # [20,30) never closes (frontier stops at 25)
+    assert got == {(0, 2, 3.0), (10, 1, 3.0)}
 
 
 def test_late_element_after_window_gc_dropped(spark):
@@ -276,23 +253,20 @@ def test_late_element_after_window_gc_dropped(spark):
     b1 = [(1, 1.0, 1.0), (1, 11.0, 3.0)]
     b2 = [(1, 2.0, 100.0), (1, 25.0, 4.0)]
     tmp = _replay_fixture(spark, b1 + b2, schema, n_files=2)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = triggered_window(
-            st, "user_id", "ts", "value",
-            trigger=EventTimeTrigger(), window_seconds=10.0,
-        )
-        rows = _run(spark, out)
-        got = {(r.win, r.fire_seq, r.n, r.total) for r in rows}
-        # late 2.0 contributes nothing; no duplicate (win=0, fire_seq=0) row
-        assert got == {(0, 0, 1, 1.0), (10, 0, 1, 3.0)}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = triggered_window(
+        st, "user_id", "ts", "value",
+        trigger=EventTimeTrigger(), window_seconds=10.0,
+    )
+    rows = _run(spark, out)
+    got = {(r.win, r.fire_seq, r.n, r.total) for r in rows}
+    # late 2.0 contributes nothing; no duplicate (win=0, fire_seq=0) row
+    assert got == {(0, 0, 1, 1.0), (10, 0, 1, 3.0)}
 
 
 def test_datastream_allowed_lateness_chain(spark):
@@ -305,22 +279,19 @@ def test_datastream_allowed_lateness_chain(spark):
     b1 = [(1, 1.0, 1.0), (1, 11.0, 3.0)]
     b2 = [(1, 2.0, 5.0), (1, 25.0, 4.0)]
     tmp = _replay_fixture(spark, b1 + b2, schema, n_files=2)
-    try:
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = (
-            DataStream(st)
-            .key_by("user_id")
-            .window("ts", "value", 10.0)
-            .allowed_lateness(10.0)
-            .sum()
-        )
-        got = {(r.win, r.fire_seq, r.n, r.total) for r in _run(spark, out)}
-        assert got == {(0, 0, 1, 1.0), (0, 1, 2, 6.0), (10, 0, 1, 3.0)}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = (
+        DataStream(st)
+        .key_by("user_id")
+        .window("ts", "value", 10.0)
+        .allowed_lateness(10.0)
+        .sum()
+    )
+    got = {(r.win, r.fire_seq, r.n, r.total) for r in _run(spark, out)}
+    assert got == {(0, 0, 1, 1.0), (0, 1, 2, 6.0), (10, 0, 1, 3.0)}
 
 
 def test_allowed_lateness_refires_closed_window(spark):
@@ -344,35 +315,30 @@ def test_allowed_lateness_refires_closed_window(spark):
         (1, 3.0, 99.0),
     ]
     tmp = _replay_fixture(spark, rows, schema, n_files=3)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = triggered_window(
-            st, "user_id", "ts", "value",
-            trigger=EventTimeTrigger(), window_seconds=10.0,
-            allowed_lateness=10.0,
-        )
-        got = {(r.win, r.fire_seq, r.n, r.total) for r in _run(spark, out)}
-        assert got == {(0, 0, 1, 1.0), (0, 1, 2, 6.0), (10, 0, 1, 3.0)}
-        # update-mode consumers keep the max fire_seq per (key, win):
-        latest = {}
-        for win, seq, n, total in sorted(got):
-            latest[win] = (n, total)
-        assert latest == {0: (2, 6.0), 10: (1, 3.0)}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = triggered_window(
+        st, "user_id", "ts", "value",
+        trigger=EventTimeTrigger(), window_seconds=10.0,
+        allowed_lateness=10.0,
+    )
+    got = {(r.win, r.fire_seq, r.n, r.total) for r in _run(spark, out)}
+    assert got == {(0, 0, 1, 1.0), (0, 1, 2, 6.0), (10, 0, 1, 3.0)}
+    # update-mode consumers keep the max fire_seq per (key, win):
+    latest = {}
+    for win, seq, n, total in sorted(got):
+        latest[win] = (n, total)
+    assert latest == {0: (2, 6.0), 10: (1, 3.0)}
 
 
-def test_late_data_side_output(spark):
+def test_late_data_side_output(spark, tmp_path):
     """Late rows land in the late sink; the main path receives exactly what
     a watermarked window agg would keep (`sideOutputLateData` +
     `allowedLateness` semantics, window-level lateness)."""
-    import tempfile
-
     from flink_ci_flink_spark.streaming import file_stream
     from flink_ci_flink_spark.streaming.late import side_output_late_data
 
@@ -384,58 +350,48 @@ def test_late_data_side_output(spark):
     b1 = [(1, 1.0, 1.0), (1, 8.0, 2.0), (1, 12.0, 3.0), (1, 20.0, 4.0)]
     b2 = [(1, 2.0, 100.0), (1, 13.0, 5.0), (1, 27.0, 6.0)]
     tmp = _replay_fixture(spark, b1 + b2, schema, n_files=2)
-    ck = tempfile.mkdtemp(prefix="late_ck_")
     got_main, got_late = [], []
-    try:
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        side_output_late_data(
-            st, "ts", 5.0,
-            lambda df, bid: got_main.extend(
-                (r.user_id, r.ts, r.value) for r in df.collect()),
-            lambda df, bid: got_late.extend(
-                (r.user_id, r.ts, r.value) for r in df.collect()),
-            checkpoint=ck,
-            window_seconds=10.0,
-        )
-        assert sorted(got_late) == [(1, 2.0, 100.0)]
-        assert sorted(got_main) == sorted(
-            (u, t, v) for u, t, v in b1 + b2 if not (u, t, v) == (1, 2.0, 100.0)
-        )
-        # allowed_lateness widens acceptance: rerun with lateness 10 ->
-        # window end 10 + 10 > 15, the t=2 row is no longer late
-        got_main2, got_late2 = [], []
-        import shutil as _sh
-
-        _sh.rmtree(ck, ignore_errors=True)
-        st2 = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        side_output_late_data(
-            st2, "ts", 5.0,
-            lambda df, bid: got_main2.extend(
-                (r.user_id, r.ts, r.value) for r in df.collect()),
-            lambda df, bid: got_late2.extend(
-                (r.user_id, r.ts, r.value) for r in df.collect()),
-            checkpoint=tempfile.mkdtemp(prefix="late_ck2_"),
-            window_seconds=10.0,
-            allowed_lateness=10.0,
-        )
-        assert got_late2 == []
-        assert len(got_main2) == len(b1 + b2)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    side_output_late_data(
+        st, "ts", 5.0,
+        lambda df, bid: got_main.extend(
+            (r.user_id, r.ts, r.value) for r in df.collect()),
+        lambda df, bid: got_late.extend(
+            (r.user_id, r.ts, r.value) for r in df.collect()),
+        checkpoint=str(tmp_path / "ck"),
+        window_seconds=10.0,
+    )
+    assert sorted(got_late) == [(1, 2.0, 100.0)]
+    assert sorted(got_main) == sorted(
+        (u, t, v) for u, t, v in b1 + b2 if not (u, t, v) == (1, 2.0, 100.0)
+    )
+    # allowed_lateness widens acceptance: rerun with lateness 10 ->
+    # window end 10 + 10 > 15, the t=2 row is no longer late
+    got_main2, got_late2 = [], []
+    st2 = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    side_output_late_data(
+        st2, "ts", 5.0,
+        lambda df, bid: got_main2.extend(
+            (r.user_id, r.ts, r.value) for r in df.collect()),
+        lambda df, bid: got_late2.extend(
+            (r.user_id, r.ts, r.value) for r in df.collect()),
+        checkpoint=str(tmp_path / "ck2"),
+        window_seconds=10.0,
+        allowed_lateness=10.0,
+    )
+    assert got_late2 == []
+    assert len(got_main2) == len(b1 + b2)
 
 
-def test_late_row_level_split(spark):
+def test_late_row_level_split(spark, tmp_path):
     """Row-level lateness (ProcessFunction side-output convention):
     ts <= watermark routes to the late sink."""
-    import tempfile
-
     from flink_ci_flink_spark.streaming import file_stream
     from flink_ci_flink_spark.streaming.late import side_output_late_data
 
@@ -444,21 +400,18 @@ def test_late_row_level_split(spark):
     b2 = [(1, 20.0, 3.0), (1, 26.0, 4.0)]  # 20 late, 26 on time
     tmp = _replay_fixture(spark, b1 + b2, schema, n_files=2)
     got_main, got_late = [], []
-    try:
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        side_output_late_data(
-            st, "ts", 5.0,
-            lambda df, bid: got_main.extend(r.ts for r in df.collect()),
-            lambda df, bid: got_late.extend(r.ts for r in df.collect()),
-            checkpoint=tempfile.mkdtemp(prefix="late_ck3_"),
-        )
-        assert sorted(got_late) == [20.0]
-        assert sorted(got_main) == [10.0, 26.0, 30.0]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    side_output_late_data(
+        st, "ts", 5.0,
+        lambda df, bid: got_main.extend(r.ts for r in df.collect()),
+        lambda df, bid: got_late.extend(r.ts for r in df.collect()),
+        checkpoint=str(tmp_path),
+    )
+    assert sorted(got_late) == [20.0]
+    assert sorted(got_main) == [10.0, 26.0, 30.0]
 
 
 def test_datastream_facade(spark, events_stream_dir):  # noqa: F811
@@ -492,26 +445,23 @@ def test_datastream_facade(spark, events_stream_dir):  # noqa: F811
     rows = [(1, float(t), float(v)) for t, v in enumerate([1, 2, 3, 4, 5, 6, 7, 8], 1)]
     schema = "user_id long, ts double, value double"
     tmp = _replay_fixture(spark, rows, schema)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = (
-            DataStream(st)
-            .key_by("user_id")
-            .global_window("ts", "value")
-            .trigger(trig)
-            .evictor(ev)
-            .sum()
-        )
-        got2 = [(r.fire_seq, r.n, r.total) for r in
-                sorted(_run(spark, out), key=lambda r: r.fire_seq)]
-        assert got2 == [(0, 2, 3.0), (1, 4, 10.0), (2, 4, 18.0), (3, 4, 26.0)]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = (
+        DataStream(st)
+        .key_by("user_id")
+        .global_window("ts", "value")
+        .trigger(trig)
+        .evictor(ev)
+        .sum()
+    )
+    got2 = [(r.fire_seq, r.n, r.total) for r in
+            sorted(_run(spark, out), key=lambda r: r.fire_seq)]
+    assert got2 == [(0, 2, 3.0), (1, 4, 10.0), (2, 4, 18.0), (3, 4, 26.0)]
 
 
 def test_window_aggregate_library(spark):
@@ -523,28 +473,25 @@ def test_window_aggregate_library(spark):
     rows = [(1, float(t), v) for t, v in enumerate([4.0, 9.0, 2.0, 7.0, 5.0, 3.0], 1)]
     schema = "user_id long, ts double, value double"
     tmp = _replay_fixture(spark, rows, schema)
-    try:
-        from flink_ci_flink_spark.streaming import file_stream
+    from flink_ci_flink_spark.streaming import file_stream
 
-        st = file_stream(
-            spark, tmp, spark.createDataFrame([], schema).schema,
-            max_files_per_trigger=1,
-        )
-        out = (
-            DataStream(st)
-            .key_by("user_id")
-            .global_window("ts", "value")
-            .trigger(PurgingTrigger(CountTrigger(3)))
-            .aggregate({"low": "min", "high": "max", "mean": "avg",
-                        "opening": "first", "closing": "last"})
-        )
-        got = [
-            (r.fire_seq, r.n, r.total, r.low, r.high, r.mean, r.opening, r.closing)
-            for r in sorted(_run(spark, out), key=lambda r: r.fire_seq)
-        ]
-        assert got == [
-            (0, 3, 15.0, 2.0, 9.0, 5.0, 4.0, 2.0),
-            (1, 3, 15.0, 3.0, 7.0, 5.0, 7.0, 3.0),
-        ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    st = file_stream(
+        spark, tmp, spark.createDataFrame([], schema).schema,
+        max_files_per_trigger=1,
+    )
+    out = (
+        DataStream(st)
+        .key_by("user_id")
+        .global_window("ts", "value")
+        .trigger(PurgingTrigger(CountTrigger(3)))
+        .aggregate({"low": "min", "high": "max", "mean": "avg",
+                    "opening": "first", "closing": "last"})
+    )
+    got = [
+        (r.fire_seq, r.n, r.total, r.low, r.high, r.mean, r.opening, r.closing)
+        for r in sorted(_run(spark, out), key=lambda r: r.fire_seq)
+    ]
+    assert got == [
+        (0, 3, 15.0, 2.0, 9.0, 5.0, 4.0, 2.0),
+        (1, 3, 15.0, 3.0, 7.0, 5.0, 7.0, 3.0),
+    ]
