@@ -391,29 +391,33 @@ def _settle_wait(env: dict) -> dict:
     is reliably hot; a bounded poll (default 10 min, 20 s steps) until
     BOTH load1 and load5 drop below the gate turns the annotation into an
     avoidance. If the window never opens, run anyway and say so
-    (``settle_wait_exhausted``) so the official is still produced."""
-    if env.get("loaded") is None or not (env.get("loaded") or env.get("settling")):
+    (``settle_wait_exhausted``) so the official is still produced.
+    Wherever the load average is readable the record carries the same
+    keys, loaded or not: ``load1_initial`` / ``load5_initial`` (the
+    pre-run loads) and ``settle_wait_exhausted`` (False on a quiet box)."""
+    if env.get("loaded") is None:
         env["settle_wait_sec"] = 0
         return env
     # past this guard os.getloadavg() is known to work on this platform
-    max_wait = float(os.environ.get("SPARK_GRAFT_SETTLE_MAX_SEC", "600"))
-    gate = env["load_gate"]
-    t0 = time.monotonic()
-    waited = 0.0
-    while waited < max_wait:
-        time.sleep(min(20.0, max_wait - waited))
-        waited = time.monotonic() - t0
-        load1, load5, _ = os.getloadavg()
-        if load1 < gate and load5 < gate:
-            break
-    load1, load5, load15 = os.getloadavg()
     env["load1_initial"] = env["load1_prerun"]
     env["load5_initial"] = env["load5_prerun"]
-    env["load1_prerun"] = round(load1, 2)
-    env["load5_prerun"] = round(load5, 2)
-    env["load15_prerun"] = round(load15, 2)
-    env["loaded"] = load1 > gate
-    env["settling"] = (not env["loaded"]) and load5 > gate
+    waited = 0.0
+    if env["loaded"] or env["settling"]:
+        max_wait = float(os.environ.get("SPARK_GRAFT_SETTLE_MAX_SEC", "600"))
+        gate = env["load_gate"]
+        t0 = time.monotonic()
+        while waited < max_wait:
+            time.sleep(min(20.0, max_wait - waited))
+            waited = time.monotonic() - t0
+            load1, load5, _ = os.getloadavg()
+            if load1 < gate and load5 < gate:
+                break
+        load1, load5, load15 = os.getloadavg()
+        env["load1_prerun"] = round(load1, 2)
+        env["load5_prerun"] = round(load5, 2)
+        env["load15_prerun"] = round(load15, 2)
+        env["loaded"] = load1 > gate
+        env["settling"] = (not env["loaded"]) and load5 > gate
     env["settle_wait_sec"] = round(waited)
     env["settle_wait_exhausted"] = bool(env["loaded"] or env["settling"])
     return env

@@ -34,12 +34,14 @@ Scale notes per sketch:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from flink_ci_flink_spark.pipeline.text import token_hash
+from flink_ci_flink_spark.streaming.declarative import FoldSpec
 
 HASH_BITS = 60  # token_hash yields 60-bit positive ints (15 md5 hex chars)
 
@@ -202,14 +204,23 @@ def countmin_estimate(
 # ---------------------------------------------------------------------------
 
 
+def hll_spec(group_cols: Sequence[str], value_col=None, b: int = 6) -> FoldSpec:
+    """HLL as a `FoldSpec` on (group, register): `hll_registers`, merged by
+    per-register max (lossless: max is associative and commutative), then
+    `hll_estimate_from_registers`. Merging alone needs no ``value_col``."""
+    return FoldSpec(
+        [*group_cols, "reg"],
+        prepare=lambda df: hll_registers(df, value_col, group_cols, b),
+        merge={"max_rho": "max(max_rho)"},
+        emit=lambda regs: hll_estimate_from_registers(regs, group_cols, b),
+    )
+
+
 def hll_merge(*register_tables: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     """Merge HLL register tables (outputs of `hll_registers` over disjoint
-    shards): union + per-(group, register) max. Lossless — HLL's register
-    max is associative/commutative."""
-    out = register_tables[0]
-    for t in register_tables[1:]:
-        out = out.unionByName(t)
-    return out.groupBy(*group_cols, "reg").agg(F.max("max_rho").alias("max_rho"))
+    shards) by `hll_spec`'s merge leg."""
+    states = reduce(DataFrame.unionByName, register_tables)
+    return hll_spec(group_cols).merge_plan(states)
 
 
 def hll_estimate_from_registers(
@@ -274,12 +285,19 @@ def kmv_merge(
     )
 
 
+def countmin_spec(value_col=None, depth: int = 4, width: int = 512) -> FoldSpec:
+    """Count-min as a `FoldSpec` on (i, bucket): `countmin_sketch`, merged
+    by cell-wise sum (counts are linear). Merging needs no ``value_col``."""
+    return FoldSpec(
+        ["i", "bucket"],
+        prepare=lambda df: countmin_sketch(df, value_col, depth, width),
+        merge={"cnt": "sum(cnt)"},
+    )
+
+
 def countmin_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge count-min grids: cell-wise sum (counts are linear)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("i", "bucket").agg(F.sum("cnt").alias("cnt"))
+    """Merge count-min grids by `countmin_spec`'s merge leg."""
+    return countmin_spec().merge_plan(reduce(DataFrame.unionByName, sketches))
 
 
 # ---------------------------------------------------------------------------

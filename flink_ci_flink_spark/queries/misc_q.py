@@ -527,9 +527,9 @@ def streaming_cdc_agg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT/SUM maintained by signed deltas (accumulate/retract), never
     recomputed from the base table. The oracle states the final snapshot
     aggregate directly over orders; equality proves retraction exactness
-    (a deleted key's update must retract the UPDATED value). Twelfth
-    fold-family shape, the retract-input `GroupAggFunction.java` analog
-    to the append-only running agg."""
+    (a deleted key's update must retract the UPDATED value). The
+    retract-input `GroupAggFunction.java` analog to the append-only
+    running agg, declared as a `FoldSpec`."""
     from flink_ci_flink_spark.streaming import replay_stream
     from flink_ci_flink_spark.streaming.process import streaming_changelog_agg_jvm
 

@@ -2759,9 +2759,9 @@ def _centroid_refresh_oracle_sql(dim: int = 64) -> str:
 )
 def streaming_centroid_refresh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN-index centroid refresh over the 3-micro-batch replay
-    (FIFTEENTH `jvm_keyed_fold` shape): a pre-trained fixed-point coarse
-    quantizer assigns each arriving embedding inside a pure-Catalyst
-    foreachBatch plan, and per-(cell, pos) integer (SUM, COUNT) state
+    (a `jvm_keyed_fold` shape declared as a `FoldSpec`): a pre-trained
+    fixed-point coarse quantizer assigns each arriving embedding inside a
+    pure-Catalyst foreachBatch plan, and per-(cell, pos) integer (SUM, COUNT) state
     accumulates across batches — exact integer algebra makes the fold
     batching-insensitive, so the streamed refresh is BIT-EQUAL to the
     one-shot batch means the oracle computes (training replayed via

@@ -1,12 +1,14 @@
 """Declarative decomposable-accumulator folds: register a new bounded-state
 streaming monitor WITHOUT writing Python plan builders.
 
-The 16-shape `jvm_keyed_fold` family (`streaming/process.py`) shows that a
+The 14-shape `jvm_keyed_fold` family (`streaming/process.py`) shows that a
 stateful streaming operator whose state is a decomposable accumulator needs
 only three Catalyst plans: prepare (batch rows -> partial state), merge
 (canonicalize a union of states), emit (derive output columns). This module
 accepts those three as SQL EXPRESSION STRINGS — a `FoldSpec` — so the whole
-operator is declared, not coded:
+operator is declared, not coded (six of the family's shapes and the HLL and
+count-min sketch merges are such declarations; their prepare and emit legs
+may be DataFrame builders where the state is not one expression per column):
 
     spec = FoldSpec(
         keys=["user_id"],
@@ -41,9 +43,11 @@ as a polymorphic table function:
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def parse_assignments(spec: str) -> dict[str, str]:
@@ -71,75 +75,93 @@ def parse_assignments(spec: str) -> dict[str, str]:
     return out
 
 
+def _exprs(leg) -> dict[str, str] | None:
+    """A leg's ``name -> expr`` dict; None for a builder or a missing emit."""
+    if leg is None or callable(leg):
+        return None
+    return dict(leg) if isinstance(leg, dict) else parse_assignments(leg)
+
+
 @dataclass
 class FoldSpec:
-    """A declarative decomposable accumulator: grouping keys + three legs
-    of SQL expressions (strings in the `parse_assignments` grammar, or
-    pre-parsed dicts)."""
+    """A declarative decomposable accumulator: grouping keys + three legs.
+
+    Each leg is SQL expressions (a string in the `parse_assignments`
+    grammar, or a pre-parsed dict). ``prepare`` and ``emit`` may instead
+    be a ``DataFrame -> DataFrame`` builder, for state that is not one SQL
+    expression per column (sketch registers, computed grouping keys): a
+    prepare builder returns the keys and the state columns ``merge``
+    declares, already grouped by the keys; an emit builder maps the state
+    to the output. ``merge`` is always expressions: the one merge rule of
+    the accumulator, which `merge_plan` runs and `self_check` checks."""
 
     keys: list[str]
-    prepare: str | dict[str, str]
+    prepare: str | dict[str, str] | Callable[[DataFrame], DataFrame]
     merge: str | dict[str, str]
-    emit: str | dict[str, str] | None = None
+    emit: str | dict[str, str] | Callable[[DataFrame], DataFrame] | None = None
 
-    prepare_exprs: dict[str, str] = field(init=False)
+    prepare_exprs: dict[str, str] | None = field(init=False)
     merge_exprs: dict[str, str] = field(init=False)
     emit_exprs: dict[str, str] | None = field(init=False)
 
     def __post_init__(self):
         if not self.keys:
             raise ValueError("FoldSpec needs at least one grouping key")
-        self.prepare_exprs = (
-            dict(self.prepare)
-            if isinstance(self.prepare, dict)
-            else parse_assignments(self.prepare)
-        )
-        self.merge_exprs = (
-            dict(self.merge)
-            if isinstance(self.merge, dict)
-            else parse_assignments(self.merge)
-        )
-        self.emit_exprs = (
-            None
-            if self.emit is None
-            else dict(self.emit)
-            if isinstance(self.emit, dict)
-            else parse_assignments(self.emit)
-        )
-        if set(self.prepare_exprs) != set(self.merge_exprs):
+        self.prepare_exprs = _exprs(self.prepare)
+        self.merge_exprs = _exprs(self.merge)
+        self.emit_exprs = _exprs(self.emit)
+        if self.merge_exprs is None:
+            raise ValueError("FoldSpec merge must be SQL expressions")
+        if self.prepare_exprs is not None:
+            self._check_state_cols(self.prepare_exprs)
+            # the state keeps prepare's column order after every merge
+            self.merge_exprs = {n: self.merge_exprs[n] for n in self.prepare_exprs}
+        bad = set(self.keys) & set(self.merge_exprs)
+        if bad:
+            raise ValueError(f"state columns shadow grouping keys: {sorted(bad)}")
+
+    def _check_state_cols(self, state_cols) -> None:
+        if set(state_cols) != set(self.merge_exprs):
             raise ValueError(
                 "prepare and merge must declare the SAME state columns "
-                f"(prepare: {sorted(self.prepare_exprs)}, "
+                f"(prepare: {sorted(state_cols)}, "
                 f"merge: {sorted(self.merge_exprs)}) — merge re-aggregates "
                 "exactly the columns prepare produces"
             )
-        bad = set(self.keys) & set(self.prepare_exprs)
-        if bad:
-            raise ValueError(f"state columns shadow grouping keys: {sorted(bad)}")
+
+    def _agg(self, df: DataFrame, exprs: dict[str, str]) -> DataFrame:
+        return df.groupBy(*self.keys).agg(
+            *[F.expr(e).alias(n) for n, e in exprs.items()]
+        )
 
     # -- the three jvm_keyed_fold plan builders, generated --
 
     def prepare_plan(self, batch: DataFrame) -> DataFrame:
-        import pyspark.sql.functions as F
+        if self.prepare_exprs is not None:
+            return self._agg(batch, self.prepare_exprs)
+        prepared = self.prepare(batch)
+        self._check_state_cols([c for c in prepared.columns if c not in self.keys])
+        return prepared.select(*self.keys, *self.merge_exprs)
 
-        return batch.groupBy(*self.keys).agg(
-            *[F.expr(e).alias(n) for n, e in self.prepare_exprs.items()]
-        )
+    def merge_plan(self, states: DataFrame) -> DataFrame:
+        """Canonical state of a union of states: one row per key."""
+        return self._agg(states, self.merge_exprs)
 
     def fold_plan(self, prev: DataFrame | None, cand: DataFrame) -> DataFrame:
-        import pyspark.sql.functions as F
-
-        u = prev.unionByName(cand) if prev is not None else cand
-        return u.groupBy(*self.keys).agg(
-            *[F.expr(e).alias(n) for n, e in self.merge_exprs.items()]
-        )
+        """``cand`` itself on the first batch (``prev is None``): a prepare
+        result is already canonical, since merge(prepare(A) ∪ prepare(∅))
+        == prepare(A). Otherwise the merge of ``prev ∪ cand``."""
+        return cand if prev is None else self.merge_plan(prev.unionByName(cand))
 
     def emit_plan(self, state: DataFrame) -> DataFrame:
+        if callable(self.emit):
+            return self.emit(state)
         if not self.emit_exprs:
             return state
-        cols = [*self.keys, *self.prepare_exprs]
         return state.selectExpr(
-            *cols, *[f"{e} AS {n}" for n, e in self.emit_exprs.items()]
+            *self.keys,
+            *self.merge_exprs,
+            *[f"{e} AS {n}" for n, e in self.emit_exprs.items()],
         )
 
 
@@ -151,8 +173,6 @@ def self_check(spec: FoldSpec, sample: DataFrame, n_splits: int = 3) -> None:
     prepare-unions (e.g. someone declared ``avg(x)`` in prepare — averages
     don't merge; carry (sum, count) and derive in emit). Run it once on a
     representative sample before deploying a new monitor."""
-    import pyspark.sql.functions as F
-
     slices = [
         sample.filter(F.crc32(F.concat_ws("\x1f", *sample.columns)) % n_splits == i)
         for i in range(n_splits)
@@ -194,7 +214,7 @@ def declarative_keyed_fold(
 
 
 def declarative_fold_batch(df: DataFrame, spec: FoldSpec) -> DataFrame:
-    """The batch twin: prepare+merge collapse to one aggregation (what the
-    streaming fold must equal by the associativity contract). Used for
-    parity tests and as the PTF's oracle shape."""
+    """The batch twin: one prepare over the whole input, then emit (what
+    the streaming fold must equal by the associativity contract). Used
+    for parity tests and as the PTF's oracle shape."""
     return spec.emit_plan(spec.fold_plan(None, spec.prepare_plan(df)))

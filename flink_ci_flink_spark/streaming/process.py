@@ -30,6 +30,7 @@ from flink_ci_flink_spark.streaming.core import (
     drain_foreach_batch,
     read_epochs,
 )
+from flink_ci_flink_spark.streaming.declarative import FoldSpec, declarative_keyed_fold
 
 
 def keyed_process(
@@ -385,6 +386,9 @@ def jvm_keyed_fold(
     per-key frame that a pure Catalyst plan can canonicalize from a union
     of partial states — gets the no-per-key-Python path by supplying three
     plan builders; Python runs only as per-BATCH driver orchestration.
+    A `streaming/declarative.py::FoldSpec` generates all three from a
+    merge declaration (`declarative_keyed_fold`); six shapes below are
+    such declarations, the others write their folds by hand.
 
     Contract (all arguments are DataFrame -> DataFrame plan builders):
 
@@ -395,7 +399,10 @@ def jvm_keyed_fold(
       idempotent on canonical states and batching-insensitive:
       ``fold(fold(None,a), b) == fold(None, a∪b)`` — that associativity is
       what makes incremental per-micro-batch merging equal the
-      batch-over-everything answer.
+      batch-over-everything answer. When ``prepare`` is already canonical
+      (one keyed aggregation), ``fold(None, prepared)`` may return
+      ``prepared`` unchanged: a stream with no batches finalizes to
+      ``fold(None, prepare(empty))``.
     - ``close(state)`` — optional ``(open_state, closed_rows)`` split for
       bounding state: closed rows leave the versioned state and append to
       ``{state_dir}/closed`` stamped with the writing batch id; at
@@ -541,43 +548,17 @@ def streaming_running_agg_jvm(
     function (count merges by sum). Per micro-batch: aggregate the batch
     (map-side partials -> one shuffle on the keys), union with the
     persisted keys x 1 state, re-merge. State versions by batch_id for
-    idempotent replay. Returns the final aggregate DataFrame. Expressed on
-    `jvm_keyed_fold`: prepare = the batch's partial aggregation, fold =
-    the partial-merge aggregation (count merges by sum)."""
-
-    def batch_agg(df: DataFrame) -> DataFrame:
-        aggs = []
-        for out, (fn, col) in agg_specs.items():
-            if fn == "count":
-                aggs.append(F.count(F.lit(1)).cast("long").alias(out))
-            elif fn == "sum":
-                aggs.append(F.sum(col).alias(out))
-            elif fn == "min":
-                aggs.append(F.min(col).alias(out))
-            elif fn == "max":
-                aggs.append(F.max(col).alias(out))
-            else:
-                raise ValueError(f"non-decomposable aggregate {fn!r}")
-        return df.groupBy(*keys).agg(*aggs)
-
-    def remerge(df: DataFrame) -> DataFrame:
-        aggs = []
-        for out, (fn, _col) in agg_specs.items():
-            merge_fn = F.sum if fn in ("count", "sum") else (F.min if fn == "min" else F.max)
-            c = merge_fn(out)
-            if fn == "count":
-                c = c.cast("long")
-            aggs.append(c.alias(out))
-        return df.groupBy(*keys).agg(*aggs)
-
-    return jvm_keyed_fold(
-        stream,
-        prepare=batch_agg,
-        fold=lambda prev, part: (
-            remerge(prev.unionByName(part)) if prev is not None else part
-        ),
-        state_dir=state_dir,
-    )
+    idempotent replay. Returns the final aggregate DataFrame. Declared as
+    a `FoldSpec`: prepare = the batch's partial aggregation, merge = the
+    partial-merge aggregation (count merges by sum)."""
+    merge_fn = {"count": "sum", "sum": "sum", "min": "min", "max": "max"}
+    prepare, merge = {}, {}
+    for out, (fn, col) in agg_specs.items():
+        if fn not in merge_fn:
+            raise ValueError(f"non-decomposable aggregate {fn!r}")
+        prepare[out] = "count(1)" if fn == "count" else f"{fn}(`{col}`)"
+        merge[out] = f"{merge_fn[fn]}(`{out}`)"
+    return declarative_keyed_fold(stream, FoldSpec(keys, prepare, merge), state_dir)
 
 
 def streaming_sessionize_jvm(
@@ -1149,38 +1130,18 @@ def streaming_changelog_agg_jvm(
     state. Deltas are commutative and associative, so the fold is
     batching-insensitive (the primitive's full contract, unlike the
     deliberately split-dependent Misra-Gries shape). Groups whose count
-    retracts to zero drop out at emit."""
-    sign = F.when(F.col("row_kind").isin("+I", "+U"), F.lit(1)).otherwise(
-        F.lit(-1)
+    retracts to zero drop out at emit. Declared as a `FoldSpec`."""
+    sign = "CASE WHEN row_kind IN ('+I', '+U') THEN 1 ELSE -1 END"
+    prepare = {"n_rows": f"CAST(sum({sign}) AS BIGINT)"}
+    for c in value_cols:
+        prepare[f"sum_{c}"] = f"CAST(sum({sign} * `{c}`) AS BIGINT)"
+    spec = FoldSpec(
+        keys,
+        prepare,
+        merge={n: f"sum(`{n}`)" for n in prepare},
+        emit=lambda state: state.filter(F.col("n_rows") > 0),
     )
-
-    def _aggs():
-        return [F.sum(F.col("__sign")).cast("bigint").alias("n_rows")] + [
-            F.sum(F.col("__sign") * F.col(c)).cast("bigint").alias(f"sum_{c}")
-            for c in value_cols
-        ]
-
-    def prepare(batch_df: DataFrame) -> DataFrame:
-        return (
-            batch_df.withColumn("__sign", sign).groupBy(*keys).agg(*_aggs())
-        )
-
-    def fold(prev: DataFrame | None, prepared: DataFrame) -> DataFrame:
-        u = prepared if prev is None else prev.unionByName(prepared)
-        return u.groupBy(*keys).agg(
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-            *[
-                F.sum(f"sum_{c}").cast("bigint").alias(f"sum_{c}")
-                for c in value_cols
-            ],
-        )
-
-    def emit(state: DataFrame, closed) -> DataFrame:
-        return state.filter(F.col("n_rows") > 0)
-
-    return jvm_keyed_fold(
-        stream, prepare, fold, state_dir, emit=emit
-    )
+    return declarative_keyed_fold(stream, spec, state_dir)
 
 
 def streaming_hll_jvm(
@@ -1198,29 +1159,13 @@ def streaming_hll_jvm(
     State is ≤ 2^b rows per group FOREVER, however many distinct values
     stream past — the reference's bounded-state answer to unbounded
     streaming distinct aggregation (SplitAggregateRule's partial/final
-    distinct being the exact-state counterpart). Thirteenth fold shape;
-    estimate finishes identically to the batch sketch
-    (`pipeline/sketches.py::hll_estimate_from_registers`)."""
-    from flink_ci_flink_spark.pipeline.sketches import (
-        hll_estimate_from_registers,
-        hll_registers,
-    )
+    distinct being the exact-state counterpart). Declared as
+    `pipeline/sketches.py::hll_spec`, whose merge leg `hll_merge` shares;
+    the estimate finishes identically to the batch sketch
+    (`hll_estimate_from_registers`)."""
+    from flink_ci_flink_spark.pipeline.sketches import hll_spec
 
-    def prepare(batch_df: DataFrame) -> DataFrame:
-        return hll_registers(batch_df, value_col, group_cols, b)
-
-    def fold(prev: DataFrame | None, prepared: DataFrame) -> DataFrame:
-        u = prepared if prev is None else prev.unionByName(prepared)
-        return u.groupBy(*group_cols, "reg").agg(
-            F.max("max_rho").alias("max_rho")
-        )
-
-    def emit(state: DataFrame, closed) -> DataFrame:
-        return hll_estimate_from_registers(state, group_cols, b)
-
-    return jvm_keyed_fold(
-        stream, prepare, fold, state_dir, emit=emit
-    )
+    return declarative_keyed_fold(stream, hll_spec(group_cols, value_col, b), state_dir)
 
 
 def streaming_countmin_jvm(
@@ -1238,20 +1183,13 @@ def streaming_countmin_jvm(
     (top items), this completes the streaming corpus-stats sketch trio
     (`CountMinSketch`-style frequency monitoring over unbounded streams;
     reference scope: SplitAggregateRule's bounded-state aggregation
-    problem). Fourteenth fold shape. Returns the final sketch grid; point
+    problem). Declared as `pipeline/sketches.py::countmin_spec`, whose
+    merge leg `countmin_merge` shares. Returns the final sketch grid; point
     estimates finish with `pipeline/sketches.py::countmin_estimate`."""
-    from flink_ci_flink_spark.pipeline.sketches import countmin_sketch
+    from flink_ci_flink_spark.pipeline.sketches import countmin_spec
 
-    def prepare(batch_df: DataFrame) -> DataFrame:
-        return countmin_sketch(batch_df, value_col, depth, width)
-
-    def fold(prev: DataFrame | None, prepared: DataFrame) -> DataFrame:
-        u = prepared if prev is None else prev.unionByName(prepared)
-        return u.groupBy("i", "bucket").agg(
-            F.sum("cnt").cast("bigint").alias("cnt")
-        )
-
-    return jvm_keyed_fold(stream, prepare, fold, state_dir)
+    spec = countmin_spec(value_col, depth, width)
+    return declarative_keyed_fold(stream, spec, state_dir)
 
 
 def streaming_centroid_refresh_jvm(
@@ -1260,9 +1198,10 @@ def streaming_centroid_refresh_jvm(
     state_dir: str | None = None,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Streaming centroid refresh on `jvm_keyed_fold` — FIFTEENTH fold
-    shape, the production pattern behind periodic ANN-index re-training:
-    a pre-trained fixed-point coarse quantizer (integer centroids from
+    """Streaming centroid refresh on `jvm_keyed_fold`, declared as a
+    `FoldSpec` — the production pattern behind periodic ANN-index
+    re-training: a pre-trained fixed-point coarse quantizer (integer
+    centroids from
     `similarity.ivf_centroids_fp`) assigns arriving vectors map-only
     (`assign_cells_int_expr` — pure Catalyst, zero Python in the batch
     plan), and the state is each cell's per-position (SUM, COUNT) over
@@ -1290,13 +1229,7 @@ def streaming_centroid_refresh_jvm(
             .agg(F.sum("x").alias("sx"), F.count(F.lit(1)).alias("cnt"))
         )
 
-    def fold(prev: DataFrame | None, prepared: DataFrame) -> DataFrame:
-        u = prepared if prev is None else prev.unionByName(prepared)
-        return u.groupBy("cell", "pos").agg(
-            F.sum("sx").alias("sx"), F.sum("cnt").cast("bigint").alias("cnt")
-        )
-
-    def emit(state: DataFrame, closed) -> DataFrame:
+    def emit(state: DataFrame) -> DataFrame:
         return state.select(
             "cell",
             "pos",
@@ -1307,9 +1240,9 @@ def streaming_centroid_refresh_jvm(
             "cnt",
         )
 
-    return jvm_keyed_fold(
-        stream, prepare, fold, state_dir, emit=emit
-    )
+    merge = {"sx": "sum(sx)", "cnt": "sum(cnt)"}
+    spec = FoldSpec(["cell", "pos"], prepare, merge, emit)
+    return declarative_keyed_fold(stream, spec, state_dir)
 
 
 def streaming_value_histogram_jvm(
@@ -1321,9 +1254,10 @@ def streaming_value_histogram_jvm(
     n_bins: int,
     state_dir: str | None = None,
 ) -> DataFrame:
-    """Streaming quantile/distribution monitor on `jvm_keyed_fold` —
-    SIXTEENTH fold shape, completing the bounded-state monitoring quartet
-    (frequency = count-min, distinct = HLL, top items = Misra-Gries,
+    """Streaming quantile/distribution monitor on `jvm_keyed_fold`,
+    declared as a `FoldSpec`, completing the bounded-state monitoring
+    quartet (frequency = count-min, distinct = HLL, top items =
+    Misra-Gries,
     QUANTILES = this): a fixed equi-width histogram whose per-bin counts
     merge by SUM — associative, commutative, EXACT integer algebra, so
     the fold is batching-insensitive and the streamed histogram is
@@ -1334,23 +1268,18 @@ def streaming_value_histogram_jvm(
     (deterministic across engines — SQL-oracle-replayable).
     Ref: bounded-state aggregation (`GroupAggFunction.java`); histogram
     quantile read-off mirrors ANALYZE-style equi-width stats."""
-
-    def prepare(batch_df: DataFrame) -> DataFrame:
-        b = F.least(
-            F.lit(n_bins - 1),
-            F.greatest(
-                F.lit(0).cast("long"),
-                F.floor((F.col(value_col) - F.lit(lo)) / F.lit(width)),
-            ),
-        ).cast("long")
-        return batch_df.groupBy(*group_cols, b.alias("bin")).agg(
+    b = F.least(
+        F.lit(n_bins - 1),
+        F.greatest(
+            F.lit(0).cast("long"),
+            F.floor((F.col(value_col) - F.lit(lo)) / F.lit(width)),
+        ),
+    ).cast("long")
+    spec = FoldSpec(
+        [*group_cols, "bin"],
+        prepare=lambda df: df.groupBy(*group_cols, b.alias("bin")).agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt")
-        )
-
-    def fold(prev: DataFrame | None, prepared: DataFrame) -> DataFrame:
-        u = prepared if prev is None else prev.unionByName(prepared)
-        return u.groupBy(*group_cols, "bin").agg(
-            F.sum("cnt").cast("bigint").alias("cnt")
-        )
-
-    return jvm_keyed_fold(stream, prepare, fold, state_dir)
+        ),
+        merge={"cnt": "sum(cnt)"},
+    )
+    return declarative_keyed_fold(stream, spec, state_dir)

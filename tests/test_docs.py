@@ -90,8 +90,10 @@ def test_bench_settle_wait_and_cpu_time():
 
     # idle env -> no wait at all
     env = bench._settle_wait({"loaded": False, "settling": False,
-                              "load_gate": 4.8})
-    assert env["settle_wait_sec"] == 0 and "settle_wait_exhausted" not in env
+                              "load_gate": 4.8, "load1_prerun": 0.5,
+                              "load5_prerun": 0.4})
+    assert env["settle_wait_sec"] == 0 and env["settle_wait_exhausted"] is False
+    assert (env["load1_initial"], env["load5_initial"]) == (0.5, 0.4)
 
     # busy env with an exhausted (tiny) window -> runs anyway, says so
     os.environ["SPARK_GRAFT_SETTLE_MAX_SEC"] = "0"
@@ -112,6 +114,25 @@ def test_bench_settle_wait_and_cpu_time():
     while time.process_time() < t_end:
         pass
     assert bench._proc_tree_cpu_sec() - c0 >= 0.2
+
+
+def test_bench_env_keys_do_not_depend_on_load(monkeypatch):
+    """The detail record's env block has one key set whether the box was
+    quiet or loaded at start, so two runs compare key for key."""
+    import bench
+
+    def env_keys(loads):
+        monkeypatch.setattr(bench.os, "getloadavg", lambda: loads.pop(0))
+        monkeypatch.setattr(bench.time, "sleep", lambda sec: None)
+        return bench._settle_wait(bench._bench_environment())
+
+    quiet = env_keys([(0.1, 0.1, 0.1)])
+    # loaded at start, settled after the first poll
+    loaded = env_keys([(99.0, 99.0, 99.0), (0.1, 0.1, 0.1), (0.1, 0.1, 0.1)])
+    assert set(quiet) == set(loaded)
+    assert quiet["settle_wait_exhausted"] is False
+    assert (quiet["load1_initial"], quiet["load5_initial"]) == (0.1, 0.1)
+    assert loaded["load1_initial"] == 99.0 and loaded["load1_prerun"] == 0.1
 
 
 def test_xref_is_current():
