@@ -36,8 +36,15 @@ FLAGSHIP = "tpch_q3_shipping_priority"
 # names. 14+21+15 = 50 exactly, per XREF.md's "official proof" column at
 # the r12 artifacts. Round-14 prefix, recorded now so the rotation stays
 # mechanical: the remaining 31 r7-stale names + the first 19
-# (alphabetical) of the 49 r8-stale names.
+# (alphabetical) of the 49 r8-stale names. Group (0) goes ahead of all
+# three: a query whose plan a change rewrites is sampled first, so the
+# last names of group (3) fall past the 50th slot until the rotation is
+# generated.
 _PRIORITY = [
+    # -- (0) the queries whose plans the fact-first join order changed --
+    "tpch_q3_shipping_priority",
+    "tpch_q5_local_supplier_volume",
+    "tpch_q10_returned_items",
     # -- (1) never officially driver-sampled (r12 builder sim green) --
     "pipe_delta_dedup_shared_index",
     "tpcds_shape_cross_dim_disjunct",

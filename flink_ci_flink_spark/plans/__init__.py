@@ -61,6 +61,38 @@ class PlanFacts:
         return self.text.count("Exchange")
 
 
+def _executed_nodes(p):
+    """Every node of an executed physical plan, pre-order: the one walk
+    behind the executed-plan views below. It descends through
+    AdaptiveSparkPlanExec (into the current physical plan) and each
+    QueryStageExec (into its materialized stage plan); ReusedExchangeExec
+    stays a leaf, so a reused subtree is visited once."""
+    cls = p.getClass().getName().rsplit(".", 1)[-1]
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _executed_nodes(p.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _executed_nodes(p.plan())
+        return
+    yield cls, p
+    children = p.children()
+    for i in range(children.size()):
+        yield from _executed_nodes(children.apply(i))
+
+
+def _scanned_tables(p) -> list[str]:
+    """The source table of each FileSourceScanExec under node `p`, read from
+    the scan's real root path (``data/orders.parquet`` -> ``orders``)."""
+    out = []
+    for cls, node in _executed_nodes(p):
+        if cls == "FileSourceScanExec":
+            roots = node.relation().location().rootPaths()
+            if roots.size() > 0:
+                name = str(roots.apply(0)).rstrip("/").rsplit("/", 1)[-1]
+                out.append(name.removesuffix(".parquet") or "?")
+    return out
+
+
 def executed_scans_per_table(df: DataFrame) -> dict[str, int]:
     """Count FileScans per source table in the FINAL (post-AQE) executed
     plan — the ground truth for "how many times does this query actually
@@ -74,38 +106,30 @@ def executed_scans_per_table(df: DataFrame) -> dict[str, int]:
     The DataFrame must have been EXECUTED (an action run) first, else the
     adaptive plan is not final and reuse is not yet decided.
 
-    Counts by WALKING the executed plan tree (AdaptiveSparkPlanExec ->
-    current physical plan, QueryStageExec -> materialized stage plan,
-    ReusedExchangeExec stays a leaf so a reused subtree counts once) and
-    reading each FileSourceScanExec's real root path. The previous
-    string-parse of ``executedPlan().toString()`` mis-bucketed deep paths:
-    Spark truncates node metadata at spark.sql.maxMetadataStringLength
-    (default 100 chars), eliding the table name to "..." — and the conf
-    is not reliably visible on the py4j render thread, so raising it at
-    audit time does not help.
+    Reads each scan's root path from the walked plan tree rather than
+    parsing ``executedPlan().toString()``: Spark truncates node metadata
+    at spark.sql.maxMetadataStringLength (default 100 chars), eliding a
+    deep path's table name to "..." — and the conf is not reliably
+    visible on the py4j render thread, so raising it at audit time does
+    not help.
     """
-
-    def _walk(p, out: list) -> list:
-        cls = p.getClass().getName().rsplit(".", 1)[-1]
-        if cls == "AdaptiveSparkPlanExec":
-            return _walk(p.executedPlan(), out)
-        if cls.endswith("QueryStageExec"):
-            return _walk(p.plan(), out)
-        if cls == "FileSourceScanExec":
-            roots = p.relation().location().rootPaths()
-            if roots.size() > 0:
-                out.append(str(roots.apply(0)))
-        children = p.children()
-        for i in range(children.size()):
-            _walk(children.apply(i), out)
-        return out
-
     counts: dict[str, int] = {}
-    for path in _walk(df._jdf.queryExecution().executedPlan(), []):
-        name = path.rstrip("/").rsplit("/", 1)[-1]
-        name = name.removesuffix(".parquet") or "?"
+    for name in _scanned_tables(df._jdf.queryExecution().executedPlan()):
         counts[name] = counts.get(name, 0) + 1
     return counts
+
+
+def broadcast_build_tables(df: DataFrame) -> list[set[str]]:
+    """For each BroadcastExchange in the FINAL (post-AQE) executed plan, the
+    set of source tables its build side scans. A fact table in one of these
+    sets means the planner shipped the fact to every executor instead of
+    streaming it past a broadcast dimension. Like
+    `executed_scans_per_table`, the DataFrame must have been executed."""
+    return [
+        set(_scanned_tables(node))
+        for cls, node in _executed_nodes(df._jdf.queryExecution().executedPlan())
+        if cls == "BroadcastExchangeExec"
+    ]
 
 
 def facts(df: DataFrame) -> PlanFacts:

@@ -8,10 +8,20 @@ reference's own TPC-H e2e kit
 (`flink-end-to-end-tests/flink-tpch-test/.../TpchDataGenerator.java:37`).
 
 Scale notes (100 TB): every query below keeps aggregation partial-final
-(map-side combine is automatic), joins dimension tables via broadcast
-(region/nation/customer/supplier/part stay tiny relative to facts), and the
-fact-fact join (orders ⋈ lineitem) shuffles on the join key only after
-filters have pushed down to the parquet scan. Doubles in aggregates are
+(map-side combine is automatic) and joins dimension tables via broadcast
+(region/nation/customer/supplier/part stay tiny relative to facts).
+
+Fact-first join order: where a query joins both facts, the two filtered fact
+scans (orders ⋈ lineitem on the order key) join FIRST and the broadcast
+dimensions after. Without table statistics Catalyst sizes an inner join as
+the PRODUCT of its inputs' sizes, so a dimension joined to orders first
+makes that side look larger than the filtered lineitem scan, which (sized by
+its files, under the 256 MB auto-broadcast threshold at the fixtures) then
+becomes the build side: the fact table is collected to the driver and
+shipped to every executor, against the reference's rule
+(`BatchExecHashJoinRule`: broadcast the dimensions, never the fact). Joined
+first, the planner compares two scan estimates and builds on the smaller
+filtered orders side while lineitem streams. Doubles in aggregates are
 rounded identically on the oracle side so value-hashes are stable.
 """
 
@@ -78,18 +88,20 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     group="tpch",
 )
 def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shipping priority: broadcast dim join + fact-fact join + agg + top-10.
+    """Shipping priority: fact-fact join + broadcast dim join + agg + top-10.
 
-    customer is broadcast (tiny dim); orders⋈lineitem shuffles on the order
-    key. Deterministic top-10 via (revenue DESC, o_orderdate, l_orderkey).
+    The filtered orders⋈lineitem join comes first, so lineitem streams
+    against the smaller orders side (module docstring: fact-first order);
+    customer is broadcast after. Deterministic top-10 via (revenue DESC,
+    o_orderdate, l_orderkey).
     """
     t = load_tables(spark, sf_dir)
     cust = t.customer.filter(F.col("c_mktsegment") == "BUILDING")
     orders = t.orders.filter(F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp"))
     li = t.lineitem.filter(F.col("l_shipdate") > F.lit("1996-03-15").cast("timestamp"))
     joined = (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
+        orders.join(li, li.l_orderkey == orders.o_orderkey)
+        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
     )
     return (
         joined.groupBy("l_orderkey", "o_orderdate")
@@ -124,15 +136,17 @@ def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     group="tpch",
 )
 def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local supplier volume: 6-way join, all dims broadcast."""
+    """Local supplier volume: 6-way join, the filtered orders⋈lineitem fact
+    join first (module docstring: fact-first order), then every dim
+    broadcast."""
     t = load_tables(spark, sf_dir)
     orders = t.orders.filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     return (
-        orders.join(F.broadcast(t.customer), F.col("c_custkey") == F.col("o_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
+        orders.join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(t.customer), F.col("c_custkey") == F.col("o_custkey"))
         .join(
             F.broadcast(t.supplier),
             (F.col("l_suppkey") == F.col("s_suppkey"))
@@ -209,7 +223,9 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     group="tpch",
 )
 def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Returned-item reporting: join + agg + deterministic top-20."""
+    """Returned-item reporting: the filtered orders⋈lineitem fact join first
+    (module docstring: fact-first order), customer and nation broadcast
+    after, then agg + deterministic top-20."""
     t = load_tables(spark, sf_dir)
     orders = t.orders.filter(
         (F.col("o_orderdate") >= F.lit("1996-10-01").cast("timestamp"))
@@ -217,8 +233,8 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = t.lineitem.filter(F.col("l_returnflag") == "R")
     return (
-        orders.join(F.broadcast(t.customer), F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        orders.join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(t.customer), F.col("c_custkey") == F.col("o_custkey"))
         .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(

@@ -22,12 +22,27 @@ def _final_plan(df) -> str:
 
 
 def test_tpch_q3_pushdown_and_broadcast(spark):
-    df = QUERIES["tpch_q3_shipping_priority"].fn(spark, SF_DIR)
-    txt = _final_plan(df)
-    f = facts(df)
-    assert f.has_pushed_filters
-    assert "BroadcastHashJoin" in txt
-    assert "*(" in txt  # whole-stage-codegen'd spans
+    """q3, q5 and q10 push their filters to the scan and broadcast their
+    dims, and no broadcast build side scans lineitem: the fact-first join
+    order (tpch.py's module docstring) keeps the fact table streaming
+    instead of shipping it to every executor."""
+    from flink_ci_flink_spark.plans import broadcast_build_tables
+
+    for name in (
+        "tpch_q3_shipping_priority",
+        "tpch_q5_local_supplier_volume",
+        "tpch_q10_returned_items",
+    ):
+        df = QUERIES[name].fn(spark, SF_DIR)
+        txt = _final_plan(df)
+        assert facts(df).has_pushed_filters, name
+        assert "BroadcastHashJoin" in txt, name
+        assert "*(" in txt, name  # whole-stage-codegen'd spans
+        builds = broadcast_build_tables(df)
+        assert {"customer"} in builds, (name, builds)
+        assert not any("lineitem" in b for b in builds), (
+            f"{name} broadcasts lineitem (build sides: {builds})"
+        )
 
 
 def test_redact_pii_is_map_only(spark):
