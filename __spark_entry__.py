@@ -39,8 +39,18 @@ FLAGSHIP = "tpch_q3_shipping_priority"
 # (alphabetical) of the 49 r8-stale names. Group (0) goes ahead of all
 # three: a query whose plan a change rewrites is sampled first, so the
 # last names of group (3) fall past the 50th slot until the rotation is
-# generated.
+# generated. The replays that exercise the driver-side batch staging and
+# the schema-memo state reads go ahead of group (0): the fold replays, a
+# held-back batch file, a ``list<float>`` column with redelivery, and a
+# two-prefix versioned state.
 _PRIORITY = [
+    # -- (00) the replays whose staging and state reads changed --
+    "streaming_running_agg_replay",
+    "streaming_complete_agg_replay",
+    "streaming_restart_recovery_replay",
+    "streaming_ivfpq_ingest_replay",
+    "streaming_langid_screen_replay",
+    "cep_mr_prev_stream_replay",
     # -- (0) the queries whose plans the fact-first join order changed --
     "tpch_q3_shipping_priority",
     "tpch_q5_local_supplier_volume",

@@ -37,9 +37,11 @@ import os
 import re
 import shutil
 import tempfile
+import time
 import uuid
 from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,42 +84,36 @@ def scratch_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
 
 
+def stage_batches(tables) -> str:
+    """Write each Arrow table as one parquet file ``001.parquet``, ... in a
+    fresh `scratch_dir` and return it. The file source takes files in
+    modification-time order, ties in (unsorted) directory order, so the
+    files get one-second-apart past times: with ``maxFilesPerTrigger=1``
+    each table is one micro-batch, in order, before any file added later."""
+    tmp = scratch_dir("replay_stage_")
+    t0 = time.time() - len(tables)
+    for i, table in enumerate(tables, 1):
+        path = f"{tmp}/{i:03d}.parquet"
+        pq.write_table(table, path)
+        os.utime(path, (t0 + i, t0 + i))
+    return tmp
+
+
 def stage_ordered_replay(
     df: DataFrame, order_cols: list[str], n_batches: int = 3
 ) -> str:
-    """Stage a DataFrame as ``n_batches`` parquet files ``001.parquet`` ...
-    in a fresh `scratch_dir`, ordered by ``order_cols`` within and across
-    files — the deterministic micro-batch replay fixture every ``*_replay``
-    driver query and streaming parity test feeds to `file_stream`. One
-    pass over ``df``: a global ``ntile`` numbers each row's batch and one
-    partitioned write emits every batch file from the window's single
-    sorted partition. A batch with no rows (fewer rows than batches) is
-    staged as an empty file, so there are always ``n_batches`` files.
-    Returns the directory, which goes with the scratch root at exit."""
-    from pyspark.sql.window import Window
-
-    tmp = scratch_dir("replay_stage_")
-    staged = f"{tmp}/_staged"
-    (
-        df.withColumn("__b", F.ntile(n_batches).over(Window.orderBy(*order_cols)))
-        .sortWithinPartitions("__b", *order_cols)
-        .write.partitionBy("__b")
-        .parquet(staged)
-    )
-    empty = None
-    for b in range(1, n_batches + 1):
-        dst = f"{tmp}/{b:03d}.parquet"
-        parts = glob.glob(f"{staged}/__b={b}/part-*.parquet")
-        if parts:
-            (part,) = parts
-            os.rename(part, dst)
-            continue
-        if empty is None:
-            df.limit(0).coalesce(1).write.parquet(f"{staged}/empty")
-            (empty,) = glob.glob(f"{staged}/empty/part-*.parquet")
-        shutil.copyfile(empty, dst)
-    shutil.rmtree(staged)
-    return tmp
+    """Stage ``df`` as ``n_batches`` `stage_batches` files ordered by
+    ``order_cols`` within and across files, the micro-batch replay fixture
+    of every ``*_replay`` query and streaming parity test. One Spark job
+    sorts ``df`` in a single partition and collects it as Arrow, so every
+    row passes through one task and driver memory; the driver cuts it into
+    ``ntile`` sizes (the first ``rows % n_batches`` batches hold one row
+    more, ties may straddle a cut, a batch past the last row is an empty
+    file). Returns the directory; it goes with the scratch root at exit."""
+    table = df.coalesce(1).sortWithinPartitions(*order_cols).toArrow()
+    size, extra = divmod(table.num_rows, n_batches)
+    cuts = [b * size + min(b, extra) for b in range(n_batches + 1)]
+    return stage_batches([table.slice(a, b - a) for a, b in zip(cuts, cuts[1:])])
 
 
 def replay_stream(
@@ -125,21 +121,16 @@ def replay_stream(
 ) -> DataFrame:
     """``df`` as a bounded stream of ``n_batches`` micro-batches, one
     `stage_ordered_replay` file per trigger."""
-    return file_stream(
-        df.sparkSession,
-        stage_ordered_replay(df, order_cols, n_batches),
-        df.schema,
-        max_files_per_trigger=1,
-    )
+    tmp = stage_ordered_replay(df, order_cols, n_batches)
+    return file_stream(df.sparkSession, tmp, df.schema, max_files_per_trigger=1)
 
 
 def redeliver_first_batch(stage_dir: str) -> None:
     """Copy the first batch file of a `stage_ordered_replay` dir to
-    ``<name>_redelivered.parquet`` beside it: the file source then
+    ``001_redelivered.parquet`` beside it: the file source then
     delivers those rows again in a later micro-batch, the at-least-once
     redelivery an epoch-store replay must collapse."""
-    first = sorted(glob.glob(f"{stage_dir}/*.parquet"))[0]
-    shutil.copyfile(first, first.replace(".parquet", "_redelivered.parquet"))
+    shutil.copyfile(f"{stage_dir}/001.parquet", f"{stage_dir}/001_redelivered.parquet")
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
@@ -267,11 +258,15 @@ class VersionedState:
     predecessor's are kept. Pruning is local-filesystem best effort; on an
     object store a lifecycle rule does it (old versions are never read
     again, so it never affects results). ``state_dir=None`` is a fresh
-    `scratch_dir`."""
+    `scratch_dir`. Each version's schema is remembered at write, so a read
+    fires no schema-inference job; pruning forgets it, and a fresh instance
+    on an existing directory (a restart) infers. Build one per fold, not
+    one per batch."""
 
     def __init__(self, spark: SparkSession, state_dir: str | None, *prefixes: str):
         self.spark, self.prefixes = spark, prefixes
         self.dir = scratch_dir("state_") if state_dir is None else state_dir
+        self._schemas: dict[str, StructType] = {}
 
     def _versions(self, prefix: str) -> list[int]:
         try:
@@ -290,16 +285,20 @@ class VersionedState:
         yield prev
         for prefix in self.prefixes:
             for v in set(self._versions(prefix)) - {batch_id, prev}:
+                self._schemas.pop(f"{prefix}{v}", None)
                 shutil.rmtree(f"{self.dir}/{prefix}{v}", ignore_errors=True)
 
     def read(self, prefix: str, version: int | None) -> DataFrame | None:
         """Version ``version`` under ``prefix``; None for no version."""
         if version is None:
             return None
-        return self.spark.read.parquet(f"{self.dir}/{prefix}{version}")
+        schema = self._schemas.get(f"{prefix}{version}")
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(f"{self.dir}/{prefix}{version}")
 
     def write(self, df: DataFrame, prefix: str, version: int) -> None:
         df.write.mode("overwrite").parquet(f"{self.dir}/{prefix}{version}")
+        self._schemas[f"{prefix}{version}"] = df.schema
 
 
 @contextmanager

@@ -354,17 +354,17 @@ class MapStateView:
 
 
 def _keyed_fold_step(
-    spark, state_dir: str, prepare, fold, close, batch_df: DataFrame,
+    versions: VersionedState, prepare, fold, close, batch_df: DataFrame,
     batch_id: int, last: dict,
 ) -> None:
-    """One micro-batch of the keyed-fold merge loop — exposed so tests can
-    drive same-batch-id replays directly (the at-least-once contract)."""
-    versions = VersionedState(spark, state_dir, "v")
+    """One micro-batch of the keyed-fold merge loop over the fold's state
+    (prefix ``v``) — exposed so tests can drive same-batch-id replays
+    directly (the at-least-once contract)."""
     with versions.batch(batch_id) as prev_id:
         new = fold(versions.read("v", prev_id), prepare(batch_df))
         if close is not None:
             new, closed_rows = close(new)
-            append_epoch(closed_rows, f"{state_dir}/closed", batch_id)
+            append_epoch(closed_rows, f"{versions.dir}/closed", batch_id)
             last["closed"] = True
         versions.write(new, "v", batch_id)
     last["v"] = batch_id
@@ -426,9 +426,7 @@ def jvm_keyed_fold(
     last = {"v": None, "closed": False}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _keyed_fold_step(
-            spark, versions.dir, prepare, fold, close, batch_df, batch_id, last
-        )
+        _keyed_fold_step(versions, prepare, fold, close, batch_df, batch_id, last)
 
     drain_foreach_batch(stream, merge)
     state = versions.read("v", last["v"])

@@ -2,22 +2,33 @@
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
+import uuid
+from contextlib import contextmanager
 
-from flink_ci_flink_spark.streaming import scratch_dir
+from flink_ci_flink_spark.streaming.core import stage_batches
 
 
 def stage_chunks(spark, chunks, schema) -> str:
-    """Write each chunk of rows as one parquet file ``000.parquet``,
-    ``001.parquet``, ... in a fresh `scratch_dir` and return it: read with
+    """Write each chunk of rows as one `stage_batches` file ``001.parquet``,
+    ``002.parquet``, ... and return the directory: read with
     ``maxFilesPerTrigger=1``, every chunk is one micro-batch, in order."""
-    tmp = scratch_dir("chunks_")
-    for i, chunk in enumerate(chunks):
-        part_dir = f"{tmp}/f{i}"
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(part_dir)
-        (part,) = glob.glob(f"{part_dir}/part-*.parquet")
-        os.rename(part, f"{tmp}/{i:03d}.parquet")
-        shutil.rmtree(part_dir)
-    return tmp
+    return stage_batches(
+        [spark.createDataFrame(chunk, schema).toArrow() for chunk in chunks]
+    )
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Yield a list that holds, once the block has exited, the ids of the
+    Spark jobs the block's thread started."""
+    sc = spark.sparkContext
+    group = f"spark_jobs_{uuid.uuid4().hex}"
+    jobs: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc._jsc.clearJobGroup()
+        # the status tracker learns of jobs from the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))

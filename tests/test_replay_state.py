@@ -54,6 +54,30 @@ def test_a_failed_batch_prunes_nothing(tmp_path):
     assert _dirs(tmp_path) == ["v0", "v1", "v2"]
 
 
+def test_a_version_is_read_back_without_a_job(spark, tmp_path):
+    """The next batch reads the version its fold instance wrote with no
+    Spark job (no schema inference); a fresh instance on the same
+    directory, as after a restart, infers and reads the same schema and
+    rows."""
+    from flink_ci_flink_spark.streaming.core import VersionedState
+    from tests.replay import spark_jobs
+
+    df = spark.range(3).selectExpr(
+        "id AS k", "array(CAST(id AS FLOAT)) AS v", "CAST(NULL AS STRING) AS s"
+    )
+    state = VersionedState(spark, str(tmp_path), "v")
+    with state.batch(0):
+        state.write(df, "v", 0)
+    with state.batch(1) as prev:
+        with spark_jobs(spark) as jobs:
+            got = state.read("v", prev)
+        assert jobs == []
+        state.write(got, "v", 1)
+    fresh = VersionedState(spark, str(tmp_path), "v").read("v", 1)
+    assert state.read("v", 1).schema == fresh.schema
+    assert sorted(fresh.collect()) == sorted(df.collect())
+
+
 def test_empty_stream_finalizes_to_zero_rows(spark, sf_dir, tmp_path):
     """Every batch empty: an unpartitioned store (line dedup) holds
     zero-row files that carry the schema; a cell-partitioned one (IVF)

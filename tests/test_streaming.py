@@ -510,13 +510,17 @@ def _staged_files(tmp):
 
 def test_stage_ordered_replay_file_contract(spark):
     """The replay fixture contract every ``*_replay`` query relies on:
-    exactly ``n_batches`` files named 001.parquet ..., rows ordered by
+    exactly ``n_batches`` files named 001.parquet ..., modified in name
+    order (the order the file source reads them in), rows ordered by
     ``order_cols`` within each file and across consecutive files, the
-    multiset of rows equal to the input, and tiles without rows staged
-    as empty files."""
+    multiset of rows equal to the input, ``ntile`` batch sizes also where
+    a tie spans a cut, and tiles without rows staged as empty files.
+    Staging runs one Spark job."""
+    import os
     import random
 
     from flink_ci_flink_spark.streaming import stage_ordered_replay
+    from tests.replay import spark_jobs
 
     rng = random.Random(7)
     # ties on the first order column exercise the second one
@@ -527,9 +531,12 @@ def test_stage_ordered_replay_file_contract(spark):
     def key(r):
         return tuple(r[c] for c in order)
 
-    tmp = stage_ordered_replay(df, order, n_batches=4)
+    with spark_jobs(spark) as jobs:
+        tmp = stage_ordered_replay(df, order, n_batches=4)
+    assert len(jobs) == 1
     names, files = _staged_files(tmp)
     assert names == ["001.parquet", "002.parquet", "003.parquet", "004.parquet"]
+    assert sorted(names, key=lambda n: os.stat(f"{tmp}/{n}").st_mtime) == names
     for f in files:
         assert [key(r) for r in f] == sorted(key(r) for r in f)
     for a, b in zip(files, files[1:]):
@@ -537,13 +544,21 @@ def test_stage_ordered_replay_file_contract(spark):
     staged = sorted((r["k"], r["seq"], r["payload"]) for f in files for r in f)
     assert staged == sorted(rows)
 
-    for data, want in (([], [0, 0, 0]), (rows[:2], [1, 1, 0])):
+    for data, want in (
+        ([], [0, 0, 0]), (rows[:2], [1, 1, 0]), (rows[:100], [34, 33, 33])
+    ):
         tmp = stage_ordered_replay(
             spark.createDataFrame(data, df.schema), order, n_batches=3
         )
         names, files = _staged_files(tmp)
         assert names == ["001.parquet", "002.parquet", "003.parquet"]
         assert [len(f) for f in files] == want
+
+    # one key on every row: the tie spans the cut and sizes stay ntile's
+    ties = spark.createDataFrame([(1, i, "t") for i in range(5)], df.schema)
+    _, files = _staged_files(stage_ordered_replay(ties, ["k"], n_batches=2))
+    assert [len(f) for f in files] == [3, 2]
+    assert sorted(r["seq"] for f in files for r in f) == list(range(5))
 
 
 def test_run_to_completion_sizes_state_partitions(spark):

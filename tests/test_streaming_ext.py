@@ -881,6 +881,7 @@ def test_keyed_fold_same_batch_id_replay_idempotent(spark, tmp_path):
     closed rows collapse on the natural key."""
     from pyspark.sql import functions as F
 
+    from flink_ci_flink_spark.streaming.core import VersionedState
     from flink_ci_flink_spark.streaming.process import _keyed_fold_step
 
     def prepare(b):
@@ -903,11 +904,12 @@ def test_keyed_fold_same_batch_id_replay_idempotent(spark, tmp_path):
 
     def run(dirname, replay):
         d = str(tmp_path / dirname)
+        versions = VersionedState(spark, d, "v")
         last = {"v": None, "closed": False}
-        _keyed_fold_step(spark, d, prepare, fold, close, b0, 0, last)
-        _keyed_fold_step(spark, d, prepare, fold, close, b1, 1, last)
+        _keyed_fold_step(versions, prepare, fold, close, b0, 0, last)
+        _keyed_fold_step(versions, prepare, fold, close, b1, 1, last)
         if replay:
-            _keyed_fold_step(spark, d, prepare, fold, close, b1, 1, last)
+            _keyed_fold_step(versions, prepare, fold, close, b1, 1, last)
         state = {
             tuple(r) for r in spark.read.parquet(f"{d}/v{last['v']}").collect()
         }
@@ -1002,6 +1004,7 @@ def test_count_window_fold_random_batching_property(spark):
     from pyspark.sql.window import Window
 
     from flink_ci_flink_spark.streaming import scratch_dir
+    from flink_ci_flink_spark.streaming.core import VersionedState
     from flink_ci_flink_spark.streaming.process import _keyed_fold_step
 
     size = 3
@@ -1061,13 +1064,14 @@ def test_count_window_fold_random_batching_property(spark):
             batches.append(vals[lo:p])
             lo = p
         d = scratch_dir("cwprop_")
+        versions = VersionedState(spark, d, "v")
         last = {"v": None, "closed": False}
         t0 = 0
         for bid, chunk in enumerate(batches):
             rows = [(1, t0 + i, float(v)) for i, v in enumerate(chunk)]
             t0 += len(chunk)
             bdf = spark.createDataFrame(rows, "k long, t long, v double")
-            _keyed_fold_step(spark, d, prepare, fold, close, bdf, bid, last)
+            _keyed_fold_step(versions, prepare, fold, close, bdf, bid, last)
         got = {}
         if last["v"] is not None:
             state = spark.read.parquet(f"{d}/v{last['v']}")
